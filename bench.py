@@ -45,6 +45,19 @@ HEAVY_QUERIES = [
 ]
 
 
+def heavy_subset(raw: str | None) -> list[str] | None:
+    """The query names SPARK_GRAFT_BENCH_HEAVY selects: None (the full
+    suite) when unset, empty, "0", "false" or only commas; the pinned HEAVY_QUERIES
+    for "1" or "true"; otherwise a comma-separated name list. Case and
+    surrounding whitespace are ignored."""
+    value = (raw or "").strip()
+    if value.lower() in ("", "0", "false"):
+        return None
+    if value.lower() in ("1", "true"):
+        return sorted(HEAVY_QUERIES)
+    return sorted(n.strip() for n in value.split(",") if n.strip()) or None
+
+
 def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -179,9 +192,9 @@ def main() -> None:
     # composition-heavy query, and NEVER understates — no phantom
     # regressions (the r3 failure mode).
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
-    heavy = os.environ.get("SPARK_GRAFT_BENCH_HEAVY")
+    heavy = heavy_subset(os.environ.get("SPARK_GRAFT_BENCH_HEAVY"))
     if heavy:
-        names = sorted(HEAVY_QUERIES if heavy == "1" else heavy.split(","))
+        names = heavy
         missing = [n for n in names if n not in ALL_QUERIES]
         if missing:
             raise SystemExit(f"unknown heavy-subset queries: {missing}")
@@ -261,7 +274,11 @@ def main() -> None:
     # also persist next to the repo: stdout tail-capture truncated the
     # round-2 record mid-JSON (BENCH_r02.json parsed: null) — a file
     # copy survives log clipping
-    out = Path(__file__).resolve().parent / "BENCH_LOCAL.json"
+    # a heavy-subset run keeps its own file: BENCH_LOCAL.json stays
+    # the full-suite record
+    out = Path(__file__).resolve().parent / (
+        "BENCH_HEAVY_LOCAL.json" if heavy else "BENCH_LOCAL.json"
+    )
     try:
         out.write_text(line + "\n")
     except OSError:

@@ -23,15 +23,22 @@ Scale design:
   supersteps — without this the plan doubles per iteration and the
   driver OOMs compiling it long before data size matters (SURVEY §7.2
   hard part (a));
-- convergence check is a single tiny aggregate per superstep.
+- convergence check is a single tiny aggregate per superstep;
+- the flood fixpoint (flood_max, connected_components, sssp) runs a
+  graph of at most _DRIVER_MAX_EDGES edges on the driver: one bounded
+  collect both picks the tier and fetches the graph, so a tiny graph
+  costs that collect, not a job per shuffle stage per round. The cap
+  is a measured constant, not a parameter (see _flood_fixpoint).
 """
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class Pregel:
@@ -323,37 +330,262 @@ def pagerank_dangling_pregel(
     )
 
 
+# Largest edge relation (and vertex relation) that _flood_fixpoint
+# relaxes on the driver; above it the Spark block loop runs. Sized so
+# that at the cap one bounded collect, the Python rounds and the
+# result's createDataFrame cost less than ONE Spark block. Measured on
+# parquet inputs (local[4], 4-core VM, median of 3, two rounds each):
+# at 50k edges the driver tier took 1.3-2.2 s wall and 2.5-5.5 CPU-s
+# against 1.5-2.8 s and 4.5-8.1 CPU-s for one Spark block, over a
+# chain, a random graph and weighted sssp; at 100k it lost on wall
+# time (2.4-2.7 s against 1.6-2.2 s).
+_DRIVER_MAX_EDGES = 50_000
+
+
+def _flood_round(
+    cur: DataFrame, edges: DataFrame, direction: str, weight: str | None
+) -> DataFrame:
+    """One synchronous flood round, lazily: every vertex sends its
+    ``value`` (plus the edge's ``weight`` column, when given) along its
+    out-edges, then keeps the max (``direction="max"``) or min of its
+    old value and its inbox. Returns (id, value, _changed) with
+    ``_changed`` this round's delta. Messages to ids absent from
+    ``cur`` are dropped by the left join; null messages and a null old
+    value are skipped by max/min and greatest/least."""
+    combine, pick = (F.max, F.greatest) if direction == "max" else (F.min, F.least)
+    msg = F.col("_msg") + F.col(weight) if weight else F.col("_msg")
+    # name-based (USING) joins throughout: `cur` accumulates the
+    # lineage of `edges` across the unrolled rounds, so
+    # dataframe-attribute references (edges["dst"]) would be
+    # ambiguous self-join columns from round 2 on
+    inbox = (
+        cur.select(F.col("id").alias("src"), F.col("value").alias("_msg"))
+        .join(edges, "src")
+        .select(F.col("dst").alias("id"), msg.alias("_m"))
+        .groupBy("id")
+        .agg(combine("_m").alias("_inbox"))
+    )
+    new_val = pick(F.col("value"), F.coalesce(F.col("_inbox"), F.col("value")))
+    return cur.join(inbox, "id", "left").select(
+        "id",
+        new_val.alias("value"),
+        (new_val != F.col("value")).cast("int").alias("_changed"),
+    )
+
+
+def _python_exact(schema: T.StructType, edge_schema: T.StructType) -> bool:
+    """True when Python's equality, ordering and ``+`` on the collected
+    values are Spark's: integral or plain-string keys (id, src, dst all
+    of one family), integral, double or plain-string values. Other
+    types (float, decimal, binary, collated strings) stay in Spark."""
+    string = T.StringType()
+    keys = [schema["id"].dataType] + [
+        edge_schema[c].dataType for c in ("src", "dst")
+    ]
+    value = schema["value"].dataType
+    return (
+        all(isinstance(k, T.IntegralType) for k in keys)
+        or all(k == string for k in keys)
+    ) and (isinstance(value, (T.IntegralType, T.DoubleType)) or value == string)
+
+
+def _collect_small_graph(
+    vertices: DataFrame, edges: DataFrame, weight: str | None
+) -> tuple[list, list] | None:
+    """The tier decision: ONE bounded driver action over the vertex
+    and edge rows tagged into a single flat union, at most
+    2 * (_DRIVER_MAX_EDGES + 1) rows. Returns ((id, value) rows,
+    (src, dst[, weight]) rows) when neither side exceeds the cap
+    (collecting the full bound means one side does), else None. A
+    graph above the cap pays only the partitions it takes to find that
+    many rows. Both sides travel in one collect because every collect
+    costs its own incremental-scan jobs; flat rows because nested
+    struct rows cost the Python side about twice as much."""
+    wt = [F.col(weight).alias("_w")] if weight else []
+    no_wt = (
+        [F.lit(None).cast(edges.schema[weight].dataType).alias("_w")]
+        if weight
+        else []
+    )
+    both = edges.select(
+        F.lit(True).alias("_edge"),
+        F.col("src").alias("id"),
+        "dst",
+        *wt,
+        F.lit(None).cast(vertices.schema["value"].dataType).alias("value"),
+    ).unionByName(
+        vertices.select(
+            F.lit(False).alias("_edge"),
+            "id",
+            F.lit(None).cast(edges.schema["dst"].dataType).alias("dst"),
+            *no_wt,
+            "value",
+        )
+    )
+    rows = both.limit(2 * _DRIVER_MAX_EDGES + 2).collect()
+    e_rows = [tuple(r[1:-1]) for r in rows if r[0]]
+    v_rows = [(r[1], r[-1]) for r in rows if not r[0]]
+    if len(e_rows) > _DRIVER_MAX_EDGES or len(v_rows) > _DRIVER_MAX_EDGES:
+        return None
+    return v_rows, e_rows
+
+
+def _nan_top(x):
+    # Spark orders NaN above every double and equal to itself
+    return (True, 0.0) if x != x else (False, x)
+
+
+def _flood_local(
+    v_rows: list,
+    e_rows: list,
+    direction: str,
+    weighted: bool,
+    value_type: T.DataType,
+    max_iter: int,
+    max_block: int,
+) -> tuple[list, list]:
+    """The Spark tier's rounds replayed in Python, row for row;
+    returns the (id, value) columns.
+
+    Rounds are synchronous and follow the Spark tier's block schedule
+    (2, 4, ... ``max_block`` rounds) with the same stop rule: stop
+    after a block whose LAST round changed no non-null value
+    (``null != x`` is null there, so a null vertex adopting its inbox
+    does not count as a change). Each round relaxes only the out-edges
+    of vertices whose value changed in the previous round: a message
+    from an unchanged vertex repeats one its target already absorbed,
+    so the frontier gives the same state as re-sending everything.
+    Duplicate ids stay separate rows that share one inbox, as in the
+    join; null ids neither send nor receive."""
+    better = operator.gt if direction == "max" else operator.lt
+    if isinstance(value_type, T.DoubleType):
+        order = better
+
+        def better(a, b):
+            return order(_nan_top(a), _nan_top(b))
+
+    # the value column's type after one round (sssp: bigint + double
+    # weight -> double), so arithmetic and comparisons match Spark's
+    cast = float if isinstance(value_type, T.DoubleType) else (lambda x: x)
+    ids = [r[0] for r in v_rows]
+    vals = [None if r[1] is None else cast(r[1]) for r in v_rows]
+    slots: dict = {}
+    for i, vid in enumerate(ids):
+        if vid is not None:
+            slots.setdefault(vid, []).append(i)
+    out: dict = {}
+    for r in e_rows:
+        wt = r[2] if weighted else None
+        if r[0] in slots and r[1] in slots and not (weighted and wt is None):
+            out.setdefault(r[0], []).append((r[1], wt))
+    frontier = set(slots)
+    steps, block_size = 0, 2
+    while steps < max_iter:
+        block = min(block_size, max_iter - steps)
+        block_size = min(block_size * 2, max_block)
+        for _ in range(block):
+            inbox: dict = {}
+            for src in frontier:
+                for i in slots[src]:
+                    val = vals[i]
+                    if val is None:
+                        continue
+                    for dst, wt in out.get(src, ()):
+                        m = val if wt is None else val + wt
+                        if dst not in inbox or better(m, inbox[dst]):
+                            inbox[dst] = m
+            frontier, changed = set(), 0
+            for dst, m in inbox.items():
+                for i in slots[dst]:
+                    old = vals[i]
+                    if old is None or better(m, old):
+                        vals[i] = m
+                        frontier.add(dst)
+                        changed += old is not None
+        steps += block
+        if not changed:
+            break
+    return ids, vals
+
+
 def _flood_fixpoint(
     vertices: DataFrame,
     edges: DataFrame,
-    combine,
-    pick,
+    direction: str,
+    weight: str | None = None,
     num_partitions: int | None = None,
     max_iter: int = 1000,
     max_block: int = 8,
-    msg=None,
 ) -> DataFrame:
-    """Shared propagate-until-fixpoint loop: each round every vertex
-    ``combine``s its inbox and ``pick``s between old and incoming value;
-    stops when no vertex changed. One shuffle (inbox groupBy) per round;
-    converges in O(graph diameter) rounds.
+    """Shared propagate-until-fixpoint loop over vertices (id, value)
+    and edges (src, dst[, weight]): each round every vertex takes the
+    max (``direction="max"``) or min (``"min"``) of its value and its
+    inbox of neighbor values (plus the edge's ``weight`` column, when
+    given); stops when no vertex changed, or after ``max_iter`` rounds.
+    Converges in O(graph diameter) rounds. Returns (id, value).
 
-    Driver-action amortization: supersteps are unrolled LAZILY into
-    blocks (sizes 2, 4, 8, ... capped at ``max_block``) ending in a
-    lazy localCheckpoint whose materialization is piggybacked on the
-    block's single convergence action — so each block costs ONE Spark
-    job, not 2 per superstep. Convergence is read from the LAST round's
-    change flag only (not an OR across the block): min/max propagation
-    is monotone, so a final round that changed nothing IS the fixpoint
-    — the loop never pays an extra confirm block after converging
+    Two tiers, one description. ``direction`` and ``weight`` define
+    the round once (``_flood_round``); both tiers run it.
+
+    Driver tier: a graph of at most ``_DRIVER_MAX_EDGES`` edge rows
+    and as many vertex rows is relaxed in Python (``_flood_local``)
+    and returned through ``createDataFrame``. ONE bounded collect both
+    picks the tier and fetches the graph (``_collect_small_graph``):
+    the choice rests on the data, costs no separate count and needs no
+    configuration. On a tiny graph the Spark tier's cost is the jobs
+    themselves: under AQE every lazy checkpoint runs its shuffle
+    stages as separate jobs, 42 of them for the 4-vertex dq16 graph.
+    The result carries the schema of the lazily built one-round plan
+    (analysis only, no job), so both tiers return the same types
+    (sssp with double weights turns ``value`` into a double). Types on
+    which Python arithmetic or ordering could differ from Spark's
+    (``_python_exact``) always take the Spark tier.
+
+    Spark tier, for larger graphs. Driver-action amortization:
+    supersteps are unrolled LAZILY into blocks (sizes 2, 4, 8, ...
+    capped at ``max_block``) ending in a lazy localCheckpoint whose
+    materialization is piggybacked on the block's single convergence
+    action — so each block costs ONE Spark action, not 2 per
+    superstep. Convergence is read from the LAST round's change flag
+    only (not an OR across the block): min/max propagation is
+    monotone, so a final round that changed nothing IS the fixpoint —
+    the loop never pays an extra confirm block after converging
     mid-block. A diameter-2 dedup blob therefore finishes in ONE
     action (block of 2: round 1 propagates, round 2 is the no-op
-    witness); a long-diameter graph amortizes the ~1 s/job scheduling
-    floor 8 supersteps at a time; at 100 TB a block is the same K
-    shuffles it always was, just submitted as one job. Overshoot past
-    the fixpoint inside a block is idempotent: a converged inbox
-    re-picks the same value."""
+    witness); a long-diameter graph amortizes the scheduling floor 8
+    supersteps at a time; at 100 TB a block is the same K shuffles it
+    always was, just submitted together. Overshoot past the fixpoint
+    inside a block is idempotent: a converged inbox re-picks the same
+    value."""
+    if direction not in ("max", "min"):
+        raise ValueError(f"direction must be 'max' or 'min', got {direction!r}")
     spark = vertices.sparkSession
+    vertices = vertices.select("id", "value")
+    shape = vertices
+    if max_iter > 0:
+        shape = _flood_round(vertices, edges, direction, weight).select(
+            "id", "value"
+        )
+    schema = shape.schema
+    if _python_exact(schema, edges.schema):
+        graph = _collect_small_graph(vertices, edges, weight)
+        if graph is not None:
+            ids, vals = _flood_local(
+                *graph,
+                direction,
+                weight is not None,
+                schema["value"].dataType,
+                max_iter,
+                max_block,
+            )
+            # an Arrow table becomes a LocalRelation: the caller's
+            # next action reads it in-process, where a list of rows
+            # would become a pickled RDD scanned by Python workers
+            import pyarrow as pa
+
+            return spark.createDataFrame(
+                pa.table({"id": ids, "value": vals}), schema
+            )
     n = num_partitions
     if n is None:
         # same data-proportional sizing as Pregel.__init__
@@ -372,11 +604,7 @@ def _flood_fixpoint(
     # pair pipelines) put one eager cut above this call
     # (connected_components) so the two consumers here don't duplicate
     # that build inside the first job.
-    vertices = (
-        vertices.select("id", "value")
-        .repartition(n, "id")
-        .localCheckpoint(eager=False)
-    )
+    vertices = vertices.repartition(n, "id").localCheckpoint(eager=False)
     edges = edges.repartition(n, "src").localCheckpoint(eager=False)
     steps_done = 0
     block_size = 2
@@ -385,24 +613,6 @@ def _flood_fixpoint(
         block_size = min(block_size * 2, max_block)
         cur = vertices.withColumn("_changed", F.lit(0))
         for _ in range(block):
-            # name-based (USING) joins throughout: `cur` accumulates the
-            # lineage of `edges` across the unrolled rounds, so
-            # dataframe-attribute references (edges["dst"]) would be
-            # ambiguous self-join columns from round 2 on
-            # optional per-edge message transform (``msg`` references
-            # _msg and any edge column, e.g. _msg + wt for SSSP);
-            # default forwards the vertex value unchanged
-            m = msg if msg is not None else F.col("_msg")
-            inbox = (
-                cur.select(F.col("id").alias("src"), F.col("value").alias("_msg"))
-                .join(edges, "src")
-                .select(F.col("dst").alias("id"), m.alias("_m"))
-                .groupBy("id")
-                .agg(combine("_m").alias("_inbox"))
-            )
-            new_val = pick(
-                F.col("value"), F.coalesce(F.col("_inbox"), F.col("value"))
-            )
             # LAZY per-round checkpoint: truncates the SQL plan to a
             # LogicalRDD leaf (Catalyst only ever optimizes one-round
             # plans — a K-round nested self-join plan costs seconds of
@@ -410,11 +620,9 @@ def _flood_fixpoint(
             # to the block's single convergence action
             # _changed carries only THIS round's delta (see docstring:
             # last-round flag is the convergence witness)
-            cur = cur.join(inbox, "id", "left").select(
-                "id",
-                new_val.alias("value"),
-                (new_val != F.col("value")).cast("int").alias("_changed"),
-            ).localCheckpoint(eager=False)
+            cur = _flood_round(cur, edges, direction, weight).localCheckpoint(
+                eager=False
+            )
         steps_done += block
         changed = cur.agg(F.sum("_changed").alias("c")).first()["c"]
         vertices = cur.drop("_changed")
@@ -431,9 +639,13 @@ def flood_max(
     all vertices halt. Equivalent fixpoint: max value over all vertices
     that can reach v (the oracle computes it as reachability + MAX).
 
-    vertices: (id, value); edges: (src, dst). Returns (id, max_value).
+    Runs ``_flood_fixpoint(direction="max")``, on the driver up to
+    ``_DRIVER_MAX_EDGES`` edges (``num_partitions`` sizes the Spark
+    tier only).
+
+    vertices: (id, value); edges: (src, dst). Returns (id, value).
     """
-    return _flood_fixpoint(vertices, edges, F.max, F.greatest, num_partitions)
+    return _flood_fixpoint(vertices, edges, "max", num_partitions=num_partitions)
 
 
 def connected_components(
@@ -451,8 +663,11 @@ def connected_components(
     rest) is exactly connected components — chains like A~B, B~C must
     collapse to one cluster even though A~C was never emitted.
 
-    Scale: label propagation costs one shuffle per round and converges
-    in O(component diameter) rounds. Dedup-cluster graphs have tiny
+    Scale: runs ``_flood_fixpoint(direction="min")`` over the
+    symmetrized edges, on the driver up to ``_DRIVER_MAX_EDGES`` of
+    them (twice the input pairs), whatever the diameter. Above it,
+    label propagation costs one shuffle per round and converges in
+    O(component diameter) rounds. Dedup-cluster graphs have tiny
     diameters (near-clique blobs), making this the right trade; for
     adversarial long-path graphs use ``connected_components_star``
     (O(log n) rounds)."""
@@ -480,7 +695,7 @@ def connected_components(
         .distinct()
         .withColumn("value", F.col("id"))
     )
-    out = _flood_fixpoint(vertices, sym, F.min, F.least, num_partitions)
+    out = _flood_fixpoint(vertices, sym, "min", num_partitions=num_partitions)
     return out.select("id", F.col("value").alias("component"))
 
 
@@ -597,7 +812,12 @@ def connected_components_star(
     tests/test_round8.py). Skip it for graphs expected to be one giant
     component (the pass would shrink nothing and pays its two mapping
     joins).
+
+    ``max_rounds`` must be >= 1: zero rounds would return the input
+    edges unflattened, not components.
     """
+    if max_rounds < 1:
+        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     spark = edges.sparkSession
     n = num_partitions
     if n is None:
@@ -779,7 +999,11 @@ def sssp(
     last-round convergence witness and in-block overshoot are both
     safe). Returns (id, dist) for REACHABLE vertices only.
 
-    edges: directed (src, dst, wt >= 0). Scale: one inbox shuffle per
+    edges: directed (src, dst, wt >= 0). Runs
+    ``_flood_fixpoint(direction="min", weight="wt")``; the distance
+    type is the type of ``dist + wt`` (double weights give double
+    distances) on both tiers. Scale: up to ``_DRIVER_MAX_EDGES`` edges
+    the rounds run on the driver; above it, one inbox shuffle per
     round, O(shortest-path hop diameter) rounds; weights ride the
     (co-partitioned) edge relation, never the vertex state."""
     big = F.lit(1 << 40).cast("bigint")
@@ -798,12 +1022,7 @@ def sssp(
         F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(wt).alias("wt")
     )
     out = _flood_fixpoint(
-        vertices,
-        e,
-        F.min,
-        F.least,
-        num_partitions,
-        msg=F.col("_msg") + F.col("wt"),
+        vertices, e, "min", weight="wt", num_partitions=num_partitions
     )
     return out.where(F.col("value") < big).select(
         "id", F.col("value").alias("dist")

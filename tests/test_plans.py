@@ -148,8 +148,12 @@ def test_no_unbounded_driver_actions_in_operator_sources():
         # superstep halt vote (.first) and star-loop edge-set-stability
         # convergence (.count — a FULL-partition action by design: it
         # doubles as the materializer for the round's lazy checkpoints,
-        # which a partial take/first would corrupt)
-        "pregel.py": {".first()", ".count()"},
+        # which a partial take/first would corrupt). .collect(): the
+        # flood fixpoint's driver tier, one union of vertex and edge
+        # rows under limit(2 * _DRIVER_MAX_EDGES + 2) — graph-sized
+        # only below the cap by construction (each side is checked
+        # against _DRIVER_MAX_EDGES, the bpe_train_local contract)
+        "pregel.py": {".first()", ".count()", ".collect()"},
         # .first(): dim=None fallback only. .collect(): the GEMM tiers
         # collect model-sized relations to ship as numpy matrices — the
         # QUERY relation (cosine_topk_gemm; driver-sized by the same
