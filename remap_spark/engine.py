@@ -11,14 +11,24 @@ Scale notes (100 TB target):
 - ``shuffle.partitions`` is a *starting* value; AQE coalesces down. On a
   real cluster set it ~2-3x total cores; here it defaults to local cores.
 - Arrow on: every pandas-UDF boundary (MapReduceJob, multimodal ops) is
-  Arrow-batched, never row-at-a-time pickling.
+  Arrow-batched, never row-at-a-time pickling. Rows built on the driver
+  (literal graphs, expected tables, empty results, driver-tier outputs)
+  enter as Arrow local relations (``local_frame``), never through
+  ``createDataFrame(list)``: that is a pickled RDD, and every scan of it
+  runs Python-worker tasks. A Python-worker task has a fixed cost on
+  CPython 3.11 of about 0.13-0.18 CPU-s (4-core VM), because pyspark
+  calls ``importlib.invalidate_caches()`` per task and each of the
+  worker's 16 zip importers re-reads its archive. A local relation is
+  scanned inside the JVM.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -166,6 +176,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """Driver-resident rows (tuples in ``schema``'s column order) as a
+    DataFrame that plans as a JVM-only ``LocalTableScan``.
+
+    ``createDataFrame(list)`` would make a pickled RDD instead, and
+    every scan of it runs Python-worker tasks (``ExistingRDD``); here
+    the rows cross once, as an Arrow table typed from ``schema`` (a
+    ``StructType`` or a DDL string). The frame has min(rows, default
+    parallelism) partitions, none for zero rows."""
+    import pyarrow as pa  # not at module top: keeps session start lean
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 class Engine:

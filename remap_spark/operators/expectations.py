@@ -23,6 +23,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..engine import local_frame
+
 
 @dataclass(frozen=True)
 class Expectation:
@@ -167,8 +169,10 @@ def benford_deviation(
     # ALL NINE digit rows always emit — a digit with zero observations
     # is the loudest Benford anomaly there is (deviation = -expected),
     # so the report is built FROM the expected table and counts join in
-    expected = df.sparkSession.createDataFrame(
-        sorted(BENFORD_PPM.items()), "digit int, expected_ppm bigint"
+    expected = local_frame(
+        df.sparkSession,
+        sorted(BENFORD_PPM.items()),
+        "digit int, expected_ppm bigint",
     )
     return (
         expected.join(counts, "digit", "left")

@@ -81,7 +81,16 @@ class MapReduceJob:
         self.json_values = json_values
 
     # -- map phase ----------------------------------------------------
-    def _mapped(self, df: DataFrame, key_col: str, value_col: str) -> DataFrame:
+    def _mapped(
+        self,
+        df: DataFrame,
+        key_col: str,
+        value_col: str,
+        spill_key: Callable[[object], object] | None = None,
+    ) -> DataFrame:
+        """The map phase as one ``mapInPandas``; with ``spill_key`` it
+        also emits ``_sk`` = ``str(spill_key(k2))``, the spill-file
+        order key, in the same Python pass."""
         map_fn = self.map_fn
         combiner = self.combiner
         json_values = self.json_values
@@ -110,11 +119,17 @@ class MapReduceJob:
                             out_part.append(part)
                             out_k2.append(k2)
                             out_v2.append(json.dumps(v2) if json_values else v2)
-                yield pd.DataFrame(
+                out = pd.DataFrame(
                     {"partition": out_part, "k2": out_k2, "v2": out_v2}
                 )
+                if spill_key is not None:
+                    out["_sk"] = out["k2"].map(lambda k: str(spill_key(k)))
+                yield out
 
-        return df.mapInPandas(run_map, schema=self.map_output_schema)
+        schema = self.map_output_schema
+        if spill_key is not None:
+            schema += ", _sk string"
+        return df.mapInPandas(run_map, schema=schema)
 
     # -- reduce phase -------------------------------------------------
     def _reduced(self, mapped: DataFrame) -> DataFrame:
@@ -175,22 +190,12 @@ class MapReduceJob:
         exercised by examples/secondarysort/secondarysort.py:8-9 where
         k2 is the whole record and customkey=itemgetter(3) orders by a
         value field). Here ``sort_key`` applied to the ``k2`` string
-        drives the within-partition order. The derived sort column is an
-        Arrow-batched pandas UDF — this class is already the arbitrary-
-        Python escape hatch, and the sort column never leaves the
-        within-partition sort (dropped before return, no shuffle)."""
-        mapped = self._mapped(df, key_col, value_col)
+        drives the within-partition order. The derived sort column is
+        computed by the map's own ``mapInPandas`` (one Python stage for
+        the whole map phase) and never leaves the within-partition sort
+        (dropped before return, no shuffle)."""
+        mapped = self._mapped(df, key_col, value_col, self.sort_key)
         part = mapped.repartition(F.col("partition"))
         if self.sort_key is None:
             return part.sortWithinPartitions("partition", "k2")
-        sort_key = self.sort_key
-
-        @F.pandas_udf("string")
-        def _spill_key(s):  # pragma: no cover - executed on workers
-            return s.map(lambda k: str(sort_key(k)))
-
-        return (
-            part.withColumn("_sk", _spill_key(F.col("k2")))
-            .sortWithinPartitions("partition", "_sk")
-            .drop("_sk")
-        )
+        return part.sortWithinPartitions("partition", "_sk").drop("_sk")

@@ -40,6 +40,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..engine import local_frame
+
 
 class Pregel:
     """Superstep loop over (vertices, edges) DataFrames.
@@ -333,7 +335,7 @@ def pagerank_dangling_pregel(
 # Largest edge relation (and vertex relation) that _flood_fixpoint
 # relaxes on the driver; above it the Spark block loop runs. Sized so
 # that at the cap one bounded collect, the Python rounds and the
-# result's createDataFrame cost less than ONE Spark block. Measured on
+# result's local_frame cost less than ONE Spark block. Measured on
 # parquet inputs (local[4], 4-core VM, median of 3, two rounds each):
 # at 50k edges the driver tier took 1.3-2.2 s wall and 2.5-5.5 CPU-s
 # against 1.5-2.8 s and 4.5-8.1 CPU-s for one Spark block, over a
@@ -397,10 +399,12 @@ def _collect_small_graph(
     2 * (_DRIVER_MAX_EDGES + 1) rows. Returns ((id, value) rows,
     (src, dst[, weight]) rows) when neither side exceeds the cap
     (collecting the full bound means one side does), else None. A
-    graph above the cap pays only the partitions it takes to find that
-    many rows. Both sides travel in one collect because every collect
-    costs its own incremental-scan jobs; flat rows because nested
-    struct rows cost the Python side about twice as much."""
+    graph above the cap pays only the rows it takes to reach that
+    bound. Both sides travel in one collect of ONE coalesced partition:
+    the limit then stops the single task's scan at the bound, where an
+    incremental take would pay a job per scan-up step and a task per
+    input partition. Flat rows because nested struct rows cost the
+    Python side about twice as much."""
     wt = [F.col(weight).alias("_w")] if weight else []
     no_wt = (
         [F.lit(None).cast(edges.schema[weight].dataType).alias("_w")]
@@ -422,7 +426,7 @@ def _collect_small_graph(
             "value",
         )
     )
-    rows = both.limit(2 * _DRIVER_MAX_EDGES + 2).collect()
+    rows = both.coalesce(1).limit(2 * _DRIVER_MAX_EDGES + 2).collect()
     e_rows = [tuple(r[1:-1]) for r in rows if r[0]]
     v_rows = [(r[1], r[-1]) for r in rows if not r[0]]
     if len(e_rows) > _DRIVER_MAX_EDGES or len(v_rows) > _DRIVER_MAX_EDGES:
@@ -529,7 +533,7 @@ def _flood_fixpoint(
 
     Driver tier: a graph of at most ``_DRIVER_MAX_EDGES`` edge rows
     and as many vertex rows is relaxed in Python (``_flood_local``)
-    and returned through ``createDataFrame``. ONE bounded collect both
+    and returned through ``engine.local_frame``. ONE bounded collect both
     picks the tier and fetches the graph (``_collect_small_graph``):
     the choice rests on the data, costs no separate count and needs no
     configuration. On a tiny graph the Spark tier's cost is the jobs
@@ -578,14 +582,7 @@ def _flood_fixpoint(
                 max_iter,
                 max_block,
             )
-            # an Arrow table becomes a LocalRelation: the caller's
-            # next action reads it in-process, where a list of rows
-            # would become a pickled RDD scanned by Python workers
-            import pyarrow as pa
-
-            return spark.createDataFrame(
-                pa.table({"id": ids, "value": vals}), schema
-            )
+            return local_frame(spark, zip(ids, vals), schema)
     n = num_partitions
     if n is None:
         # same data-proportional sizing as Pregel.__init__

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..engine import local_frame
+
 
 def scd2_history(
     df: DataFrame,
@@ -221,8 +223,10 @@ def schema_changes(old: DataFrame, new: DataFrame) -> DataFrame:
             rows.append((c, "add", None, n[c]))
         elif o[c] != n[c]:
             rows.append((c, "type_change", o[c], n[c]))
-    return old.sparkSession.createDataFrame(
-        rows, "column string, op string, old_type string, new_type string"
+    return local_frame(
+        old.sparkSession,
+        rows,
+        "column string, op string, old_type string, new_type string",
     )
 
 

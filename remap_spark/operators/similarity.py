@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..engine import local_frame
 from ..functions import cosine_similarity, dot_product, l2_norm
 
 
@@ -87,8 +88,10 @@ def _topk_gemm(
     q_cols = [id_col, vec_col] + ([label_col] if label_col else [])
     q_rows = queries.select(*q_cols).collect()
     if not q_rows:
-        return candidates.sparkSession.createDataFrame(
-            [], "query_id bigint, rank int, vec_id bigint, cosine double"
+        return local_frame(
+            candidates.sparkSession,
+            [],
+            "query_id bigint, rank int, vec_id bigint, cosine double",
         )
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
@@ -639,8 +642,8 @@ def ivf_probe_topk(
     probes = probes.localCheckpoint(eager=True)
     cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
     if not cells:  # empty query set: empty result, correct schema
-        return spark.createDataFrame(
-            [], "query_id bigint, rank int, vec_id bigint, cosine double"
+        return local_frame(
+            spark, [], "query_id bigint, rank int, vec_id bigint, cosine double"
         )
     corpus = spark.read.parquet(f"{path}/corpus").where(
         F.col("cell").isin(cells)

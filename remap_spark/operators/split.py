@@ -227,7 +227,13 @@ def temperature_weights(
     Shape: one tiny aggregate keyed by the group, then two single-row
     broadcast crossJoins for the normalizing constants — never a
     driver action, and the group relation is #groups-sized regardless
-    of corpus size."""
+    of corpus size.
+
+    Plan-only on streaming input: the result is a streaming DataFrame,
+    but its two aggregates meet in a stream-stream crossJoin, so
+    ``writeStream...start()`` raises ``AnalysisException`` in every
+    output mode. Inside ``foreachBatch`` it runs, over each micro-batch
+    alone."""
     g = F.col(group_col) if isinstance(group_col, str) else group_col
     s = F.col(size_col) if isinstance(size_col, str) else size_col
     # one lazy cut makes the docstring's "one tiny aggregate" claim

@@ -12,6 +12,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..engine import local_frame
 from ..functions import PUNCT, lineage_cut, portable_hash60, tokenize
 
 # deliberately small, fixed marker lists — the heuristic is the
@@ -1536,8 +1537,8 @@ def phrase_search(
         ws = [w for w in ph.lower().translate(punct_tbl).split() if w]
         for off, w in enumerate(ws):
             rows.append((ph, off, w, len(ws)))
-    terms = spark.createDataFrame(
-        rows, "phrase string, off int, word string, plen int"
+    terms = local_frame(
+        spark, rows, "phrase string, off int, word string, plen int"
     )
     vocab = sorted({r[2] for r in rows})
     postings = docs.select(

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..engine import local_frame
 from ..operators.pregel import flood_max, pagerank, pagerank_dangling, pointer_jump
 
 # graph1.txt + graph2.txt adjacency (pagerank input, 10 vertices)
@@ -40,11 +41,11 @@ FLOODMAX_ADJ: dict[str, list[str]] = {
 
 def _edges_df(spark: SparkSession, adj: dict[str, list[str]]) -> DataFrame:
     rows = [(s, d) for s, dsts in adj.items() for d in dsts]
-    return spark.createDataFrame(rows, "src string, dst string")
+    return local_frame(spark, rows, "src string, dst string")
 
 
 def dq16_flood_max(spark: SparkSession, sf_dir: str) -> DataFrame:
-    verts = spark.createDataFrame(FLOODMAX_VERTS, "id string, value bigint")
+    verts = local_frame(spark, FLOODMAX_VERTS, "id string, value bigint")
     edges = _edges_df(spark, FLOODMAX_ADJ)
     # literal 4-vertex graph: 2 partitions, not the session's 32 — at
     # real scale callers size num_partitions to their cluster
@@ -57,9 +58,7 @@ def dq16_flood_max(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dq17_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges_df(spark, PAGERANK_ADJ)
-    verts = spark.createDataFrame(
-        [(v,) for v in PAGERANK_ADJ], "id string"
-    )
+    verts = local_frame(spark, [(v,) for v in PAGERANK_ADJ], "id string")
     ranks = pagerank(
         verts, edges, num_vertices=10, supersteps=30, num_partitions=2
     )
@@ -82,7 +81,7 @@ def ext_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank stays 1 (asserted in tests); the naive dq17 semantics would
     drain it through the sinks."""
     edges = _edges_df(spark, DANGLING_ADJ)
-    verts = spark.createDataFrame([(v,) for v in PAGERANK_ADJ], "id string")
+    verts = local_frame(spark, [(v,) for v in PAGERANK_ADJ], "id string")
     ranks = pagerank_dangling(
         verts, edges, num_vertices=10, supersteps=10, num_partitions=2
     )
@@ -105,7 +104,7 @@ PTR_FOREST: list[tuple[int, int]] = (
 
 
 def dq40_pointer_jump(spark: SparkSession, sf_dir: str) -> DataFrame:
-    verts = spark.createDataFrame(PTR_FOREST, "id bigint, ptr bigint")
+    verts = local_frame(spark, PTR_FOREST, "id bigint, ptr bigint")
     return (
         pointer_jump(verts, num_partitions=2)
         .select(F.col("id").alias("vertex_id"), F.col("root").alias("root_id"))

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import load_table
+from ..engine import load_table, local_frame
 from ..functions import lineage_cut
 from ..operators.experiments import ab_test_report, crosstab_chi2
 from ..operators.linkage import resolve_entities
@@ -946,7 +946,7 @@ def ext_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graphs import DANGLING_ADJ, PAGERANK_ADJ, _edges_df
 
     edges = _edges_df(spark, DANGLING_ADJ)
-    verts = spark.createDataFrame([(v,) for v in PAGERANK_ADJ], "id string")
+    verts = local_frame(spark, [(v,) for v in PAGERANK_ADJ], "id string")
     ranks = pagerank_personalized(
         verts, edges, seeds=["1", "7"], supersteps=10, num_partitions=2
     )

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import load_table
+from ..engine import load_table, local_frame
 from ..functions import lineage_cut
 from ..operators.dedup import (
     cross_corpus_match_spans,
@@ -432,7 +432,7 @@ def ext_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graphs import PAGERANK_ADJ, _edges_df
 
     edges = _edges_df(spark, PAGERANK_ADJ)
-    verts = spark.createDataFrame([(v,) for v in PAGERANK_ADJ], "id string")
+    verts = local_frame(spark, [(v,) for v in PAGERANK_ADJ], "id string")
     scores = hits(verts, edges, iters=8, num_partitions=2)
     return scores.select(
         F.col("id").alias("vertex_id"),

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..engine import local_frame
 from .windows import restore_ntz, watermarked
 
 
@@ -243,8 +244,8 @@ def ingest_dedup_fuzzy_batch(
             .select("band", "key", "doc", "sigs")
         )
     else:  # first batch: no store yet (still dedups within the batch)
-        store = spark.createDataFrame(
-            [], "band int, key string, doc bigint, sigs array<bigint>"
+        store = local_frame(
+            spark, [], "band int, key string, doc bigint, sigs array<bigint>"
         )
     survivors = incremental_dedup_fuzzy(
         batch_df, store, threshold, text_col, id_col,
@@ -350,7 +351,7 @@ def ingest_span_dedup_batch(
             .select("g")
         )
     else:  # first batch: no store yet — only the within-batch tier acts
-        store = spark.createDataFrame([], "g bigint")
+        store = local_frame(spark, [], "g bigint")
     cleaned = incremental_remove_spans(
         batch_df, store, text_col, id_col, k=k, dedup_within_batch=True
     ).withColumnRenamed("doc", id_col)

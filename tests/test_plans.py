@@ -194,6 +194,59 @@ def test_no_unbounded_driver_actions_in_operator_sources():
                 )
 
 
+def test_driver_rows_enter_only_through_local_frame():
+    """Every driver-resident row set becomes a frame through
+    ``engine.local_frame`` (an Arrow LocalTableScan): a direct
+    ``createDataFrame(list)`` is a pickled RDD whose every scan runs
+    Python-worker tasks."""
+    import io
+    import pathlib
+    import tokenize
+
+    import remap_spark
+
+    root = pathlib.Path(remap_spark.__file__).parent
+    calls = []
+    for src in sorted(root.rglob("*.py")):
+        toks = [
+            t
+            for t in tokenize.generate_tokens(io.StringIO(src.read_text()).readline)
+            if t.type not in (tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE)
+        ]
+        top_def = None
+        for prev, tok, nxt in zip(toks, toks[1:], toks[2:]):
+            if prev.string in ("def", "class") and prev.start[1] == 0:
+                top_def = tok.string
+            if tok.string == "createDataFrame" and nxt.string == "(":
+                calls.append((str(src.relative_to(root)), top_def))
+    assert calls == [("engine.py", "local_frame")], calls
+
+
+def test_local_frame_matches_list_built_frame(spark):
+    """``local_frame`` returns the schema and rows ``createDataFrame``
+    builds from the same list, and plans as a LocalTableScan, never a
+    scan of a Python RDD."""
+    from remap_spark.engine import local_frame
+
+    cases = [
+        (
+            [(1, 2**40, 1.5, "a"), (-7, None, -0.25, "b")],
+            "i int, b bigint, d double, s string",
+        ),
+        ([(None, None, None, None)], "i int, b bigint, d double, s string"),
+        ([], "band int, key string, doc bigint, sigs array<bigint>"),
+        ([(1, [3, None, 2]), (2, []), (3, None)], "doc int, sigs array<bigint>"),
+    ]
+    for rows, ddl in cases:
+        got = local_frame(spark, rows, ddl)
+        want = spark.createDataFrame(rows, ddl)
+        assert got.schema == want.schema, ddl
+        assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+        plan = got._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        assert plan.lstrip().startswith("LocalTableScan"), plan
+        assert "ExistingRDD" not in plan, plan
+
+
 def test_decontaminate_broadcasts_probe_grams(spark):
     """The probe shingle set must broadcast into the contamination
     join (map-side check; the corpus gram stream is never shuffled for

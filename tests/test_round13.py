@@ -1,7 +1,8 @@
 """Round-13 pins: the r12 ADVICE guard fixes.
 
 1. temperature_weights skips its localCheckpoint cut on streaming
-   inputs (localCheckpoint is unsupported on streaming DataFrames).
+   inputs (localCheckpoint is unsupported on streaming DataFrames);
+   the result plans but is refused at writeStream start().
 2. quality_score / redact_pii reject keep_cols entries that collide
    with the columns the operator itself produces (or duplicates),
    instead of silently emitting duplicate column names.
@@ -12,6 +13,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from remap_spark.operators.dedup import incremental_dedup
@@ -45,6 +47,12 @@ def test_temperature_weights_streaming_plans(spark):
     out = temperature_weights(src)
     assert out.isStreaming
     assert set(out.columns) == {"grp", "mass", "share", "weight"}
+    # plan-only: the two aggregates meet in a stream-stream crossJoin,
+    # which Spark refuses at start() in every output mode
+    for mode in ("append", "complete", "update"):
+        with pytest.raises(AnalysisException):
+            q = out.writeStream.format("noop").outputMode(mode).start()
+            q.stop()
 
 
 def test_temperature_weights_batch_unchanged(spark):
