@@ -13,6 +13,7 @@ import json
 import os
 import sys
 import time
+from collections.abc import Iterable
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -45,17 +46,30 @@ HEAVY_QUERIES = [
 ]
 
 
-def heavy_subset(raw: str | None) -> list[str] | None:
-    """The query names SPARK_GRAFT_BENCH_HEAVY selects: None (the full
-    suite) when unset, empty, "0", "false" or only commas; the pinned HEAVY_QUERIES
-    for "1" or "true"; otherwise a comma-separated name list. Case and
+def name_subset(raw: str | None, on: Iterable[str]) -> list[str] | None:
+    """The query names a SPARK_GRAFT_BENCH_* switch selects: None when
+    unset, empty, "0", "false" or only commas; every name in ``on`` for
+    "1" or "true"; otherwise a comma-separated name list. Case and
     surrounding whitespace are ignored."""
     value = (raw or "").strip()
     if value.lower() in ("", "0", "false"):
         return None
     if value.lower() in ("1", "true"):
-        return sorted(HEAVY_QUERIES)
+        return sorted(on)
     return sorted(n.strip() for n in value.split(",") if n.strip()) or None
+
+
+def heavy_subset(raw: str | None) -> list[str] | None:
+    """SPARK_GRAFT_BENCH_HEAVY: "1" selects the pinned HEAVY_QUERIES."""
+    return name_subset(raw, HEAVY_QUERIES)
+
+
+def registered(names: list[str], queries: Iterable[str], mode: str) -> list[str]:
+    """``names``, or SystemExit naming those not in ``queries``."""
+    missing = sorted(set(names).difference(queries))
+    if missing:
+        raise SystemExit(f"unknown {mode} queries: {missing}")
+    return names
 
 
 def _force(df) -> None:
@@ -65,7 +79,7 @@ def _force(df) -> None:
 def _fresh_mode(query_names: list[str]) -> None:
     """SPARK_GRAFT_BENCH_FRESH mode: one SUBPROCESS + one vanilla
     SparkSession per query (warm-up run + min-of-3), so suite context
-    (109 registered plans, shared-JVM heap pressure, neighbor GC) is
+    (the other registered plans, shared-JVM heap pressure, neighbor GC) is
     excluded by construction. This is the arbiter for in-suite drift:
     compare a query's interleaved-suite number against its fresh
     number before calling a regression real (BASELINE.md dq33 note)."""
@@ -75,19 +89,6 @@ def _fresh_mode(query_names: list[str]) -> None:
         "import sys, time, json; sys.path.insert(0, {root!r});"
         "from remap_spark.engine import build_session;"
         "from remap_spark.queries import ALL_QUERIES;"
-        "ALL_QUERIES = dict(ALL_QUERIES);\n"
-        # staged modules are guarded exactly like main(): after a
-        # promotion deletes one, fresh mode must keep working
-        "for _m in ('staged_r7', 'staged_r8', 'staged_r9', 'staged_r10',"
-        " 'staged_r11', 'staged_r12'):\n"
-        "    try:\n"
-        "        import importlib\n"
-        "        _mod = importlib.import_module('remap_spark.queries.' + _m)\n"
-        "        for _k in dir(_mod):\n"
-        "            if _k.endswith('_QUERIES') and _k.startswith('STAGED'):\n"
-        "                ALL_QUERIES.update(getattr(_mod, _k))\n"
-        "    except ImportError:\n"
-        "        pass\n"
         "spark = build_session(app_name='bench_fresh');"
         "spark.sparkContext.setLogLevel('ERROR');"
         "q = ALL_QUERIES[{name!r}];"
@@ -123,51 +124,9 @@ def main() -> None:
     from remap_spark.engine import build_session
     from remap_spark.queries import ALL_QUERIES
 
-    # staged queries ride the bench before registration so their perf
-    # record starts a round early; post-promotion merges are no-ops
-    try:
-        from remap_spark.queries.staged_r7 import STAGED_QUERIES
-
-        ALL_QUERIES = {**ALL_QUERIES, **STAGED_QUERIES}
-    except ImportError:
-        pass
-    try:
-        from remap_spark.queries.staged_r8 import STAGED_R8_QUERIES
-
-        ALL_QUERIES = {**ALL_QUERIES, **STAGED_R8_QUERIES}
-    except ImportError:
-        pass
-    try:
-        from remap_spark.queries.staged_r9 import STAGED_R9_QUERIES
-
-        ALL_QUERIES = {**ALL_QUERIES, **STAGED_R9_QUERIES}
-    except ImportError:
-        pass
-    try:
-        from remap_spark.queries.staged_r10 import STAGED_R10_QUERIES
-
-        ALL_QUERIES = {**ALL_QUERIES, **STAGED_R10_QUERIES}
-    except ImportError:
-        pass
-    try:
-        from remap_spark.queries.staged_r11 import STAGED_R11_QUERIES
-
-        ALL_QUERIES = {**ALL_QUERIES, **STAGED_R11_QUERIES}
-    except ImportError:
-        pass
-    try:
-        from remap_spark.queries.staged_r12 import STAGED_R12_QUERIES
-
-        ALL_QUERIES = {**ALL_QUERIES, **STAGED_R12_QUERIES}
-    except ImportError:
-        pass
-
-    fresh = os.environ.get("SPARK_GRAFT_BENCH_FRESH")
+    fresh = name_subset(os.environ.get("SPARK_GRAFT_BENCH_FRESH"), ALL_QUERIES)
     if fresh:
-        names = (
-            sorted(ALL_QUERIES) if fresh == "1" else fresh.split(",")
-        )
-        _fresh_mode(names)
+        _fresh_mode(registered(fresh, ALL_QUERIES, "fresh-mode"))
         return
 
     spark = build_session(app_name="remap_spark_bench")
@@ -193,13 +152,9 @@ def main() -> None:
     # regressions (the r3 failure mode).
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     heavy = heavy_subset(os.environ.get("SPARK_GRAFT_BENCH_HEAVY"))
-    if heavy:
-        names = heavy
-        missing = [n for n in names if n not in ALL_QUERIES]
-        if missing:
-            raise SystemExit(f"unknown heavy-subset queries: {missing}")
-    else:
-        names = sorted(ALL_QUERIES)
+    names = (
+        registered(heavy, ALL_QUERIES, "heavy-subset") if heavy else sorted(ALL_QUERIES)
+    )
 
     def _calibrate() -> float:
         # fixed trivial probe; a shifted floor between the start and

@@ -1,13 +1,25 @@
 """Query registry: every declared query (SURVEY.md §2.13) plus the
 training-data-pipeline extension queries, with their DuckDB oracles.
 
-``ALL_QUERIES``: name -> (spark, sf_dir) -> DataFrame
+``ALL_QUERIES``: name -> (spark, sf_dir) -> DataFrame, in check order
 ``ALL_ORACLES``: name -> ANSI SQL for DuckDB (absent key = rows-only check)
+
+The external correctness driver hash-checks only the first
+``CHECK_WINDOW`` = 50 keys of ``ALL_QUERIES``. At import ``check_order``
+sorts the registry over the driver's ``CORRECTNESS_r*.json`` records:
+names never checked or red at their latest row first, then oldest latest
+recorded round first, ties in registration order. A landed green record
+rotates the window by itself. At the 200 = 50 x 4 ceiling the due group
+is exactly the 50 rows last checked four records ago, so no row goes
+more than four recorded rounds unchecked; a 201st name without a
+retirement breaks that bound.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+from collections.abc import Callable, Iterable, Mapping, Sequence
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -99,11 +111,8 @@ ALL_QUERIES: dict[str, QueryFn] = {
 ALL_ORACLES: dict[str, str] = {**DQ_ORACLES, **GRAPH_ORACLES}
 
 
-# (module name, queries attr, oracles attr) for every extension module.
-# Promotion rounds: staged_r7 (33 queries), staged_r8 (24+2), staged_r9
-# (4), staged_r10 (ext_k_anonymity), staged_r11 (SemDeDup + DSIR) —
-# each replay-verified at sf0.001 AND sf0.01 by its tests/test_staged_*
-# file before registering.
+# (module name, queries attr, oracles attr) for every extension module;
+# tests/test_dq.py replays every registered oracle.
 _EXTENSION_MODULES = [
     ("extensions", "EXT_QUERIES", "EXT_ORACLES"),
     ("multimodal_q", "MM_QUERIES", "MM_ORACLES"),
@@ -142,372 +151,45 @@ def register_extensions() -> None:
 
 register_extensions()
 
-# ---------------------------------------------------------------------------
-# Verification-priority ordering.
-#
-# The external correctness driver compares the FIRST `CHECK_WINDOW` keys of
-# ALL_QUERIES (registration order) against their DuckDB oracles; anything
-# after that gets no hard correctness signal for the round. Registration
-# order therefore encodes verification priority: queries whose semantics
-# changed recently and families that have never had a driver-gate row come
-# first; long-green variants whose capability is also proven by an in-window
-# sibling (plus their own recorded round-1 pass) fill the tail.
 CHECK_WINDOW = 50
 
-# Round-12 window arithmetic (executing the plan the r11 verdict
-# pre-verified, name-for-name; the r11 rotation comment's lookahead
-# is preserved in git history at commit 0e3841e^). The registry holds
-# 199 + 1 r12 promotion = 200 against the 50-slot window — the
-# 50×4 ceiling; the staleness bound stays at ceil(200/50) = 4
-# recorded rounds. CORRECTNESS_r11 landed 50/50 green (199/199 at
-# latest row, zero red), so the last-4 recorded set becomes
-# r09/r10/r11/r12 the moment the r12 record lands — which makes the
-# 49 `_DUE_FIRST_R12` rows (latest green row: r08, after r11's
-# ext_dedup_keep_one smoothing pre-check drained one) the window's
-# hard obligations. The remaining 1 slot:
-#   the staged_r12 promotion ext_dedup_per_host
-#     (queries/staged_r12.py — the crawl-curation composition the
-#     r10 verdict earmarked as the natural 200th name; both-SF
-#     oracle replays, null-url pin test, cartesian/JVM plan sweeps,
-#     and a 1M-doc scale probe all green before registration).
-# = exactly 50, zero spare (acceptable for one round per the r11
-# plan: no r11 row landed red, so no red row competes for the slot).
-# Non-window coverage check: 200 - 50 = 150 = 50 r09-latest +
-# 50 r10-latest + 50 r11-latest — every one inside the last four
-# recorded rounds both before and after the r12 record lands.
-#
-# r13 STEADY-STATE POLICY (decided here, per the r11 verdict's
-# directive — executable arithmetic in tests/test_registry.py, not
-# prose). From r13 onward the registry sits at the 200 = 50×4
-# ceiling: every round's due set is exactly the 50 rows whose latest
-# row is 4 records old (`_DUE_FIRST_R13` = the 50 r09-latest rows),
-# zero smoothing slot, zero promotion slot. The treadmill is
-# self-consistent as long as every row stays green. The red-row
-# contingency is PRE-NAMED rather than left to a forced choice:
-#   * If a row in CORRECTNESS_r12 (or later) lands red, it must
-#     re-enter the next window (test_red_latest_rows_inside_window),
-#     which over-commits the 50-slot window by one. The slot is
-#     freed by retiring `_R13_CONTINGENT_RETIREMENT` =
-#     "dq11_intersect" — the candidate examined at r11: Catalyst
-#     plans INTERSECT as left-semi + distinct (the dq21_right_outer
-#     planner-mirror precedent), both of which capabilities are
-#     driven by registered siblings (dq10_semi, dq26_distinct_agg),
-#     and its verbatim oracle replay moves to the pytest tier per
-#     queries/retired.py. Its §2.8 set-op SEMANTICS coverage remains
-#     represented by dq11_except + dq22_union plus the retired-tier
-#     replay.
-#   * If no row lands red, nothing retires: the full-window
-#     treadmill runs at 200/200 and any future addition must retire
-#     or consolidate a duplicate row per addition (retirement
-#     criteria: long-green ≥2 recorded rounds, capability strictly
-#     subsumed by registered siblings, verbatim oracle replay
-#     retained in the pytest tier).
-# tests/test_registry.py::test_r13_steady_state_policy pins the
-# candidate's eligibility (long-green, siblings registered, not
-# already retired) every round, so the contingency stays executable.
-#
-# HISTORICAL (r10 plan, kept for the round-pinned derivation tests in
-# tests/test_registry.py — pinned to the CORRECTNESS set that existed
-# when the plan was made, so they stay green forever): the 48 rows
-# whose latest green row was r06 at r10 planning time.
-_DUE_FIRST_R10 = [
-    "dq33_percentiles",
-    "dq36_conditional_agg",
-    "dq37_lead_lag",
-    "dq38_sql_api",
-    "dq45_rank_funcs",
-    "ext_active_users_approx",
-    "ext_ann_ivf_pq",
-    "ext_ann_lsh",
-    "ext_ann_pq",
-    "ext_ann_topk",
-    "ext_cohort_retention",
-    "ext_dedup_embedding",
-    "ext_dedup_incremental_fuzzy",
-    "ext_dedup_lsh_verified",
-    "ext_dedup_minhash_lsh",
-    "ext_dedup_ngram_jaccard",
-    "ext_dedup_paragraph_global",
-    "ext_dedup_prefix_filter",
-    "ext_dedup_simhash",
-    "ext_dedup_soft_weights",
-    "ext_dedup_span_lengths",
-    "ext_graph_sssp",
-    "ext_graph_triangles",
-    "ext_kmv_distinct",
-    "ext_layout_hilbert",
-    "ext_layout_zorder",
-    "ext_mm_audio_features",
-    "ext_mm_frame_sample",
-    "ext_mm_image_features",
-    "ext_percentile_state",
-    "ext_pipeline_analytics",
-    "ext_pipeline_pretokenize",
-    "ext_recipe_token_budget",
-    "ext_retrieval_rrf",
-    "ext_rollup_incremental",
-    # ext_sample_det: retired to the pytest tier in r9 (strict subset
-    # of ext_split_train_test's hash_split CDF — queries/retired.py)
-    "ext_sample_stratified",
-    "ext_scd2_history",
-    "ext_scd2_incremental",
-    "ext_split_train_test",
-    "ext_text_bm25",
-    "ext_text_fingerprint",
-    "ext_text_langid",
-    "ext_text_quality",
-    "ext_text_stats",
-    "ext_text_tokens",
-    "ext_ts_ewma",
-    "ext_ts_gapfill",
-    "ext_user_paths",
-]
 
-# The r10 smoothing/insurance pick (historical; got its fresh r10
-# row — CORRECTNESS_r10 green).
-_SMOOTHING_R10 = "ext_entity_resolution"
-
-# The executed r10 window (historical; CORRECTNESS_r10 landed 50/50
-# green name-for-name against this list).
-_WINDOW_R10 = [
-    # -- the staged_r10 promotion (first driver check) --
-    "ext_k_anonymity",
-    # -- the smoothing-slot pre-check (r07-latest, plan changed twice
-    #    since its record, both changes pinned bit-identical) --
-    _SMOOTHING_R10,
-] + _DUE_FIRST_R10
-
-# The 47 rows whose latest green row is r07 (48 minus the
-# _SMOOTHING_R10 pre-check, which got a fresh r10 row): due FIRST in
-# the r11 window — they fall outside the last-4-records set the
-# moment the r11 verify lands a new CORRECTNESS file. 47 + 2
-# staged_r11 promotions + the smoothing slot = 50.
-_DUE_FIRST_R11 = [
-    "dq03_wordcount",
-    "ext_ab_test",
-    "ext_attribution",
-    "ext_basket_rules",
-    "ext_corpus_diff",
-    "ext_corpus_report",
-    "ext_cross_matches",
-    "ext_crosstab_chi2",
-    "ext_ewma_forecast",
-    "ext_expectations",
-    "ext_k_core",
-    "ext_kmv_set_ops",
-    "ext_label_propagation",
-    "ext_mad_outliers",
-    "ext_markov_transitions",
-    "ext_modularity",
-    "ext_pack_sequences",
-    "ext_pagerank_personalized",
-    "ext_pca_project",
-    "ext_period_over_period",
-    "ext_quantile_bins",
-    "ext_rfm_segments",
-    "ext_salted_agg",
-    "ext_sample_quality_mix",
-    "ext_sample_weighted",
-    "ext_sample_wor",
-    "ext_scd2_lookup",
-    "ext_seasonal",
-    "ext_segment_overlap",
-    "ext_semantic_decontaminate",
-    "ext_shuffle_shards",
-    "ext_skew_report",
-    "ext_skyline",
-    "ext_source_cap",
-    "ext_text_bigram_lm",
-    "ext_text_boilerplate",
-    "ext_text_chunk",
-    "ext_text_clean",
-    "ext_text_line_dedup",
-    "ext_text_lm_score",
-    "ext_text_repetition",
-    "ext_text_tfidf",
-    "ext_text_vocab",
-    "ext_ts_twap",
-    "ext_ts_zscore",
-    "ext_winnow",
-    "ext_winsorize",
-]
-
-# The r11 smoothing/insurance slot (see the rotation comment above):
-# no red latest rows exist, so it takes the r10 verdict's endorsed
-# pre-check of the r08-latest row whose operator changed most
-# recently (the r10 span-rebuild rework).
-_SMOOTHING_R11 = "ext_dedup_keep_one"
-
-# The r11 window: the 2 never-driver-checked promotions first
-# (priority — they have no recorded row at all), the smoothing
-# pre-check second, then the 47 due-first rows.
-_WINDOW_R11 = [
-    # -- the staged_r11 promotions (first driver check) --
-    "ext_dedup_semdedup",
-    "ext_sample_dsir",
-    # -- the smoothing-slot pre-check (r08-latest; operator's rebuild
-    #    path reworked in r10, pinned bit-identical by both-SF oracle
-    #    replays but never re-driven) --
-    _SMOOTHING_R11,
-] + _DUE_FIRST_R11
-
-# The 49 rows whose latest green row is r08 (50 minus the
-# _SMOOTHING_R11 pre-check, which gets a fresh r11 row): OUTSIDE the
-# r11 window (covered by their r08 record under the 4-recorded-round
-# bound) and due FIRST in the r12 window — they fall outside the
-# last-4-records set the moment the r12 verify lands a new
-# CORRECTNESS file. 49 + the staged_r12 promotion = 50 exactly.
-_DUE_FIRST_R12 = [
-    "dq01_project",
-    "dq11_except",
-    "dq18_grouped_udf",
-    "dq24_asof_join",
-    "dq28_exists",
-    "dq30_grouping_sets",
-    "dq41_recursive_sql",
-    "dq43_rolling_range",
-    "dq44_merge_upsert",
-    "ext_ann_hard_negatives",
-    "ext_ann_ivf",
-    "ext_approx_distinct",
-    "ext_approx_percentiles",
-    "ext_cep_pattern",
-    "ext_clustering_coeff",
-    "ext_cumulative_users",
-    "ext_decontaminate_spans",
-    "ext_dedup_bloom",
-    "ext_dedup_exact",
-    "ext_dedup_incremental",
-    "ext_dedup_incremental_spans",
-    "ext_dedup_keep_best",
-    # ext_dedup_keep_one: the r11 smoothing pre-check (fresh r11 row)
-    "ext_dedup_span_maximal",
-    "ext_entity_resolution_multi",
-    "ext_fd_violations",
-    "ext_graph_hits",
-    "ext_inclusion_profile",
-    "ext_inverted_index",
-    "ext_ivm_join_delta",
-    "ext_k_truss",
-    "ext_kmeans_embed",
-    "ext_mix_temperature",
-    "ext_mm_audio_mp3_meta",
-    "ext_mm_exif",
-    "ext_phrase_search",
-    "ext_pipeline_curate",
-    "ext_profile_columns",
-    "ext_quality_classifier",
-    "ext_range_join_binned",
-    "ext_table_changes",
-    "ext_text_decontaminate",
-    "ext_text_pii",
-    "ext_text_rake",
-    "ext_text_textrank",
-    "ext_text_trigram_backoff",
-    "ext_trend_slopes",
-    "ext_ts_decompose",
-    "ext_ts_interpolate",
-    "ext_weighted_percentiles",
-]
-
-# The r12 window: the never-driver-checked promotion first (priority —
-# it has no recorded row at all), then the 49 rows due first after r11
-# (latest green row: r08), in documented priority order. 1 + 49 = 50,
-# zero spare — exactly the arithmetic the r11 verdict pre-verified.
-_WINDOW_R12 = [
-    # -- the staged_r12 promotion (first driver check; the 200th and
-    #    ceiling-final registry name) --
-    "ext_dedup_per_host",
-] + _DUE_FIRST_R12
-
-# The 50 rows whose latest green row is r09: OUTSIDE the r12 window
-# (covered by their r09 record under the 4-recorded-round bound) and
-# due FIRST in the r13 window — they fall outside the last-4-records
-# set the moment the r13 verify lands a new CORRECTNESS file. Exactly
-# 50 = a full window with zero promotion or smoothing slots (the
-# steady state at the 200-name ceiling; see the policy note above).
-_DUE_FIRST_R13 = [
-    "dq02_filter",
-    "dq04_collation",
-    "dq05_agg",
-    "dq06_secondary_sort",
-    "dq07_topk",
-    "dq08_join_agg",
-    "dq09_multiway_join",
-    "dq10_anti",
-    "dq10_semi",
-    "dq11_intersect",
-    "dq12_rollup",
-    "dq13_tumbling",
-    "dq14_sessionize",
-    "dq15_json",
-    "dq15_year",
-    "dq16_flood_max",
-    "dq17_pagerank",
-    "dq19_buckets",
-    "dq20_range_join",
-    "dq21_full_outer",
-    "dq21_left_outer",
-    "dq22_union",
-    "dq23_cube",
-    "dq25_window_funcs",
-    "dq26_distinct_agg",
-    "dq27_sliding",
-    "dq29_scalar_subquery",
-    "dq31_pivot",
-    "dq32_session_window",
-    "dq34_array_funcs",
-    "dq35_regexp",
-    "dq39_running_total",
-    "dq40_pointer_jump",
-    "dq42_star_components",
-    "ext_active_users",
-    "ext_benford",
-    "ext_dedup_canonical",
-    "ext_dedup_components",
-    "ext_dedup_semantic",
-    "ext_dedup_span",
-    "ext_dedup_span_removal",
-    "ext_distribution_drift",
-    "ext_funnel_conversion",
-    "ext_golden_records",
-    "ext_interval_concurrency",
-    "ext_pagerank_dangling",
-    "ext_split_leakage_safe",
-    "ext_text_bpe_pairs",
-    "ext_ts_anomaly_seasonal",
-    "ext_ts_changepoint",
-]
-
-# The pre-named red-row contingency for the 200/200 steady state (see
-# the r13 STEADY-STATE POLICY note above): retired ONLY if a red row
-# needs its window slot; eligibility is pinned every round by
-# tests/test_registry.py::test_r13_steady_state_policy.
-_R13_CONTINGENT_RETIREMENT = "dq11_intersect"
+def is_green(row: Mapping[str, object]) -> bool:
+    """A driver row passed: rows match, schema and hash match or were not
+    checked, and the harness raised no error."""
+    return (
+        bool(row.get("rows_match"))
+        and row.get("schema_match") in (True, None)
+        and row.get("hash_match") in (True, None)
+        and not row.get("err")
+    )
 
 
-def _apply_check_priority() -> None:
-    """Reorder ALL_QUERIES so the driver's 50-slot check window holds
-    exactly ``_WINDOW_R12`` (in that order), immediately followed by
-    the ``_DUE_FIRST_R13`` rows (outside the window this round, first
-    in line next round), then every other registered query in
-    registration order (all r10/r11-green, code unchanged since their
-    latest row)."""
-    # membership-guarded (register_extensions deliberately swallows a
-    # broken extension module's ImportError; a KeyError here would
-    # take down the core DQ set that contract protects — the registry
-    # tests still fail loudly on any missing window name)
-    window = {k: ALL_QUERIES[k] for k in _WINDOW_R12 if k in ALL_QUERIES}
-    due_next = {k: ALL_QUERIES[k] for k in _DUE_FIRST_R13 if k in ALL_QUERIES}
-    rest = {
-        k: v
-        for k, v in ALL_QUERIES.items()
-        if k not in window and k not in due_next
-    }
-    ALL_QUERIES.clear()
-    ALL_QUERIES.update(window)
-    ALL_QUERIES.update(due_next)
-    ALL_QUERIES.update(rest)
+def correctness_records() -> list[dict[str, dict]]:
+    """The driver's ``CORRECTNESS_r<N>.json`` records at the repo root,
+    oldest round first (none outside a checkout)."""
+    root = Path(__file__).resolve().parents[2]
+    paths = sorted(
+        root.glob("CORRECTNESS_r*.json"),
+        key=lambda p: int(p.stem.rsplit("_r", 1)[1]),
+    )
+    return [json.loads(p.read_text()) for p in paths]
 
 
-_apply_check_priority()
+def check_order(
+    names: Iterable[str], records: Sequence[Mapping[str, Mapping]]
+) -> list[str]:
+    """``names`` (registration order) in driver check order: names with
+    no recorded row or a red latest row first, then the rest by oldest
+    latest recorded round; ties keep registration order. ``records`` are
+    the driver records, oldest first; unregistered names in them are
+    ignored."""
+    due: dict[str, int] = {}
+    for rnd, record in enumerate(records):
+        for name, row in record.items():
+            due[name] = rnd if is_green(row) else -1
+    return sorted(names, key=lambda name: due.get(name, -1))
+
+
+for _name in check_order(ALL_QUERIES, correctness_records()):
+    ALL_QUERIES[_name] = ALL_QUERIES.pop(_name)

@@ -4,10 +4,8 @@ Staged across round 9 under the same contract as staged_r7/r8/r9 — a
 deterministic ``(spark, sf_dir) -> DataFrame`` wrapper plus the exact
 DuckDB oracle, replayed at both test scale factors by
 ``tests/test_staged_r10.py`` and plan-swept for unbounded joins — and
-registered into the r10 driver window's promotion slot by
-``queries/__init__.register_extensions`` (see the rotation comment
-there: 48 r06-due rows + this promotion + the ext_entity_resolution
-smoothing pre-check = 50).
+registered by ``queries/__init__.register_extensions``; it took the
+r10 driver window's one promotion slot.
 """
 
 from __future__ import annotations

@@ -1,13 +1,9 @@
 """Round-11 staged driver registrations.
 
-The r10 window is full (48 r06-latest due-first rows + the staged_r10
-ext_k_anonymity promotion + the ext_entity_resolution smoothing
-pre-check = 50 — see the rotation comment in ``queries/__init__``);
-the r11 window carries the 47 remaining r07-latest rows (48 minus
-r10's smoothing pre-check), leaving room for TWO promotions plus one
-spare slot. Operators added in round 9 therefore stage HERE for those
-promotion slots — same contract as staged_r7..r10: a
-deterministic ``(spark, sf_dir) -> DataFrame`` wrapper plus the exact
+The r10 window was full; the r11 window carried the 47 remaining
+r07-latest rows, leaving room for TWO promotions plus one spare slot.
+Operators added in round 9 therefore staged HERE for those promotion
+slots — same contract as staged_r7..r10: a deterministic ``(spark, sf_dir) -> DataFrame`` wrapper plus the exact
 DuckDB oracle, replayed at both test scale factors by
 ``tests/test_staged_r11.py`` and plan-swept for unbounded joins.
 

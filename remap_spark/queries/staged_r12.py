@@ -1,12 +1,9 @@
 """Round-12 staged driver registration.
 
-The r11 window is full (47 r07-latest due-first rows + the two
-staged_r11 promotions + the ext_dedup_keep_one smoothing pre-check =
-50 — see the rotation comment in ``queries/__init__``); the r12
-window carries the 49 remaining r08-latest rows, leaving room for
-exactly ONE promotion. The crawl-curation composition the r10 verdict
-earmarked as the natural 200th registry name stages HERE — same
-contract as staged_r7..r11: a deterministic
+The r11 window was full; the r12 window carried the 49 remaining
+r08-latest rows, leaving room for exactly ONE promotion. The
+crawl-curation composition the r10 verdict earmarked as the natural
+200th registry name staged HERE — same contract as staged_r7..r11: a deterministic
 ``(spark, sf_dir) -> DataFrame`` wrapper plus the exact DuckDB
 oracle, replayed at both test scale factors by
 ``tests/test_staged_r12.py`` and plan-swept for unbounded joins.

@@ -2,16 +2,11 @@
 
 Every operator shipped in round 6 without a driver-window slot (the
 50-slot check window was fully consumed by never-checked round-5/6
-queries — see the rotation comment in ``queries/__init__``) gets its
-driver-shaped form HERE: a deterministic ``(spark, sf_dir) ->
-DataFrame`` wrapper with explicit ordering/rounding plus the exact
-DuckDB oracle SQL. They are deliberately NOT merged into
-``ALL_QUERIES`` yet — registering a query outside the check window
-would violate the never-checked-inside-window invariant pinned by
-``tests/test_registry.py``. Round 7 promotes them with a pure dict
-merge at the head of the window; ``tests/test_staged_r7.py`` replays
-every entry against its oracle now so the promotion carries zero new
-correctness risk.
+queries) got its driver-shaped form HERE: a deterministic ``(spark,
+sf_dir) -> DataFrame`` wrapper with explicit ordering/rounding plus the
+exact DuckDB oracle SQL. Round 7 promoted them with a pure dict merge
+(``queries/__init__.register_extensions``); ``tests/test_staged_r7.py``
+replays every entry against its oracle.
 """
 
 from __future__ import annotations

@@ -1,8 +1,7 @@
 """Round-8 staged driver registrations.
 
 Round 7 froze registry growth (169 registered against the 50x4 = 200
-staleness ceiling — see the rotation comment in ``queries/__init__``),
-so operators added in round 7 stage HERE exactly the way the round-6
+staleness ceiling — see the ``queries/__init__`` docstring), so operators added in round 7 stage HERE exactly the way the round-6
 operators staged in ``staged_r7.py``: a deterministic ``(spark,
 sf_dir) -> DataFrame`` wrapper plus the exact DuckDB oracle, replayed
 at both test scale factors by ``tests/test_staged_r8.py`` and
@@ -1610,15 +1609,6 @@ _TREND_SLOPES_SQL = """
     FROM sl ORDER BY o_orderpriority
 """
 
-
-# The r8 promotion held these two back for the r9 window (the r8
-# window had 51 obligations for 50 slots; their families had
-# in-window r8 siblings — benford ~ fd_violations/inclusion_profile,
-# interval_concurrency ~ ts_decompose/ts_interpolate/trend_slopes).
-# PROMOTED in r9: they now register with the rest of STAGED_R8_QUERIES
-# and hold the first two slots of _WINDOW_R9 (queries/__init__). The
-# tuple stays as the record of which names took the r9 promotion path.
-HELD_FOR_R9 = ("ext_benford", "ext_interval_concurrency")
 
 STAGED_R8_QUERIES = {
     "ext_entity_resolution_multi": ext_entity_resolution_multi,

@@ -1,10 +1,9 @@
 """Round-9 staged driver registrations.
 
-The r8 promotion window is FULL: staged_r8's 26 queries + the 23
-_DUE_FIRST_R8 rows take 49 of the 50 driver slots (see the rotation
-comment in ``queries/__init__``), so operators added after that point
-stage HERE for the round-9 window — same contract as staged_r7/r8: a
-deterministic ``(spark, sf_dir) -> DataFrame`` wrapper plus the exact
+The r8 promotion window was full (staged_r8's 26 queries plus 23 rows
+due for a re-check took 49 of the 50 driver slots), so operators added
+after that point staged HERE for the round-9 window — same contract
+as staged_r7/r8: a deterministic ``(spark, sf_dir) -> DataFrame`` wrapper plus the exact
 DuckDB oracle, replayed at both test scale factors by
 ``tests/test_staged_r9.py`` and plan-swept for unbounded joins.
 """

@@ -1,125 +1,42 @@
 """Registration-order invariants for the driver correctness gate.
 
-The external driver hash-compares only the first ``CHECK_WINDOW`` keys
-of ``ALL_QUERIES`` (registration order) against their oracles — round 1
-proved this the hard way: 16 late-registered extension queries got no
-driver row at all. These tests pin the ordering contract so a future
-registration edit can't silently push an unverified family out of the
-window again, and bound how stale any query's latest green row may be.
-
-ROUND-PINNING (the r10 lesson): every window-plan derivation test is
-pinned to the CORRECTNESS records that existed when that plan was made
-(``upto=`` round bound). The r10 plan tests derived "r06-latest" from
-ALL records, so the moment the driver's CORRECTNESS_r10.json landed in
-the worktree they went red — the judged state was 2-failing even though
-the committed state was green. With the pin, landing a round's record
-never requires a lockstep test rewrite.
+The external driver hash-compares only the first ``CHECK_WINDOW`` = 50
+keys of ``ALL_QUERIES`` against their oracles; round 1 proved this the
+hard way, when 16 late-registered extension queries got no driver row.
+``check_order`` sorts the registry at import over the recorded
+``CORRECTNESS_r*.json`` files: never checked or red at the latest row
+first, then oldest latest recorded round, ties in registration order.
+These tests pin that rule on synthetic records, bound how stale any
+query's latest row may be (four recorded rounds: 200 names = 50 x 4),
+and check that landing green records rotates the window through every
+name with no list to edit in lockstep.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-
 from remap_spark.queries import (
-    _DUE_FIRST_R10,
-    _DUE_FIRST_R11,
-    _DUE_FIRST_R12,
-    _DUE_FIRST_R13,
-    _R13_CONTINGENT_RETIREMENT,
-    _SMOOTHING_R10,
-    _SMOOTHING_R11,
-    _WINDOW_R10,
-    _WINDOW_R11,
-    _WINDOW_R12,
     ALL_ORACLES,
     ALL_QUERIES,
     CHECK_WINDOW,
     EXTENSION_IMPORT_ERRORS,
+    check_order,
+    correctness_records,
+    is_green,
 )
 
 WINDOW = list(ALL_QUERIES)[:CHECK_WINDOW]
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-# Queries that have never had a full green driver row — every one must
-# sit inside the checked window until a green row is recorded. Round-12
-# promotion: the staged_r12 row, replay-verified against its DuckDB
-# oracle at sf0.001 AND sf0.01 (tests/test_staged_r12.py), null-url
-# pinned, plan-swept, and 1M-doc scale-probed before promotion, but
-# with no driver-gate row yet. Each new queries() entry is appended
-# here the same commit it is registered.
-NEVER_CHECKED: list[str] = [
-    "ext_dedup_per_host",
-]
-
-# Queries whose implementation changed since their latest recorded
-# driver row. Any semantic change to a registered query this round must
-# add its name here (forcing it into the window) the same commit.
-CHANGED_SINCE_LAST_ROW: list[str] = []
+GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+RED = {**GREEN, "hash_match": False}
 
 
-def _records(upto: int | None = None) -> list[str]:
-    """Paths of recorded CORRECTNESS files, optionally bounded to
-    rounds <= ``upto`` (the pin that keeps plan-derivation tests green
-    after later records land)."""
-    paths = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
-    if upto is not None:
-        paths = [
-            p
-            for p in paths
-            if int(os.path.basename(p).split("_r")[1].split(".")[0]) <= upto
-        ]
-    return paths
-
-
-def _recent_checked(n: int) -> set[str]:
-    """Union of query names green-checked in the last ``n`` RECORDED
-    correctness rounds (the driver writes CORRECTNESS_r{N}.json when a
-    round's verify step completes — round 5's record never landed, so
-    'recorded rounds' and 'rounds' are not the same clock)."""
-    seen: set[str] = set()
-    for path in _records()[-n:]:
-        with open(path) as f:
-            seen |= set(json.load(f))
-    return seen
-
-
-def _latest_round(upto: int | None = None) -> dict[str, str]:
-    """name -> round id ('04'..) of the latest driver row among the
-    records bounded by ``upto`` (None = all records; pass the round the
-    plan was computed from for derivation tests)."""
-    latest: dict[str, str] = {}
-    for path in _records(upto):
-        rnd = os.path.basename(path).split("_r")[1].split(".")[0]
-        with open(path) as f:
-            for name in json.load(f):
-                latest[name] = rnd
-    return latest
-
-
-def _latest_row_status(upto: int | None = None) -> dict[str, bool]:
-    """name -> is the LATEST recorded driver row green? (rows+schema+
-    hash all true-or-absent and no harness error)."""
-    latest: dict[str, bool] = {}
-    for path in _records(upto):
-        with open(path) as f:
-            for name, row in json.load(f).items():
-                ok = (
-                    bool(row.get("rows_match"))
-                    and row.get("schema_match") in (True, None)
-                    and row.get("hash_match") in (True, None)
-                    and not row.get("err")
-                )
-                latest[name] = ok
-    return latest
-
-
-# ---------------------------------------------------------------------------
-# Live invariants (derive from ALL records — by construction they stay
-# green when a new record lands, because a new green row only ever
-# FRESHENS a query's latest round).
+def _stale(window: list[str], records: list[dict]) -> list[str]:
+    """Registered queries outside ``window`` with no row in the last FOUR
+    recorded correctness rounds (the driver writes a record when a
+    round's verify step completes; round 5's never landed, so 'recorded
+    rounds' and 'rounds' are not the same clock)."""
+    recent = {name for record in records[-4:] for name in record}
+    return [q for q in ALL_QUERIES if q not in window and q not in recent]
 
 
 def test_no_extension_module_failed_to_import():
@@ -131,23 +48,14 @@ def test_no_extension_module_failed_to_import():
     assert not EXTENSION_IMPORT_ERRORS, EXTENSION_IMPORT_ERRORS
 
 
-def test_never_checked_families_inside_window():
-    missing = [q for q in NEVER_CHECKED if q not in WINDOW]
-    assert not missing, f"unverified queries outside driver window: {missing}"
-
-
-def test_changed_queries_inside_window():
-    missing = [q for q in CHANGED_SINCE_LAST_ROW if q not in WINDOW]
-    assert not missing, f"changed queries outside driver window: {missing}"
-
-
 def test_red_latest_rows_inside_window():
     """A registered query whose LATEST driver row is red has no valid
     green signal at any staleness — it must re-enter the window every
     round until a green row lands (the r7 lesson: the two array-canon
-    crashes burned their first check and re-greened in r8). As of r10
-    this set is empty; the test keeps it that way."""
-    latest = _latest_row_status()
+    crashes burned their first check and re-greened in r8)."""
+    latest: dict[str, bool] = {}
+    for record in correctness_records():
+        latest.update({name: is_green(row) for name, row in record.items()})
     red = [q for q in ALL_QUERIES if q in latest and not latest[q]]
     missing = [q for q in red if q not in WINDOW]
     assert not missing, f"red-latest queries outside driver window: {missing}"
@@ -157,13 +65,9 @@ def test_max_staleness_four_recorded_rounds():
     """Every registered query is either in the upcoming driver window
     or has a row within the last FOUR recorded correctness rounds.
     Four is the tightest sustainable bound: the registry holds 200
-    queries (199 post-r11 plus the r12-promoted staged row — the
-    50x4 ceiling) against a 50-slot window, so a full re-verification
-    cycle needs ceil(200/50) = 4 records. The 150 non-window queries
-    are covered by r09 (50) + r10 (50) + r11 (50) — and stay covered
-    when CORRECTNESS_r12 lands (last-4 becomes r09..r12)."""
-    recent = _recent_checked(4)
-    stale = [q for q in ALL_QUERIES if q not in WINDOW and q not in recent]
+    queries against a 50-slot window, so a full re-verification cycle
+    needs ceil(200/50) = 4 records."""
+    stale = _stale(WINDOW, correctness_records())
     assert not stale, f"queries >4 recorded rounds stale and outside window: {stale}"
 
 
@@ -179,200 +83,60 @@ def test_oracles_reference_registered_queries():
     assert not unknown, f"oracles for unregistered queries: {unknown}"
 
 
-def test_retired_names_absent_from_rotation_lists():
-    """Retired rows must not linger in any rotation structure — a
-    stale name there would make the window builder silently skip it
-    (membership-guarded) and under-fill the driver window."""
-    from remap_spark.queries.retired import RETIRED_QUERIES
-
-    for name in RETIRED_QUERIES:
-        assert name not in _WINDOW_R11
-        assert name not in _DUE_FIRST_R12
-        assert name not in _WINDOW_R12
-        assert name not in _DUE_FIRST_R13
-
-
-# ---------------------------------------------------------------------------
-# r12 plan (live window) — derivations pinned to the records that
-# existed at r12 planning time (upto=11).
-
-
-def test_window_is_exactly_the_r12_plan():
-    # The r12 window is pinned name-by-name: the never-driver-checked
-    # staged_r12 promotion (ext_dedup_per_host, the 200th and
-    # ceiling-final registry name), then the 49 rows due first after
-    # r11 (latest green row: r08), in documented priority order —
-    # exactly the arithmetic the r11 verdict pre-verified. 1 + 49 =
-    # 50, zero spare (no r11 row landed red, so no red row competes
-    # for the promotion's slot).
-    assert WINDOW == _WINDOW_R12
-    assert len(_WINDOW_R12) == CHECK_WINDOW
-    assert _WINDOW_R12[:1] == NEVER_CHECKED
-    assert _WINDOW_R12[1:] == _DUE_FIRST_R12
-
-
-def test_due_first_r12_is_exactly_the_remaining_r08_latest_set():
-    """The window's due-first body must be derived, not asserted: it
-    is exactly the set of registered queries whose latest driver row
-    at r12 planning time (records through r11) was CORRECTNESS_r08,
-    minus the r11 smoothing pre-check (which got a fresh r11 row)."""
-    latest = _latest_round(upto=11)
-    r08_latest = sorted(
-        n
-        for n, r in latest.items()
-        if r == "08" and n in ALL_QUERIES and n != _SMOOTHING_R11
-    )
-    assert r08_latest == sorted(_DUE_FIRST_R12)
-
-
-def test_r12_promotion_is_registered():
-    """The r12 promotion must be registered with its oracle, and be
-    exactly the NEVER_CHECKED set (nothing else in the registry lacks
-    a driver row)."""
-    from remap_spark.queries.staged_r12 import STAGED_R12_QUERIES
-
-    promoted = sorted(STAGED_R12_QUERIES)
-    missing = [q for q in promoted if q not in ALL_QUERIES]
-    assert not missing, f"r12 promotion not registered: {missing}"
-    no_oracle = [q for q in promoted if q not in ALL_ORACLES]
-    assert not no_oracle, f"r12 promotion without oracle: {no_oracle}"
-    assert promoted == sorted(NEVER_CHECKED)
-
-
-def test_no_r11_row_landed_red():
-    """The r12 plan's zero-spare window is valid ONLY because no r11
-    row landed red (a red row must take the promotion's slot — the
-    rotation comment's contingency). Derive it: every name in
-    CORRECTNESS_r11 is green."""
-    status = _latest_row_status(upto=11)
-    with open(os.path.join(REPO, "CORRECTNESS_r11.json")) as f:
-        r11_names = list(json.load(f))
-    red = [n for n in r11_names if not status[n]]
-    assert not red, f"r11 rows recorded red — zero-spare plan invalid: {red}"
-
-
 def test_registry_at_the_200_name_ceiling():
-    """r12 registers the 200th name: the registry must sit exactly at
-    the 50x4 ceiling (CHECK_WINDOW x the 4-recorded-round staleness
-    bound). One more registration without a retirement would make the
-    staleness invariant unsatisfiable."""
+    """The registry sits exactly at the 50x4 ceiling (CHECK_WINDOW x the
+    4-recorded-round staleness bound). One more registration without a
+    retirement would make the staleness invariant unsatisfiable."""
     assert len(ALL_QUERIES) == CHECK_WINDOW * 4, len(ALL_QUERIES)
 
 
-def test_due_first_r13_rows_follow_window():
-    # The 50 r09-latest rows sit immediately after the window: outside
-    # it this round (their r09 record covers them under the 4-round
-    # bound) and first in line for the r13 rotation.
-    assert (
-        list(ALL_QUERIES)[CHECK_WINDOW : CHECK_WINDOW + len(_DUE_FIRST_R13)]
-        == _DUE_FIRST_R13
-    )
+def test_check_order_rule():
+    names = ["new1", "old", "mid", "dup", "red", "new2", "tie"]
+    # no records: plain registration order
+    assert check_order(names, []) == names
+    records = [
+        {"old": GREEN, "dup": GREEN, "gone": GREEN},
+        {"mid": GREEN, "red": GREEN, "tie": GREEN},
+        {"dup": GREEN, "red": RED, "tie": GREEN},
+        # a repeated round (r12 = r13): latest occurrence wins
+        {"dup": GREEN, "red": RED, "tie": GREEN},
+    ]
+    # never checked and red-latest first (registration order), then
+    # oldest latest round (old: r0, mid: r1, dup and tie: r3 — dup's
+    # r0 row does not count), ties in registration order; "gone" is
+    # recorded but not registered and is ignored
+    assert check_order(names, records) == [
+        "new1", "red", "new2", "old", "mid", "dup", "tie",
+    ]
+    # every failing row kind is red; a check that was not run is not
+    for bad in (
+        {**GREEN, "err": "boom"},
+        {**GREEN, "rows_match": False},
+        {**GREEN, "schema_match": False},
+        {"rows_match": None, "schema_match": None, "hash_match": None, "err": "x"},
+    ):
+        record = {"bad": bad, "ok": GREEN}
+        assert check_order(["ok", "bad"], [record]) == ["bad", "ok"]
+    rows_only = {"rows_match": True, "schema_match": None, "hash_match": None}
+    assert check_order(["b", "a"], [{"a": GREEN}, {"b": rows_only}]) == ["a", "b"]
+    # a red row that re-greens leaves the due group
+    regreened = [{"a": GREEN}, {"b": RED}, {"b": GREEN}]
+    assert check_order(["a", "b"], regreened) == ["a", "b"]
 
 
-def test_due_first_r13_is_exactly_the_r09_latest_set():
-    """Same derivation for the next round's due set: the r09-latest
-    registered rows at r12 planning time — exactly 50, a FULL window
-    with zero promotion or smoothing slots (the steady state at the
-    200-name ceiling). This pins that no r13 over-commit is possible:
-    exactly 50 rows fall due, none spill."""
-    latest = _latest_round(upto=11)
-    r09_latest = sorted(
-        n for n, r in latest.items() if r == "09" and n in ALL_QUERIES
-    )
-    assert r09_latest == sorted(_DUE_FIRST_R13)
-    assert len(_DUE_FIRST_R13) == CHECK_WINDOW
-
-
-def test_r13_steady_state_policy():
-    """The 200/200 steady-state red-row contingency (rotation comment,
-    queries/__init__) is executable arithmetic, not prose: the
-    pre-named contingent retirement must (a) be a registered query
-    with a DuckDB oracle (so its verbatim replay can move to the
-    pytest tier), (b) be long-green — latest recorded row green and
-    at least 2 recorded rounds old is NOT required since any row due
-    soon refreshes; what matters is its latest row is green, (c) have
-    its capabilities driven by registered siblings (Catalyst plans
-    INTERSECT as left-semi + distinct: dq10_semi and dq26_distinct_agg
-    must both be registered, and the set-op SEMANTICS row keeps
-    dq11_except + dq22_union), and (d) not already be retired. If a
-    red row ever lands, retiring this name frees exactly the one slot
-    the red row needs."""
-    from remap_spark.queries.retired import RETIRED_QUERIES
-
-    cand = _R13_CONTINGENT_RETIREMENT
-    assert cand in ALL_QUERIES and cand in ALL_ORACLES
-    assert _latest_row_status()[cand] is True
-    for sibling in ("dq10_semi", "dq26_distinct_agg", "dq11_except", "dq22_union"):
-        assert sibling in ALL_QUERIES, sibling
-    assert cand not in RETIRED_QUERIES
-
-
-# ---------------------------------------------------------------------------
-# Historical r11 plan — derivations pinned to the records that existed
-# at r11 planning time (upto=10); these prove the derivation logic and
-# stay green regardless of which records land later.
-
-
-def test_r11_window_was_the_r07_latest_set():
-    """The executed r11 window's due-first body was exactly the set of
-    registered queries whose latest driver row at r11 planning time
-    (records through r10) was CORRECTNESS_r07, minus the r10 smoothing
-    pre-check (which got a fresh r10 row); the head was the 2
-    staged_r11 promotions + the ext_dedup_keep_one smoothing
-    pre-check."""
-    latest = _latest_round(upto=10)
-    r07_latest = sorted(
-        n
-        for n, r in latest.items()
-        if r == "07" and n in ALL_QUERIES and n != _SMOOTHING_R10
-    )
-    assert r07_latest == sorted(_DUE_FIRST_R11)
-    assert len(_WINDOW_R11) == CHECK_WINDOW
-    assert _WINDOW_R11[:2] == ["ext_dedup_semdedup", "ext_sample_dsir"]
-    assert _WINDOW_R11[2] == _SMOOTHING_R11
-    assert _WINDOW_R11[3:] == _DUE_FIRST_R11
-    assert latest.get(_SMOOTHING_R11) == "08"
-    assert _latest_row_status(upto=10)[_SMOOTHING_R11] is True
-
-
-def test_r11_window_landed_green():
-    """CORRECTNESS_r11 recorded the executed r11 window name-for-name,
-    all green — the plan arithmetic above is not hypothetical."""
-    path = os.path.join(REPO, "CORRECTNESS_r11.json")
-    with open(path) as f:
-        record = json.load(f)
-    assert list(record) == _WINDOW_R11
-    status = _latest_row_status(upto=11)
-    red = [n for n in _WINDOW_R11 if not status[n]]
-    assert not red, f"r11 window rows recorded red: {red}"
-
-
-# ---------------------------------------------------------------------------
-# Historical plan derivations (pinned to the records their plans were
-# computed from — these prove the derivation logic and stay green
-# regardless of which records land later).
-
-
-def test_r10_window_was_the_r06_latest_set():
-    """The executed r10 window's due-first body was exactly the set of
-    registered queries whose latest driver row at r10 planning time
-    (records through r09) was CORRECTNESS_r06."""
-    latest = _latest_round(upto=9)
-    r06_latest = sorted(
-        n for n, r in latest.items() if r == "06" and n in ALL_QUERIES
-    )
-    assert r06_latest == sorted(_DUE_FIRST_R10)
-    assert len(_WINDOW_R10) == CHECK_WINDOW
-    assert latest.get(_SMOOTHING_R10) == "07"
-
-
-def test_r10_window_landed_green():
-    """CORRECTNESS_r10 recorded the executed r10 window name-for-name,
-    all green — the plan arithmetic above is not hypothetical."""
-    path = os.path.join(REPO, "CORRECTNESS_r10.json")
-    with open(path) as f:
-        record = json.load(f)
-    assert list(record) == _WINDOW_R10
-    status = _latest_row_status(upto=10)
-    red = [n for n in _WINDOW_R10 if not status[n]]
-    assert not red, f"r10 window rows recorded red: {red}"
+def test_window_rotates_through_every_name():
+    """Land four green records, each exactly the then-current window:
+    every registered name enters the window exactly once, and the
+    staleness bound holds after each landing — with no list edited in
+    lockstep (the step the r13 rotation skipped)."""
+    records = correctness_records()
+    assert list(ALL_QUERIES) == check_order(ALL_QUERIES, records)
+    window = WINDOW
+    entered: list[str] = []
+    for _ in range(4):
+        entered += window
+        records = records + [{name: GREEN for name in window}]
+        window = check_order(ALL_QUERIES, records)[:CHECK_WINDOW]
+        stale = _stale(window, records)
+        assert not stale, f"stale after {len(records)} records: {stale}"
+    assert sorted(entered) == sorted(ALL_QUERIES)
