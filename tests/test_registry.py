@@ -90,6 +90,20 @@ def test_registry_at_the_200_name_ceiling():
     assert len(ALL_QUERIES) == CHECK_WINDOW * 4, len(ALL_QUERIES)
 
 
+def test_retired_names_absent_from_rotation_lists():
+    """Retired rows must not linger in the rotation: the recorded rounds
+    still hold their rows, and a retired name carried into the computed
+    order would take a window slot the driver then skips (the name is
+    no longer registered) and under-fill the driver window."""
+    from remap_spark.queries.retired import RETIRED_QUERIES
+
+    order = check_order(ALL_QUERIES, correctness_records())
+    assert len(order) == len(ALL_QUERIES)
+    for name in RETIRED_QUERIES:
+        assert name not in order
+        assert name not in WINDOW
+
+
 def test_check_order_rule():
     names = ["new1", "old", "mid", "dup", "red", "new2", "tie"]
     # no records: plain registration order
