@@ -15,17 +15,21 @@ Scale notes (100 TB target):
   (literal graphs, expected tables, empty results, driver-tier outputs)
   enter as Arrow local relations (``local_frame``), never through
   ``createDataFrame(list)``: that is a pickled RDD, and every scan of it
-  runs Python-worker tasks. A Python-worker task has a fixed cost on
-  CPython 3.11 of about 0.13-0.18 CPU-s (4-core VM), because pyspark
-  calls ``importlib.invalidate_caches()`` per task and each of the
-  worker's 16 zip importers re-reads its archive. A local relation is
-  scanned inside the JVM.
+  runs Python-worker tasks. A local relation is scanned inside the JVM.
+- A Python-worker task has a fixed cost: pyspark calls
+  ``importlib.invalidate_caches()`` per task, and before CPython 3.13
+  each of the worker's 17 zip importers (pyspark.zip, the spark-core
+  jar, py4j, this package) then re-reads its archive, about 0.27 CPU-s
+  per task (4-core VM, CPython 3.11.7). Every Python function the
+  package ships goes through ``worker.on_worker``, which makes a
+  worker re-read only archives that changed.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Iterable, Sequence
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -133,17 +137,41 @@ def ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_remap_spark_shipped", False):
         return
+    sc.addPyFile(str(package_zip()))
+    sc._remap_spark_shipped = True
+
+
+def package_zip() -> Path:
+    """The package's sources as a zip in the temp dir, named by a hash
+    of their content. The zip is written to a unique file and renamed
+    into place, so processes that share the temp dir never read a
+    half-written zip or ship each other a different checkout."""
+    import hashlib
     import tempfile
     import zipfile
-    from pathlib import Path
 
     pkg = Path(__file__).resolve().parent
-    zip_path = Path(tempfile.gettempdir()) / "remap_spark_pkg.zip"
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for py in sorted(pkg.rglob("*.py")):
-            zf.write(py, f"remap_spark/{py.relative_to(pkg)}")
-    sc.addPyFile(str(zip_path))
-    sc._remap_spark_shipped = True
+    sources = [
+        (f"remap_spark/{py.relative_to(pkg)}", py.read_bytes())
+        for py in sorted(pkg.rglob("*.py"))
+    ]
+    digest = hashlib.sha256()
+    for name, data in sources:
+        digest.update(f"{name}\0{len(data)}\0".encode() + data)
+    tag = digest.hexdigest()[:16]
+    zip_path = Path(tempfile.gettempdir()) / f"remap_spark_pkg-{tag}.zip"
+    if zip_path.exists():
+        return zip_path
+    fd, part = tempfile.mkstemp(suffix=".part", dir=zip_path.parent)
+    os.close(fd)
+    try:
+        with zipfile.ZipFile(part, "w", zipfile.ZIP_DEFLATED) as zf:
+            for name, data in sources:
+                zf.writestr(name, data)
+        os.replace(part, zip_path)
+    finally:
+        Path(part).unlink(missing_ok=True)  # left only when the write failed
+    return zip_path
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

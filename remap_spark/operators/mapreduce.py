@@ -52,6 +52,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..worker import on_worker
+
 MapFn = Callable[[str, object], Iterable[tuple[str, str, object]]]
 ReduceFn = Callable[[str, list], Iterable[tuple[str, object]]]
 CombinerFn = Callable[[list], list]
@@ -129,7 +131,7 @@ class MapReduceJob:
         schema = self.map_output_schema
         if spill_key is not None:
             schema += ", _sk string"
-        return df.mapInPandas(run_map, schema=schema)
+        return df.mapInPandas(on_worker(run_map), schema=schema)
 
     # -- reduce phase -------------------------------------------------
     def _reduced(self, mapped: DataFrame) -> DataFrame:
@@ -160,7 +162,7 @@ class MapReduceJob:
             return pd.DataFrame({"k3": out_k3, "v3": out_v3})
 
         return mapped.groupBy("k2").applyInPandas(
-            run_reduce, schema=self.reduce_output_schema
+            on_worker(run_reduce), schema=self.reduce_output_schema
         )
 
     def run(

@@ -23,6 +23,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..worker import on_worker
+
 
 def _z(weights: list[float], bias: float, feats: list[Column]) -> Column:
     z = F.lit(float(bias))
@@ -320,7 +322,7 @@ def pca_train(
 
     sums = (
         df.select(F.col(vec_col).alias("_v"))
-        .mapInPandas(partial, schema="pos bigint, val double")
+        .mapInPandas(on_worker(partial), schema="pos bigint, val double")
         .groupBy("pos")
         .agg(F.sum("val").alias("val"))
         .collect()

@@ -26,6 +26,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..worker import on_worker
+
 MEDIA_SCHEMA = (
     "media_id bigint, kind string, media binary, "
     "meta struct<width:int, height:int, sample_rate:int, duration_ms:int>"
@@ -1181,7 +1183,7 @@ def image_features(
             )
 
     return df.select(id_col, media_col).mapInPandas(
-        run, schema=IMAGE_FEATURES_SCHEMA
+        on_worker(run), schema=IMAGE_FEATURES_SCHEMA
     )
 
 
@@ -1200,7 +1202,9 @@ def audio_features(
                 fs.append(feats)
             yield pd.DataFrame({"media_id": ids, "n_samples": ns, "features": fs})
 
-    return df.select(id_col, media_col).mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+    return df.select(id_col, media_col).mapInPandas(
+        on_worker(run), schema=AUDIO_FEATURES_SCHEMA
+    )
 
 
 def _avi_frames(blob: bytes):
@@ -1282,7 +1286,9 @@ def sample_frames(
                     frames.append(blob[off : off + every_n_bytes])
             yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame": frames})
 
-    return df.select(id_col, media_col).mapInPandas(run, schema=FRAME_SAMPLE_SCHEMA)
+    return df.select(id_col, media_col).mapInPandas(
+        on_worker(run), schema=FRAME_SAMPLE_SCHEMA
+    )
 
 
 def repartition_for_media(
@@ -1429,7 +1435,7 @@ def image_dhash(
             )
 
     return df.select(id_col, media_col).mapInPandas(
-        run, schema="media_id bigint, dhash bigint, width int, height int"
+        on_worker(run), schema="media_id bigint, dhash bigint, width int, height int"
     )
 
 
@@ -1530,7 +1536,7 @@ def audio_fingerprint(
             )
 
     return df.select(id_col, media_col).mapInPandas(
-        run,
+        on_worker(run),
         schema="media_id bigint, afp bigint, n_frames bigint, "
         "sample_rate int",
     )
@@ -1591,7 +1597,7 @@ def video_frame_hashes(
             )
 
     return frames.mapInPandas(
-        run, schema="media_id bigint, frame_idx int, dhash bigint"
+        on_worker(run), schema="media_id bigint, frame_idx int, dhash bigint"
     )
 
 

@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 
 from ..engine import local_frame
 from ..functions import cosine_similarity, dot_product, l2_norm
+from ..worker import on_worker
 
 
 def normalize_embeddings(
@@ -137,7 +138,7 @@ def _topk_gemm(
 
     c_cols = [id_col, vec_col] + ([label_col] if label_col else [])
     local = candidates.select(*c_cols).mapInPandas(
-        local_topk, schema="query_id bigint, vec_id bigint, cosine double"
+        on_worker(local_topk), schema="query_id bigint, vec_id bigint, cosine double"
     ).where(F.col("cosine") != float("-inf"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
     return (
@@ -479,7 +480,7 @@ def _assign_cells_gemm(
 
     return candidates.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
-    ).mapInPandas(assign_batches, schema=out_schema)
+    ).mapInPandas(on_worker(assign_batches), schema=out_schema)
 
 
 def ivf_topk(
@@ -784,7 +785,9 @@ def embedding_near_dup_pairs(
         b_mat = np.array(list(b[vec_col]), dtype=np.float64)
         return _gemm_pairs(a_ids, a_mat, b_ids, b_mat, threshold, same=False)
 
-    return exploded.groupBy("bi", "bj").applyInPandas(gemm_group, schema=_PAIR_SCHEMA)
+    return exploded.groupBy("bi", "bj").applyInPandas(
+        on_worker(gemm_group), schema=_PAIR_SCHEMA
+    )
 
 
 def embedding_near_dup_pairs_lsh(
@@ -817,7 +820,9 @@ def embedding_near_dup_pairs_lsh(
         mat = np.array(list(pdf["vec"]), dtype=np.float64)
         return _gemm_pairs(ids, mat, ids, mat, threshold, same=True)
 
-    return bucketed.groupBy("bucket").applyInPandas(gemm_bucket, schema=_PAIR_SCHEMA)
+    return bucketed.groupBy("bucket").applyInPandas(
+        on_worker(gemm_bucket), schema=_PAIR_SCHEMA
+    )
 
 
 def kmeans_lloyd(
@@ -963,7 +968,8 @@ def kmeans_lloyd(
         # cluster ids are seed point ids, so they carry pid_type in the
         # expr tier too — declare the same type for drop-in parity
         return pts.mapInPandas(
-            go, schema=f"_pid {pid_type}, _q array<bigint>, cluster {pid_type}"
+            on_worker(go),
+            schema=f"_pid {pid_type}, _q array<bigint>, cluster {pid_type}",
         )
 
     _assign = _assign_gemm if assign_mode == "gemm" else _assign_expr
@@ -1082,7 +1088,7 @@ def _semdedup_prune_gemm(
 
     return prunable.select("cluster", "_id", "_q", "_n2").groupBy(
         "cluster"
-    ).applyInPandas(prune, schema="_id bigint")
+    ).applyInPandas(on_worker(prune), schema="_id bigint")
 
 
 def semdedup(
@@ -1745,7 +1751,7 @@ def embedding_cross_matches(
         )
 
     return both.groupBy("bi", "bj").applyInPandas(
-        gemm_group, schema=_CROSS_SCHEMA
+        on_worker(gemm_group), schema=_CROSS_SCHEMA
     )
 
 
@@ -1794,7 +1800,7 @@ def embedding_cross_matches_lsh(
         )
 
     return both.groupBy("bucket").applyInPandas(
-        gemm_bucket, schema=_CROSS_SCHEMA
+        on_worker(gemm_bucket), schema=_CROSS_SCHEMA
     )
 
 

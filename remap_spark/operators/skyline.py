@@ -36,6 +36,8 @@ from collections.abc import Iterator, Mapping, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..worker import on_worker
+
 
 def _sweep(pdf, cols: list[str], signs: list[int]):
     """Return the skyline subset of one pandas partition (minimize
@@ -106,6 +108,6 @@ def pareto_frontier(
         if len(pdf):
             yield _sweep(pdf, cols, signs)
 
-    local = clean.mapInPandas(prune, schema)
+    local = clean.mapInPandas(on_worker(prune), schema)
     # exact global pass over the (small) candidate union
-    return local.repartition(1).mapInPandas(prune, schema)
+    return local.repartition(1).mapInPandas(on_worker(prune), schema)

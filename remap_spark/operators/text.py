@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..engine import local_frame
 from ..functions import PUNCT, lineage_cut, portable_hash60, tokenize
+from ..worker import on_worker
 
 # deliberately small, fixed marker lists — the heuristic is the
 # operator; the lists are config
@@ -617,7 +618,7 @@ def bpe_train(
                 yield pd.DataFrame({"freq": pdf["freq"], "syms": out})
 
         table = table.mapInPandas(
-            apply_merges, schema="freq bigint, syms array<string>"
+            on_worker(apply_merges), schema="freq bigint, syms array<string>"
         ).localCheckpoint(eager=True)
     return merges
 
@@ -1377,7 +1378,7 @@ def bpe_encode(
             yield pd.DataFrame({"word": pdf["word"], "_toks": toks})
 
     encoded = vocab.mapInPandas(
-        encode, schema="word string, _toks array<string>"
+        on_worker(encode), schema="word string, _toks array<string>"
     )
     joined = words.join(
         encoded, words["_word"] == encoded["word"], "inner"

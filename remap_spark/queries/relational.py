@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 
 from ..engine import load_table
 from ..functions import epoch_us, first_char_bucket, lineage_cut, tokenize
+from ..worker import on_worker
 
 DEC = "decimal(28,10)"
 
@@ -367,7 +368,7 @@ def dq18_grouped_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.groupBy("l_returnflag", "l_linestatus")
-        .applyInPandas(agg_group, schema=schema)
+        .applyInPandas(on_worker(agg_group), schema=schema)
         # lazy cut below the global sort: the range sampling pass
         # re-runs the pandas UDF over every group (a second full
         # Python pass); the cut is 6 rows (see ext_winsorize)

@@ -22,6 +22,7 @@ from ..operators.dedup import (
     remove_duplicate_spans_keep_one,
 )
 from ..operators.linkage import resolve_entities_multi
+from ..worker import on_worker
 from .extensions import _SPAN_GRAM, _TOKS
 
 
@@ -263,7 +264,7 @@ def ext_mm_audio_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "channels bigint, total_samples bigint, bitrate_sum bigint, "
         "is_vbr boolean"
     )
-    return docs.mapInPandas(run, schema).orderBy("media_id")
+    return docs.mapInPandas(on_worker(run), schema).orderBy("media_id")
 
 
 _MP3_META_SQL = """
@@ -962,7 +963,7 @@ def ext_mm_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
         "make string, model string, orientation bigint, "
         "taken_at string, n_exif bigint"
     )
-    return docs.mapInPandas(run, schema).orderBy("media_id")
+    return docs.mapInPandas(on_worker(run), schema).orderBy("media_id")
 
 
 _EXIF_SQL = """

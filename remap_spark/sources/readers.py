@@ -22,6 +22,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..worker import on_worker
+
 
 def read_text(spark: SparkSession, path: str) -> DataFrame:
     """TextFileReader (remap.py:20-39): (filename, line) per text line."""
@@ -73,7 +75,7 @@ def read_xml_elements(spark: SparkSession, path: str) -> DataFrame:
                         texts.append(elem.text)
             yield pd.DataFrame({"filename": files, "text": texts})
 
-    return raw.mapInPandas(parse, schema="filename string, text string")
+    return raw.mapInPandas(on_worker(parse), schema="filename string, text string")
 
 
 def read_html_text(spark: SparkSession, path: str) -> DataFrame:
@@ -112,7 +114,7 @@ def read_html_text(spark: SparkSession, path: str) -> DataFrame:
                     texts.append(p.text)
             yield pd.DataFrame({"filename": files, "text": texts})
 
-    return raw.mapInPandas(parse, schema="filename string, text string")
+    return raw.mapInPandas(on_worker(parse), schema="filename string, text string")
 
 
 def read_adjacency(spark: SparkSession, path: str, valued: bool = False) -> DataFrame:
@@ -278,7 +280,9 @@ def read_warc(spark: SparkSession, path: str, glob: str | None = None) -> DataFr
             yield pd.DataFrame(rows)
 
     raw = read_binary_files(spark, path, glob)
-    return raw.select("path", "content").mapInPandas(parse, schema=WARC_SCHEMA)
+    return raw.select("path", "content").mapInPandas(
+        on_worker(parse), schema=WARC_SCHEMA
+    )
 
 
 def warc_http_text(warc_df: DataFrame) -> DataFrame:

@@ -26,6 +26,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..worker import on_worker
+
 USER_STATS_OUTPUT = StructType(
     [
         StructField("user_id", LongType()),
@@ -124,7 +126,7 @@ def running_user_stats(
         else GroupStateTimeout.NoTimeout
     )
     return events.groupBy("user_id").applyInPandasWithState(
-        update,
+        on_worker(update),
         outputStructType=USER_STATS_OUTPUT,
         stateStructType=_USER_STATS_STATE,
         outputMode="update",
@@ -179,7 +181,7 @@ def streaming_funnel_stages(
         else GroupStateTimeout.NoTimeout
     )
     return events.groupBy(user_col).applyInPandasWithState(
-        update,
+        on_worker(update),
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="update",
@@ -347,7 +349,7 @@ def streaming_match_pattern(
         else GroupStateTimeout.NoTimeout
     )
     return events.groupBy(user_col).applyInPandasWithState(
-        update,
+        on_worker(update),
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="append",

@@ -222,6 +222,43 @@ def test_driver_rows_enter_only_through_local_frame():
     assert calls == [("engine.py", "local_frame")], calls
 
 
+def test_worker_functions_enter_only_through_on_worker():
+    """Every Python function the package ships to executors goes through
+    ``worker.on_worker``, which stops each task from re-reading the
+    worker's zip archives. ``foreachBatch`` bodies run on the driver
+    and are not covered."""
+    import io
+    import pathlib
+    import tokenize
+
+    import remap_spark
+
+    shipping = {
+        "mapInPandas",
+        "applyInPandas",
+        "mapInArrow",
+        "applyInArrow",
+        "applyInPandasWithState",
+        "pandas_udf",
+        "udf",
+    }
+    root = pathlib.Path(remap_spark.__file__).parent
+    calls, unwrapped = 0, []
+    for src in sorted(root.rglob("*.py")):
+        toks = [
+            t
+            for t in tokenize.generate_tokens(io.StringIO(src.read_text()).readline)
+            if t.type not in (tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE)
+        ]
+        for tok, paren, arg, nxt in zip(toks, toks[1:], toks[2:], toks[3:]):
+            if tok.type == tokenize.NAME and tok.string in shipping:
+                calls += 1
+                if (paren.string, arg.string, nxt.string) != ("(", "on_worker", "("):
+                    unwrapped.append(f"{src.relative_to(root)}:{tok.start[0]}")
+    assert unwrapped == [], unwrapped
+    assert calls >= 30, calls  # the lint still sees the call sites
+
+
 def test_local_frame_matches_list_built_frame(spark):
     """``local_frame`` returns the schema and rows ``createDataFrame``
     builds from the same list, and plans as a LocalTableScan, never a
