@@ -101,19 +101,6 @@ def build_session(
         # vectorized reader; surface it as bigint nanos and truncate to
         # micros in load_table — same truncation DuckDB applies on read.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # --- streaming state store ------------------------------------
-        # RocksDB over the default HDFS-backed provider: measured 1.65x
-        # on a key-heavy stateful stream (SCALE.md r10 probe — 2M events
-        # / 50k keys / 20 micro-batches: 231 -> 140 s; the default
-        # provider rewrites the full state map per partition per commit,
-        # RocksDB commits deltas). Semantics identical — the provider is
-        # a store implementation, not an operator change; the stream ≡
-        # batch suite pins outputs either way.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
     )
     if master:
         builder = builder.master(master)

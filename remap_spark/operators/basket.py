@@ -43,56 +43,6 @@ from ..functions import lineage_cut
 PPM = 1_000_000
 
 
-def basket_item_counts(
-    df: DataFrame, basket_col: str, item_col: str
-) -> DataFrame:
-    """Distinct-basket count per item: (item, n_baskets_with_item).
-    One combiner aggregate over the distinct (basket, item) relation."""
-    return (
-        df.select(basket_col, item_col)
-        .distinct()
-        .groupBy(item_col)
-        .agg(F.count(F.lit(1)).alias("item_baskets"))
-    )
-
-
-def basket_pair_counts(
-    df: DataFrame,
-    basket_col: str,
-    item_col: str,
-    max_basket_size: int | None = None,
-) -> DataFrame:
-    """Unordered co-occurrence counts: (item_a < item_b, pair_baskets).
-
-    Self-join on the basket key over the DISTINCT (basket, item)
-    relation; ``max_basket_size`` (if set) drops larger baskets before
-    the join so a single degenerate basket cannot produce a quadratic
-    pair set.
-    """
-    items = df.select(basket_col, item_col).distinct()
-    if max_basket_size is not None:
-        sizes = items.groupBy(basket_col).agg(
-            F.count(F.lit(1)).alias("_bsize")
-        )
-        items = (
-            items.join(sizes, basket_col)
-            .where(F.col("_bsize") <= max_basket_size)
-            .drop("_bsize")
-        )
-    a = items.select(
-        F.col(basket_col).alias("_b"), F.col(item_col).alias("item_a")
-    )
-    b = items.select(
-        F.col(basket_col).alias("_b"), F.col(item_col).alias("item_b")
-    )
-    return (
-        a.join(b, "_b")
-        .where(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
-        .agg(F.count(F.lit(1)).alias("pair_baskets"))
-    )
-
-
 def association_rules(
     df: DataFrame,
     basket_col: str,

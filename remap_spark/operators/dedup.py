@@ -42,32 +42,6 @@ from ..functions import (
 )
 
 
-def word_ngrams(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as array<string>, JVM-side (transform over
-    an index sequence — no explode, no UDF)."""
-    words = tokenize(col)
-    k = F.size(words) - (n - 1)
-    gram_at = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(words, i + j + 1) for j in range(n)]
-    )
-    return F.when(
-        k >= 1, F.transform(F.sequence(F.lit(0), k - 1), gram_at)
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def exact_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact dedup: md5-hash groupBy; one shuffle, fully parallel.
-    Returns (h, cnt, keep_id) for groups with cnt > 1 — keep_id is the
-    canonical survivor (min id)."""
-    return (
-        df.groupBy(F.md5(F.col(text_col)).alias("h"))
-        .agg(F.count("*").alias("cnt"), F.min(id_col).alias("keep_id"))
-        .where(F.col("cnt") > 1)
-    )
-
-
 def _doc_shingles(
     df: DataFrame,
     text_col: str,
@@ -1520,29 +1494,6 @@ def incremental_dedup_fuzzy(
     )
 
 
-def compact_signature_store(
-    spark,
-    store_path: str,
-    table_name: str,
-    num_buckets: int = 16,
-) -> None:
-    """Operational compaction for the fuzzy ingest store: fold the
-    accumulated per-batch partitions (stream_ingest_dedup_fuzzy writes
-    one _batch_id partition per micro-batch) into a single table
-    BUCKETED on (band, key) — after which every probe join runs with
-    zero store-side exchange (the bucketed-join contract pinned by
-    test_incremental_fuzzy_bucketed_store_no_store_exchange). Run it
-    off the ingest path at whatever cadence keeps the partition count
-    sane; the next batch can keep appending to the parquet store while
-    the compacted table serves probes."""
-    from ..sources import write_bucketed_table
-
-    store = spark.read.parquet(store_path).select(
-        "band", "key", "doc", "sigs"
-    )
-    write_bucketed_table(store, table_name, ["band", "key"], num_buckets)
-
-
 def lsh_verified_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1707,7 +1658,7 @@ def hamming_pairs(
     )
     # one explode of the per-block (blk, key) structs instead of an
     # nblocks-way union: the union form re-executed the UPSTREAM
-    # subtree (for image/audio near-dup that is the Python media
+    # subtree (for image near-dup that is the Python media
     # decode) once per block and once per self-join side — up to
     # 2 x nblocks executions; the lazy cut materializes the narrow
     # (blk, key, id, hash) relation once (r12, pregel._symmetrize fix)
@@ -1825,65 +1776,6 @@ def winnow_fingerprints(
             F.lit(_WINNOW_MAX_POS - 1)
             - F.expr(f"key % {_WINNOW_MAX_POS}")
         ).cast("int").alias("pos"),
-    )
-
-
-def winnow_similar_pairs(
-    df: DataFrame,
-    k: int = 8,
-    window: int = 4,
-    min_shared: int = 2,
-    max_doc_freq: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Document pairs ranked by SHARED winnowing fingerprints — the
-    plagiarism/boilerplate detector that survives insertion and
-    reordering: (doc_a, doc_b, shared_fps, similarity_ppm) where
-    similarity = shared / min(|fps_a|, |fps_b|). Candidates come from
-    the fingerprint inverted index (combiner groupBy + posting
-    self-join, output bounded by sum of posting-list^2);
-    ``max_doc_freq`` drops boilerplate grams shared by too many
-    documents BEFORE the join — the same stop-gram economics as the
-    shingle pipelines."""
-    fps = winnow_fingerprints(df, k, window, text_col, id_col)
-    sizes = fps.groupBy("doc").agg(F.count("*").alias("_n"))
-    postings = fps.select("doc", "fp_hash").distinct()
-    if max_doc_freq is not None:
-        dfreq = postings.groupBy("fp_hash").agg(
-            F.count("*").alias("_df")
-        )
-        postings = postings.join(
-            dfreq.where(F.col("_df") <= max_doc_freq).select("fp_hash"),
-            "fp_hash",
-            "left_semi",
-        )
-    a, b = postings.alias("a"), postings.alias("b")
-    shared = (
-        a.join(
-            b,
-            (F.col("a.fp_hash") == F.col("b.fp_hash"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .groupBy(
-            F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b")
-        )
-        .agg(F.count("*").alias("shared_fps"))
-        .where(F.col("shared_fps") >= min_shared)
-    )
-    na = sizes.select(F.col("doc").alias("doc_a"), F.col("_n").alias("_na"))
-    nb = sizes.select(F.col("doc").alias("doc_b"), F.col("_n").alias("_nb"))
-    return (
-        shared.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "shared_fps",
-            F.expr("shared_fps * 1000000 div least(_na, _nb)")
-            .cast("bigint")
-            .alias("similarity_ppm"),
-        )
     )
 
 

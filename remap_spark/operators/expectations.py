@@ -7,9 +7,7 @@ Each expectation is a named boolean row predicate; the report is one
 row per rule with rows_checked / violations / pass. All rules fold
 into a SINGLE combiner-style aggregate over one scan (conditional
 count-if columns — the same shape as ext_profile_columns), so adding
-rules costs expression width, never extra passes or shuffles. The
-relation-level helpers (uniqueness, completeness) are expressed as
-aggregates too and union into the same report schema.
+rules costs expression width, never extra passes or shuffles.
 
 Severity is metadata: the caller decides whether 'error' rows abort
 the pipeline (``assert_expectations``) while 'warn' rows only report.
@@ -75,30 +73,6 @@ def expect_report(
             (F.col("_r.violations") == 0).alias("pass"),
         )
         .orderBy("rule")
-    )
-
-
-def expect_unique(
-    df: DataFrame, cols: Sequence[str], severity: str = "error"
-) -> DataFrame:
-    """Relation-level uniqueness: one report row counting rows that
-    share their key with another row (total rows in over-populated
-    key groups minus the one legitimate holder of each)."""
-    dup = (
-        df.groupBy(*cols)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") > 1)
-        .agg(
-            F.coalesce(F.sum(F.col("_n") - 1), F.lit(0)).alias("_viol")
-        )
-    )
-    total = df.agg(F.count(F.lit(1)).alias("_rows"))
-    return dup.crossJoin(total).select(
-        F.lit("unique(" + ",".join(cols) + ")").alias("rule"),
-        F.lit(severity).alias("severity"),
-        F.col("_rows").cast("bigint").alias("rows_checked"),
-        F.col("_viol").cast("bigint").alias("violations"),
-        (F.col("_viol") == 0).alias("pass"),
     )
 
 

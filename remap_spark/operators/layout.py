@@ -35,14 +35,6 @@ def zorder_key(cols: list[Column | str], bits: int = 8) -> Column:
     return z
 
 
-def bucketize(col: Column | str, lo: int, hi: int, bits: int = 8) -> Column:
-    """Scale an integer column from [lo, hi] into the [0, 2**bits)
-    bucket domain zorder_key expects (integer arithmetic, exact)."""
-    c = F.col(col) if isinstance(col, str) else col
-    span = hi - lo + 1
-    return ((c - lo) * (1 << bits)) // span
-
-
 def cluster_by_zorder(
     df: DataFrame, cols: list[str], bits: int = 8, num_files: int | None = None
 ) -> DataFrame:
@@ -70,24 +62,6 @@ def skipping_stats(
         aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
     b = F.col(bucket_col) if isinstance(bucket_col, str) else bucket_col
     return df.groupBy(b.alias("bucket")).agg(*aggs)
-
-
-def cluster_by_hilbert(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    bits: int = 8,
-    num_files: int | None = None,
-) -> DataFrame:
-    """Hilbert twin of cluster_by_zorder — the recommended default for
-    2-D clustered writes (see SCALE.md: under unaligned range splits
-    Hilbert's jump-free curve bounds far tighter per-file min/max
-    boxes). Appends ``h_key``, range-partitions and sorts on it."""
-    out = with_hilbert_key(df, x_col, y_col, bits)
-    n = num_files or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    return out.repartitionByRange(n, "h_key").sortWithinPartitions("h_key")
 
 
 def with_hilbert_key(
@@ -169,88 +143,6 @@ def hilbert_sql(x_expr: str, y_expr: str, source_sql: str, bits: int = 8) -> str
         f"WITH {body}\n"
         f"SELECT ox AS hx, oy AS hy, CAST(hk AS BIGINT) AS h_key FROM h0"
     )
-
-
-def eligible_buckets(
-    stats: DataFrame, predicates: dict[str, tuple[int, int]]
-) -> DataFrame:
-    """Filter the stats relation down to buckets a box predicate
-    {col: (lo, hi)} cannot skip (min<=hi AND max>=lo per column) —
-    i.e. the files a stats-pruned scan would actually open."""
-    cond = F.lit(True)
-    for c, (lo, hi) in predicates.items():
-        cond = cond & (F.col(f"min_{c}") <= hi) & (F.col(f"max_{c}") >= lo)
-    return stats.where(cond)
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    sort_cols: list[str] | None = None,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Small-file compaction for one parquet directory: rewrite the
-    directory's data as ``ceil(current_bytes / target_file_bytes)``
-    files, optionally range-clustered on ``sort_cols`` (each output
-    file then owns a contiguous, sorted key range — the layout
-    ``cluster_by_zorder`` produces, preserved through compaction).
-
-    Small files are the classic lake pathology: a 100 TB table fed by
-    streaming micro-batches accretes millions of KB-scale files and
-    scan planning starts to dominate query time (footer reads +
-    task-per-file scheduling). Compaction is one shuffle-light
-    rewrite: a coalesce when shrinking file count without a sort key,
-    a repartitionByRange when clustering.
-
-    Commit protocol: write to a staging sibling, then two FS renames
-    (old -> trash, staging -> path) and a recursive delete. NOT an
-    atomic metadata commit — a table format (Iceberg/Delta) swaps a
-    manifest instead; a reader racing the rename window can see a
-    missing directory. Run from the table's maintenance window, like
-    ``streaming/topk.compact_topk_store``. Returns a report dict
-    (files/bytes before and after).
-    """
-    sc = spark.sparkContext
-    jvm = sc._jvm  # noqa: SLF001
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())  # noqa: SLF001
-
-    def _stats(p):
-        files = [
-            s
-            for s in fs.listStatus(p)
-            if s.isFile() and not s.getPath().getName().startswith("_")
-        ]
-        return len(files), sum(s.getLen() for s in files)
-
-    n_before, bytes_before = _stats(jpath)
-    n_out = max(1, -(-bytes_before // target_file_bytes))
-    df = spark.read.parquet(path)
-    if sort_cols:
-        out = df.repartitionByRange(n_out, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
-    else:
-        out = df.coalesce(n_out) if n_out < n_before else df.repartition(n_out)
-    staging = jvm.org.apache.hadoop.fs.Path(path + "._compacting")
-    trash = jvm.org.apache.hadoop.fs.Path(path + "._compacted_old")
-    fs.delete(staging, True)
-    fs.delete(trash, True)
-    out.write.mode("overwrite").parquet(str(staging))
-    if not fs.rename(jpath, trash):
-        raise IOError(f"compact_parquet: could not move {path} aside")
-    if not fs.rename(staging, jpath):
-        # roll back: put the original data back before failing
-        fs.rename(trash, jpath)
-        raise IOError(f"compact_parquet: could not publish {path}")
-    fs.delete(trash, True)
-    n_after, bytes_after = _stats(jpath)
-    return {
-        "files_before": n_before,
-        "bytes_before": bytes_before,
-        "files_after": n_after,
-        "bytes_after": bytes_after,
-    }
 
 
 def write_bucketed(

@@ -273,80 +273,6 @@ def resolve_entities_multi(
     )
 
 
-def sorted_neighborhood_pairs(
-    df: DataFrame,
-    sort_col: str,
-    id_col: str,
-    window: int = 5,
-    bucket_len: int = 4,
-) -> DataFrame:
-    """Sorted-neighborhood candidate pairs (Hernandez & Stolfo 1995):
-    records within ``window`` positions of each other in the GLOBAL
-    (sort_col, id) order become candidates — the complement of hard
-    blocking for typo-heavy keys, since near-misses sort adjacently
-    even when their blocking keys differ.
-
-    Scale shape — no global sort, no single-partition window: the
-    global rank is TWO-PHASE — rows bucket by a ``bucket_len``-char
-    sort-key prefix, per-bucket ranks come from bucket-keyed windows,
-    and bucket offsets are a prefix sum over the BUCKET-COUNT relation
-    (tiny) broadcast back. Pairs then come from rank-band blocking:
-    rank div window collides every in-window pair into the same or
-    adjacent block, so two equi-joins (block, block+1) with the rank
-    filter enumerate exactly the |rank_a - rank_b| < window pairs.
-    Deterministic, exact, and every exchange is keyed. Returns
-    (id_a, id_b, rank_a, rank_b, key_a, key_b)."""
-    from pyspark.sql.window import Window
-
-    rows = df.select(
-        F.col(id_col).alias("_id"), F.col(sort_col).alias("_key")
-    ).withColumn("_bkt", F.substring(F.col("_key"), 1, bucket_len))
-    wb = Window.partitionBy("_bkt").orderBy("_key", "_id")
-    local = rows.withColumn("_lr", F.row_number().over(wb))
-    counts = rows.groupBy("_bkt").agg(F.count("*").alias("_n"))
-    wo = Window.orderBy("_bkt").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        "_bkt", F.coalesce(F.sum("_n").over(wo), F.lit(0)).alias("_off")
-    )
-    ranked = local.join(F.broadcast(offsets), "_bkt").select(
-        "_id", "_key", (F.col("_off") + F.col("_lr")).alias("_rank")
-    )
-    # the two shifted join passes (same-block, next-block) become ONE
-    # join against a b-side whose block key is exploded into
-    # {_blk, _blk - 1} — the union form re-executed the two-phase rank
-    # pipeline (windows + broadcast offsets) once per shift on top of
-    # once for the a-side; the lazy cut materializes it once for both
-    # sides (r12, same fix as pregel._symmetrize). A pair can satisfy
-    # only one of the two shifts, so the result multiset is unchanged
-    # and distinct() keeps its original role.
-    blocked = ranked.withColumn(
-        "_blk", F.expr(f"_rank div {window}")
-    ).localCheckpoint(eager=False)
-    a = blocked.alias("a")
-    b = blocked.select(
-        F.explode(F.array(F.col("_blk"), F.col("_blk") - 1)).alias("_blk"),
-        "_id",
-        "_key",
-        "_rank",
-    ).alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a._blk") == F.col("b._blk"))
-        & (F.col("b._rank") > F.col("a._rank"))
-        & (F.col("b._rank") - F.col("a._rank") < window),
-    ).select(
-        F.col("a._id").alias("id_a"),
-        F.col("b._id").alias("id_b"),
-        F.col("a._rank").alias("rank_a"),
-        F.col("b._rank").alias("rank_b"),
-        F.col("a._key").alias("key_a"),
-        F.col("b._key").alias("key_b"),
-    )
-    return pairs.distinct()
-
-
 def with_group_value_count(
     df: DataFrame, cluster_col: str, col: str, out: str = "_freq"
 ) -> DataFrame:

@@ -1,8 +1,8 @@
 """Multimodal column handling: image/audio/video as opaque ``binary``
 columns with typed metadata, processed by Arrow-batched pandas UDFs.
 
-The Spark-side plumbing is real and tested: schemas, mapInPandas batch
-iteration, partition sizing. The common codecs decode NATIVELY in
+The Spark-side plumbing is real and tested: schemas and mapInPandas
+batch iteration. The common codecs decode NATIVELY in
 stdlib+numpy (no imaging/audio library): BMP, 8-bit PNG, Huffman JPEG
 (baseline sequential AND progressive), PCM WAV, and FLAC. Only exotic
 variants (arithmetic-coded/hierarchical/12-bit JPEG, 16-bit/palette
@@ -11,9 +11,6 @@ NotImplementedError. Swapping in Pillow/torchaudio/PyAV changes ONLY
 those functions.
 
 Scale notes:
-- media blobs make rows wide: repartition by target partition *bytes*
-  (``target_rows_per_partition``), not row count, before a decode pass
-  so an executor batch fits in memory;
 - decode is mapInPandas (one Python worker round-trip per partition,
   Arrow transfer) — never a per-row UDF;
 - feature outputs are fixed-length arrays -> feed operators/similarity.
@@ -1291,64 +1288,6 @@ def sample_frames(
     )
 
 
-def repartition_for_media(
-    df: DataFrame,
-    approx_row_bytes: int,
-    target_partition_bytes: int = 128 << 20,
-    approx_total_rows: int | None = None,
-    min_partitions: int | None = None,
-) -> DataFrame:
-    """Size partitions by bytes, not rows — a 5 MB-per-row video table
-    needs ~25 rows/partition, not the default splits.
-
-    The byte target is a CEILING (memory safety for fat rows), floored
-    at the cluster's default parallelism: when total_bytes /
-    target_partition_bytes is smaller than the core count — a 278 MB
-    image table on a 32-core node — the pure byte rule would starve
-    the decode stage (r10 probe: 9.0 s at its 2 byte-sized partitions
-    vs 5.6 s at 64; smaller-than-target partitions are always
-    memory-safe, so the floor never violates the rationale).
-    ``min_partitions`` replaces that parallelism FLOOR with your own —
-    the byte rule can still size ABOVE it (it is not an exact pin:
-    max(1, rows//rows_per_part, min_partitions)); callers wanting an
-    exact count should df.repartition(n) directly. NOTE the
-    parallelism floor is an r10 behavior change: call sites that
-    previously got the pure byte rule now get at least
-    defaultParallelism partitions unless they pass min_partitions.
-
-    Sizing uses metadata only (never a job over the blobs): pass the
-    catalog's row-count estimate as ``approx_total_rows``; without it
-    the input files are stat'ed for their on-disk size, which for
-    media blobs (incompressible) tracks decoded size closely. A full
-    ``df.count()`` over a blob table would read every byte once just
-    to plan — refuse rather than do that silently."""
-    if min_partitions is None:
-        min_partitions = df.sparkSession.sparkContext.defaultParallelism
-    rows_per_part = max(1, target_partition_bytes // max(1, approx_row_bytes))
-    if approx_total_rows is None:
-        import os
-
-        files = df.inputFiles()
-        sizes = []
-        for f in files:
-            path = f[7:] if f.startswith("file:") and f[5:7] == "//" else f
-            path = path[5:] if path.startswith("file:") else path
-            try:
-                sizes.append(os.path.getsize(path))
-            except OSError:
-                sizes = []
-                break
-        if not sizes:
-            raise ValueError(
-                "repartition_for_media needs approx_total_rows when the "
-                "input is not a statable file scan (counting a blob table "
-                "to size partitions would scan it twice)"
-            )
-        approx_total_rows = max(1, sum(sizes) // max(1, approx_row_bytes))
-    n = max(1, approx_total_rows // rows_per_part, min_partitions)
-    return df.repartition(n)
-
-
 def _decode_image_px(blob: bytes):
     """Pixel dispatch (the _decode_image_impl sniffing order, no fake
     tier — perceptual hashing needs real pixels or nothing): returns
@@ -1539,117 +1478,6 @@ def audio_fingerprint(
         on_worker(run),
         schema="media_id bigint, afp bigint, n_frames bigint, "
         "sample_rate int",
-    )
-
-
-def audio_near_dup_pairs(
-    df: DataFrame,
-    media_col: str = "media",
-    id_col: str = "media_id",
-    max_hamming: int = 6,
-) -> DataFrame:
-    """Near-duplicate audio pairs by fingerprint hamming distance —
-    the image_near_dup_pairs twin over audio payloads."""
-    from .dedup import hamming_pairs
-
-    fps = audio_fingerprint(df, media_col, id_col).where(
-        F.col("afp").isNotNull()
-    )
-    return hamming_pairs(
-        fps, "afp", "media_id", bits=64, max_hamming=max_hamming
-    )
-
-
-def video_frame_hashes(
-    df: DataFrame,
-    media_col: str = "media",
-    id_col: str = "media_id",
-    every_k_frames: int = 1,
-) -> DataFrame:
-    """Per-frame perceptual hashes for video payloads: sample frames
-    (native RIFF-AVI walk; MJPEG frames are complete JPEGs) and dHash
-    each decodable frame — (media_id, frame_idx, dhash). Composes the
-    existing 1->N frame expansion with the image hash in a SECOND
-    Arrow pass over frame-sized (not video-sized) rows; undecodable
-    frames drop out (stub-sliced bytes from non-AVI payloads are
-    never decodable, so opaque fixtures simply yield zero rows)."""
-    frames = sample_frames(
-        df, media_col=media_col, id_col=id_col, every_k_frames=every_k_frames
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            ids, idxs, hs = [], [], []
-            for mid, idx, blob in zip(
-                pdf["media_id"], pdf["frame_idx"], pdf["frame"]
-            ):
-                try:
-                    _w, _h, px = _decode_image_px(bytes(blob or b""))
-                    hs.append(_dhash64(px))
-                except Exception:
-                    continue
-                ids.append(mid)
-                idxs.append(idx)
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "dhash": hs}
-            )
-
-    return frames.mapInPandas(
-        on_worker(run), schema="media_id bigint, frame_idx int, dhash bigint"
-    )
-
-
-def video_near_dup_pairs(
-    df: DataFrame,
-    media_col: str = "media",
-    id_col: str = "media_id",
-    min_shared_frames: int = 2,
-    every_k_frames: int = 1,
-) -> DataFrame:
-    """Near-duplicate video pairs: two videos match when they share
-    >= min_shared_frames EXACT frame dHashes (re-encoded/trimmed
-    copies keep most frame hashes; a trimmed copy still shares the
-    surviving frames). Candidates ride the frame-hash inverted index
-    — combiner groupBy on the 64-bit hash, posting self-join — so
-    cost is bounded by posting-list sizes, never |videos|^2, and no
-    frame bytes cross the second exchange. Returns
-    (id_a, id_b, shared_frames, frames_a, frames_b,
-    overlap_ppm = shared * 1e6 div min(frames))."""
-    hashes = video_frame_hashes(
-        df, media_col, id_col, every_k_frames
-    ).select("media_id", "dhash").distinct()
-    sizes = hashes.groupBy("media_id").agg(F.count("*").alias("_n"))
-    a, b = hashes.alias("a"), hashes.alias("b")
-    shared = (
-        a.join(
-            b,
-            (F.col("a.dhash") == F.col("b.dhash"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .groupBy(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-        )
-        .agg(F.count("*").alias("shared_frames"))
-        .where(F.col("shared_frames") >= min_shared_frames)
-    )
-    na = sizes.select(F.col("media_id").alias("id_a"), F.col("_n").alias("frames_a"))
-    nb = sizes.select(F.col("media_id").alias("id_b"), F.col("_n").alias("frames_b"))
-    return (
-        shared.join(na, "id_a")
-        .join(nb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "shared_frames",
-            "frames_a",
-            "frames_b",
-            F.expr("shared_frames * 1000000 div least(frames_a, frames_b)")
-            .cast("bigint")
-            .alias("overlap_ppm"),
-        )
     )
 
 

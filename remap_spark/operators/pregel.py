@@ -1097,7 +1097,14 @@ def k_core(
     >= k), so rounds are block-amortized exactly like _flood_fixpoint:
     geometric blocks of lazily-checkpointed rounds, ONE edge-count
     action per block, convergence = monotone edge count unchanged
-    across a whole block."""
+    across a whole block.
+
+    ``max_iter`` must be >= 1. When the rounds run out while the last
+    block still dropped edges, one degree check decides: a survivor
+    with degree < k means peeling had not finished, and the operator
+    raises instead of returning a superset of the k-core."""
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     spark = edges.sparkSession
     n = num_partitions or min(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
@@ -1113,6 +1120,7 @@ def k_core(
     n_edges = sym.count()
     steps = 0
     block_size = 1
+    converged = False
     while steps < max_iter:
         block = min(block_size, max_iter - steps)
         block_size = min(block_size * 2, max_block)
@@ -1136,96 +1144,22 @@ def k_core(
         new_edges = cur.count()
         sym = cur
         if new_edges == n_edges:
+            converged = True
             break
         n_edges = new_edges
+    if not converged and (
+        sym.groupBy("src").agg(F.count("*").alias("_deg"))
+        .where(F.col("_deg") < k)
+        .limit(1)
+        .count()
+    ):
+        raise RuntimeError(
+            f"k_core did not converge within max_iter={max_iter} peel "
+            f"rounds (a survivor still has degree < {k}); raise max_iter "
+            "for this graph's peel depth"
+        )
     return sym.groupBy(F.col("src").alias("vertex_id")).agg(
         F.count("*").cast("bigint").alias("degree")
-    )
-
-
-def coreness(
-    edges: DataFrame,
-    max_iter: int = 200,
-    max_block: int = 8,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Core number for EVERY vertex (the k it survives k_core peeling
-    at) via distributed h-index iteration (Lu et al. 2016): start each
-    vertex at its degree; each round replace the estimate with the
-    H-INDEX of its neighbors' estimates (the largest h with >= h
-    neighbors at estimate >= h). The sequence is monotone nonincreasing
-    and its fixpoint is exactly the core number, so bulk-synchronous
-    rounds converge deterministically — no peel ordering, no global
-    k sweep. Returns (vertex_id, core).
-
-    Shape per round: one edge-keyed join forwarding estimates, then
-    the h-index evaluated as a per-vertex rank window —
-    max(min(rank_desc, estimate)) — and one combiner aggregate; the
-    window's skew bound is the hottest vertex's degree, same as any
-    per-vertex ordered operator. Rounds (typically <= a few dozen;
-    bounded by graph structure, not diameter) run in geometric
-    lazily-checkpointed blocks with ONE change-count action per block:
-    re-iterating a converged state is a no-op, so overshoot inside a
-    block is safe — the same amortization as _flood_fixpoint/k_core."""
-    from pyspark.sql.window import Window
-
-    spark = edges.sparkSession
-    n = num_partitions or min(
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        max(4, edges.rdd.getNumPartitions()),
-    )
-    und = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
-    sym = (
-        _symmetrize(und)
-        .distinct()
-        .repartition(n, "dst")
-        .localCheckpoint(eager=False)
-    )
-    state = (
-        sym.groupBy(F.col("src").alias("id"))
-        .agg(F.count("*").alias("c"))
-        .repartition(n, "id")
-        .localCheckpoint(eager=False)
-    )
-    steps = 0
-    block_size = 1
-    w = Window.partitionBy("id").orderBy(F.col("_nc").desc())
-    while steps < max_iter:
-        block = min(block_size, max_iter - steps)
-        block_size = min(block_size * 2, max_block)
-        cur = state.withColumn("_changed", F.lit(0))
-        for _ in range(block):
-            nb = (
-                cur.select(F.col("id").alias("src"), F.col("c").alias("_nc"))
-                .join(sym, "src")
-                .select(F.col("dst").alias("id"), "_nc")
-            )
-            h = (
-                nb.withColumn("_rn", F.row_number().over(w))
-                .select("id", F.least(F.col("_rn"), F.col("_nc")).alias("_m"))
-                .groupBy("id")
-                .agg(F.max("_m").alias("_h"))
-            )
-            # monotone guard: the h-index of current estimates is
-            # provably <= the current estimate, min() keeps numeric
-            # belt-and-braces without changing the fixpoint
-            new_c = F.least(F.col("c"), F.col("_h"))
-            cur = (
-                cur.join(h, "id")
-                .select(
-                    "id",
-                    new_c.alias("c"),
-                    (new_c != F.col("c")).cast("int").alias("_changed"),
-                )
-                .localCheckpoint(eager=False)
-            )
-        steps += block
-        changed = cur.agg(F.sum("_changed").alias("x")).first()["x"]
-        state = cur.drop("_changed")
-        if not changed:
-            break
-    return state.select(
-        F.col("id").alias("vertex_id"), F.col("c").cast("bigint").alias("core")
     )
 
 

@@ -1,7 +1,6 @@
 """Incremental aggregate maintenance: merge a new batch into a stored
 grouped-aggregate table without touching history — the materialized-
-rollup twin of scd.scd2_apply_batch and the batch shape behind every
-streaming "update the dashboard table" sink.
+rollup twin of scd.scd2_apply_batch.
 
 Only MERGEABLE aggregate kinds are offered (sum / count / min / max):
 state ⊕ agg(batch) == agg(history ∪ batch) holds algebraically, so the
@@ -442,91 +441,6 @@ def segment_overlap_matrix(
             .cast("bigint")
             .alias("est_intersect"),
         )
-    )
-
-
-def cms_state(
-    df: DataFrame,
-    col: str,
-    width: int = 1024,
-    depth: int = 4,
-    keys: list[str] | None = None,
-) -> DataFrame:
-    """Count-min sketch state: a depth x width counter grid as rows
-    (keys..., d, w, cnt) — the mergeable frequency sketch (Cormode &
-    Muthukrishnan 2005). Each value increments one counter per row of
-    the grid (d independent md5-derived hashes, the portable idiom),
-    so the state is one combiner-style aggregate bounded by
-    depth*width rows per group regardless of input volume; merging
-    states is adding grids; point estimates never undercount.
-    Everything is integer + md5 — bit-reproducible in any engine."""
-    gkeys = list(keys or [])
-    rows = None
-    c = F.col(col).cast("string")
-    for d in range(depth):
-        h = F.conv(
-            F.substring(F.md5(F.concat(c, F.lit(f"|cms{d}"))), 1, 13),
-            16,
-            10,
-        ).cast("bigint")
-        frame = df.select(
-            *gkeys,
-            F.lit(d).alias("d"),
-            (h % width).cast("int").alias("w"),
-        )
-        rows = frame if rows is None else rows.unionByName(frame)
-    return rows.groupBy(*gkeys, "d", "w").agg(
-        F.count("*").cast("bigint").alias("cnt")
-    )
-
-
-def merge_cms_state(a: DataFrame, b: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """Merge two CMS grids: counters add cell-wise — row-identical to
-    sketching the concatenated inputs (the property that makes the
-    sketch safe for per-partition / per-day incremental maintenance)."""
-    gkeys = list(keys or [])
-    return (
-        a.unionByName(b)
-        .groupBy(*gkeys, "d", "w")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
-
-
-def cms_query(
-    state: DataFrame,
-    values: DataFrame,
-    col: str,
-    width: int = 1024,
-    depth: int = 4,
-    keys: list[str] | None = None,
-) -> DataFrame:
-    """Point-frequency estimates for ``values`` rows against a CMS
-    state: est = MIN over the d counters each value hashes to —
-    >= the true count always, overcounting bounded by 2N/width with
-    probability 1 - 2^-depth. One broadcast-able join per estimate
-    batch (the probe relation is values x depth rows); no corpus
-    rescans. Returns (keys..., value, est_count)."""
-    gkeys = list(keys or [])
-    c = F.col(col).cast("string")
-    probes = None
-    for d in range(depth):
-        h = F.conv(
-            F.substring(F.md5(F.concat(c, F.lit(f"|cms{d}"))), 1, 13),
-            16,
-            10,
-        ).cast("bigint")
-        frame = values.select(
-            *gkeys,
-            c.alias("value"),
-            F.lit(d).alias("d"),
-            (h % width).cast("int").alias("w"),
-        )
-        probes = frame if probes is None else probes.unionByName(frame)
-    joined = probes.join(state, gkeys + ["d", "w"], "left").select(
-        *gkeys, "value", F.coalesce("cnt", F.lit(0)).alias("cnt")
-    )
-    return joined.groupBy(*gkeys, "value").agg(
-        F.min("cnt").cast("bigint").alias("est_count")
     )
 
 

@@ -20,8 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..engine import local_frame
-
 
 def scd2_history(
     df: DataFrame,
@@ -203,30 +201,6 @@ def table_changes(
             .otherwise(F.array().cast("array<string>"))
             .alias("changed_cols"),
         )
-    )
-
-
-def schema_changes(old: DataFrame, new: DataFrame) -> DataFrame:
-    """Schema drift between two snapshots — the metadata companion to
-    ``table_changes``: one row per column that was added, removed, or
-    changed type, as (column, op in ('add','drop','type_change'),
-    old_type, new_type). Pure metadata (no job runs); emitting it as a
-    relation lets pipelines quarantine drifting sources with the same
-    machinery as data-quality violations."""
-    o = {f.name: f.dataType.simpleString() for f in old.schema.fields}
-    n = {f.name: f.dataType.simpleString() for f in new.schema.fields}
-    rows = []
-    for c in sorted(set(o) | set(n)):
-        if c not in n:
-            rows.append((c, "drop", o[c], None))
-        elif c not in o:
-            rows.append((c, "add", None, n[c]))
-        elif o[c] != n[c]:
-            rows.append((c, "type_change", o[c], n[c]))
-    return local_frame(
-        old.sparkSession,
-        rows,
-        "column string, op string, old_type string, new_type string",
     )
 
 

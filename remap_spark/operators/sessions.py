@@ -41,8 +41,7 @@ def sessionize(
     """Gaps-and-islands sessionization: append a per-user ``session_id``
     (1-based, increasing with time) that increments whenever the gap
     since the user's previous event exceeds ``gap_us`` microseconds.
-    The batch twin of streaming/windows' session windows, and the
-    shared primitive under dq14.
+    The shared primitive under dq14.
 
     Shape: ONE user-keyed shuffle; the lag and the running sum share
     the same window partitioning. Gap arithmetic is microsecond-exact

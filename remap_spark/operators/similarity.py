@@ -17,11 +17,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..engine import local_frame
 from ..functions import cosine_similarity, dot_product, l2_norm
 from ..worker import on_worker
 
@@ -68,139 +67,6 @@ def cosine_topk_bruteforce(
         .where(F.col("rank") <= k)
         .select("query_id", "rank", "vec_id", "cosine")
     )
-
-
-def _topk_gemm(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int,
-    vec_col: str,
-    id_col: str,
-    label_col: str | None,
-) -> DataFrame:
-    """Shared core of the GEMM top-k tiers: broadcast query matrix,
-    one dense numpy GEMM per Arrow batch of candidates, per-batch
-    local top-k (exact — top-k distributes over a partition of the
-    candidates), one final per-query window. With ``label_col``,
-    same-label pairs are masked out (the hard-negative contract) in
-    addition to self-ids."""
-    import numpy as np
-
-    q_cols = [id_col, vec_col] + ([label_col] if label_col else [])
-    q_rows = queries.select(*q_cols).collect()
-    if not q_rows:
-        return local_frame(
-            candidates.sparkSession,
-            [],
-            "query_id bigint, rank int, vec_id bigint, cosine double",
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_labels = (
-        np.array([r[2] for r in q_rows], dtype=object) if label_col else None
-    )
-    q_norm = np.linalg.norm(q_mat, axis=1, keepdims=True)
-    q_unit = np.divide(
-        q_mat, q_norm, out=np.zeros_like(q_mat), where=q_norm != 0
-    )
-    sc = queries.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, q_unit, q_labels))
-
-    def local_topk(pdfs):
-        import pandas as pd
-
-        ids, unit, labels = bq.value
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c_norm = np.linalg.norm(c_mat, axis=1, keepdims=True)
-            c_unit = np.divide(
-                c_mat, c_norm, out=np.zeros_like(c_mat), where=c_norm != 0
-            )
-            sims = unit @ c_unit.T  # nq x batch
-            sims[np.equal.outer(ids, c_ids)] = -np.inf  # self-exclusion
-            if labels is not None:
-                c_labels = np.array(list(pdf[label_col]), dtype=object)
-                sims[labels[:, None] == c_labels[None, :]] = -np.inf
-            kk = min(k, sims.shape[1])
-            # per-query local top-k with (desc sim, asc id) tie order
-            order = np.lexsort((c_ids[None, :].repeat(len(ids), 0), -sims))
-            top = order[:, :kk]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(ids, kk),
-                    "vec_id": c_ids[top].ravel(),
-                    "cosine": np.take_along_axis(sims, top, 1).ravel(),
-                }
-            )
-
-    c_cols = [id_col, vec_col] + ([label_col] if label_col else [])
-    local = candidates.select(*c_cols).mapInPandas(
-        on_worker(local_topk), schema="query_id bigint, vec_id bigint, cosine double"
-    ).where(F.col("cosine") != float("-inf"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        local.select("*", F.row_number().over(w).alias("rank"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
-
-
-def cosine_topk_gemm(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Exact top-k by cosine — the SCALE tier of cosine_topk_bruteforce
-    (same contract and ranking: (query_id, rank, vec_id, cosine),
-    desc-cosine then vec_id, self-ids excluded). The expression-based
-    tier keeps the fold in Catalyst so the DuckDB oracle can replay it;
-    this tier trades that replayability for BLAS: the query matrix
-    (driver-sized by the shared broadcast contract) ships to every
-    candidate partition, each Arrow batch runs ONE dense numpy GEMM
-    (nq x batch) and emits only its per-query local top-k (k rows per
-    query per batch — top-k distributes over a partition of the
-    candidates), and one final per-query window reduces local to
-    global. r10 probe, 100 queries x 100k 64-dim vectors: 137.3 s
-    expression tier -> 3.7 s this tier (37x) at recall 1.000, pinned
-    row-identical to the expression tier by
-    tests/test_round10.test_cosine_topk_gemm_equals_bruteforce.
-    Shuffle volume is k x queries x partitions rows — independent of
-    corpus size.
-
-    Row-identity caveats (degenerate inputs): the claim holds for
-    NON-ZERO-NORM vectors — a zero-norm vector makes the expression
-    tier's dot/(na*nb) raise DIVIDE_BY_ZERO under Spark 4 ANSI mode,
-    while this tier guards (where=norm!=0) and scores such pairs at
-    cosine 0.0. The tiers also compute cosine by different float
-    formulas (unit-normalize-then-dot here vs dot/(na*nb) there), so
-    an exact float TIE in one tier can rank differently in the other;
-    real-valued embeddings make that probability-zero, but synthetic
-    integer fixtures can hit it."""
-    return _topk_gemm(queries, candidates, k, vec_col, id_col, None)
-
-
-def hard_negative_topk_gemm(
-    anchors: DataFrame,
-    candidates: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-) -> DataFrame:
-    """GEMM scale tier of :func:`hard_negative_topk` — identical
-    contract (top-k most-similar DIFFERENT-label candidates per
-    anchor, desc-cosine then vec_id), the same-label mask applied
-    per Arrow batch on the sims matrix instead of a crossJoin
-    predicate. Row-identical to the expression tier
-    (tests/test_round10.test_hard_negative_gemm_equals_expression);
-    same per-batch-local-top-k exactness argument as
-    cosine_topk_gemm."""
-    return _topk_gemm(anchors, candidates, k, vec_col, id_col, label_col)
 
 
 def hard_negative_topk(
@@ -594,77 +460,6 @@ def write_ivf_layout(
         f"{path}/corpus"
     )
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_probe_topk(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Query a :func:`write_ivf_layout` corpus: pick each query's
-    ``n_probe`` nearest cells against the stored codebook (broadcast,
-    query-sized), then scan ONLY those cells' partitions — the probe
-    cell set (driver-sized: queries x n_probe ids; the same bounded
-    contract as the GEMM tiers' query collect) is pushed as a static
-    partition filter, so the scan's PartitionFilters prune at plan
-    time and the corpus bytes read scale with n_probe/n_centroids,
-    not corpus size. Scoring and ranking are ivf_topk's exactly —
-    row-identical on the same centroids + assignment (pinned by
-    tests/test_round11.py)."""
-    cents = F.broadcast(spark.read.parquet(f"{path}/centroids"))
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("sim"), "cid")
-    probes = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-        .crossJoin(cents)
-        .select(
-            "query_id",
-            "qv",
-            "cid",
-            cosine_similarity(F.col("qv"), F.col("cv")).alias("sim"),
-        )
-        .select("*", F.row_number().over(w_probe).alias("rn"))
-        .where(F.col("rn") <= n_probe)
-        .select("query_id", "qv", F.col("cid").alias("cell"))
-    )
-    # materialize ONCE before the cells collect: the probe subtree is
-    # otherwise evaluated twice (here and inside the returned join),
-    # and a nondeterministic queries input (sample/limit/rand
-    # upstream) could recompute DIFFERENT probes at action time than
-    # the cell set collected for the partition filter — silently
-    # dropping candidate cells from the scan (r11 ADVICE, low). The
-    # checkpoint is query-relation-sized (queries x n_probe rows),
-    # inside the same bounded-driver contract as the collect below.
-    probes = probes.localCheckpoint(eager=True)
-    cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
-    if not cells:  # empty query set: empty result, correct schema
-        return local_frame(
-            spark, [], "query_id bigint, rank int, vec_id bigint, cosine double"
-        )
-    corpus = spark.read.parquet(f"{path}/corpus").where(
-        F.col("cell").isin(cells)
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(corpus, "cell")
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("qv"), F.col("vec")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
 
 
 _PAIR_SCHEMA = "vec_a bigint, vec_b bigint, cosine double"

@@ -170,48 +170,6 @@ def cap_per_group(
     )
 
 
-def cap_per_group_skewsafe(
-    df: DataFrame,
-    group: Column | str,
-    key: Column | str,
-    n: int,
-    salt: str = "",
-) -> DataFrame:
-    """Two-phase ``cap_per_group`` for hot groups: a web corpus's top
-    domain can hold billions of rows, and the single-task window sort
-    in the one-phase version serializes on it.
-
-    Phase 1 pre-filters a local top-n per (input-partition, group):
-    the shuffle key (pid, group) is skew-free by construction — a hot
-    group splits across all its source partitions — and any row in the
-    group's GLOBAL top-n is necessarily in the top-n of its own cell
-    (rank restricted to a subset never grows). Phase 2 runs the exact
-    one-phase window over the survivors, now at most n rows per cell.
-    Same kept set as cap_per_group on every input (asserted in tests);
-    strictly bounded task sizes.
-
-    PRECONDITION — ``key`` unique within each group: the kept SET is
-    identical to cap_per_group in terms of key VALUES regardless, but
-    when duplicate key values exist in a group, row_number over fully
-    tied rows is nondeterministic and the two phases may keep a
-    different physical ROW (differing non-key columns) than the
-    one-phase window would. Callers relying on row-level identity must
-    pass a unique key (e.g. a document id), which every corpus-cap use
-    here does."""
-    g = F.col(group) if isinstance(group, str) else group
-    k = F.col(key) if isinstance(key, str) else key
-    from pyspark.sql.window import Window
-
-    staged = df.withColumn("_pid", F.spark_partition_id())
-    pre = Window.partitionBy(F.col("_pid"), g).orderBy(split_bucket(key, salt), k)
-    local = (
-        staged.withColumn("_lrn", F.row_number().over(pre))
-        .where(F.col("_lrn") <= n)
-        .drop("_pid", "_lrn")
-    )
-    return cap_per_group(local, group, key, n, salt)
-
-
 def temperature_weights(
     df: DataFrame,
     group_col: Column | str = "source",
@@ -547,68 +505,4 @@ def shuffle_for_training(
     h = portable_hash32(F.concat(c.cast("string"), F.lit("|shuf|" + seed)))
     return df.withColumn(shard_col, (h % n_shards).cast("int")).withColumn(
         order_col, h
-    )
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    key: Column | str,
-    n_shards: int,
-    seed: str = "",
-) -> DataFrame:
-    """Materialize the deterministic training shuffle: assign
-    (shard, shard_order) via ``shuffle_for_training``, write one
-    directory per shard (``shard=N/``) with rows sorted by the shuffle
-    order, and return the MANIFEST — one row per shard with row count
-    and an order-sensitive md5 chain over the shard's keys, so a
-    re-export (or an independent engine) can verify byte-level
-    equivalence without re-reading payloads.
-
-    The ONE exchange is the shard repartition the operator docstring
-    promises; the in-partition sort is spill-safe. The manifest digest
-    is a POSITION-WEIGHTED modular checksum — sum over rows of
-    (key_hash mod P) * (rank-in-shard mod P), accumulated in
-    decimal(38,0) and reduced mod P (a Mersenne-prime modulus) — so
-    any reorder, drop, or duplicate flips it, and it computes as a
-    plain combiner aggregate (never a shard-sized buffer, the reason
-    it scales where an md5 chain would not). Deterministic end to
-    end: same data + seed => byte-identical shards and manifest."""
-    p_mod = (1 << 31) - 1  # Mersenne prime; products stay < 2^62
-    out = shuffle_for_training(df, key, n_shards, seed)
-    # Tiebreak by the KEY VALUE, not the shard id: shard is derived from
-    # the same 32-bit hash as shard_order, so distinct keys that collide
-    # on the hash would stay fully tied (and their file order
-    # nondeterministic) under a (shard_order, shard) sort — diverging
-    # from the manifest's (shard_order, _k) rank order past ~65k keys.
-    sort_key = (F.col(key) if isinstance(key, str) else key).cast("string")
-    (
-        out.repartition(n_shards, "shard")
-        .sortWithinPartitions(F.col("shard_order"), sort_key)
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-    from pyspark.sql.window import Window
-
-    from ..functions import portable_hash32
-
-    spark = df.sparkSession
-    kc = F.col(key) if isinstance(key, str) else key
-    written = spark.read.parquet(path)
-    w = Window.partitionBy("shard").orderBy("shard_order", "_k")
-    ranked = written.select(
-        "shard", "shard_order", kc.cast("string").alias("_k")
-    ).withColumn("_rn", F.row_number().over(w))
-    term = (portable_hash32("_k") % p_mod) * (F.col("_rn") % p_mod)
-    ranked = ranked.withColumn("_t", term)
-    return (
-        ranked.groupBy("shard")
-        .agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.expr(
-                f"CAST(SUM(CAST(_t AS DECIMAL(38,0))) % {p_mod} AS BIGINT)"
-            ).alias("digest"),
-        )
-        .orderBy("shard")
     )

@@ -40,8 +40,8 @@ def _parallel(df: DataFrame) -> DataFrame:
 
     Streaming inputs pass through untouched: micro-batch parallelism is
     the source's (maxFilesPerTrigger × splits), and .rdd does not exist
-    on an unstarted streaming DataFrame — the same text operators run
-    verbatim on streams (see test_streaming_text_pipeline)."""
+    on an unstarted streaming DataFrame — the same text operators plan
+    on streams (see test_round13's test_streaming_input_plans)."""
     if df.isStreaming:
         return df
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
@@ -319,30 +319,6 @@ def vocab_topn(df: DataFrame, text_col: str = "text", n: int = 100) -> DataFrame
         counts.orderBy(F.col("cnt").desc(), "word")
         .limit(n)
         .select(rank.alias("rank"), "word", "cnt")
-    )
-
-
-def vocab_topn_sketch(
-    df: DataFrame,
-    text_col: str = "text",
-    n: int = 100,
-    max_tracked: int = 100_000,
-) -> DataFrame:
-    """Sketch tier of ``vocab_topn``: Spark 4's ``approx_top_k``
-    aggregate — a single-pass, MERGEABLE frequent-items sketch (partial
-    sketches combine associatively, so the 100 TB plan is partial
-    sketches map-side + one tiny merge, no token-keyed shuffle of raw
-    counts at all). Exact whenever distinct tokens <= ``max_tracked``
-    (asserted against the exact tier in tests); results re-sorted
-    (cnt DESC, word ASC) for a deterministic report."""
-    words = df.select(F.explode(tokenize(F.col(text_col))).alias("word"))
-    sk = words.agg(
-        F.expr(f"approx_top_k(word, {n}, {max_tracked})").alias("tk")
-    )
-    return (
-        sk.select(F.explode("tk").alias("s"))
-        .select(F.col("s.item").alias("word"), F.col("s.count").alias("cnt"))
-        .orderBy(F.col("cnt").desc(), "word")
     )
 
 
@@ -1028,20 +1004,6 @@ def url_host(col: Column | str) -> Column:
     )
 
 
-def url_duplicates(
-    df: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
-    """URL-level dedup: group by the canonical URL, keep the min-id
-    survivor — same contract as exact_duplicates but on the address,
-    which is orders cheaper than content hashing (no text read). One
-    shuffle on the (short) canonical URL."""
-    return (
-        df.groupBy(normalize_url(url_col).alias("canonical_url"))
-        .agg(F.count("*").alias("cnt"), F.min(id_col).alias("keep_id"))
-        .where(F.col("cnt") > 1)
-    )
-
-
 def bigram_lm_scores(
     df: DataFrame,
     text_col: str = "text",
@@ -1303,100 +1265,6 @@ def build_inverted_index(
             F.transform("_p", lambda x: x["_doc"]).alias("doc_ids"),
             F.transform("_p", lambda x: x["_tf"]).alias("term_freqs"),
         )
-    )
-
-
-def _encode_word(syms: list[str], ranks: dict[tuple[str, str], int]) -> list[str]:
-    """Sequential BPE encode of one symbol list: repeatedly merge the
-    LOWEST-RANK adjacent pair present (canonical tokenizer semantics —
-    identical to replaying the training merges in order)."""
-    while len(syms) >= 2:
-        best, best_i = None, -1
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]))
-            if r is not None and (best is None or r < best):
-                best, best_i = r, i
-        if best is None:
-            break
-        merged = syms[best_i] + syms[best_i + 1]
-        # merge ALL occurrences of this pair left-to-right before
-        # re-scanning (one rule application, as training does)
-        pair = (syms[best_i], syms[best_i + 1])
-        res, i = [], 0
-        while i < len(syms):
-            if i + 1 < len(syms) and (syms[i], syms[i + 1]) == pair:
-                res.append(merged)
-                i += 2
-            else:
-                res.append(syms[i])
-                i += 1
-        syms = res
-    return syms
-
-
-def bpe_encode(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    out_col: str = "tokens",
-) -> DataFrame:
-    """Encode documents with a trained BPE merge list (the list
-    bpe_train returns): per document, tokenize (the same
-    lower/strip-punct/split the trainer used), split each word into
-    characters + '</w>', replay the merges by rank, and emit the
-    document's token sequence in order plus ``n_tokens`` — the apply
-    side of the tokenizer, producing the sequences a packing/export
-    stage consumes.
-
-    Scale shape — Python touches only the VOCABULARY, never the
-    corpus (the bpe_train boundary argument): words explode
-    corpus-side (codegen), the DISTINCT word table is encoded in one
-    Arrow-batched mapInPandas (merge ranks ride the closure,
-    vocab-sized), and tokens rejoin on the word key — AQE broadcasts
-    the encoded vocab when it is small, shuffle-joins otherwise. Doc
-    reassembly is one doc-keyed combiner aggregate with an in-plan
-    (pos, tokens) array_sort + flatten, so token order is exact and
-    nothing corpus-sized crosses a Python boundary.
-    """
-    ranks = {tuple(p): i for i, p in enumerate(merges)}
-
-    words = df.select(
-        F.col(id_col),
-        F.posexplode(tokenize(F.col(text_col))).alias("_pos", "_word"),
-    )
-    vocab = words.select(F.col("_word").alias("word")).distinct()
-
-    def encode(batches, _ranks=ranks):
-        import pandas as pd
-
-        for pdf in batches:
-            toks = [
-                _encode_word(list(w) + ["</w>"], _ranks)
-                for w in pdf["word"]
-            ]
-            yield pd.DataFrame({"word": pdf["word"], "_toks": toks})
-
-    encoded = vocab.mapInPandas(
-        on_worker(encode), schema="word string, _toks array<string>"
-    )
-    joined = words.join(
-        encoded, words["_word"] == encoded["word"], "inner"
-    ).select(id_col, "_pos", "_toks")
-    return (
-        joined.groupBy(id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("_pos", "_toks"))
-            ).alias("_seq")
-        )
-        .select(
-            id_col,
-            F.flatten(F.expr("transform(_seq, s -> s._toks)")).alias(
-                out_col
-            ),
-        )
-        .withColumn("n_tokens", F.size(out_col).cast("bigint"))
     )
 
 

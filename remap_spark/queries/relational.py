@@ -257,8 +257,8 @@ def dq12_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dq13_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch tumbling window; the streaming twin lives in
-    remap_spark.streaming.windows (same F.window/date_trunc semantics)."""
+    """Batch tumbling window: one date_trunc groupBy (the same bucket
+    F.window would assign)."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -546,11 +546,10 @@ def dq26_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dq27_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding window (1h width / 30min slide) in batch mode — the
-    batch twin of the streaming sliding-window op
-    (remap_spark.streaming.windows). F.window expands each event into
-    width/slide = 2 window rows (an Expand node, narrow), then one
-    groupBy — same plan shape Structured Streaming uses incrementally."""
+    """Sliding window (1h width / 30min slide) in batch mode. F.window
+    expands each event into width/slide = 2 window rows (an Expand
+    node, narrow), then one groupBy — same plan shape Structured
+    Streaming uses incrementally."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -671,8 +670,8 @@ def dq31_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dq32_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session windows (F.session_window) in batch mode — the
-    same operator Structured Streaming runs incrementally with the
-    state store (streaming/windows.py). Sessions close after 30 min of
+    same operator Structured Streaming runs incrementally with its
+    state store. Sessions close after 30 min of
     inactivity: an event lands in the previous session iff it is
     STRICTLY within gap of the previous event (window end exclusive),
     which the gaps-and-islands oracle mirrors with `gap >= 30min` as

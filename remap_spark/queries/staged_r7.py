@@ -1135,8 +1135,8 @@ _WINNOW_SQL = """
 
 
 # fixed literal PCA model for the projection query: the operator under
-# test is the codegen projection (pca_train's eigensolve is pytest-only,
-# not SQL-expressible); mean/components are arbitrary but non-trivial
+# test is the codegen projection (an eigensolve is not SQL-expressible);
+# mean/components are arbitrary but non-trivial
 _PCA_MEAN = [round(0.01 * i, 2) for i in range(16)]
 _PCA_COMPS = [
     [1.0 if i == 0 else 0.0 for i in range(16)],

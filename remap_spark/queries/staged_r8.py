@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import load_table, local_frame
-from ..functions import lineage_cut
 from ..operators.dedup import (
     cross_corpus_match_spans,
     maximal_match_spans,

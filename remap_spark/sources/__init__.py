@@ -19,11 +19,6 @@ from .readers import (
     read_xml_elements,
     warc_http_text,
 )
-from .streams import (
-    read_stream_files,
-    read_stream_kafka,
-    read_stream_rate,
-)
 from .writers import (
     write_bucketed_table,
     write_csv,
@@ -95,9 +90,6 @@ __all__ = [
     "read_text",
     "read_binary_files",
     "read_warc",
-    "read_stream_files",
-    "read_stream_kafka",
-    "read_stream_rate",
     "warc_http_text",
     "read_csv",
     "read_parquet",

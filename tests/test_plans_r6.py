@@ -113,19 +113,3 @@ def test_cross_matches_no_cartesian_either_tier(spark):
     ):
         r = plan_report(df)
         assert not r["cartesian"], r["plan"]
-
-
-def test_bpe_encode_python_boundary_is_vocab_sized(spark):
-    """The mapInPandas node must sit above the DISTINCT word relation
-    (a partial+final HashAggregate), never above the raw corpus
-    projection — the boundary argument that makes BPE encode viable
-    at 100 TB."""
-    from remap_spark.operators.text import bpe_encode
-
-    docs = load_table(spark, SF_DIR, "documents")
-    df = bpe_encode(docs, [("t", "h"), ("th", "e")])
-    simple = explain_str(df, "simple")
-    # exactly one Python boundary, fed by the distinct-word aggregate
-    assert simple.count("MapInPandas") == 1, simple
-    before = simple.split("MapInPandas")[0]
-    assert "HashAggregate" in before, simple

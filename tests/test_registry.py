@@ -90,6 +90,27 @@ def test_registry_at_the_200_name_ceiling():
     assert len(ALL_QUERIES) == CHECK_WINDOW * 4, len(ALL_QUERIES)
 
 
+# sha256 of the sorted registered names, one per line; the query and
+# oracle registries hold the same 200 names
+REGISTERED_NAMES_SHA256 = (
+    "9338cb5c8edea4bc33586af86c88bd68354571dde74d86c60db0cf079e5db54c"
+)
+
+
+def test_registered_name_set_is_pinned():
+    """A deletion or a module move must keep every registered query and
+    oracle name: the driver's records and the correctness window are
+    keyed by them. The ceiling test above only counts names. A
+    deliberate rename or retirement updates the digest in the same
+    change."""
+    import hashlib
+
+    for registry in (ALL_QUERIES, ALL_ORACLES):
+        names = "\n".join(sorted(registry))
+        digest = hashlib.sha256(names.encode()).hexdigest()
+        assert digest == REGISTERED_NAMES_SHA256, sorted(registry)
+
+
 def test_retired_names_absent_from_rotation_lists():
     """Retired rows must not linger in the rotation: the recorded rounds
     still hold their rows, and a retired name carried into the computed

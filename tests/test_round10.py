@@ -127,111 +127,3 @@ def test_dedup_paragraphs_per_host_single_exchange_per_side(spark):
     assert "CartesianProduct" not in p
     assert "EvalPython" not in p and "MapInPandas" not in p
     assert "partial_min" in p or "HashAggregate" in p
-
-
-def test_repartition_for_media_floors_at_parallelism(spark, tmp_path):
-    """The byte target is a ceiling, not the only rule: a small-blob
-    table whose total bytes fit in fewer byte-sized partitions than
-    the cluster has cores must still fan out to defaultParallelism
-    (r10 probe: 2 partitions starved 30 of 32 cores). An explicit
-    min_partitions pins the count exactly."""
-    import pandas as pd
-
-    from remap_spark.operators.multimodal import repartition_for_media
-
-    p = str(tmp_path / "media.parquet")
-    pd.DataFrame(
-        {"media_id": range(100), "media": [b"x" * 1000] * 100}
-    ).to_parquet(p, index=False)
-    df = spark.read.parquet(p)
-    dp = spark.sparkContext.defaultParallelism
-    assert repartition_for_media(df, 1000).rdd.getNumPartitions() == dp
-    assert (
-        repartition_for_media(df, 1000, min_partitions=3)
-        .rdd.getNumPartitions()
-        == 3
-    )
-    # fat rows: the byte ceiling still splits beyond the floor
-    n = repartition_for_media(
-        df, 5 << 20, target_partition_bytes=10 << 20,
-        approx_total_rows=10_000, min_partitions=4,
-    ).rdd.getNumPartitions()
-    assert n == 5000
-
-
-def test_cosine_topk_gemm_equals_bruteforce(spark):
-    """The GEMM scale tier must return the exact same top-k rows as
-    the Catalyst-expression tier (ids, ranks; cosines to float
-    tolerance) — including self-exclusion and the (desc cosine,
-    vec_id) tie order — on random clustered vectors."""
-    import numpy as np
-
-    from remap_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        cosine_topk_gemm,
-    )
-
-    rng = np.random.RandomState(3)
-    X = rng.randn(300, 16).astype(np.float32)
-    cand = spark.createDataFrame(
-        [(int(i), [float(v) for v in X[i]]) for i in range(300)],
-        "vec_id bigint, embedding array<float>",
-    )
-    qs = spark.createDataFrame(
-        [(int(i), [float(v) for v in X[i]]) for i in range(0, 300, 37)],
-        "vec_id bigint, embedding array<float>",
-    ).repartition(1)
-
-    brute = {
-        (r["query_id"], r["rank"]): (r["vec_id"], r["cosine"])
-        for r in cosine_topk_bruteforce(qs, cand, k=5).collect()
-    }
-    gemm = {
-        (r["query_id"], r["rank"]): (r["vec_id"], r["cosine"])
-        for r in cosine_topk_gemm(qs, cand.repartition(7), k=5).collect()
-    }
-    assert set(brute) == set(gemm)
-    for key in brute:
-        assert brute[key][0] == gemm[key][0], (key, brute[key], gemm[key])
-        assert abs(brute[key][1] - gemm[key][1]) < 1e-9, key
-    # no query matches itself
-    assert all(q != v for (q, _), (v, _c) in gemm.items())
-
-
-def test_hard_negative_gemm_equals_expression(spark):
-    """The GEMM hard-negative tier must return the exact same rows as
-    the expression tier: same-label candidates masked, self excluded,
-    (desc cosine, vec_id) order."""
-    import numpy as np
-
-    from remap_spark.operators.similarity import (
-        hard_negative_topk,
-        hard_negative_topk_gemm,
-    )
-
-    rng = np.random.RandomState(4)
-    X = rng.randn(200, 12).astype(np.float32)
-    labels = ["c%d" % (i % 4) for i in range(200)]
-    cand = spark.createDataFrame(
-        [(int(i), [float(v) for v in X[i]], labels[i]) for i in range(200)],
-        "vec_id bigint, embedding array<float>, label string",
-    )
-    anchors = spark.createDataFrame(
-        [(int(i), [float(v) for v in X[i]], labels[i])
-         for i in range(0, 200, 23)],
-        "vec_id bigint, embedding array<float>, label string",
-    )
-    expr = {
-        (r["query_id"], r["rank"]): (r["vec_id"], r["cosine"])
-        for r in hard_negative_topk(anchors, cand, k=4).collect()
-    }
-    gemm = {
-        (r["query_id"], r["rank"]): (r["vec_id"], r["cosine"])
-        for r in hard_negative_topk_gemm(
-            anchors, cand.repartition(5), k=4
-        ).collect()
-    }
-    assert set(expr) == set(gemm)
-    for key in expr:
-        assert expr[key][0] == gemm[key][0], (key, expr[key], gemm[key])
-        assert abs(expr[key][1] - gemm[key][1]) < 1e-9, key

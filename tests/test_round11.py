@@ -115,32 +115,6 @@ def test_semdedup_gemm_pair_mode_matches_expression(spark):
     assert e == g
 
 
-def test_ivf_layout_probe_matches_ivf_topk(spark, tmp_path):
-    """The materialized IVF layout must answer probes row-identically
-    to the in-plan ivf_topk on the same centroids + assignment — the
-    layout changes WHERE the bytes live (cell partitions), not the
-    result."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5)
-    path = str(tmp_path / "ivf")
-    sim.write_ivf_layout(emb, path, n_centroids=8, assign="gemm")
-    got = sorted(
-        map(
-            tuple,
-            sim.ivf_probe_topk(spark, path, queries, k=10, n_probe=2).collect(),
-        )
-    )
-    want = sorted(
-        map(
-            tuple,
-            sim.ivf_topk(
-                queries, emb, k=10, n_centroids=8, n_probe=2, assign="gemm"
-            ).collect(),
-        )
-    )
-    assert got == want and len(got) > 0
-
-
 def test_ivf_layout_expr_assignment_matches_gemm_layout(spark, tmp_path):
     """Both assignment tiers of write_ivf_layout must place every
     vector in the same cell (the parity the ivf_topk tiers pin,
@@ -158,38 +132,6 @@ def test_ivf_layout_expr_assignment_matches_gemm_layout(spark, tmp_path):
         for r in spark.read.parquet(f"{p2}/corpus").select("vec_id", "cell").collect()
     }
     assert g == e and len(g) > 0
-
-
-def test_ivf_probe_empty_query_set_returns_empty(spark, tmp_path):
-    """An empty query batch must return an empty, correctly-typed
-    result instead of feeding isin() an empty cell list."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    path = str(tmp_path / "ivf")
-    sim.write_ivf_layout(emb, path, n_centroids=4, assign="gemm")
-    out = sim.ivf_probe_topk(
-        spark, path, emb.where(F.col("vec_id") < 0), k=5, n_probe=2
-    )
-    assert out.count() == 0
-    assert out.columns == ["query_id", "rank", "vec_id", "cosine"]
-
-
-def test_ivf_probe_scan_is_partition_pruned(spark, tmp_path):
-    """The probe's corpus scan must carry the cell set as a PARTITION
-    filter (pruned at planning), not a post-scan predicate — the
-    100 TB contract: bytes read scale with n_probe/n_centroids."""
-    from remap_spark.plans import explain_str
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.where(F.col("vec_id") < 3)
-    path = str(tmp_path / "ivf")
-    sim.write_ivf_layout(emb, path, n_centroids=8, assign="gemm")
-    plan = explain_str(
-        sim.ivf_probe_topk(spark, path, queries, k=5, n_probe=2), "formatted"
-    )
-    pf_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert any(
-        "cell" in ln and "IN" in ln for ln in pf_lines
-    ), pf_lines or plan[:2000]
 
 
 def test_kmeans_gemm_assignment_matches_expression(spark):

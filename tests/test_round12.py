@@ -10,9 +10,6 @@
 3. _assign_cells_gemm / kmeans _assign_gemm derive the id column type
    from the caller's schema (drop-in parity with the expression tiers,
    which preserve it) instead of hardcoding bigint.
-4. ivf_probe_topk materializes the probes subtree once
-   (localCheckpoint) so the collected cell filter and the join read
-   the same probes even for a nondeterministic queries input.
 """
 
 from __future__ import annotations
@@ -144,33 +141,6 @@ def test_kmeans_gemm_preserves_id_type(spark):
     assert sorted(map(tuple, a_gemm.collect())) == sorted(
         map(tuple, a_expr.collect())
     )
-
-
-# ---------------------------------------------------------------------------
-# 4. probe materialization
-
-
-def test_ivf_probe_topk_consistent_on_nondeterministic_queries(
-    spark, tmp_path
-):
-    corpus = _embed_df(
-        spark,
-        [(i, [float(i % 7) + 0.1, float(i % 3) + 0.1]) for i in range(64)],
-    )
-    path = str(tmp_path / "ivf")
-    sim.write_ivf_layout(corpus, path, n_centroids=4)
-    # a nondeterministic queries input: without the localCheckpoint the
-    # cells collect and the join would re-sample DIFFERENT rows
-    queries = corpus.sample(0.3)
-    out = sim.ivf_probe_topk(spark, path, queries, k=3, n_probe=2).collect()
-    # every returned query must have ranked rows starting at 1 — a
-    # probe/join mismatch would surface as query_ids with missing or
-    # empty probe cells
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["query_id"], []).append(r["rank"])
-    for q, ranks in by_q.items():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1)), (q, ranks)
 
 
 # ---------------------------------------------------------------------------

@@ -1,13 +1,14 @@
 """Round-13 pins: the r12 ADVICE guard fixes.
 
-1. temperature_weights skips its localCheckpoint cut on streaming
-   inputs (localCheckpoint is unsupported on streaming DataFrames);
-   the result plans but is refused at writeStream start().
+1. Batch operators that accept a streaming input pass it through:
+   temperature_weights and lineage_cut skip their localCheckpoint cut
+   (unsupported on streaming DataFrames) and the text operators skip
+   _parallel's partition count (.rdd does not exist on a stream).
 2. quality_score / redact_pii reject keep_cols entries that collide
    with the columns the operator itself produces (or duplicates),
    instead of silently emitting duplicate column names.
-3. incremental_dedup / ingest_dedup_batch refuse an input that already
-   carries the fingerprint column instead of silently overwriting it.
+3. incremental_dedup refuses an input that already carries the
+   fingerprint column instead of silently overwriting it.
 """
 
 from __future__ import annotations
@@ -16,9 +17,10 @@ import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from remap_spark.functions import lineage_cut
 from remap_spark.operators.dedup import incremental_dedup
 from remap_spark.operators.split import temperature_weights
-from remap_spark.operators.text import quality_score, redact_pii
+from remap_spark.operators.text import quality_score, redact_pii, text_stats
 
 
 def _docs(spark):
@@ -29,30 +31,50 @@ def _docs(spark):
 
 
 # ---------------------------------------------------------------------------
-# 1. temperature_weights on a streaming input
+# 1. batch operators on a streaming input
 
 
-def test_temperature_weights_streaming_plans(spark):
+@pytest.mark.parametrize(
+    "op, columns",
+    [
+        (temperature_weights, {"grp", "mass", "share", "weight"}),
+        (
+            text_stats,
+            {
+                "doc_id", "n_tokens", "n_chars", "avg_token_len",
+                "punct_ratio", "stopword_ratio",
+            },
+        ),
+        (lineage_cut, {"doc_id", "text", "source", "n_chars"}),
+    ],
+    ids=["temperature_weights", "text_stats", "lineage_cut"],
+)
+def test_streaming_input_plans(spark, op, columns):
     src = (
         spark.readStream.format("rate")
         .option("rowsPerSecond", 1)
         .load()
         .select(
+            F.col("value").alias("doc_id"),
+            F.lit("the quick brown fox, again.").alias("text"),
             (F.col("value") % 3).alias("source"),
             F.lit(10).alias("n_chars"),
         )
     )
-    # must not raise (localCheckpoint on a stream would) and must stay
-    # a streaming DataFrame
-    out = temperature_weights(src)
+    # must not raise (localCheckpoint or .rdd on a stream would) and
+    # must stay a streaming DataFrame
+    out = op(src)
     assert out.isStreaming
-    assert set(out.columns) == {"grp", "mass", "share", "weight"}
-    # plan-only: the two aggregates meet in a stream-stream crossJoin,
-    # which Spark refuses at start() in every output mode
-    for mode in ("append", "complete", "update"):
-        with pytest.raises(AnalysisException):
-            q = out.writeStream.format("noop").outputMode(mode).start()
-            q.stop()
+    assert set(out.columns) == columns
+    if op is lineage_cut:
+        assert out is src
+    if op is temperature_weights:
+        # plan-only: the two aggregates meet in a stream-stream
+        # crossJoin, which Spark refuses at start() in every output mode
+        for mode in ("append", "complete", "update"):
+            with pytest.raises(AnalysisException):
+                q = out.writeStream.format("noop").outputMode(mode).start()
+                q.stop()
 
 
 def test_temperature_weights_batch_unchanged(spark):
@@ -108,16 +130,6 @@ def test_incremental_dedup_fp_col_collision(spark):
         docs, seen.withColumnRenamed("fingerprint", "fp"), fp_col="fp"
     )
     assert "fp" in out.columns and out.count() == 2
-
-
-def test_ingest_dedup_batch_fingerprint_collision(spark, tmp_path):
-    from remap_spark.streaming.dedup import ingest_dedup_batch
-
-    docs = _docs(spark).withColumn("fingerprint", F.lit(0))
-    with pytest.raises(ValueError, match="reserved"):
-        ingest_dedup_batch(
-            docs, 0, str(tmp_path / "out"), str(tmp_path / "store")
-        )
 
 
 # ---------------------------------------------------------------------------

@@ -283,7 +283,6 @@ def test_expectations_one_pass_report(spark):
         Expectation,
         assert_expectations,
         expect_report,
-        expect_unique,
     )
 
     df = spark.createDataFrame(
@@ -303,9 +302,6 @@ def test_expectations_one_pass_report(spark):
     assert got["price_non_negative"] == (4, 2, False)
     assert got["name_present"] == (4, 1, False)
     assert got["id_positive"] == (4, 0, True)
-
-    uniq = expect_unique(df, ["id"]).collect()[0]
-    assert (uniq.violations, uniq["pass"]) == (1, False)
 
     import pytest as _pytest
 

@@ -493,44 +493,6 @@ def test_rfm_segments_match_duckdb(spark):
     assert canon([tuple(r) for r in srows], scols) == canon(drows, dcols)
 
 
-def test_compact_parquet_preserves_data_and_clusters(spark, tmp_path_factory):
-    from remap_spark.operators.layout import compact_parquet
-
-    root = str(tmp_path_factory.mktemp("compact"))
-    path = f"{root}/t"
-    df = spark.range(0, 10_000).select(
-        F.col("id"), (F.col("id") % 97).alias("k")
-    )
-    df.repartition(64).write.parquet(path)
-
-    before = sorted(
-        tuple(r) for r in spark.read.parquet(path).collect()
-    )
-    rep = compact_parquet(
-        spark, path, sort_cols=["id"], target_file_bytes=64 * 1024
-    )
-    assert rep["files_before"] == 64
-    assert 1 <= rep["files_after"] < 64
-    after = sorted(tuple(r) for r in spark.read.parquet(path).collect())
-    assert after == before
-
-    # range clustering: per-file id ranges must be pairwise disjoint
-    import glob as _glob
-
-    ranges = []
-    for f in _glob.glob(f"{path}/part-*.parquet"):
-        pdf = spark.read.parquet(f).agg(
-            F.min("id"), F.max("id")
-        ).collect()[0]
-        ranges.append((pdf[0], pdf[1]))
-    ranges.sort()
-    for (lo1, hi1), (lo2, _hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2, ranges
-
-    # staging/trash directories must not linger
-    assert not _glob.glob(f"{path}._compact*")
-
-
 def test_ab_test_hand_computed(spark):
     from remap_spark.operators.experiments import ab_test_report
 

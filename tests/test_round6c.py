@@ -1,5 +1,5 @@
 """Round-6c operators: Markov transition tables, KMV set operations,
-deterministic training shuffle, winsorization, and BPE encoding.
+deterministic training shuffle and winsorization.
 Hand-computed semantics on constructed inputs plus DuckDB replays at
 sf0.001 so a future driver registration is a pure re-plumb.
 """
@@ -321,71 +321,3 @@ def test_winsorize_grouped_match_duckdb(spark):
     assert len(srows) == len(drows) > 0
     assert sorted(scols) == sorted(dcols)
     assert canon([tuple(r) for r in srows], scols) == canon(drows, dcols)
-
-
-# ---------------------------------------------------------------------------
-# bpe_encode
-# ---------------------------------------------------------------------------
-
-
-def _ref_encode(word: str, merges: list[tuple[str, str]]) -> list[str]:
-    """Independent reference: replay merges IN TRAINING ORDER, one
-    rule at a time (the Sennrich apply_bpe formulation) — a different
-    algorithm from the operator's lowest-rank-first loop; they must
-    agree on every input."""
-    syms = list(word) + ["</w>"]
-    for a, b in merges:
-        out, i = [], 0
-        while i < len(syms):
-            if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                out.append(a + b)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        syms = out
-    return syms
-
-
-def test_bpe_encode_matches_training_replay(spark):
-    from remap_spark.operators.text import bpe_encode, bpe_train
-
-    corpus = [
-        (1, "low low low low low"),
-        (2, "lower lower newest newest"),
-        (3, "newest newest newest newest widest widest widest"),
-    ]
-    df = spark.createDataFrame(corpus, "doc_id bigint, text string")
-    merges = bpe_train(df, n_merges=10)
-    assert len(merges) == 10
-
-    out = {r.doc_id: (r.tokens, r.n_tokens) for r in
-           bpe_encode(df, merges).collect()}
-    for doc_id, text in corpus:
-        want = []
-        for w in text.split():
-            want.extend(_ref_encode(w, merges))
-        toks, n = out[doc_id]
-        assert toks == want, (doc_id, toks, want)
-        assert n == len(want)
-
-
-def test_bpe_encode_empty_merges_is_chars(spark):
-    from remap_spark.operators.text import bpe_encode
-
-    df = spark.createDataFrame([(1, "Ab cd.")], "doc_id bigint, text string")
-    row = bpe_encode(df, []).collect()[0]
-    # tokenize lowers and strips '.': ab + cd
-    assert row.tokens == ["a", "b", "</w>", "c", "d", "</w>"]
-    assert row.n_tokens == 6
-
-
-def test_bpe_encode_unseen_word_falls_back(spark):
-    from remap_spark.operators.text import bpe_encode
-
-    merges = [("l", "o"), ("lo", "w")]
-    df = spark.createDataFrame(
-        [(1, "low zzz")], "doc_id bigint, text string"
-    )
-    row = bpe_encode(df, merges).collect()[0]
-    assert row.tokens == ["low", "</w>", "z", "z", "z", "</w>"]

@@ -1,5 +1,6 @@
-"""Round-6e: snapshot CDC diff (table_changes) and full coreness
-decomposition (h-index iteration)."""
+"""Round-6e: snapshot CDC diff (table_changes) and the other round-6e
+operators (segment overlap, PCA projection, label propagation,
+perceptual hashing, winnowing, time-series and SCD helpers)."""
 
 from __future__ import annotations
 
@@ -132,76 +133,6 @@ def test_table_changes_feeds_scd2(spark):
     assert ops == {2: "update", 3: "insert"}
 
 
-# ---------------------------------------------------------------------------
-# coreness
-# ---------------------------------------------------------------------------
-
-
-def test_coreness_hand_computed(spark):
-    from remap_spark.operators.pregel import coreness
-
-    # K4 (0-3) + chain 3-4-5: K4 vertices core 3, chain tail core 1
-    edges = [(a, b) for a in range(4) for b in range(4) if a < b]
-    edges += [(3, 4), (4, 5)]
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {(r.vertex_id, r.core) for r in coreness(df).collect()}
-    assert got == {(0, 3), (1, 3), (2, 3), (3, 3), (4, 1), (5, 1)}
-
-
-def _py_coreness(edges):
-    """Independent sequential reference: textbook min-degree peel."""
-    from collections import defaultdict
-
-    adj = defaultdict(set)
-    for s, d in edges:
-        if s != d:
-            adj[s].add(d)
-            adj[d].add(s)
-    core = {}
-    k = 0
-    deg = {v: len(ns) for v, ns in adj.items()}
-    while deg:
-        v = min(deg, key=lambda x: (deg[x], x))
-        k = max(k, deg[v])
-        core[v] = k
-        for u in adj[v]:
-            if u in deg and u != v:
-                deg[u] -= 1
-        del deg[v]
-    return core
-
-
-def test_coreness_matches_sequential_reference(spark):
-    from remap_spark.engine import load_table
-    from remap_spark.operators.pregel import coreness
-
-    li = load_table(spark, SF_DIR, "lineitem")
-    g = li.select(
-        (F.col("l_orderkey") % 1500).alias("src"),
-        (F.col("l_partkey") % 1500).alias("dst"),
-    )
-    got = {(r.vertex_id, r.core) for r in coreness(g).collect()}
-    edges = [(r.src, r.dst) for r in g.collect()]
-    want = set(_py_coreness(edges).items())
-    assert got == want
-    assert got
-
-
-def test_coreness_consistent_with_k_core(spark):
-    """Cross-operator invariant: {v : core(v) >= k} == k_core vertices."""
-    from remap_spark.engine import load_table
-    from remap_spark.operators.pregel import coreness, k_core
-
-    li = load_table(spark, SF_DIR, "lineitem")
-    g = li.select(
-        (F.col("l_orderkey") % 1500).alias("src"),
-        (F.col("l_partkey") % 1500).alias("dst"),
-    )
-    cores = {r.vertex_id: r.core for r in coreness(g).collect()}
-    kc = {r.vertex_id for r in k_core(g, k=3).collect()}
-    assert kc == {v for v, c in cores.items() if c >= 3}
-
-
 def test_table_changes_roundtrip_property(spark):
     """Applying the change feed to the old snapshot must reconstruct
     the new snapshot exactly — on a pseudo-random keyed table with
@@ -302,61 +233,25 @@ def test_segment_overlap_matrix_matches_pairwise_setops(spark):
 
 
 def test_pca_matches_numpy_reference(spark):
-    """Components/variances must match numpy PCA on the same data
-    (sign-normalized), and the in-engine projection must match the
-    numpy projection."""
+    """The in-engine projection onto numpy's top-3 principal components
+    must match the numpy projection of the same data."""
     import numpy as np
 
     from remap_spark.engine import load_table
-    from remap_spark.operators.ml import pca_project, pca_train
+    from remap_spark.operators.ml import pca_project
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    mean, comps, evs = pca_train(emb, dim=None, n_components=3)
-
-    x = np.array(
-        [r.embedding for r in emb.select("embedding").collect()],
-        dtype=np.float64,
-    )
+    rows = emb.select("vec_id", "embedding").collect()
+    x = np.array([r.embedding for r in rows], dtype=np.float64)
     mu = x.mean(axis=0)
-    cov = np.cov(x, rowvar=False, bias=True)
-    evals, evecs = np.linalg.eigh(cov)
-    order = np.argsort(evals)[::-1][:3]
-    assert np.allclose(mean, mu, atol=1e-9)
-    for j, i in enumerate(order):
-        v = evecs[:, i]
-        if v[np.argmax(np.abs(v))] < 0:
-            v = -v
-        assert np.allclose(comps[j], v, atol=1e-7), j
-        assert abs(evs[j] - evals[i]) < 1e-7
+    evals, evecs = np.linalg.eigh(np.cov(x, rowvar=False, bias=True))
+    w = evecs[:, np.argsort(evals)[::-1][:3]].T
 
-    proj = pca_project(emb, mean, comps).select("vec_id", "pca")
+    proj = pca_project(emb, mu.tolist(), w.tolist()).select("vec_id", "pca")
     got = {r.vec_id: np.array(r.pca) for r in proj.collect()}
-    w = np.array(comps)
-    ids = [r.vec_id for r in emb.select("vec_id").collect()]
     want = (x - mu) @ w.T
-    for rid, row in zip(ids, want):
-        assert np.allclose(got[rid], row, atol=1e-9)
-
-
-def test_pca_variance_concentrates_planted_structure(spark):
-    """Synthetic data with one dominant axis: the first component must
-    recover it and carry almost all variance."""
-    import numpy as np
-
-    from remap_spark.operators.ml import pca_train
-
-    rng = np.random.RandomState(3)
-    t = rng.randn(400) * 10.0
-    noise = rng.randn(400, 4) * 0.1
-    axis = np.array([0.5, 0.5, 0.5, 0.5])
-    x = t[:, None] * axis[None, :] + noise
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in row]) for i, row in enumerate(x)],
-        "vec_id bigint, embedding array<double>",
-    )
-    mean, comps, evs = pca_train(df, dim=4, n_components=2)
-    assert abs(abs(np.dot(comps[0], axis)) - 1.0) < 1e-3
-    assert evs[0] > 50 * evs[1]
+    for r, row in zip(rows, want):
+        assert np.allclose(got[r.vec_id], row, atol=1e-9)
 
 
 def test_pca_project_zero_python_zero_shuffle(spark):
@@ -666,35 +561,6 @@ def test_audio_fingerprint_invariances(spark):
     assert got[6] is None
 
 
-def test_audio_near_dup_pairs(spark):
-    import math
-    import sys
-    sys.path.insert(0, "tests")
-    from test_extensions import _make_wav
-
-    from remap_spark.operators.multimodal import audio_near_dup_pairs
-
-    def tone(f, gain=8000, n=2000):
-        return [
-            int(gain * math.sin(2 * math.pi * f * t / 8000)
-                * (0.2 + 0.8 * t / n))
-            for t in range(n)
-        ]
-
-    rows = [
-        (1, _make_wav(tone(440))),
-        (2, _make_wav(tone(440, gain=4000))),  # same up to gain
-        (3, _make_wav(tone(2600))),  # different band
-    ]
-    df = spark.createDataFrame(rows, "media_id bigint, media binary")
-    got = {
-        (r.id_a, r.id_b): r.hamming
-        for r in audio_near_dup_pairs(df, max_hamming=6).collect()
-    }
-    assert (1, 2) in got and got[(1, 2)] == 0
-    assert all(3 not in pair for pair in got)
-
-
 # ---------------------------------------------------------------------------
 # winnowing fingerprints
 # ---------------------------------------------------------------------------
@@ -755,27 +621,6 @@ def test_winnow_fingerprints_match_documents_reference(spark):
         )
 
 
-def test_winnow_similar_pairs_shift_robust(spark):
-    from remap_spark.operators.dedup import winnow_similar_pairs
-
-    base = (
-        "machine learning systems require careful data curation and "
-        "deduplication before any serious training run can begin"
-    )
-    docs = [
-        (1, base),
-        (2, "PREFIX SHIFT >> " + base),  # shifted copy
-        (3, "totally different text about cooking pasta with tomatoes"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id bigint, text string")
-    pairs = {
-        (r.doc_a, r.doc_b): r.similarity_ppm
-        for r in winnow_similar_pairs(df, k=8, window=4).collect()
-    }
-    assert (1, 2) in pairs and pairs[(1, 2)] > 700_000
-    assert all(3 not in p for p in pairs)
-
-
 def test_winnow_match_duckdb(spark):
     from remap_spark.engine import load_table
     from remap_spark.operators.dedup import winnow_fingerprints
@@ -818,188 +663,6 @@ def test_winnow_match_duckdb(spark):
             SELECT doc, CAST(sel // 1048576 AS BIGINT) AS fp_hash,
                    CAST(1048575 - (sel % 1048576) AS INT) AS pos
             FROM chosen ORDER BY doc, fp_hash, pos
-            """
-        )
-        dcols, drows = want.columns, want.fetchall()
-    finally:
-        con.close()
-    assert len(srows) == len(drows) > 0
-    assert canon([tuple(r) for r in srows], scols) == canon(drows, dcols)
-
-
-# ---------------------------------------------------------------------------
-# video frame-hash dedup
-# ---------------------------------------------------------------------------
-
-
-def test_video_near_dup_pairs_trimmed_copy(spark):
-    import sys
-    sys.path.insert(0, "tests")
-    from test_extensions import _make_bmp, _make_mjpeg_avi
-
-    from remap_spark.operators.multimodal import (
-        video_frame_hashes,
-        video_near_dup_pairs,
-    )
-
-    def img(kind):
-        rows = []
-        for y in range(16):
-            row = []
-            for x in range(24):
-                if kind == "h":
-                    v = (x * 255) // 23
-                elif kind == "v":
-                    v = (y * 255) // 15
-                else:
-                    v = ((x + y) * 255) // 38
-                row.append((v, v, v))
-            rows.append(row)
-        return _make_bmp(24, 16, rows)
-
-    f1, f2, f3 = img("h"), img("v"), img("d")
-    inv = _make_bmp(
-        24, 16,
-        [[(255 - v, 255 - v, 255 - v) for (v, _, _) in row]
-         for row in _gradient_img(24, 16)],
-    )
-    vids = [
-        (1, _make_mjpeg_avi([f1, f2, f3])),
-        (2, _make_mjpeg_avi([f2, f3])),  # trimmed copy
-        (3, _make_mjpeg_avi([inv, inv])),  # unrelated
-        (4, b"opaque non-avi payload"),  # stub path: zero decodable frames
-    ]
-    df = spark.createDataFrame(vids, "media_id bigint, media binary")
-
-    fh = video_frame_hashes(df)
-    per_vid = {}
-    for r in fh.collect():
-        per_vid.setdefault(r.media_id, []).append((r.frame_idx, r.dhash))
-    assert len(per_vid[1]) == 3 and len(per_vid[2]) == 2
-    assert 4 not in per_vid  # stub slices are not decodable images
-
-    pairs = {
-        (r.id_a, r.id_b): (r.shared_frames, r.overlap_ppm)
-        for r in video_near_dup_pairs(df, min_shared_frames=2).collect()
-    }
-    assert pairs == {(1, 2): (2, 1_000_000)}  # 2 shared / min(3,2)=2
-
-
-# ---------------------------------------------------------------------------
-# sorted-neighborhood pairs
-# ---------------------------------------------------------------------------
-
-
-def test_sorted_neighborhood_matches_bruteforce(spark):
-    """Blocked rank-band pairs == brute-force global-sort window pairs
-    — including across bucket-prefix boundaries."""
-    from remap_spark.engine import load_table
-    from remap_spark.operators.linkage import sorted_neighborhood_pairs
-
-    cust = load_table(spark, SF_DIR, "customer")
-    w = 4
-    got = {
-        (r.id_a, r.id_b)
-        for r in sorted_neighborhood_pairs(
-            cust, "c_name", "c_custkey", window=w, bucket_len=12
-        ).collect()
-    }
-    rows = sorted(
-        (r.c_name, r.c_custkey)
-        for r in cust.select("c_name", "c_custkey").collect()
-    )
-    want = set()
-    for i in range(len(rows)):
-        for j in range(i + 1, min(i + w, len(rows))):
-            want.add((rows[i][1], rows[j][1]))
-    assert got == want
-    assert len(want) > 100
-
-
-def test_sorted_neighborhood_cross_bucket_boundary(spark):
-    from remap_spark.operators.linkage import sorted_neighborhood_pairs
-
-    # keys straddling the 4-char bucket prefix boundary: 'aaaz' sorts
-    # right before 'aabA' but their buckets differ
-    rows = [(1, "aaay"), (2, "aaaz"), (3, "aabA"), (4, "aabB"), (5, "zzzz")]
-    df = spark.createDataFrame(rows, "rid bigint, k string")
-    got = {
-        (r.id_a, r.id_b)
-        for r in sorted_neighborhood_pairs(
-            df, "k", "rid", window=2, bucket_len=4
-        ).collect()
-    }
-    assert got == {(1, 2), (2, 3), (3, 4), (4, 5)}
-
-
-# ---------------------------------------------------------------------------
-# count-min sketch
-# ---------------------------------------------------------------------------
-
-
-def test_cms_never_undercounts_and_merge_equals_full(spark):
-    from remap_spark.engine import load_table
-    from remap_spark.operators.rollup import (
-        cms_query,
-        cms_state,
-        merge_cms_state,
-    )
-
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        F.col("l_partkey").alias("v")
-    )
-    state = cms_state(li, "v", width=512, depth=4)
-    values = li.distinct()
-    est = {
-        r.value: r.est_count
-        for r in cms_query(state, values, "v", width=512, depth=4).collect()
-    }
-    true = {
-        str(r.v): r.c
-        for r in li.groupBy("v").agg(F.count("*").alias("c")).collect()
-    }
-    n = sum(true.values())
-    over = 0
-    for v, t in true.items():
-        assert est[v] >= t, v  # CMS never undercounts
-        over += est[v] - t
-    # average overcount well inside the 2N/width bound
-    assert over / len(true) <= 2 * n / 512
-
-    # merge(state(half1), state(half2)) == state(full), row-identical
-    h1 = li.where(F.col("v") % 2 == 0)
-    h2 = li.where(F.col("v") % 2 != 0)
-    merged = merge_cms_state(
-        cms_state(h1, "v", width=512, depth=4),
-        cms_state(h2, "v", width=512, depth=4),
-    )
-    a = {(r.d, r.w): r.cnt for r in merged.collect()}
-    b = {(r.d, r.w): r.cnt for r in state.collect()}
-    assert a == b
-
-
-def test_cms_match_duckdb(spark):
-    from remap_spark.engine import load_table
-    from remap_spark.operators.rollup import cms_state
-
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        F.col("l_partkey").alias("v")
-    )
-    got = cms_state(li, "v", width=256, depth=3).orderBy("d", "w")
-    srows, scols = got.collect(), got.columns
-
-    con = duck_con(SF_DIR)
-    try:
-        want = con.sql(
-            """
-            WITH probes AS (
-              SELECT d,
-                CAST(CAST('0x' || substr(md5(CAST(l_partkey AS VARCHAR)
-                  || '|cms' || d), 1, 13) AS BIGINT) % 256 AS INT) AS w
-              FROM lineitem, (VALUES (0), (1), (2)) dd(d)
-            )
-            SELECT d, w, COUNT(*) AS cnt FROM probes
-            GROUP BY d, w ORDER BY d, w
             """
         )
         dcols, drows = want.columns, want.fetchall()
@@ -1160,119 +823,6 @@ def test_seasonal_indices_hand_and_duckdb(spark):
         con.close()
     assert len(srows) == len(drows) > 0
     assert canon([tuple(r) for r in srows], scols) == canon(drows, dcols)
-
-
-# ---------------------------------------------------------------------------
-# streaming CMS store
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_cms_replay_idempotent_and_equals_batch(
-    spark, tmp_path_factory
-):
-    from remap_spark.operators.rollup import cms_query, cms_state
-    from remap_spark.streaming.cms import (
-        cms_apply_stream_batch,
-        compact_cms_store,
-        read_cms_store,
-    )
-
-    store = str(tmp_path_factory.mktemp("cms_store")) + "/grid"
-    b1 = spark.createDataFrame(
-        [(f"k{i % 7}",) for i in range(50)], "v string"
-    )
-    b2 = spark.createDataFrame(
-        [(f"k{i % 11}",) for i in range(70)], "v string"
-    )
-    cms_apply_stream_batch(b1, store, "v", 0, width=64, depth=3)
-    cms_apply_stream_batch(b2, store, "v", 1, width=64, depth=3)
-    combined = read_cms_store(spark, store)
-
-    full = cms_state(b1.unionByName(b2), "v", width=64, depth=3)
-    a = {(r.d, r.w): r.cnt for r in combined.collect()}
-    b = {(r.d, r.w): r.cnt for r in full.collect()}
-    assert a == b  # merge == full across the store
-
-    # estimates from the store never undercount the true frequencies
-    values = b1.unionByName(b2).distinct()
-    est = {
-        r.value: r.est_count
-        for r in cms_query(
-            combined, values, "v", width=64, depth=3
-        ).collect()
-    }
-    true = {
-        r.v: r.c
-        for r in b1.unionByName(b2).groupBy("v").agg(
-            F.count("*").alias("c")
-        ).collect()
-    }
-    assert all(est[v] >= c for v, c in true.items())
-
-    # replaying batch 1 rewrites an identical partition: no change
-    # (re-read the store after the overwrite — the old DataFrame's
-    # file listing is stale by design)
-    cms_apply_stream_batch(b2, store, "v", 1, width=64, depth=3)
-    a2 = {(r.d, r.w): r.cnt for r in read_cms_store(spark, store).collect()}
-    assert a2 == a
-
-    # compaction folds retired grids; read is unchanged
-    compact_cms_store(spark, store, upto_batch_id=0)
-    a3 = {(r.d, r.w): r.cnt for r in read_cms_store(spark, store).collect()}
-    assert a3 == a
-
-
-# ---------------------------------------------------------------------------
-# training shard writer + manifest
-# ---------------------------------------------------------------------------
-
-
-def test_write_training_shards_manifest(spark, tmp_path_factory):
-    from remap_spark.engine import load_table
-    from remap_spark.operators.split import write_training_shards
-
-    docs = load_table(spark, SF_DIR, "documents")
-    p1 = str(tmp_path_factory.mktemp("shards")) + "/a"
-    p2 = str(tmp_path_factory.mktemp("shards")) + "/b"
-    m1 = {
-        r.shard: (r.n_rows, r.digest)
-        for r in write_training_shards(docs, p1, "doc_id", 8, "s1").collect()
-    }
-    # re-export from re-partitioned input: identical manifest
-    m2 = {
-        r.shard: (r.n_rows, r.digest)
-        for r in write_training_shards(
-            docs.repartition(13), p2, "doc_id", 8, "s1"
-        ).collect()
-    }
-    assert m1 == m2 and len(m1) == 8
-    assert sum(n for n, _ in m1.values()) == docs.count()
-    # shard directories actually exist with the assignment's rows
-    total = spark.read.parquet(p1).count()
-    assert total == docs.count()
-    # a different seed changes every digest (different permutation)
-    p3 = str(tmp_path_factory.mktemp("shards")) + "/c"
-    m3 = {
-        r.shard: (r.n_rows, r.digest)
-        for r in write_training_shards(docs, p3, "doc_id", 8, "s2").collect()
-    }
-    assert {d for _, d in m1.values()} != {d for _, d in m3.values()}
-
-
-def test_schema_changes(spark):
-    from remap_spark.operators.scd import schema_changes
-
-    old = spark.createDataFrame([(1, "a", 1.0)], "k bigint, s string, v double")
-    new = spark.createDataFrame([(1, "a", 1, True)],
-                                "k bigint, s string, v int, extra boolean")
-    got = {(r.column): (r.op, r.old_type, r.new_type)
-           for r in schema_changes(old, new).collect()}
-    assert got == {
-        "v": ("type_change", "double", "int"),
-        "extra": ("add", None, "boolean"),
-    }
-    # identical schemas: empty drift relation
-    assert schema_changes(old, old).count() == 0
 
 
 # ---------------------------------------------------------------------------

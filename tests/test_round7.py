@@ -652,57 +652,6 @@ def test_incremental_spans_bucketed_store_no_store_exchange(spark):
     assert n_bucketed == n_flat - 1, (n_bucketed, n_flat)
 
 
-def test_ingest_span_dedup_batches_and_replay(spark, tmp_path_factory):
-    """Streaming span-dedup protocol: store hits remove spans from a
-    LATER batch, within-batch duplicates are cleaned, fresh text
-    passes; replaying batch 0 AFTER batch 1 committed reproduces
-    byte-identical output (the store read excludes the replayed
-    batch's own gram partition)."""
-    from remap_spark.streaming.dedup import ingest_span_dedup_batch
-
-    root = str(tmp_path_factory.mktemp("span_ingest"))
-    out, store = f"{root}/out", f"{root}/store"
-    s1 = "alpha beta gamma delta epsilon"
-    s2 = "one two three four five six"
-    b0 = spark.createDataFrame(
-        [(0, f"a0 {s1} a1"), (1, "b0 b1 b2 b3 b4 b5")],
-        "doc_id long, text string",
-    )
-    b1 = spark.createDataFrame(
-        [
-            (10, f"c0 {s1} c1"),       # store hit from batch 0
-            (11, f"d0 {s2} d1"),       # within-batch pair
-            (12, f"e0 {s2} e1"),
-            (13, "f0 f1 f2 f3 f4 f5"),  # fresh
-        ],
-        "doc_id long, text string",
-    )
-    ingest_span_dedup_batch(b0, 0, out, store)
-    ingest_span_dedup_batch(b1, 1, out, store)
-
-    rows = {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
-    assert rows[0]["n_removed"] == 0 and s1 in rows[0]["text"]
-    assert rows[10]["n_removed"] == 5 and s1 not in rows[10]["text"]
-    assert rows[11]["n_removed"] == 6 and rows[12]["n_removed"] == 6
-    assert rows[13]["n_removed"] == 0
-
-    snapshot = sorted(
-        (r["doc_id"], r["text"], r["n_tokens"], r["n_removed"], r["_batch_id"])
-        for r in spark.read.parquet(out).collect()
-    )
-    # replay batch 0 AFTER batch 1 committed: the store read keeps
-    # strictly-earlier partitions only, so the replay sees the empty
-    # store its original run saw — doc 0 keeps its span (batch 1's
-    # overlapping grams are invisible to it) and every row of the
-    # final state is byte-identical to the pre-replay snapshot
-    ingest_span_dedup_batch(b0, 0, out, store)
-    replay_snapshot = sorted(
-        (r["doc_id"], r["text"], r["n_tokens"], r["n_removed"], r["_batch_id"])
-        for r in spark.read.parquet(out).collect()
-    )
-    assert replay_snapshot == snapshot
-
-
 def test_mp3_id3v24_footer_flag_skipped():
     from remap_spark.operators.multimodal import parse_mp3_frames
 
@@ -713,35 +662,6 @@ def test_mp3_id3v24_footer_flag_skipped():
     body = b"".join(_mp3_frame(128) for _ in range(3))
     n, sr, ch, samples, br_sum, vbr = parse_mp3_frames(tag + footer + body)
     assert (n, sr, samples) == (3, 44100, 3456)
-
-
-def test_pca_train_symmetric_ragged_widths_raise(spark):
-    import pytest as _pytest
-
-    from remap_spark.operators.ml import pca_train
-
-    # widths 3 and 5 in equal batch counts: the MEAN width is the
-    # integer 4 — the variance marker must still reject it with the
-    # ragged-width diagnostic, not an IndexError
-    rows = [(i, [1.0, 2.0, 3.0]) for i in range(8)]
-    rows += [(100 + i, [1.0, 2.0, 3.0, 4.0, 5.0]) for i in range(8)]
-    df = spark.createDataFrame(rows, "id long, embedding array<double>")
-    # range partitioning splits at the id median, so each Arrow batch
-    # is width-uniform and the DRIVER-side variance marker must fire
-    df = df.repartitionByRange(2, "id")
-    with _pytest.raises(Exception, match="ragged vector widths"):
-        pca_train(df, vec_col="embedding", n_components=2)
-
-    # widths mixed INSIDE one batch get the clean worker-side raise
-    # (surfaced through Spark as a PythonException carrying the text)
-    with _pytest.raises(Exception, match="ragged vector widths"):
-        pca_train(
-            spark.createDataFrame(
-                [(0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0, 3.0, 4.0, 5.0])],
-                "id long, embedding array<double>",
-            ).coalesce(1),
-            vec_col="embedding",
-        )
 
 
 # ---------------------------------------------------------------------------

@@ -425,44 +425,3 @@ def test_cluster_write_produces_prunable_footer_stats(spark, tmp_path_factory):
     assert lo_ == lt, (lo_, lt)  # x-sort: every row group opens
     assert zo * 2 <= zt, (zo, zt)  # z-order: >=half skipped
     assert zo < lo_, (zo, lo_)
-
-
-def test_cluster_by_hilbert_write_roundtrip(spark, tmp_path_factory):
-    """cluster_by_hilbert writes range-partitioned files whose parquet
-    footer stats prune a second-dimension predicate at least as well
-    as the Morton layout (same harness as the z-order proof)."""
-    import duckdb
-    from pyspark.sql import functions as F
-
-    from remap_spark.operators.layout import cluster_by_hilbert
-
-    grid = spark.range(64 * 64).select(
-        (F.col("id") % 64).alias("x"),
-        (F.col("id") / 64).cast("long").alias("y"),
-    )
-    root = str(tmp_path_factory.mktemp("hwrite"))
-    path = f"{root}/clustered"
-    cluster_by_hilbert(grid, "x", "y", bits=6, num_files=16).drop(
-        "h_key"
-    ).write.parquet(path)
-    con = duckdb.connect()
-    total, open_ = con.execute(f"""
-        WITH m AS (
-          SELECT file_name, row_group_id, path_in_schema,
-                 CAST(stats_min AS BIGINT) AS lo,
-                 CAST(stats_max AS BIGINT) AS hi
-          FROM parquet_metadata('{path}/*.parquet')
-          WHERE path_in_schema IN ('x', 'y')
-        ),
-        rg AS (
-          SELECT file_name, row_group_id,
-                 MAX(CASE WHEN path_in_schema = 'y' THEN lo END) AS min_y,
-                 MAX(CASE WHEN path_in_schema = 'y' THEN hi END) AS max_y
-          FROM m GROUP BY 1, 2
-        )
-        SELECT COUNT(*),
-               COUNT(*) FILTER (min_y <= 42 AND max_y >= 35)
-        FROM rg
-    """).fetchone()
-    assert total >= 16
-    assert open_ * 2 <= total, (open_, total)
