@@ -5,8 +5,8 @@ filters (a fastText-style quality model scoring "does this look like
 reference text"; CCNet-style language/quality routing). The Spark
 shape of both training and scoring is the point here:
 
-- the MODEL is driver-sized (d+1 floats) and rides into the plan as
-  literals — no join, no shuffle, pure codegen scoring;
+- the MODEL is driver-sized (d+1 floats) and is broadcast into the
+  scoring cross join — no shuffle, pure codegen scoring;
 - batch gradient-descent training is ONE aggregate per iteration over
   however much data there is: gradients are means of per-row terms,
   computed map-side-partial like any other aggregate. The data never
@@ -18,32 +18,8 @@ projection, not this shape.
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _z(weights: list[float], bias: float, feats: list[Column]) -> Column:
-    z = F.lit(float(bias))
-    for w, x in zip(weights, feats):
-        z = z + F.lit(float(w)) * x
-    return z
-
-
-def logistic_score(
-    df: DataFrame,
-    feature_cols: list[str],
-    weights: list[float],
-    bias: float,
-    id_col: str = "doc_id",
-    out_col: str = "p",
-) -> DataFrame:
-    """Score rows under a fixed logistic model: p = sigmoid(b + w·x).
-    Zero shuffle — the model is literals in a codegen projection."""
-    feats = [F.col(c).cast("double") for c in feature_cols]
-    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_z(weights, bias, feats)))
-    return df.select(F.col(id_col), p.alias(out_col))
 
 
 def standardize(df: DataFrame, feature_cols: list[str]) -> DataFrame:
@@ -128,8 +104,8 @@ def logistic_score_relation(
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Score against a 1-row weights relation
-    (``logistic_train_relation`` output) via a broadcast cross join —
-    the fully in-plan twin of ``logistic_score``. ``keep_cols`` ride
+    (``logistic_train_relation`` output) via a broadcast cross join,
+    so the model never leaves the plan. ``keep_cols`` ride
     through the scoring projection so callers that need input columns
     (labels, splits) next to the score don't have to join the scored
     relation back to the corpus on the id — that join is a corpus ×
@@ -144,10 +120,6 @@ def logistic_score_relation(
         *[F.col(c) for c in keep_cols],
         p.alias(out_col),
     )
-
-
-def sigmoid(x: float) -> float:
-    return 1.0 / (1.0 + math.exp(-x))
 
 
 def winsorize(

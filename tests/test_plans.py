@@ -259,10 +259,12 @@ def test_every_public_def_is_reached():
     referenced outside its own body by the package, ``bench.py`` or
     ``perfbench/``, or is exported through ``remap_spark.__all__`` or
     ``remap_spark.sources.__all__``. A name inside a string counts: the
-    registry dispatches by attribute name, oracle SQL calls helpers from
-    f-strings, and a docstring may name the reference a live operator is
-    checked against. Comments and tests do not count: a def
-    that only a test reaches is dead code with a test."""
+    registry dispatches by attribute name and oracle SQL calls helpers
+    from f-strings. Docstrings are strings too, so a def that only a
+    docstring names passes this lint even when nothing calls it; the
+    defs that pass only that way are listed under ROADMAP direction 4.
+    Comments and tests do not count: a def that only a test reaches is
+    dead code with a test."""
     import ast
     import io
     import pathlib
