@@ -47,13 +47,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimensions small enough to broadcast at ANY scale factor: region is 5
-# rows and nation is 25 rows at every TPC-H SF. customer/supplier/part
-# GROW with SF, so they are NOT in this list — at 100 TB a broadcast of
-# customer would OOM the executors; those joins must shuffle (AQE may
-# still convert them at small SF via autoBroadcastJoinThreshold).
-ALWAYS_BROADCAST = frozenset({"region", "nation"})
-
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))

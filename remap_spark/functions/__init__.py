@@ -83,12 +83,10 @@ def epoch_us(col: Column | str) -> Column:
 # ---------------------------------------------------------------------
 # Portable hashing.
 #
-# Spark's native xxhash64/hash are the FAST path for production dedup
-# (JVM-side, codegen'd). The md5-based variants below are bit-identical
-# across engines (Spark, DuckDB, anything with md5) — used where a
-# cross-engine-reproducible fingerprint matters and by the correctness
-# oracle. md5 is also JVM-side codegen — slower than xxhash64 but still
-# no Python boundary.
+# The md5-based hashes below are bit-identical across engines (Spark,
+# DuckDB, anything with md5), so the correctness oracle replays every
+# fingerprint built on them. md5 is JVM-side codegen — slower than
+# xxhash64 but still no Python boundary.
 # ---------------------------------------------------------------------
 
 
@@ -109,12 +107,6 @@ def portable_hash32(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint")
-
-
-def fast_hash64(col: Column | str) -> Column:
-    """Production-path 64-bit hash (xxhash64, JVM codegen)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.xxhash64(c)
 
 
 # Parameters for portable MinHash permutations: h_i(x) = (a_i*x + b_i) % P
@@ -166,14 +158,6 @@ def dot_product(a: Column, b: Column) -> Column:
     )
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-        )
-    )
-
-
 def lineage_cut(df, *, eager: bool = False):
     """``localCheckpoint`` with a cluster-reliability escape hatch.
 
@@ -187,12 +171,7 @@ def lineage_cut(df, *, eager: bool = False):
     ``spark.remap.lineageCut=off`` (session conf) to skip every cut
     routed through this helper: consumers then re-execute the upstream
     subtree (the pre-r12 plan shape) and keep full fault tolerance.
-
-    Streaming inputs pass through untouched (localCheckpoint is
-    unsupported on streaming DataFrames).
     """
-    if df.isStreaming:
-        return df
     try:
         enabled = df.sparkSession.conf.get("spark.remap.lineageCut", "on")
     except Exception:

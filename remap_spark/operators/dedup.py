@@ -1,19 +1,17 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five families, all DataFrame-native (no Python in the hot path):
+Families, all DataFrame-native (no Python in the hot path):
 
-- exact          : content-hash groupBy
 - n-gram Jaccard : inverted-index self-join on shingles (exact near-dup)
 - MinHash + LSH  : signature -> banded bucket join (approx near-dup,
                    the 100 TB path — candidate pairs without O(n²))
-- SimHash        : 32-bit bitwise fingerprint + hamming pairs
-- embedding      : cosine-threshold pairs (brute force here; the ANN
-                   path is operators/similarity.py)
+- SimHash        : 32-bit bitwise fingerprint
+- spans, paragraphs, Bloom filters and incremental stores; embedding
+  near-dup lives in operators/similarity.py
 
-Hashing: ``portable=True`` uses md5-derived hashes that are
-bit-identical in DuckDB (for the correctness oracle and cross-engine
-reproducibility); ``portable=False`` uses xxhash64 (faster JVM path).
-Both stay inside whole-stage codegen.
+Hashing: md5-derived hashes (functions.portable_hash32/60) that are
+bit-identical in DuckDB, so the correctness oracle replays every
+signature; they stay inside whole-stage codegen.
 
 Scale notes (100 TB):
 - the shingle explode multiplies rows ~100x; everything downstream is
@@ -34,7 +32,6 @@ from pyspark.sql import functions as F
 
 from ..functions import (
     MINHASH_PRIME,
-    fast_hash64,
     minhash_params,
     portable_hash32,
     portable_hash60,
@@ -260,7 +257,6 @@ def minhash_signatures(
     n: int = 3,
     num_hashes: int = 16,
     seed: int = 42,
-    portable: bool = True,
 ) -> DataFrame:
     """Per-doc MinHash signature: sig_i = min over shingles of
     (a_i*h(shingle)+b_i) mod P. Duplicate shingles are left in (min is
@@ -276,9 +272,7 @@ def minhash_signatures(
     after projection collapse every one of the 16 sig expressions
     re-evaluates the whole md5 transform tree per row."""
     s = _doc_shingles(df, text_col, id_col, n, None, dedup=False)
-    h = portable_hash32("gram") if portable else (
-        F.pmod(fast_hash64("gram"), F.lit(1 << 32))
-    )
+    h = portable_hash32("gram")
     withh = s.select("doc", h.alias("h"))
     aggs = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(
@@ -297,7 +291,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     seed: int = 42,
-    portable: bool = True,
 ) -> DataFrame:
     """LSH banding: docs sharing any band of their signature are
     candidate near-duplicates. Returns distinct (doc_a, doc_b).
@@ -306,7 +299,7 @@ def minhash_lsh_pairs(
     join. With 16 hashes / 4 bands, P(candidate) = 1-(1-j^4)^4 —
     ~1.0 at j=0.9, ~0.04 at j=0.3."""
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes, seed, portable)
+    sig = minhash_signatures(df, text_col, id_col, n, num_hashes, seed)
     # one band-struct array exploded in place — the signature subtree is
     # computed once (a per-band union would rescan it #bands times
     # unless exchange reuse happens to fire)
@@ -346,7 +339,6 @@ def simhash_fingerprints(
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = 32,
-    portable: bool = True,
 ) -> DataFrame:
     """32-bit SimHash over word tokens (occurrence-weighted): bit b of
     the fingerprint = sign of Σ_tokens (±1 by bit b of token hash).
@@ -357,7 +349,7 @@ def simhash_fingerprints(
     toks = df.repartition(n_part, F.col(id_col)).select(
         F.col(id_col).alias("doc"), F.explode(tokenize(F.col(text_col))).alias("w")
     )
-    h = portable_hash32("w") if portable else F.pmod(fast_hash64("w"), F.lit(1 << 32))
+    h = portable_hash32("w")
     withh = toks.select("doc", h.alias("h"))
     balance = [
         F.sum(
@@ -373,70 +365,6 @@ def simhash_fingerprints(
         term = F.when(F.col(f"s{b}") >= 0, F.lit(1 << b)).otherwise(F.lit(0))
         fp = term if fp is None else fp + term
     return per_doc.select("doc", fp.cast("bigint").alias("simhash"))
-
-
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    portable: bool = True,
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance, using the pigeonhole
-    trick at scale: split the 32-bit fingerprint into max_hamming+1
-    blocks — any pair within distance max_hamming shares at least one
-    exact block, so candidates come from equi-joins on blocks (no
-    quadratic scan), then are verified with bit_count(xor)."""
-    fps = simhash_fingerprints(df, text_col, id_col, 32, portable)
-    nblocks = max_hamming + 1
-    width = 32 // nblocks
-    # one explode of the per-block (blk, key) structs instead of an
-    # nblocks-way union — the union form re-executed the fingerprint
-    # aggregate once per block AND once per self-join side; the lazy
-    # cut materializes the (id, hash)-narrow block relation once and
-    # both join sides read it (r12, same fix as pregel._symmetrize)
-    keys = []
-    for blk in range(nblocks):
-        shift = blk * width
-        w = width if blk < nblocks - 1 else 32 - shift
-        keys.append(
-            F.struct(
-                F.lit(blk).alias("blk"),
-                F.shiftright(F.col("simhash"), shift)
-                .bitwiseAND(F.lit((1 << w) - 1))
-                .alias("key"),
-            )
-        )
-    blocks = (
-        fps.select(F.explode(F.array(*keys)).alias("_bk"), "doc", "simhash")
-        .select(
-            F.col("_bk.blk").alias("blk"),
-            F.col("_bk.key").alias("key"),
-            "doc",
-            "simhash",
-        )
-        .localCheckpoint(eager=False)
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.col("a.simhash").alias("ha"),
-            F.col("b.simhash").alias("hb"),
-        )
-        .distinct()
-    )
-    dist = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return cand.select(
-        "doc_a", "doc_b", dist.alias("hamming")
-    ).where(F.col("hamming") <= max_hamming)
 
 
 def span_duplication(
@@ -1215,11 +1143,11 @@ def contamination_hits(
     )
 
 
-def _bloom_positions(col: Column, m_bits: int, k: int, seed: int, portable: bool) -> Column:
+def _bloom_positions(col: Column, m_bits: int, k: int, seed: int) -> Column:
     """array<bigint> of the k Bloom bit positions for a key: pos_i =
     ((a_i*h(x)+b_i) mod P) mod m — same portable (a,b) family as
     MinHash, bit-identical in the SQL oracle."""
-    h = portable_hash32(col) if portable else F.pmod(fast_hash64(col), F.lit(1 << 32))
+    h = portable_hash32(col)
     return F.array(
         *[
             ((F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME)) % F.lit(m_bits)
@@ -1234,7 +1162,6 @@ def bloom_build(
     m_bits: int = 1 << 16,
     k: int = 5,
     seed: int = 7,
-    portable: bool = True,
 ) -> DataFrame:
     """Distributed Bloom-filter BUILD as a relation: the m-bit array is
     stored sparse as (word, bits) rows — 32-bit words, only words with
@@ -1251,9 +1178,7 @@ def bloom_build(
     for INCREMENTAL pipelines (probe today's batch against last month's
     corpus without re-scanning it)."""
     pos = df.select(
-        F.explode(_bloom_positions(F.col(col), m_bits, k, seed, portable)).alias(
-            "pos"
-        )
+        F.explode(_bloom_positions(F.col(col), m_bits, k, seed)).alias("pos")
     )
     return (
         pos.select(
@@ -1275,7 +1200,6 @@ def bloom_probe(
     m_bits: int = 1 << 16,
     k: int = 5,
     seed: int = 7,
-    portable: bool = True,
 ) -> DataFrame:
     """Probe keys against a bloom_build relation: a row HITS iff all k
     of its bit positions are set. Returns (id, hit) with hit ∈ {0,1} —
@@ -1292,7 +1216,7 @@ def bloom_probe(
     pos = df.select(
         F.col(id_col).alias("_id"),
         F.posexplode(
-            _bloom_positions(F.col(col), m_bits, k, seed, portable)
+            _bloom_positions(F.col(col), m_bits, k, seed)
         ).alias("_i", "pos"),
     ).select(
         "_id",
@@ -1414,7 +1338,6 @@ def incremental_dedup_fuzzy(
     num_hashes: int = 16,
     bands: int = 4,
     seed: int = 42,
-    portable: bool = True,
 ) -> DataFrame:
     """Ingestion-time NEAR-duplicate dedup — the fuzzy analog of
     ``incremental_dedup``: arriving documents are dropped when their
@@ -1441,9 +1364,7 @@ def incremental_dedup_fuzzy(
     zero exchange regardless of history size. Hot band keys (a
     boilerplate signature shared by many stored docs) are
     AQE-skew-splittable since sigs ride as payload, not key."""
-    sig = minhash_signatures(
-        new_docs, text_col, id_col, n, num_hashes, seed, portable
-    )
+    sig = minhash_signatures(new_docs, text_col, id_col, n, num_hashes, seed)
     docsigs = sig.select(
         "doc",
         F.array(*[F.col(f"sig{i}") for i in range(num_hashes)]).alias("sigs"),
@@ -1503,7 +1424,6 @@ def lsh_verified_pairs(
     bands: int = 4,
     seed: int = 42,
     threshold: float = 0.5,
-    portable: bool = True,
 ) -> DataFrame:
     """Approximate-then-verify near-dup — the production composition:
     MinHash-LSH banding proposes candidate pairs (linear shuffles, no
@@ -1524,7 +1444,7 @@ def lsh_verified_pairs(
     join back per side. Shuffle volume ~ candidate pairs x doc gram
     count — subquadratic end-to-end."""
     cands = minhash_lsh_pairs(
-        df, text_col, id_col, n, num_hashes, bands, seed, portable
+        df, text_col, id_col, n, num_hashes, bands, seed
     ).localCheckpoint(eager=True)
     # restrict the CORPUS to candidate docs BEFORE shingling: the
     # verify tier tokenizes + windows only the docs that can appear in
@@ -1628,81 +1548,6 @@ def soft_dedup_weights(
         )
         .cast("bigint")
         .alias("weight_ppm"),
-    )
-
-
-def hamming_pairs(
-    df: DataFrame,
-    hash_col: str,
-    id_col: str,
-    bits: int = 64,
-    max_hamming: int = 6,
-) -> DataFrame:
-    """Generic pigeonhole near-dup join over a fixed-width integer
-    hash column (the simhash_pairs trick, width-parametric): split the
-    ``bits``-bit hash into ``max_hamming + 1`` blocks — any pair
-    within the distance bound shares at least one exact block — so
-    candidates come from block equi-joins (combiner-dedupable,
-    AQE-splittable), never a quadratic scan; verification is
-    bit_count(xor). Returns (id_a, id_b, hamming). Feeds image dHash
-    (operators/multimodal.image_near_dup_pairs) or any external
-    64-bit fingerprint (pHash, audio chromaprints, ssdeep-folded)."""
-    nblocks = max_hamming + 1
-    width = bits // nblocks
-    if width == 0:
-        raise ValueError(
-            f"max_hamming={max_hamming} too large for {bits}-bit hashes"
-        )
-    rows = df.select(
-        F.col(id_col).alias("_id"), F.col(hash_col).alias("_h")
-    )
-    # one explode of the per-block (blk, key) structs instead of an
-    # nblocks-way union: the union form re-executed the UPSTREAM
-    # subtree (for image near-dup that is the Python media
-    # decode) once per block and once per self-join side — up to
-    # 2 x nblocks executions; the lazy cut materializes the narrow
-    # (blk, key, id, hash) relation once (r12, pregel._symmetrize fix)
-    keys = []
-    for blk in range(nblocks):
-        shift = blk * width
-        w = width if blk < nblocks - 1 else bits - shift
-        keys.append(
-            F.struct(
-                F.lit(blk).alias("blk"),
-                F.shiftrightunsigned(F.col("_h"), shift)
-                .bitwiseAND(F.lit((1 << w) - 1))
-                .alias("key"),
-            )
-        )
-    blocks = (
-        rows.select(F.explode(F.array(*keys)).alias("_bk"), "_id", "_h")
-        .select(
-            F.col("_bk.blk").alias("blk"),
-            F.col("_bk.key").alias("key"),
-            "_id",
-            "_h",
-        )
-        .localCheckpoint(eager=False)
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a._h").alias("_ha"),
-            F.col("b._h").alias("_hb"),
-        )
-        .distinct()
-    )
-    dist = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
-    return cand.select("id_a", "id_b", dist.alias("hamming")).where(
-        F.col("hamming") <= max_hamming
     )
 
 

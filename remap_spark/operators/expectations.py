@@ -10,7 +10,7 @@ count-if columns — the same shape as ext_profile_columns), so adding
 rules costs expression width, never extra passes or shuffles.
 
 Severity is metadata: the caller decides whether 'error' rows abort
-the pipeline (``assert_expectations``) while 'warn' rows only report.
+the pipeline while 'warn' rows only report.
 """
 
 from __future__ import annotations
@@ -74,20 +74,6 @@ def expect_report(
         )
         .orderBy("rule")
     )
-
-
-def assert_expectations(report: DataFrame) -> None:
-    """Fail fast on any violated 'error'-severity rule. The report is
-    rule-count-sized (collect is bounded by the number of declared
-    rules, never data)."""
-    bad = [
-        r.rule
-        for r in report.where(
-            (~F.col("pass")) & (F.col("severity") == "error")
-        ).collect()
-    ]
-    if bad:
-        raise AssertionError(f"data-quality expectations failed: {bad}")
 
 
 # Benford expected first-digit mass, ppm-rounded literals of

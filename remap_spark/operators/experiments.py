@@ -100,10 +100,9 @@ def crosstab_chi2(
         contribution_ppm = (O*N - rt*ct)^2 * 1e6 DIV (N * rt * ct)
 
     (rt/ct = marginal totals). The statistic is the plain integer sum
-    of contributions (order-independent, so any engine agrees);
-    ``chi2_summary`` rolls it up with the degrees of freedom. Note the
-    floor is per-cell by definition — that IS the replayable contract,
-    within 1 ppm x n_cells of the real-valued statistic.
+    of contributions (order-independent, so any engine agrees). Note
+    the floor is per-cell by definition — that IS the replayable
+    contract, within 1 ppm x n_cells of the real-valued statistic.
 
     Scale shape: the corpus pass is one combiner groupBy over the
     cell pair; marginals and N derive from the CELL relation
@@ -141,21 +140,4 @@ def crosstab_chi2(
                 f"DIV ({nn} * {rt} * {ct}) AS BIGINT)"
             ).alias("contribution_ppm"),
         )
-    )
-
-
-def chi2_summary(cells: DataFrame, row_col: str, col_col: str) -> DataFrame:
-    """One-row rollup of :func:`crosstab_chi2`: chi2_ppm (sum of the
-    per-cell contributions over OBSERVED cells; absent cells with a
-    nonzero expectation would each add rt*ct*1e6 DIV N — include them
-    upstream by densifying if your data can have structural zeros),
-    plus n_rows/n_cols/dof."""
-    return cells.agg(
-        F.sum("contribution_ppm").alias("chi2_ppm"),
-        F.countDistinct(row_col).alias("n_rows"),
-        F.countDistinct(col_col).alias("n_cols"),
-        (
-            (F.countDistinct(row_col) - 1)
-            * (F.countDistinct(col_col) - 1)
-        ).alias("dof"),
     )

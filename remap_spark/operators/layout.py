@@ -8,9 +8,8 @@ bucketized columns into a Z-order key and range-partitioning on it
 gives every file a small hyper-rectangle of the key space, so
 multi-dimensional box predicates skip most files. The key computation
 here is pure Catalyst bit arithmetic (shift/and/or inside whole-stage
-codegen — no UDF), ``cluster_by_zorder`` is one repartitionByRange +
-in-partition sort, and ``skipping_stats`` is the same min/max relation
-a table format's footer metadata holds.
+codegen — no UDF), and ``skipping_stats`` is the same min/max
+relation a table format's footer metadata holds.
 """
 
 from __future__ import annotations
@@ -33,21 +32,6 @@ def zorder_key(cols: list[Column | str], bits: int = 8) -> Column:
             bit = F.shiftright(c.cast("long"), i).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, i * n + j))
     return z
-
-
-def cluster_by_zorder(
-    df: DataFrame, cols: list[str], bits: int = 8, num_files: int | None = None
-) -> DataFrame:
-    """Append ``z_key`` and cluster the frame by it: range partition
-    (each output file owns a contiguous key range -> tight min/max on
-    every interleaved column) + in-partition sort (row-group-level
-    stats inside each file). Write the result with any sink; the
-    layout, not the format, is the optimization."""
-    out = df.withColumn("z_key", zorder_key(cols, bits))
-    n = num_files or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    return out.repartitionByRange(n, "z_key").sortWithinPartitions("z_key")
 
 
 def skipping_stats(
@@ -142,44 +126,4 @@ def hilbert_sql(x_expr: str, y_expr: str, source_sql: str, bits: int = 8) -> str
     return (
         f"WITH {body}\n"
         f"SELECT ox AS hx, oy AS hy, CAST(hk AS BIGINT) AS h_key FROM h0"
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int,
-    path: str | None = None,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> DataFrame:
-    """Materialize a relation BUCKETED by its join/aggregation key —
-    the co-located-join layout: every subsequent equi-join or groupBy
-    on ``key`` between tables bucketed with the SAME bucket count
-    reads pre-shuffled data, so the exchange that dominates a 100 TB
-    fact-to-fact join (or repeated same-key aggregation) happens ONCE
-    at write time and never again (plan-pinned: the zero-Exchange
-    join assertion in tests/test_round7.py). ``sort=True`` additionally
-    sorts within buckets, letting the sort-merge join skip or shrink
-    its per-task sort when files align.
-
-    Bucketing requires a catalog table (``saveAsTable``); ``path``
-    makes it external. Returns the re-read table handle, whose scans
-    carry the bucket spec (``SelectedBucketsCount`` in explain).
-
-    Thin delegate: ``sources.write_bucketed_table`` is the one
-    canonical bucketed-write primitive (r7-advice consolidation —
-    two parallel bucketBy/sortBy/saveAsTable code paths drift); this
-    single-key convenience form stays for the layout-module API."""
-    from ..sources import write_bucketed_table
-
-    return write_bucketed_table(
-        df,
-        table,
-        [key],
-        num_buckets=n_buckets,
-        sort_cols=[key] if sort else None,
-        mode=mode,
-        path=path,
     )

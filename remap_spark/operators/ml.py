@@ -129,7 +129,6 @@ def winsorize(
     p_lo: float = 0.01,
     p_hi: float = 0.99,
     out_col: str | None = None,
-    exact: bool = True,
 ) -> DataFrame:
     """Winsorize ``value_col`` (clamp into its [p_lo, p_hi] quantile
     band), optionally per group — the standard heavy-tail repair
@@ -143,20 +142,14 @@ def winsorize(
     relation is one row per group and rides a broadcast hash join
     back onto the corpus — with no groups it is a literal-fold
     broadcast of a single row. Exact percentile buffers each group's
-    value stream (the dq33 seam); ``exact=False`` swaps in the
-    mergeable t-digest (approx_percentile), the 100 TB path when
-    groups are corpus-sized.
+    value stream (the dq33 seam).
     """
     from pyspark.sql.functions import broadcast
 
     out_col = out_col or f"{value_col}_wins"
     gcols = list(group_cols or [])
     pcts = F.array(F.lit(float(p_lo)), F.lit(float(p_hi)))
-    agg = (
-        F.percentile(value_col, pcts)
-        if exact
-        else F.percentile_approx(value_col, pcts, 10_000)
-    )
+    agg = F.percentile(value_col, pcts)
     cuts = (df.groupBy(*gcols) if gcols else df.groupBy()).agg(
         agg.alias("_cuts")
     ).select(
@@ -211,7 +204,6 @@ def quantile_bins(
     n_bins: int = 10,
     group_cols: list[str] | None = None,
     out_col: str | None = None,
-    exact: bool = True,
 ) -> DataFrame:
     """Equi-depth binning: assign each row its quantile bucket
     1..n_bins (decile by default), optionally per group — the
@@ -224,8 +216,7 @@ def quantile_bins(
     broadcast back; the bin is 1 + count(value > cut_i) as a fixed
     codegen comparison chain, so ties at a cut boundary land
     deterministically in the lower bin and the result replays
-    bit-for-bit against quantile_cont. ``exact=False`` swaps in the
-    mergeable t-digest for corpus-sized groups."""
+    bit-for-bit against quantile_cont."""
     if n_bins < 2:
         raise ValueError(f"n_bins must be >= 2, got {n_bins}")
     from pyspark.sql.functions import broadcast
@@ -234,11 +225,7 @@ def quantile_bins(
     gcols = list(group_cols or [])
     qs = [i / n_bins for i in range(1, n_bins)]
     pcts = F.array(*[F.lit(float(q)) for q in qs])
-    agg = (
-        F.percentile(value_col, pcts)
-        if exact
-        else F.percentile_approx(value_col, pcts, 10_000)
-    )
+    agg = F.percentile(value_col, pcts)
     cuts = (df.groupBy(*gcols) if gcols else df.groupBy()).agg(
         agg.alias("_cuts")
     )
@@ -261,7 +248,6 @@ def mad_outliers(
     group_cols: list[str] | None = None,
     k: float = 3.5,
     consistency: float = 1.4826,
-    exact: bool = True,
 ) -> DataFrame:
     """Robust outlier flags via median absolute deviation: a row is an
     outlier when |x - median| > k * consistency * MAD — the
@@ -277,15 +263,11 @@ def mad_outliers(
     MAD of zero (>= half the group identical) only exact mismatches
     flag, the standard degenerate-case convention. Linear-interp
     percentile matches quantile_cont, so the oracle replays
-    bit-for-bit; ``exact=False`` swaps in the t-digest tier."""
+    bit-for-bit."""
     from pyspark.sql.functions import broadcast
 
     gcols = list(group_cols or [])
-    med_agg = (
-        F.percentile(value_col, F.lit(0.5))
-        if exact
-        else F.percentile_approx(value_col, F.lit(0.5), 10_000)
-    )
+    med_agg = F.percentile(value_col, F.lit(0.5))
     med = (df.groupBy(*gcols) if gcols else df.groupBy()).agg(
         med_agg.alias("median")
     )
@@ -295,11 +277,7 @@ def mad_outliers(
         else df.crossJoin(broadcast(med))
     )
     dev = j1.withColumn("_ad", F.abs(F.col(value_col) - F.col("median")))
-    mad_agg = (
-        F.percentile("_ad", F.lit(0.5))
-        if exact
-        else F.percentile_approx("_ad", F.lit(0.5), 10_000)
-    )
+    mad_agg = F.percentile("_ad", F.lit(0.5))
     mad = (dev.groupBy(*gcols) if gcols else dev.groupBy()).agg(
         mad_agg.alias("mad")
     )
@@ -323,7 +301,7 @@ def weighted_percentiles(
 ) -> DataFrame:
     """EXACT weighted percentiles per group — the estimator behind
     duration-weighted latency SLOs and size-weighted document stats
-    that plain percentile_approx cannot express: the q-percentile is
+    that an unweighted percentile cannot express: the q-percentile is
     the smallest value whose cumulative WEIGHT reaches q of the
     group's total weight (the left-continuous inverse-CDF
     convention). ``qs`` maps output column name -> q in ppm

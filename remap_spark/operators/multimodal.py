@@ -21,14 +21,8 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..worker import on_worker
-
-MEDIA_SCHEMA = (
-    "media_id bigint, kind string, media binary, "
-    "meta struct<width:int, height:int, sample_rate:int, duration_ms:int>"
-)
 
 IMAGE_FEATURES_SCHEMA = "media_id bigint, width int, height int, features array<float>"
 AUDIO_FEATURES_SCHEMA = "media_id bigint, n_samples int, features array<float>"
@@ -38,8 +32,7 @@ FRAME_SAMPLE_SCHEMA = "media_id bigint, frame_idx int, frame binary"
 def _decode_bmp_px(blob: bytes):
     """Pixel stage of the BMP decoder: returns (width, height,
     (h, w, 3) float RGB array). The feature wrapper below keeps the
-    original (w, h, feats) contract; the pixel form feeds perceptual
-    hashing (image_dhash)."""
+    original (w, h, feats) contract."""
     import struct
 
     import numpy as np
@@ -676,8 +669,7 @@ def _decode_gif(blob: bytes):
 def _decode_wav_pcm(blob: bytes):
     """Sample stage of the WAV decoder: returns (n_frames, sr, ch,
     normalized mono float array). The feature wrapper below keeps the
-    original (n, feats) contract; the sample form feeds audio
-    fingerprinting (audio_fingerprint)."""
+    original (n, feats) contract."""
     import io
     import wave
 
@@ -1285,199 +1277,6 @@ def sample_frames(
 
     return df.select(id_col, media_col).mapInPandas(
         on_worker(run), schema=FRAME_SAMPLE_SCHEMA
-    )
-
-
-def _decode_image_px(blob: bytes):
-    """Pixel dispatch (the _decode_image_impl sniffing order, no fake
-    tier — perceptual hashing needs real pixels or nothing): returns
-    (w, h, (h, w, 3) float RGB array) or raises."""
-    if blob[:2] == b"BM" and len(blob) >= 54:
-        try:
-            return _decode_bmp_px(blob)
-        except Exception:
-            pass
-    if blob[:8] == b"\x89PNG\r\n\x1a\n":
-        try:
-            return _decode_png_px(blob)
-        except Exception:
-            pass
-    if blob[:2] == b"\xff\xd8":
-        try:
-            return _decode_jpeg_px(blob)
-        except Exception:
-            pass
-    if blob[:6] in (b"GIF87a", b"GIF89a"):
-        try:
-            return _decode_gif_px(blob)
-        except Exception:
-            pass
-    raise ValueError("undecodable image payload (no native codec matched)")
-
-
-def _dhash64(px) -> int:
-    """64-bit difference hash: luminance -> 8x9 area-mean grid ->
-    horizontal gradient sign bits, row-major. Deterministic (pure
-    integer bin edges, float64 means)."""
-    import numpy as np
-
-    lum = 0.299 * px[..., 0] + 0.587 * px[..., 1] + 0.114 * px[..., 2]
-    h, w = lum.shape
-    ys = np.linspace(0, h, 9, dtype=np.int64)
-    xs = np.linspace(0, w, 10, dtype=np.int64)
-    grid = np.empty((8, 9))
-    for i in range(8):
-        for j in range(9):
-            cell = lum[ys[i] : max(ys[i + 1], ys[i] + 1),
-                       xs[j] : max(xs[j + 1], xs[j] + 1)]
-            grid[i, j] = cell.mean()
-    bits = (grid[:, 1:] > grid[:, :-1]).ravel()
-    val = 0
-    for b in bits:
-        val = (val << 1) | int(b)
-    # map to signed int64 for a BIGINT column
-    return val - (1 << 64) if val >= (1 << 63) else val
-
-
-def image_dhash(
-    df: DataFrame,
-    media_col: str = "media",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """Perceptual difference-hash per image: (media_id, dhash bigint,
-    width, height). Robust to re-encoding, scaling, and mild
-    brightness shifts — the image twin of content_fingerprint. Decode
-    + hash run in one Arrow mapInPandas over the binary column (the
-    documented multimodal Python tier: the work IS pixel math);
-    everything downstream (near-dup blocking) is pure relational.
-    Undecodable payloads yield NULL dhash instead of failing the
-    batch — route them to a quarantine filter."""
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            ids, hs, ws, hts = [], [], [], []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                try:
-                    w, h, px = _decode_image_px(bytes(blob or b""))
-                    hs.append(_dhash64(px))
-                    ws.append(w)
-                    hts.append(h)
-                except Exception:
-                    hs.append(None)
-                    ws.append(None)
-                    hts.append(None)
-                ids.append(mid)
-            yield pd.DataFrame(
-                {"media_id": ids, "dhash": hs, "width": ws, "height": hts}
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        on_worker(run), schema="media_id bigint, dhash bigint, width int, height int"
-    )
-
-
-def image_near_dup_pairs(
-    df: DataFrame,
-    media_col: str = "media",
-    id_col: str = "media_id",
-    max_hamming: int = 6,
-) -> DataFrame:
-    """Near-duplicate image pairs by dHash hamming distance — decode
-    once, then the generic 64-bit pigeonhole blocking
-    (operators/dedup.hamming_pairs): candidates only from exact-block
-    equi-joins, verified with bit_count(xor). No pixel ever crosses a
-    shuffle; the join works on (id, bigint) rows."""
-    from .dedup import hamming_pairs
-
-    hashes = image_dhash(df, media_col, id_col).where(
-        F.col("dhash").isNotNull()
-    )
-    return hamming_pairs(
-        hashes, "dhash", "media_id", bits=64, max_hamming=max_hamming
-    )
-
-
-def _decode_audio_pcm(blob: bytes):
-    """Sample dispatch (the _decode_audio_impl sniffing order, no fake
-    tier): returns (n_frames, sr, ch, normalized mono float array)."""
-    if blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
-        try:
-            return _decode_wav_pcm(blob)
-        except Exception:
-            pass
-    if blob[:4] == b"fLaC":
-        try:
-            return _decode_flac_pcm(blob)
-        except Exception:
-            pass
-    raise ValueError("undecodable audio payload (no native codec matched)")
-
-
-def _audio_fp64(x, n_frames: int) -> int:
-    """64-bit audio fingerprint: band-energy spectrogram (9 time
-    windows x 9 frequency bands via numpy rFFT) -> temporal-gradient
-    sign bits over 8 consecutive window pairs x 8 band pairs,
-    row-major — the audio twin of image dHash (robust to gain because
-    only energy DELTAS are signed, deterministic because windows are
-    integer slices)."""
-    import numpy as np
-
-    wins = np.linspace(0, len(x), 10, dtype=np.int64)
-    grid = np.zeros((9, 9))
-    for t in range(9):
-        seg = x[wins[t] : max(wins[t + 1], wins[t] + 1)]
-        spec = np.abs(np.fft.rfft(seg)) ** 2
-        bands = np.linspace(0, len(spec), 10, dtype=np.int64)
-        for b in range(9):
-            s = spec[bands[b] : max(bands[b + 1], bands[b] + 1)]
-            grid[t, b] = float(s.sum())
-    bits = (grid[1:, :-1] > grid[:-1, :-1]).ravel()
-    val = 0
-    for bt in bits:
-        val = (val << 1) | int(bt)
-    return val - (1 << 64) if val >= (1 << 63) else val
-
-
-def audio_fingerprint(
-    df: DataFrame,
-    media_col: str = "media",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """Perceptual fingerprint per audio payload: (media_id, afp
-    bigint, n_frames, sample_rate). Decode + FFT-band hashing run in
-    one Arrow mapInPandas (the documented multimodal Python tier);
-    downstream near-dup blocking is pure relational via
-    dedup.hamming_pairs — gain-shifted or re-containered (WAV vs
-    FLAC) copies of the same signal collide. Undecodable payloads
-    yield NULL."""
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            ids, fps, ns, srs = [], [], [], []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                try:
-                    n, sr, _ch, x = _decode_audio_pcm(bytes(blob or b""))
-                    fps.append(_audio_fp64(x, n))
-                    ns.append(n)
-                    srs.append(sr)
-                except Exception:
-                    fps.append(None)
-                    ns.append(None)
-                    srs.append(None)
-                ids.append(mid)
-            yield pd.DataFrame(
-                {"media_id": ids, "afp": fps, "n_frames": ns,
-                 "sample_rate": srs}
-            )
-
-    return df.select(id_col, media_col).mapInPandas(
-        on_worker(run),
-        schema="media_id bigint, afp bigint, n_frames bigint, "
-        "sample_rate int",
     )
 
 

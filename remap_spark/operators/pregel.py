@@ -954,8 +954,8 @@ def connected_components_star(
         prev_sig = sig
         prev_e = e
     if _stats is not None:
-        # probe instrumentation (the bpe_train _stats convention):
-        # rounds includes the converged round; no behavior change
+        # probe instrumentation: rounds includes the converged round;
+        # no behavior change
         _stats["rounds"] = _round + 1
     comp = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
     if collapse_map is not None:

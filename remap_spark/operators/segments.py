@@ -26,10 +26,9 @@ NTILE(5) OVER (ORDER BY metric) is a single-partition global sort of
 the customer dimension; here the only corpus-sized pass is the
 per-customer combiner aggregate, the two consts relations are
 dimension-sized aggregates (Spark's ``percentile`` buffers per-group
-values — a documented memory seam on billion-customer dimensions;
-swap ``approx_percentile`` in via ``exact=False`` there), and the
-scoring itself is a broadcast-join projection. Equal metric values
-always receive equal scores (NTILE splits ties arbitrarily across
+values — a documented memory seam on billion-customer dimensions),
+and the scoring itself is a broadcast-join projection. Equal metric
+values always receive equal scores (NTILE splits ties arbitrarily across
 buckets — an anti-feature for replayability).
 """
 
@@ -41,13 +40,9 @@ from pyspark.sql import functions as F
 _QS = (0.2, 0.4, 0.6, 0.8)
 
 
-def _cuts(col: str, exact: bool) -> Column:
+def _cuts(col: str) -> Column:
     qs = F.array(*[F.lit(q) for q in _QS])
-    pct = (
-        F.percentile(F.col(col), qs)
-        if exact
-        else F.percentile_approx(F.col(col), qs, 10_000)
-    )
+    pct = F.percentile(F.col(col), qs)
     return F.transform(pct, lambda x: F.round(x.cast("double"), 4))
 
 
@@ -66,7 +61,6 @@ def rfm_segments(
     order_date_col: str,
     amount_col: str,
     ref_date: str | None = None,
-    exact: bool = True,
 ) -> DataFrame:
     """Score every customer 1-5 on recency, frequency, and monetary
     value. ``amount_col`` must be integral (fixed-point cents).
@@ -95,9 +89,9 @@ def rfm_segments(
         "recency_days", F.datediff("_ref", "_last")
     ).drop("_last", "_ref")
     cuts = per_cust.agg(
-        _cuts("recency_days", exact).alias("_rc"),
-        _cuts("frequency", exact).alias("_fc"),
-        _cuts("monetary", exact).alias("_mc"),
+        _cuts("recency_days").alias("_rc"),
+        _cuts("frequency").alias("_fc"),
+        _cuts("monetary").alias("_mc"),
     )
     return (
         per_cust.crossJoin(F.broadcast(cuts))

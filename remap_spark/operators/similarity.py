@@ -8,9 +8,7 @@ Two tiers:
   only from matching buckets — the 100 TB path (sub-linear probes)
 
 All vector math is JVM-side (zip_with/aggregate fold) — no UDF, no
-driver collect. Pre-normalizing vectors turns cosine into a dot
-product; ``normalize_embeddings`` does this once so repeated queries
-skip the norm work.
+driver collect.
 """
 
 from __future__ import annotations
@@ -21,17 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import cosine_similarity, dot_product, l2_norm
+from ..functions import cosine_similarity, dot_product
 from ..worker import on_worker
-
-
-def normalize_embeddings(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
-    """Scale vectors to unit L2 norm (cosine becomes dot product)."""
-    norm = l2_norm(F.col(vec_col))
-    unit = F.transform(F.col(vec_col), lambda x: x.cast("double") / norm)
-    return df.withColumn(vec_col, unit)
 
 
 def cosine_topk_bruteforce(
@@ -234,22 +223,20 @@ def _assign_cells_expr(
     id_col: str,
     include_vec: bool = True,
 ) -> DataFrame:
-    """Expression-tier nearest-centroid assignment — the
-    oracle-replayable form shared by ivf_topk / ivf_pq_topk /
-    write_ivf_layout: candidates x broadcast centroids through the
-    Catalyst cosine expression, argmax as a lexicographic struct-MIN
-    aggregate with map-side partials (r12; the kmeans argmin rewrite):
-    the corpus x n_centroids intermediate collapses to one row per
-    vector BEFORE the exchange, and the former row_number window's
-    corpus-wide sort disappears. The min key is (-sim, cid) with NaN
-    mapped to -infinity so the selection is identical to the old
-    orderBy(desc(sim), cid) row_number — Spark sorts NaN above every
+    """Nearest-centroid assignment shared by ivf_topk / ivf_pq_topk,
+    in a form the oracle replays: candidates x broadcast centroids
+    through the Catalyst cosine expression, argmax as a lexicographic
+    struct-MIN aggregate with map-side partials (r12; the kmeans argmin
+    rewrite): the corpus x n_centroids intermediate collapses to one
+    row per vector BEFORE the exchange, and the former row_number
+    window's corpus-wide sort disappears. The min key is (-sim, cid)
+    with NaN mapped to -infinity so the selection is identical to the
+    old orderBy(desc(sim), cid) row_number — Spark sorts NaN above every
     double, so a NaN sim won under desc and must win under min too
     (cosine is in [-1, 1] or NaN, so -inf cannot collide with a real
     key). cid is unique within a vector's group, so the tie chain
-    never reaches the carried vector payload. The GEMM tier below is
-    the measured 100 TB path (SCALE.md r11: 15.8x at 100k vectors).
-    Returns (vec_id, vec, cell) or (vec_id, cell)."""
+    never reaches the carried vector payload. Returns
+    (vec_id, vec, cell) or (vec_id, cell)."""
     cent = F.broadcast(centroids.select("cid", "cv"))
     neg_key = F.when(
         F.isnan(F.col("sim")), F.lit(float("-inf"))
@@ -285,70 +272,6 @@ def _assign_cells_expr(
     )
 
 
-def _assign_cells_gemm(
-    candidates: DataFrame,
-    centroids: DataFrame,
-    vec_col: str,
-    id_col: str,
-    include_vec: bool = True,
-) -> DataFrame:
-    """Map-side nearest-centroid assignment — the SCALE tier of
-    ivf_topk's coarse quantization. The centroid matrix (codebook-sized
-    by definition: the collect is n_centroids rows, covered by the
-    action lint's driver-sized contract for similarity.py) broadcasts
-    to every candidate partition; each Arrow batch runs ONE dense numpy
-    GEMM (batch x n_centroids) and an argmax — NO shuffle, NO window,
-    NO corpus x n_centroids intermediate. Ties break to the lowest cid
-    (centroid rows are cid-sorted, so argmax's first-hit rule matches
-    the expression tier's orderBy(desc sim, cid)); zero-norm vectors
-    assign to the lowest cid at similarity 0. Returns
-    (vec_id, vec, cell), or (vec_id, cell) with ``include_vec=False``
-    (the IVF-PQ caller only needs the cell — keeping the vector out of
-    the Arrow round-trip halves the boundary bytes)."""
-    import numpy as np
-
-    cent_rows = sorted(
-        centroids.select("cid", "cv").collect(), key=lambda r: r["cid"]
-    )
-    c_ids = np.array([r["cid"] for r in cent_rows], dtype=np.int64)
-    c_mat = np.array([r["cv"] for r in cent_rows], dtype=np.float64)
-    n = np.linalg.norm(c_mat, axis=1, keepdims=True)
-    c_unit = np.divide(c_mat, n, out=np.zeros_like(c_mat), where=n != 0)
-    bc = candidates.sparkSession.sparkContext.broadcast((c_ids, c_unit))
-
-    # derive BOTH column types from the caller's schema (the expr tier
-    # preserves whatever id_col type arrives — a hardcoded bigint here
-    # would crash or silently coerce string/decimal ids only in this
-    # tier, breaking the drop-in equivalence; r11 ADVICE, low)
-    vec_type = candidates.schema[vec_col].dataType.simpleString()
-    id_type = candidates.schema[id_col].dataType.simpleString()
-    if include_vec:
-        out_schema = f"vec_id {id_type}, vec {vec_type}, cell bigint"
-    else:
-        out_schema = f"vec_id {id_type}, cell bigint"
-
-    def assign_batches(pdfs):
-        import pandas as pd
-
-        ids, unit = bc.value
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            mat = np.array(list(pdf["vec"]), dtype=np.float64)
-            nn = np.linalg.norm(mat, axis=1, keepdims=True)
-            vu = np.divide(mat, nn, out=np.zeros_like(mat), where=nn != 0)
-            best = np.argmax(vu @ unit.T, axis=1)
-            out = {"vec_id": pdf["vec_id"]}
-            if include_vec:
-                out["vec"] = pdf["vec"]
-            out["cell"] = ids[best]
-            yield pd.DataFrame(out)
-
-    return candidates.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
-    ).mapInPandas(on_worker(assign_batches), schema=out_schema)
-
-
 def ivf_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -357,45 +280,23 @@ def ivf_topk(
     n_probe: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    centroids: DataFrame | None = None,
-    assign: str = "expr",
 ) -> DataFrame:
     """IVF-flat approximate top-k: candidates are pre-assigned to the
     cell of their nearest coarse centroid (one broadcast pass, linear);
     each query scores only the ``n_probe`` cells nearest to it.
 
-    The default coarse quantizer is DETERMINISTIC — the ``n_centroids``
-    lowest-id candidate vectors — so the oracle can replay it. Pass
-    ``centroids`` (columns: cid, cv float-array) to use a TRAINED
-    codebook instead — e.g. kmeans_lloyd's output dequantized — with
-    everything downstream identical (composition asserted in
-    test_extensions.test_ivf_with_trained_centroids). At 100 TB the
-    assignment pass writes (cell) as a partition column so probes
-    become partition-pruned scans.
-
-    ``assign`` picks the quantization tier. ``"expr"`` (default — the
-    registered oracle query's replayable form) scores candidates x
-    centroids through the Catalyst cosine expression and argmins via a
-    per-vector window: a corpus x n_centroids intermediate plus a
-    corpus-sized shuffle — fine at oracle scale, the measured
-    bottleneck at 100k+ vectors (r10 probe: 68-82 s of the IVF wall).
-    ``"gemm"`` (the SCALE tier) replaces that pass with
-    :func:`_assign_cells_gemm`: map-side numpy argmax against the
-    broadcast codebook — no shuffle, no window, no blown-up
-    intermediate; assignment ties and results pinned identical to the
-    expression tier on non-degenerate (non-zero-norm, tie-free) inputs
-    by tests/test_round11.test_ivf_gemm_assignment_matches_expression.
-    Everything downstream (probe selection, cell join, final window)
-    is identical."""
-    if centroids is None:
-        centroids = candidates.where(F.col(id_col) < n_centroids).select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-        )
+    The coarse quantizer is DETERMINISTIC — the ``n_centroids``
+    lowest-id candidate vectors — so the oracle can replay it. The
+    assignment is :func:`_assign_cells_expr` (candidates x centroids
+    through the Catalyst cosine expression, struct-MIN argmax with
+    map-side partials, so no assignment window and no corpus-sized
+    sort; plan-pinned by
+    tests/test_round11.test_ivf_assignment_plan_has_no_assignment_window)."""
+    centroids = candidates.where(F.col(id_col) < n_centroids).select(
+        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
+    )
     cent = F.broadcast(centroids.select("cid", "cv"))
-    if assign == "gemm":
-        assign_df = _assign_cells_gemm(candidates, centroids, vec_col, id_col)
-    else:
-        assign_df = _assign_cells_expr(candidates, centroids, vec_col, id_col)
+    assign_df = _assign_cells_expr(candidates, centroids, vec_col, id_col)
     w_probe = Window.partitionBy("query_id").orderBy(F.desc("sim"), "cid")
     probes = (
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
@@ -428,49 +329,16 @@ def ivf_topk(
     )
 
 
-def write_ivf_layout(
-    candidates: DataFrame,
-    path: str,
-    n_centroids: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroids: DataFrame | None = None,
-    assign: str = "gemm",
-) -> None:
-    """Materialize the IVF layout the ivf_topk docstring promises at
-    100 TB: the corpus written ONCE partitioned by its coarse cell
-    (``<path>/corpus``, parquet partition column ``cell``) plus the
-    codebook (``<path>/centroids``), so every subsequent probe is a
-    PARTITION-PRUNED scan — n_probe/n_centroids of the corpus bytes
-    read per query batch, enforced by the planner rather than by a
-    filter over a full scan (plan-pinned: PartitionFilters in
-    tests/test_round11.py). Assignment defaults to the map-side GEMM
-    tier (one linear pass, no shuffle beyond the write's own
-    partitioning); ``assign='expr'`` keeps the oracle-replayable
-    expression form. Same deterministic default quantizer as ivf_topk."""
-    if centroids is None:
-        centroids = candidates.where(F.col(id_col) < n_centroids).select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-        )
-    if assign == "gemm":
-        assigned = _assign_cells_gemm(candidates, centroids, vec_col, id_col)
-    else:
-        assigned = _assign_cells_expr(candidates, centroids, vec_col, id_col)
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        f"{path}/corpus"
-    )
-    centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-
-
 _PAIR_SCHEMA = "vec_a bigint, vec_b bigint, cosine double"
 
 
-# Headroom bound for the exact-integer GEMM tiers: every intermediate
-# (dot product, squared norm, distance combination) must stay under
-# 2^62 so the int64 matmul cannot wrap. numpy int64 overflow wraps
-# SILENTLY where the Spark ANSI bigint expression tier would raise —
-# the tiers' bit-identity contract therefore requires checking the
-# bound, not documenting it (r11 ADVICE, medium).
+# Headroom bound for the exact-integer GEMM tier (semdedup
+# pair_mode='gemm'): every intermediate (dot product, squared norm,
+# distance combination) must stay under 2^62 so the int64 matmul cannot
+# wrap. numpy int64 overflow wraps SILENTLY where the Spark ANSI bigint
+# expression tier would raise — the tier's bit-identity contract
+# therefore requires checking the bound, not documenting it (r11
+# ADVICE, medium).
 _INT64_GEMM_HEADROOM = 2**62
 
 
@@ -492,7 +360,7 @@ def _check_int64_gemm_bound(
             f"max|component|={max(max_abs_a, max_abs_b)} gives "
             f"intermediate bound {bound} >= 2^62. Reduce the "
             "quantization scale or use the expression tier "
-            "(assign_mode/pair_mode='expr'), which computes in "
+            "(semdedup pair_mode='expr'), which computes in "
             "arbitrary-precision decimal and errors loudly under "
             "ANSI mode instead of wrapping."
         )
@@ -540,8 +408,7 @@ def embedding_near_dup_pairs(
     Exactness: a pair lands in exactly one group — (block_a, block_b)
     sorted — so no dedup pass is needed and the output matches the
     naive all-pairs join row for row. The O(n²) flops are inherent to
-    the exact tier; for the approximate/cheap tier over billions of
-    docs use ``embedding_near_dup_pairs_lsh``."""
+    the exact tier."""
     import numpy as np
 
     block = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
@@ -585,41 +452,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def embedding_near_dup_pairs_lsh(
-    df: DataFrame,
-    threshold: float = 0.8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate near-dup pairs: candidates only from the same
-    random-hyperplane bucket, dense GEMM within each bucket — the
-    100 TB tier. Recall for a pair at angle θ is (1 - θ/π)^n_planes,
-    so this fits HIGH thresholds (true near-dups, cosine ≳ 0.8);
-    a 0.4-threshold sweep belongs to the exact block-pair tier.
-    Each pair appears in at most one bucket (full-signature equality),
-    so output needs no dedup and is a deterministic subset of the
-    exact result."""
-    import numpy as np
-
-    bucketed = lsh_bucket_signatures(df, vec_col, id_col, n_planes, seed, dim)
-
-    def gemm_bucket(pdf):
-        import pandas as pd
-
-        if len(pdf) < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf["vec"]), dtype=np.float64)
-        return _gemm_pairs(ids, mat, ids, mat, threshold, same=True)
-
-    return bucketed.groupBy("bucket").applyInPandas(
-        on_worker(gemm_bucket), schema=_PAIR_SCHEMA
-    )
-
-
 def kmeans_lloyd(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -627,29 +459,12 @@ def kmeans_lloyd(
     k: int = 4,
     iters: int = 3,
     scale: int = 1_000_000,
-    assign_mode: str = "expr",
 ) -> tuple[DataFrame, DataFrame]:
     """Deterministic Lloyd k-means over an embedding column — the
     clustering tier of semantic dedup / corpus curation (cluster, then
     sample or drop per cluster). Returns ``(assignment, centroids)``:
     ``assignment`` is (id, cluster) under the FINAL centroids;
     ``centroids`` is (cluster, centroid) as a quantized int array.
-
-    ``assign_mode`` picks the per-iteration assignment tier.
-    ``"expr"`` (default — the registered oracle query's replayable
-    form) scores points x centroids through the Catalyst
-    zip_with/aggregate distance and argmins via a per-point window: a
-    points x k intermediate plus a point-table-sized shuffle per
-    iteration. ``"gemm"`` collects the k centroids each iteration
-    (model-sized by definition — the classic driver-resident-model
-    kmeans loop; action-lint contract) and assigns map-side per Arrow
-    batch: |x|^2 - 2x.c + |c|^2 via ONE int64 matmul — every quantity
-    an exact integer (64-dim dots of scale-quantized components sit
-    far under 2^63), argmin first-hit on the cluster-sorted codebook
-    = the min-cluster-id tie rule — so assignments, centroid updates,
-    and the final output are BIT-IDENTICAL to the expression tier
-    (pinned by tests/test_round11.py), with no shuffle, no window,
-    and no points x k blow-up.
 
     Engine-portable by construction: vectors are quantized to int64 at
     ``scale`` (ROUND(x * scale) — identical IEEE double multiply +
@@ -695,7 +510,7 @@ def kmeans_lloyd(
         lambda acc, x: acc + x,
     )
 
-    def _assign_expr(cents: DataFrame) -> DataFrame:
+    def _assign(cents: DataFrame) -> DataFrame:
         # argmin as MIN(struct(_d, cluster, _q)) — struct comparison is
         # lexicographic, so the winner is the (min distance, min
         # cluster-id) row: byte-identical to the former row_number()
@@ -715,59 +530,6 @@ def kmeans_lloyd(
                 F.col("_m.cluster").alias("cluster"),
             )
         )
-
-    # the gemm tier must be a drop-in for the expr tier, which
-    # preserves the caller's id type — derive it rather than hardcode
-    # bigint (r11 ADVICE, low); seeding already requires a numeric id
-    # (`_pid < k`), so any Spark integral/floating id type round-trips
-    # Arrow unchanged.
-    pid_type = df.schema[id_col].dataType.simpleString()
-
-    def _assign_gemm(cents: DataFrame) -> DataFrame:
-        import numpy as np
-
-        rows = sorted(
-            cents.select("cluster", "_cq").collect(), key=lambda r: r["cluster"]
-        )
-        c_ids = np.array([r["cluster"] for r in rows], dtype=np.int64)
-        c_mat = np.array([r["_cq"] for r in rows], dtype=np.int64)
-        c_max = int(np.abs(c_mat).max()) if c_mat.size else 0
-        c_n2 = (c_mat * c_mat).sum(axis=1)
-        bc = df.sparkSession.sparkContext.broadcast((c_ids, c_mat, c_n2, c_max))
-
-        def go(pdfs):
-            import pandas as pd
-
-            ids, cmat, cn2, cmax = bc.value
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                mat = np.array(list(pdf["_q"]), dtype=np.int64)
-                _check_int64_gemm_bound(
-                    int(np.abs(mat).max()) if mat.size else 0,
-                    cmax,
-                    mat.shape[1] if mat.ndim == 2 else 0,
-                    "kmeans_lloyd(assign_mode='gemm')",
-                )
-                xn2 = (mat * mat).sum(axis=1)
-                d = xn2[:, None] - 2 * (mat @ cmat.T) + cn2[None, :]
-                best = np.argmin(d, axis=1)  # first-hit = min cluster id
-                yield pd.DataFrame(
-                    {
-                        "_pid": pdf["_pid"],
-                        "_q": pdf["_q"],
-                        "cluster": ids[best],
-                    }
-                )
-
-        # cluster ids are seed point ids, so they carry pid_type in the
-        # expr tier too — declare the same type for drop-in parity
-        return pts.mapInPandas(
-            on_worker(go),
-            schema=f"_pid {pid_type}, _q array<bigint>, cluster {pid_type}",
-        )
-
-    _assign = _assign_gemm if assign_mode == "gemm" else _assign_expr
 
     for _ in range(iters):
         assign = _assign(cents)
@@ -827,9 +589,8 @@ def _semdedup_prune_gemm(
     dropped point per cluster.
 
     ``max_gemm_cluster_rows`` is the enforced skew guard (r11 ADVICE,
-    low — mirroring bpe_train_local's max_table_rows contract): a
-    cluster larger than the bound would build an n^2 int64 dot matrix
-    inside ONE task (20k rows -> 3.2 GB); instead of OOM-ing that
+    low): a cluster larger than the bound would build an n^2 int64 dot
+    matrix inside ONE task (20k rows -> 3.2 GB); instead of OOM-ing that
     executor the group raises with the cap to set. The expression
     tier degrades to a large-but-distributed join for such clusters —
     use it (pair_mode='expr') or pass semdedup(max_cluster_size=...)
@@ -896,7 +657,6 @@ def semdedup(
     scale: int = 1_000_000,
     max_cluster_size: int | None = None,
     pair_mode: str = "expr",
-    assign_mode: str = "expr",
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023): cluster the
     embedding space with :func:`kmeans_lloyd`, then prune near-
@@ -925,10 +685,6 @@ def semdedup(
     dot matrix that would OOM one executor, and components large
     enough to overflow the int64 dots raise via
     ``_check_int64_gemm_bound`` instead of silently wrapping.
-    ``assign_mode`` forwards to kmeans_lloyd the same way (its "gemm"
-    tier is integer-exact too, so ("gemm", "gemm") is still
-    bit-identical to the oracle form end-to-end — the full scale
-    configuration).
 
     Exact integer arithmetic throughout, so the DuckDB oracle
     hash-matches: vectors int64-quantized at ``scale``; the cosine
@@ -952,7 +708,6 @@ def semdedup(
         k=k,
         iters=iters,
         scale=scale,
-        assign_mode=assign_mode,
     )
     # pts feeds both sides of the self-join plus the final output join;
     # no lineage cut here — the exchange is identical on both join
@@ -1048,9 +803,8 @@ def pq_codebook(
     """Deterministic product-quantization codebook: subspace ``s``'s
     ``k`` centroids are the k lowest-id vectors' s-th dim/m-slices,
     int64-quantized. Returns (sub, cid, cq array<bigint>). Like
-    ivf_topk's coarse quantizer, the deterministic default exists so
-    the oracle can replay it; pass pq_train's output for a trained
-    codebook with everything downstream identical."""
+    ivf_topk's coarse quantizer, it is deterministic so the oracle can
+    replay it."""
     d_sub = dim // m
     q = _quantized(vec_col, scale)
     slices = F.array(
@@ -1067,81 +821,6 @@ def pq_codebook(
         .select(F.col(id_col).alias("cid"), F.explode(slices).alias("x"))
         .select("x.sub", "cid", "x.cq")
     )
-
-
-def pq_train(
-    candidates: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Per-subspace Lloyd refinement of pq_codebook — ALL m subspaces
-    train in one pass per iteration: the (point, sub) slice stream is
-    built once, each round broadcasts the m*k centroid rows into a
-    map-side argmin (no shuffle of the points), and the update is one
-    (sub, cid, pos)-keyed aggregate. Same int64-quantized exact
-    arithmetic as kmeans_lloyd (argmin ties break on cid, centroid
-    update is FLOOR(sum/count)); lineage cut per round."""
-    d_sub = dim // m
-    q = _quantized(vec_col, scale)
-    slices = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice(q, s * d_sub + 1, d_sub).alias("sq"),
-            )
-            for s in range(m)
-        ]
-    )
-    pts = (
-        candidates.select(
-            F.col(id_col).alias("_pid"), F.explode(slices).alias("x")
-        )
-        .select("_pid", "x.sub", "x.sq")
-        .localCheckpoint(eager=False)
-    )
-    cents = pq_codebook(candidates, m, k, vec_col, id_col, dim, scale)
-    dist = F.aggregate(
-        F.zip_with("sq", "cq", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    for _ in range(iters):
-        # argmin as struct-MIN (r12, same as pq_encode): exact int64
-        # distances, cid unique per (point, sub) group so the carried
-        # sq slice is never compared
-        assign = (
-            pts.join(F.broadcast(cents), "sub")
-            .select("_pid", "sub", "sq", "cid", dist.alias("_d"))
-            .groupBy("_pid", "sub")
-            .agg(F.min(F.struct("_d", "cid", "sq")).alias("_m"))
-            .select(
-                "_pid", "sub",
-                F.col("_m.sq").alias("sq"), F.col("_m.cid").alias("cid"),
-            )
-        )
-        cents = (
-            assign.select("sub", "cid", F.posexplode("sq").alias("_pos", "_v"))
-            .groupBy("sub", "cid", "_pos")
-            .agg(
-                F.floor(F.sum("_v").cast("double") / F.count("*")).alias("_m")
-            )
-            .groupBy("sub", "cid")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("_pos", "_m"))).alias(
-                    "_s"
-                )
-            )
-            .select(
-                "sub", "cid", F.transform("_s", lambda s: s["_m"]).alias("cq")
-            )
-            .localCheckpoint(eager=False)
-        )
-    return cents
 
 
 def pq_encode(
@@ -1299,8 +978,6 @@ def ivf_pq_topk(
     id_col: str = "vec_id",
     dim: int = 64,
     scale: int = 1_000_000,
-    codebook: DataFrame | None = None,
-    assign: str = "expr",
 ) -> DataFrame:
     """IVF+PQ — the full production ANN composition: the coarse
     quantizer prunes the candidate set to the query's n_probe cells
@@ -1311,29 +988,16 @@ def ivf_pq_topk(
     only corpus bytes the scan touches, and the per-candidate work is
     m array lookups — the FAISS IVFADC layout expressed as DataFrame
     ops. Returns (query_id, rank, vec_id, dist2), dist2 the exact
-    quantized ADC distance.
-
-    ``assign`` mirrors ivf_topk: ``"expr"`` (default, oracle-replayable)
-    runs the corpus x centroids cosine expression + per-vector window;
-    ``"gemm"`` swaps that pass for the map-side numpy argmax
-    (:func:`_assign_cells_gemm`, cell only — the vector stays out of
-    the Arrow round-trip), results pinned identical by
-    tests/test_round11.py."""
-    if codebook is None:
-        codebook = pq_codebook(candidates, m, n_cent, vec_col, id_col, dim, scale)
+    quantized ADC distance."""
+    codebook = pq_codebook(candidates, m, n_cent, vec_col, id_col, dim, scale)
     codes = pq_encode(candidates, codebook, m, vec_col, id_col, dim, scale)
     centroids = candidates.where(F.col(id_col) < n_centroids).select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
     )
     cent = F.broadcast(centroids)
-    if assign == "gemm":
-        assign_df = _assign_cells_gemm(
-            candidates, centroids, vec_col, id_col, include_vec=False
-        )
-    else:
-        assign_df = _assign_cells_expr(
-            candidates, centroids, vec_col, id_col, include_vec=False
-        )
+    assign_df = _assign_cells_expr(
+        candidates, centroids, vec_col, id_col, include_vec=False
+    )
     w_probe = Window.partitionBy("query_id").orderBy(F.desc("sim"), "cid")
     probes = (
         queries.select(
@@ -1506,8 +1170,7 @@ def embedding_cross_matches(
     block pair is one independent dense-GEMM task: O(|A|·Bb + |B|·Ba)
     rows shuffled, no driver materialization, no cartesian node.
     Size the block counts so each side of a task stays executor-sized;
-    the O(|A|·|B|) flops are inherent to the exact tier — the scale
-    tier is embedding_cross_matches_lsh."""
+    the O(|A|·|B|) flops are inherent to the exact tier."""
     import numpy as np
 
     def tagged(df, n_own, n_other, side):
@@ -1550,62 +1213,12 @@ def embedding_cross_matches(
     )
 
 
-def embedding_cross_matches_lsh(
-    a: DataFrame,
-    b: DataFrame,
-    threshold: float = 0.8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate cross-corpus matches: BOTH corpora bucket under the
-    SAME fixed hyperplanes (identical seed — the property that makes
-    the bucket join meaningful), candidates only from equal buckets,
-    dense A x B GEMM within each. Each cross pair can collide in at
-    most one bucket (full-signature equality), so the output is a
-    deterministic subset of the exact tier with recall
-    (1 - θ/π)^n_planes — the high-threshold decontamination regime.
-    Shuffle volume is one bucket-keyed exchange per side; no
-    replication at all, the reason this is the 100 TB tier."""
-    import numpy as np
-
-    ba = lsh_bucket_signatures(a, vec_col, id_col, n_planes, seed, dim)
-    bb = lsh_bucket_signatures(b, vec_col, id_col, n_planes, seed, dim)
-    both = ba.select(
-        "bucket", F.lit("a").alias("_side"), "vec_id", "vec"
-    ).unionByName(
-        bb.select("bucket", F.lit("b").alias("_side"), "vec_id", "vec")
-    )
-
-    def gemm_bucket(pdf):
-        import pandas as pd
-
-        pa = pdf[pdf["_side"] == "a"]
-        pb = pdf[pdf["_side"] == "b"]
-        if not len(pa) or not len(pb):
-            return pd.DataFrame({"a_id": [], "b_id": [], "cosine": []})
-        return _gemm_cross(
-            pa["vec_id"].to_numpy(dtype=np.int64),
-            np.array(list(pa["vec"]), dtype=np.float64),
-            pb["vec_id"].to_numpy(dtype=np.int64),
-            np.array(list(pb["vec"]), dtype=np.float64),
-            threshold,
-        )
-
-    return both.groupBy("bucket").applyInPandas(
-        on_worker(gemm_bucket), schema=_CROSS_SCHEMA
-    )
-
-
 def semantic_decontaminate(
     train: DataFrame,
     evalset: DataFrame,
     threshold: float = 0.8,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    exact: bool = False,
     **kwargs,
 ) -> DataFrame:
     """Drop training rows whose embedding matches ANY eval-set row at
@@ -1615,13 +1228,13 @@ def semantic_decontaminate(
     that shares no n-grams only shows up here). Returns the retained
     train relation, original schema.
 
-    ``exact=False`` (default) uses the LSH-bucketed matcher — at
-    decontamination thresholds (>= 0.8) its per-pair recall is the
-    (1 - θ/π)^n_planes LSH bound; ``exact=True`` pays the block-pair
-    GEMM for a guarantee. The flagged-id relation is tiny (bounded by
-    |train|); the final filter is one left-anti join that AQE
-    broadcasts in the common small-eval case."""
-    matcher = embedding_cross_matches if exact else embedding_cross_matches_lsh
-    matches = matcher(train, evalset, threshold, vec_col, id_col, **kwargs)
+    Matching is the exact block-pair GEMM of
+    :func:`embedding_cross_matches` (``kwargs`` go to it). The
+    flagged-id relation is tiny (bounded by |train|); the final filter
+    is one left-anti join that AQE broadcasts in the common small-eval
+    case."""
+    matches = embedding_cross_matches(
+        train, evalset, threshold, vec_col, id_col, **kwargs
+    )
     flagged = matches.select(F.col("a_id").alias(id_col)).distinct()
     return train.join(flagged, id_col, "left_anti")

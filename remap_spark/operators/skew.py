@@ -10,10 +10,6 @@ cover the AGGREGATION case and pre-planned join salting:
   bucket partials. Exact for any algebraic aggregate (same contract as
   the reference's combiner, /root/reference/daemons/core/remap.py:136-144:
   partial application must be idempotent/algebraic).
-- ``replicate_salt_join``: explode the small side ``buckets`` times so
-  a salted big side still matches every row (the classic skew-join
-  recipe when the small side is too big to broadcast but small enough
-  to replicate).
 
 Salt derivation is DETERMINISTIC (hash of a row-unique column, not
 rand()) so retried tasks re-derive identical salts — rand() salting
@@ -62,52 +58,6 @@ def salted_agg(
     return phase1.groupBy(*keys).agg(
         *[c.alias(a) for a, c in final_aggs.items()]
     )
-
-
-def replicate_salt_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: Sequence[str],
-    how: str = "inner",
-    salt_from: str | None = None,
-    buckets: int = 8,
-) -> DataFrame:
-    """Skew join without broadcast: salt the big side, replicate the
-    small side ``buckets``x, join on (keys + salt). Shuffle volume for
-    the small side grows ``buckets``x; the big side's hot keys spread
-    over ``buckets`` tasks. Prefer F.broadcast when the small side
-    fits; prefer AQE skew-split when skew is only occasional.
-
-    Only join types where the SMALL side never surfaces unmatched rows
-    are supported: an unmatched small-side row exists ``buckets`` times
-    after the explode, so right/full outer would emit ``buckets``
-    null-extended copies of it instead of one."""
-    supported = {
-        "inner", "cross",
-        "left", "leftouter", "left_outer",
-        "semi", "leftsemi", "left_semi",
-        "anti", "leftanti", "left_anti",
-    }
-    if how.lower() not in supported:
-        raise ValueError(
-            f"replicate_salt_join does not support how={how!r}: the "
-            "replicated small side would duplicate unmatched rows "
-            f"{buckets}x under a right/full outer join"
-        )
-    on = list(on)
-    if salt_from is None:
-        # salt must vary WITHIN a join key (salting by the key itself
-        # would put the whole hot key in one bucket again) — default to
-        # a hash over the entire row
-        salt = F.pmod(F.xxhash64(*big.columns), F.lit(buckets)).cast("int")
-    else:
-        salt = salt_column(salt_from, buckets)
-    big_s = big.withColumn("_salt", salt)
-    small_s = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(buckets)]))
-    )
-    out = big_s.join(small_s, [*on, "_salt"], how)
-    return out.drop("_salt")
 
 
 def key_skew_report(

@@ -185,13 +185,7 @@ def temperature_weights(
     Shape: one tiny aggregate keyed by the group, then two single-row
     broadcast crossJoins for the normalizing constants — never a
     driver action, and the group relation is #groups-sized regardless
-    of corpus size.
-
-    Plan-only on streaming input: the result is a streaming DataFrame,
-    but its two aggregates meet in a stream-stream crossJoin, so
-    ``writeStream...start()`` raises ``AnalysisException`` in every
-    output mode. Inside ``foreachBatch`` it runs, over each micro-batch
-    alone."""
+    of corpus size."""
     g = F.col(group_col) if isinstance(group_col, str) else group_col
     s = F.col(size_col) if isinstance(size_col, str) else size_col
     # one lazy cut makes the docstring's "one tiny aggregate" claim
@@ -199,12 +193,11 @@ def temperature_weights(
     # wsum + the final projection — without it Catalyst re-planned the
     # corpus aggregate under each consumer (4 corpus scans in the r12
     # plan audit); the materialized relation is #groups-sized
-    sizes = df.groupBy(g.alias("grp")).agg(F.sum(s).alias("mass"))
-    if not df.isStreaming:
-        # localCheckpoint is unsupported on streaming DataFrames and
-        # pins non-replicated executor-local blocks (r12 advice) —
-        # batch callers get the cut, streaming callers keep lineage
-        sizes = sizes.localCheckpoint(eager=False)
+    sizes = (
+        df.groupBy(g.alias("grp"))
+        .agg(F.sum(s).alias("mass"))
+        .localCheckpoint(eager=False)
+    )
     tot = sizes.agg(F.sum("mass").alias("_tot"))
     scaled = sizes.crossJoin(F.broadcast(tot)).withColumn(
         "_w", F.pow(F.col("mass").cast("double") / F.col("_tot"), F.lit(alpha))

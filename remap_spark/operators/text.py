@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from ..engine import local_frame
 from ..functions import PUNCT, lineage_cut, portable_hash60, tokenize
-from ..worker import on_worker
 
 # deliberately small, fixed marker lists — the heuristic is the
 # operator; the lists are config
@@ -38,12 +37,9 @@ def _parallel(df: DataFrame) -> DataFrame:
     through untouched — the round-robin shuffle would be pure waste.
     getNumPartitions is planning metadata, not a job.
 
-    Streaming inputs pass through untouched: micro-batch parallelism is
-    the source's (maxFilesPerTrigger × splits), and .rdd does not exist
-    on an unstarted streaming DataFrame — the same text operators plan
-    on streams (see test_round13's test_streaming_input_plans)."""
-    if df.isStreaming:
-        return df
+    Batch only: on a streaming DataFrame ``.rdd`` raises
+    ``AnalysisException`` (pinned by test_round13's
+    test_streaming_input_raises)."""
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if df.rdd.getNumPartitions() >= n:
         return df
@@ -378,7 +374,7 @@ def bpe_pair_stats(
     symbol-pair frequencies over the corpus WORD-FREQUENCY table, each
     word's characters plus a terminal '</w>' marker, weighted by word
     frequency. The top pair is the first merge rule a BPE tokenizer
-    learns; bpe_train iterates this.
+    learns.
 
     Scale shape: BPE never touches the corpus after the word-frequency
     aggregate — the symbol table is VOCABULARY-sized. One corpus-keyed
@@ -413,275 +409,6 @@ def bpe_pair_stats(
         .limit(top_n)
         .select(rank.cast("bigint").alias("rnk"), "pair", "cnt")
     )
-
-
-def bpe_train(
-    df: DataFrame, text_col: str = "text", n_merges: int = 10,
-    batch_limit: int = 64, _stats: dict | None = None,
-    mode: str = "auto", max_table_rows: int = 5_000_000,
-) -> list[tuple[str, str]]:
-    """Greedy BPE merge learning. ``mode`` picks the merge-loop tier:
-
-    - ``"auto"`` (default): ONE distributed corpus pass builds the
-      word-frequency table; if it fits ``max_table_rows`` (it does for
-      every real tokenizer-training corpus — the table is VOCAB-sized,
-      not corpus-sized), the inherently sequential merge loop runs
-      in-process on the collected table (identical greedy order,
-      measured 7-10x faster than the distributed loop on Zipf corpora
-      — SCALE.md r11: the exact-tie batch path almost never fires on
-      realistic word distributions, so the distributed loop degrades
-      to ~1 merge/pass of scheduling floor). Oversized tables fall
-      through to the distributed loop on the SAME word-frequency
-      relation (no second corpus pass).
-    - ``"local"``: delegate unconditionally; raise if the table
-      exceeds ``max_table_rows`` (:func:`bpe_train_local`'s contract).
-    - ``"distributed"``: the batched distributed loop below — the
-      oracle/replay tier, and the only tier whose per-pass costs
-      ``_stats`` records.
-
-    Distributed tier: after the word-frequency aggregate every round
-    works on the vocabulary-sized symbol table — pair-count aggregate,
-    a BATCH of merge rules picked driver-side, then all of them
-    applied across the word table in ONE Arrow-batched mapInPandas
-    pass (per-word left-to-right walk — the correct Python boundary,
-    since the table is vocab-sized, never corpus-sized). Returns the
-    learned merge rules in order.
-
-    Batched-yet-EXACT greedy: a pass accepts a CONTIGUOUS prefix of
-    the top-count run in (cnt DESC, a, b) order, stopping at the first
-    symbol conflict, count drop, or left-extension hazard. Exactness
-    argument, per candidate pj given accepted p1..pk: applying an
-    accepted merge (a,b)->ab only (1) decreases counts of pairs
-    sharing its symbols — those stop the walk if they sort before pj;
-    (2) creates RIGHT-extension pairs (x, ab), whose same-count
-    witness (x, a) conflicts via ``a`` and satisfies
-    (x, a) < (x, ab), so pj accepted before the witness implies
-    pj < new pair; and (3) creates LEFT-extension pairs (ab, y),
-    whose merged first component ab may sort BEFORE pj.a — the hazard
-    check: for every accepted (a,b), if ab <= pj.a, the walk stops
-    unless the full top-count run is visible and contains no witness
-    pair (b, y) with (ab, y) <= pj (no witness at top count means no
-    left-extension can reach the top count). A production 32k-merge
-    vocab over a tie-rich corpus therefore needs k-fold fewer driver
-    round-trips while emitting the exact sequential rule order; a
-    tie-free corpus degrades gracefully to one merge per pass.
-
-    Validated against the canonical low/lower/newest/widest example
-    (Sennrich et al. 2016 §3.2) and a batching-specific fixture in
-    tests."""
-    if mode not in ("auto", "local", "distributed"):
-        raise ValueError(f"bpe_train: unknown mode {mode!r}")
-    wf = (
-        df.select(F.explode(tokenize(F.col(text_col))).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
-    )
-    if mode in ("auto", "local"):
-        rows = wf.limit(max_table_rows + 1).collect()
-        if len(rows) <= max_table_rows:
-            if _stats is not None:
-                _stats["delegated"] = True
-            return _bpe_merge_loop(
-                [(r["freq"], tuple(r["word"]) + ("</w>",)) for r in rows],
-                n_merges,
-            )
-        if mode == "local":
-            raise ValueError(
-                f"bpe_train(mode='local'): word-frequency table exceeds "
-                f"max_table_rows={max_table_rows}; raise the cap or use "
-                f"mode='auto'/'distributed'"
-            )
-        # auto + oversized vocab: run the distributed loop on the SAME
-        # word-frequency relation (no second corpus pass)
-    syms_col = F.concat(
-        F.transform(
-            F.sequence(F.lit(1), F.length("word")),
-            lambda i: F.col("word").substr(i, F.lit(1)),
-        ),
-        F.array(F.lit("</w>")),
-    )
-    table = wf.select("freq", syms_col.alias("syms")).localCheckpoint(eager=True)
-    merges: list[tuple[str, str]] = []
-    if _stats is not None:
-        _stats["passes"] = 0
-    while len(merges) < n_merges:
-        if _stats is not None:
-            _stats["passes"] += 1
-        pair_arr = F.transform(
-            F.sequence(F.lit(0), F.size("syms") - 2),
-            lambda i: F.struct(
-                F.element_at("syms", i + 1).alias("a"),
-                F.element_at("syms", i + 2).alias("b"),
-            ),
-        )
-        counts = (
-            table.where(F.size("syms") >= 2)
-            .select("freq", F.explode(pair_arr).alias("p"))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        top_rows = (
-            counts.orderBy(F.col("cnt").desc(), "a", "b")
-            .limit(batch_limit)
-            .collect()
-        )
-        if not top_rows or top_rows[0]["cnt"] < 2:
-            break
-        top_cnt = top_rows[0]["cnt"]
-        # the run is fully visible iff the fetch extends past it (or
-        # the whole pair universe fit inside the fetch)
-        run_complete = (
-            top_rows[-1]["cnt"] < top_cnt or len(top_rows) < batch_limit
-        )
-        top_run = [
-            (r["a"], r["b"]) for r in top_rows if r["cnt"] == top_cnt
-        ]
-        # strings every prior rule (and this batch) produced: if a
-        # candidate's merged string m COLLIDES with one, symbol m may
-        # already exist in the table, and applying the candidate then
-        # BOOSTS pre-existing (x, m)/(m, y) pair counts — potentially
-        # above top_cnt, where the new-pair hazard analysis below (which
-        # bounds NEW pairs at <= top_cnt) does not apply. Strict BPE
-        # character dynamics make the collision hard to reach (two
-        # routes to the same string need disjoint surviving contexts),
-        # but the guard is one set lookup: accept the colliding rule,
-        # then end the pass so the next aggregate sees boosted counts.
-        produced = {x + y for x, y in merges}
-        batch: list[tuple[str, str]] = []
-        used: set[str] = set()
-        for a, b in top_run:
-            if len(merges) + len(batch) >= n_merges:
-                break
-            if a in used or b in used:
-                break  # stop, don't skip: contiguity is the exactness proof
-            hazard = False
-            for ma, mb in batch:
-                m = ma + mb
-                if m > a:
-                    continue  # any (m, y) sorts after (a, b)
-                if not run_complete or any(
-                    qa == mb and (m, qb) <= (a, b) for qa, qb in top_run
-                ):
-                    hazard = True
-                    break
-            if hazard:
-                break
-            batch.append((a, b))
-            used.update((a, b))
-            if a + b in produced:
-                break  # symbol-string collision: see comment above
-            produced.add(a + b)
-        merges.extend(batch)
-
-        def apply_merges(batches, _rules=dict(((a, b), a + b) for a, b in batch)):
-            import pandas as pd
-
-            for pdf in batches:
-                out = []
-                for syms in pdf["syms"]:
-                    res, i = [], 0
-                    while i < len(syms):
-                        if (
-                            i + 1 < len(syms)
-                            and (syms[i], syms[i + 1]) in _rules
-                        ):
-                            res.append(_rules[(syms[i], syms[i + 1])])
-                            i += 2
-                        else:
-                            res.append(syms[i])
-                            i += 1
-                    out.append(res)
-                yield pd.DataFrame({"freq": pdf["freq"], "syms": out})
-
-        table = table.mapInPandas(
-            on_worker(apply_merges), schema="freq bigint, syms array<string>"
-        ).localCheckpoint(eager=True)
-    return merges
-
-
-def bpe_train_local(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 10,
-    max_table_rows: int = 5_000_000,
-) -> list[tuple[str, str]]:
-    """Driver-side merge-loop tier of :func:`bpe_train` — the SCALE
-    path for realistic vocabularies. The r11 probe (SCALE.md: 1M docs,
-    30k distinct words, 500 merges) measured the distributed loop at
-    424.8 s (498 driver passes — the exact-tie batch path almost never
-    fires on a Zipf corpus, so it degrades to ~1 merge/pass of pure
-    per-pass scheduling) against 58.6 s for the IDENTICAL sequential
-    loop run in-process: 7.2x. The asymmetry is structural: BPE's
-    merge loop iterates a table that is VOCAB-sized (distinct words),
-    not corpus-sized — after the ONE distributed pass that matters
-    (the word-frequency aggregate over the 100 TB corpus), the right
-    place for an inherently sequential loop over a few-MB table is a
-    single process, not 500 distributed jobs. Greedy order, tie
-    breaking (cnt DESC, then (a, b) ascending), and the learned rule
-    sequence are identical to bpe_train by construction (probe: 500/500
-    merges equal; pinned by tests/test_round11.py on the tie-rich
-    batching fixture).
-
-    ``max_table_rows`` guards the collect (the action-lint contract:
-    the word-frequency relation is vocabulary-sized by BPE's word
-    model — GPT-2-scale training collects exactly this table — but a
-    caller feeding byte-garbage could blow it up; raise rather than
-    OOM the driver)."""
-    wf = (
-        df.select(F.explode(tokenize(F.col(text_col))).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
-    )
-    rows = wf.limit(max_table_rows + 1).collect()
-    if len(rows) > max_table_rows:
-        raise ValueError(
-            f"bpe_train_local: word-frequency table exceeds "
-            f"max_table_rows={max_table_rows}; raise the cap or use "
-            f"the distributed bpe_train"
-        )
-    return _bpe_merge_loop(
-        [(r["freq"], tuple(r["word"]) + ("</w>",)) for r in rows], n_merges
-    )
-
-
-def _bpe_merge_loop(
-    table: list[tuple[int, tuple[str, ...]]], n_merges: int
-) -> list[tuple[str, str]]:
-    """The sequential greedy merge loop over a collected
-    (freq, symbols) word table — shared by :func:`bpe_train_local` and
-    :func:`bpe_train`'s auto-delegation. Greedy order and
-    (cnt DESC, a, b) tie-breaking identical to the distributed loop
-    (pinned by tests/test_round11.py)."""
-    merges: list[tuple[str, str]] = []
-    while len(merges) < n_merges:
-        counts: dict[tuple[str, str], int] = {}
-        for freq, syms in table:
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                counts[p] = counts.get(p, 0) + freq
-        if not counts:
-            break
-        (a, b), cnt = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        if cnt < 2:
-            break
-        merges.append((a, b))
-        ab = a + b
-        new_table = []
-        for freq, syms in table:
-            res: list[str] = []
-            i = 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    res.append(ab)
-                    i += 2
-                else:
-                    res.append(syms[i])
-                    i += 1
-            new_table.append((freq, tuple(res)))
-        table = new_table
-    return merges
 
 
 def dedup_lines(
@@ -849,8 +576,7 @@ def boilerplate_lines(
     Shape: posexplode lines -> distinct (doc, line) -> one aggregate
     keyed by the line. The distinct and the count share the line-hash
     shuffle; the result is tiny (only lines crossing the threshold), so
-    the typical consumer broadcasts it back for an anti-join strip
-    (see strip_boilerplate)."""
+    the typical consumer broadcasts it back for an anti-join strip."""
     lines = df.select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.split(F.col(text_col), "\n")).alias("line"),
@@ -860,35 +586,6 @@ def boilerplate_lines(
         .agg(F.count("*").alias("n_docs"))
         .where(F.col("n_docs") >= min_docs)
         .orderBy("line")
-    )
-
-
-def strip_boilerplate(
-    df: DataFrame,
-    hot_lines: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Remove the detected boilerplate lines from every document,
-    preserving the order of surviving lines. ``hot_lines`` is the
-    (small) output of boilerplate_lines — broadcast, so the strip is
-    one narrow pass + per-doc reassembly keyed by doc id."""
-    lines = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
-    )
-    kept = lines.join(
-        F.broadcast(hot_lines.select("line")), "line", "left_anti"
-    )
-    return kept.groupBy("doc_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                lambda x: x["line"],
-            ),
-            "\n",
-        ).alias(text_col),
-        F.count("*").alias("n_kept"),
     )
 
 

@@ -4,15 +4,14 @@ training-data-pipeline extension queries, with their DuckDB oracles.
 ``ALL_QUERIES``: name -> (spark, sf_dir) -> DataFrame, in check order
 ``ALL_ORACLES``: name -> ANSI SQL for DuckDB (absent key = rows-only check)
 
-The external correctness driver hash-checks only the first
-``CHECK_WINDOW`` = 50 keys of ``ALL_QUERIES``. At import ``check_order``
-sorts the registry over the driver's ``CORRECTNESS_r*.json`` records:
-names never checked or red at their latest row first, then oldest latest
-recorded round first, ties in registration order. A landed green record
-rotates the window by itself. At the 200 = 50 x 4 ceiling the due group
-is exactly the 50 rows last checked four records ago, so no row goes
-more than four recorded rounds unchecked; a 201st name without a
-retirement breaks that bound.
+The external correctness driver hash-checks only the first 50 keys of
+``ALL_QUERIES``. At import ``check_order`` sorts the registry over the
+driver's ``CORRECTNESS_r*.json`` records: names never checked or red at
+their latest row first, then oldest latest recorded round first, ties in
+registration order. A landed green record rotates the window by itself.
+At the 200 = 50 x 4 ceiling the due group is exactly the 50 rows last
+checked four records ago, so no row goes more than four recorded rounds
+unchecked; a 201st name without a retirement breaks that bound.
 """
 
 from __future__ import annotations
@@ -150,8 +149,6 @@ def register_extensions() -> None:
 
 
 register_extensions()
-
-CHECK_WINDOW = 50
 
 
 def is_green(row: Mapping[str, object]) -> bool:

@@ -2661,9 +2661,7 @@ def ext_text_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First BPE merge round (operators/text.bpe_pair_stats): top-20
     adjacent symbol pairs over the corpus word-frequency table with
     terminal '</w>' markers, frequency-weighted — the distributed core
-    of tokenizer training (the full greedy loop is
-    operators/text.bpe_train, validated in tests against the canonical
-    Sennrich et al. example)."""
+    of tokenizer training (Sennrich et al. 2016)."""
     docs = load_table(spark, sf_dir, "documents")
     return tx.bpe_pair_stats(docs, top_n=20).orderBy("rnk")
 

@@ -1285,7 +1285,6 @@ def ext_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.where(F.col("vec_id") >= 100),
         emb.where(F.col("vec_id") < 100),
         threshold=0.4,
-        exact=True,
     )
     return kept.select("vec_id", "label").orderBy("vec_id")
 

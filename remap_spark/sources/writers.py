@@ -69,11 +69,10 @@ def write_bucketed_table(
     downstream join; tests/test_sources.test_bucketed_join_no_exchange
     pins the no-Exchange plan.
 
-    This is the ONE canonical bucketed-write API (the r7-advice
-    consolidation: operators/layout.write_bucketed now delegates
-    here). ``path`` makes the catalog table external; the return value
-    is the re-read table handle, whose scans carry the bucket spec
-    (``SelectedBucketsCount`` in explain)."""
+    This is the ONE canonical bucketed-write API. ``path`` makes the
+    catalog table external; the return value is the re-read table
+    handle, whose scans carry the bucket spec (``SelectedBucketsCount``
+    in explain)."""
     w = df.write.format("parquet").mode(mode).bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)

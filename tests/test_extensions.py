@@ -33,22 +33,6 @@ def test_minhash_lsh_finds_planted_near_dups(spark):
     assert len(cand) < n_docs * 5, "LSH candidate set blew up"
 
 
-def test_simhash_pairs_find_near_dups(spark):
-    from remap_spark.operators.dedup import ngram_jaccard_pairs, simhash_pairs
-
-    docs = _docs(spark)
-    truth = {
-        (r["doc_a"], r["doc_b"])
-        for r in ngram_jaccard_pairs(docs, threshold=0.9).collect()
-    }
-    got = {
-        (r["doc_a"], r["doc_b"])
-        for r in simhash_pairs(docs, max_hamming=6).collect()
-    }
-    # simhash is approximate: require high recall on the planted pairs
-    assert len(truth & got) >= int(0.8 * len(truth))
-
-
 def test_lsh_topk_is_exact_within_bucket(spark):
     """Bucketed ANN mechanism invariant (deterministic, SF- and
     geometry-independent, unlike a recall threshold over random
@@ -101,30 +85,6 @@ def test_lsh_topk_is_exact_within_bucket(spark):
     assert approx == expected
 
 
-def test_normalize_then_dot_equals_cosine(spark):
-    from pyspark.sql import functions as F
-
-    from remap_spark.engine import load_table
-    from remap_spark.functions import cosine_similarity, dot_product
-    from remap_spark.operators.similarity import normalize_embeddings
-
-    emb = load_table(spark, SF_DIR, "embeddings").limit(20)
-    norm = normalize_embeddings(emb)
-    a = norm.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
-    b = norm.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb"))
-    pairs = a.join(b, F.col("ia") < F.col("ib")).select(
-        dot_product(F.col("va"), F.col("vb")).alias("dot")
-    )
-    raw_a = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
-    raw_b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb"))
-    cos = raw_a.join(raw_b, F.col("ia") < F.col("ib")).select(
-        cosine_similarity(F.col("va"), F.col("vb")).alias("cos")
-    )
-    for d, c in zip(sorted(r["dot"] for r in pairs.collect()),
-                    sorted(r["cos"] for r in cos.collect())):
-        assert abs(d - c) < 1e-9
-
-
 def test_multimodal_plumbing(spark):
     """Binary media columns through the decode/feature/frame UDFs:
     schema, 1->N expansion, determinism of the stub."""
@@ -163,40 +123,6 @@ def test_multimodal_real_decode_raises(spark):
 
     with pytest.raises(NotImplementedError):
         _decode_image_impl(b"xx", fake=False)
-
-
-def test_replicate_salt_join_matches_plain(spark):
-    """Salting is a physical rewrite: the salted join must return
-    exactly the plain join's rows (including a hot key)."""
-    from remap_spark.operators.skew import replicate_salt_join
-
-    big = spark.createDataFrame(
-        [(i % 3 if i % 5 else 0, i) for i in range(1000)], "k int, v bigint"
-    )
-    small = spark.createDataFrame([(0, "a"), (1, "b"), (9, "z")], "k int, w string")
-    plain = sorted((r["k"], r["v"], r["w"]) for r in big.join(small, "k").collect())
-    salted = sorted(
-        (r["k"], r["v"], r["w"])
-        for r in replicate_salt_join(big, small, ["k"], buckets=4).collect()
-    )
-    assert plain == salted and len(plain) > 0
-
-
-def test_replicate_salt_join_rejects_right_outer(spark):
-    """Replicated small side would emit buckets copies of each unmatched
-    small-side row under right/full outer — must refuse, not corrupt."""
-    import pytest
-
-    from remap_spark.operators.skew import replicate_salt_join
-
-    big = spark.createDataFrame([(1, 1)], "k int, v int")
-    small = spark.createDataFrame([(1, "a"), (9, "z")], "k int, w string")
-    for how in ("right", "full", "full_outer", "rightouter"):
-        with pytest.raises(ValueError, match="replicate_salt_join"):
-            replicate_salt_join(big, small, ["k"], how=how)
-    # left stays supported: unmatched BIG rows are not replicated
-    rows = replicate_salt_join(big, small, ["k"], how="left").collect()
-    assert len(rows) == 1
 
 
 def test_engine_sql_fails_fast_on_bad_sf_dir(spark):
@@ -428,29 +354,6 @@ def test_embedding_near_dup_block_pair_exact(spark):
             for r in embedding_near_dup_pairs(emb, 0.4, n_blocks=n_blocks).collect()
         }
         assert got == base, f"n_blocks={n_blocks} diverged from all-pairs"
-
-
-def test_embedding_near_dup_lsh_subset_of_exact(spark):
-    """Single-table LSH near-dup output is a deterministic subset of
-    the exact tier (same-bucket filter only ever drops pairs)."""
-    from remap_spark.engine import load_table
-    from remap_spark.operators.similarity import (
-        embedding_near_dup_pairs,
-        embedding_near_dup_pairs_lsh,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    exact = {
-        (r["vec_a"], r["vec_b"])
-        for r in embedding_near_dup_pairs(emb, 0.4).collect()
-    }
-    lsh = {
-        (r["vec_a"], r["vec_b"])
-        for r in embedding_near_dup_pairs_lsh(
-            emb, 0.4, n_planes=2, seed=7, dim=64
-        ).collect()
-    }
-    assert lsh <= exact
 
 
 def test_connected_components_star_equals_flood_min(spark):
@@ -885,23 +788,6 @@ def test_multimodal_magic_collision_falls_back_to_fake(spark):
     assert (w, h) == (4, 4) and len(feats) == 8
 
 
-def test_bpe_train_sennrich_example(spark):
-    """The greedy merge loop must reproduce the canonical BPE walk on
-    the low/lower/newest/widest corpus (Sennrich et al. 2016 §3.2):
-    'es' then 'est' then 'est</w>' come first (freq 9 from newest x6 +
-    widest x3)."""
-    from remap_spark.operators.text import bpe_train
-
-    text = " ".join(
-        ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
-    )
-    df = spark.createDataFrame([(1, text)], "doc_id bigint, text string")
-    merges = bpe_train(df, n_merges=4)
-    assert merges[:3] == [("e", "s"), ("es", "t"), ("est", "</w>")]
-    # 4th merge: 'l o' (low x5 + lower x2 = 7)
-    assert merges[3] == ("l", "o")
-
-
 def test_remove_duplicate_spans_hand_computed(spark):
     """Span removal: a 5-token window shared by two docs is removed
     from BOTH, longer shared spans are removed in full via k-window
@@ -950,88 +836,6 @@ def test_dedup_paragraphs_global_hand_computed(spark):
     assert out[2] == ("charlie", 2, 1)
     assert out[3] == ("delta", 3, 2)  # footer copy + intra-doc delta repeat
     assert out[4] == ("echo only", 1, 0)
-
-
-def test_bpe_batched_merges_fewer_passes(spark):
-    """A tie-rich corpus must apply multiple symbol-disjoint merges in
-    one pass: four equal-frequency two-letter words yield >= 4 merges
-    in <= 2 pair-count passes (vs 4+ for one-merge-at-a-time), with the
-    rule order still the exact sequential-greedy order."""
-    from remap_spark.operators.text import bpe_train
-
-    words = (
-        ["uvc"] * 3 + ["uvd"] * 2 + ["xya"] * 3 + ["xyb"] * 2
-        + ["pqe"] * 3 + ["pqf"] * 2 + ["rsg"] * 3 + ["rsh"] * 2
-    )
-    df = spark.createDataFrame(
-        [(1, " ".join(words))], "doc_id bigint, text string"
-    )
-    stats: dict = {}
-    merges = bpe_train(df, n_merges=4, _stats=stats, mode="distributed")
-    assert len(merges) >= 4
-    assert stats["passes"] <= 2, stats
-    # sequential-greedy order at count 5, lex on (a, b):
-    assert merges == [("p", "q"), ("r", "s"), ("u", "v"), ("x", "y")]
-    # and the batched walk must equal one-merge-per-pass greedy here
-    assert merges == bpe_train(df, n_merges=4, batch_limit=1, mode="distributed")
-
-
-def test_bpe_batched_equals_sequential(spark):
-    """batch_limit=1 degrades to classic one-merge-per-pass greedy;
-    the batched walk must emit the IDENTICAL rule sequence on corpora
-    with ties, conflicts, and interacting merges."""
-    import random
-
-    from remap_spark.operators.text import bpe_train
-
-    rng = random.Random(7)
-    alphabet = "abcdef"
-    for trial in range(4):
-        words = [
-            "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 4)))
-            for _ in range(8)
-        ]
-        text = " ".join(w for w in words for _ in range(rng.randint(1, 5)))
-        df = spark.createDataFrame([(1, text)], "doc_id bigint, text string")
-        batched = bpe_train(df, n_merges=6, mode="distributed")
-        sequential = bpe_train(df, n_merges=6, batch_limit=1, mode="distributed")
-        assert batched == sequential, (trial, text, batched, sequential)
-
-
-def test_ivf_with_trained_centroids(spark):
-    """IVF composes with a TRAINED codebook: kmeans_lloyd centroids
-    (dequantized) plug into ivf_topk's centroids seam; every query
-    still gets exactly k ranked neighbors and scores agree with
-    brute-force cosine on the probed cells' members."""
-    from pyspark.sql import functions as F
-
-    from remap_spark.engine import load_table
-    from remap_spark.operators.similarity import ivf_topk, kmeans_lloyd
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    _assign, cents = kmeans_lloyd(emb, k=4, iters=2)
-    deq = cents.select(
-        F.col("cluster").alias("cid"),
-        F.transform(
-            F.col("centroid"), lambda x: x.cast("double") / 1_000_000
-        ).alias("cv"),
-    )
-    queries = emb.where(F.col("vec_id") < 3)
-    out = ivf_topk(queries, emb, k=5, n_probe=2, centroids=deq).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["query_id"], []).append(r)
-    assert set(by_q) == {0, 1, 2}
-    for rows in by_q.values():
-        assert [r["rank"] for r in sorted(rows, key=lambda r: r["rank"])] == [
-            1,
-            2,
-            3,
-            4,
-            5,
-        ]
-        cos = [r["cosine"] for r in sorted(rows, key=lambda r: r["rank"])]
-        assert cos == sorted(cos, reverse=True)
 
 
 def test_normalize_url_canonical_equivalences(spark):
@@ -1786,21 +1590,17 @@ def test_rolling_active_users_approx_error(spark):
         assert abs(wa - wau) <= 0.05 * wau, (day, wa, wau)
 
 
-def test_pq_adc_recall_and_trained_codebook(spark):
+def test_pq_adc_recall(spark):
     """PQ/ADC sanity: (1) a vector that IS a centroid encodes to its
     own code; (2) ADC top-k over the compressed corpus recovers a
-    meaningful fraction of brute-force cosine top-k on clustered data;
-    (3) pq_train strictly reduces total quantization distortion vs the
-    deterministic init codebook and composes with encode/topk."""
+    meaningful fraction of brute-force cosine top-k on clustered data."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     from remap_spark.operators.similarity import (
         cosine_topk_bruteforce,
         pq_codebook,
         pq_encode,
         pq_topk,
-        pq_train,
     )
 
     rng = np.random.default_rng(11)
@@ -1837,45 +1637,6 @@ def test_pq_adc_recall_and_trained_codebook(spark):
     assert len(pq_hits & truth) >= 0.3 * len(truth), (
         len(pq_hits & truth), len(truth),
     )
-
-    def distortion(codebook):
-        enc = pq_encode(df, codebook, m=4, dim=16)
-        # re-derive per-sub assignment distances via a probe join
-        from remap_spark.operators.similarity import _quantized
-
-        q = _quantized("embedding", 1_000_000)
-        slices = F.array(
-            *[
-                F.struct(
-                    F.lit(s).alias("sub"),
-                    F.slice(q, s * 4 + 1, 4).alias("sq"),
-                )
-                for s in range(4)
-            ]
-        )
-        subs = df.select(
-            F.col("vec_id").alias("_pid"), F.explode(slices).alias("x")
-        ).select("_pid", "x.sub", "x.sq")
-        joined = (
-            subs.join(
-                enc.select(
-                    F.col("vec_id").alias("_pid"),
-                    F.posexplode("codes").alias("sub", "cid"),
-                ),
-                ["_pid", "sub"],
-            )
-            .join(codebook, ["sub", "cid"])
-        )
-        d = F.aggregate(
-            F.zip_with("sq", "cq", lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        return joined.select(F.sum(d).alias("t")).first()["t"]
-
-    d0 = distortion(cb)
-    d1 = distortion(pq_train(df, m=4, k=8, iters=3, dim=16))
-    assert d1 < d0, (d1, d0)
 
 
 def test_span_lengths_consistent_with_removal(spark):
@@ -1955,34 +1716,6 @@ def test_pq_adc_exact_on_centroid_candidates(spark):
         .collect()
     }
     assert adc == {k: exact[k] for k in adc} and len(adc) == 16
-
-
-def test_ivf_pq_with_trained_codebook(spark):
-    """pq_train's output feeds ivf_pq_topk unchanged (the trained-
-    codebook seam, mirroring test_ivf_with_trained_centroids) and the
-    trained composition returns well-formed per-query top-k."""
-    from pyspark.sql import functions as F
-
-    from remap_spark.engine import load_table
-    from remap_spark.operators.similarity import ivf_pq_topk, pq_train
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.where(F.col("vec_id") < 3)
-    trained = pq_train(emb, m=8, k=16, iters=2, dim=64)
-    out = ivf_pq_topk(
-        queries, emb, k=5, n_centroids=8, n_probe=2, m=8, n_cent=16,
-        dim=64, codebook=trained,
-    ).collect()
-    per_q: dict = {}
-    for r in out:
-        per_q.setdefault(r["query_id"], []).append(r)
-    assert set(per_q) == {0, 1, 2}
-    for qid, rows in per_q.items():
-        ranks = sorted(r["rank"] for r in rows)
-        assert ranks == list(range(1, len(rows) + 1))
-        dists = [r["dist2"] for r in sorted(rows, key=lambda r: r["rank"])]
-        assert dists == sorted(dists)  # monotone by rank
-        assert all(r["vec_id"] != qid for r in rows)
 
 
 class _FlacBW:

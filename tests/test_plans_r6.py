@@ -98,18 +98,11 @@ def test_table_changes_single_join_no_cartesian(spark):
     assert joins == 1, simple
 
 
-def test_cross_matches_no_cartesian_either_tier(spark):
-    from remap_spark.operators.similarity import (
-        embedding_cross_matches,
-        embedding_cross_matches_lsh,
-    )
+def test_cross_matches_no_cartesian(spark):
+    from remap_spark.operators.similarity import embedding_cross_matches
 
     emb = load_table(spark, SF_DIR, "embeddings")
     a = emb.where(F.col("vec_id") >= 100)
     b = emb.where(F.col("vec_id") < 100)
-    for df in (
-        embedding_cross_matches(a, b, 0.4),
-        embedding_cross_matches_lsh(a, b, 0.4, dim=16),
-    ):
-        r = plan_report(df)
-        assert not r["cartesian"], r["plan"]
+    r = plan_report(embedding_cross_matches(a, b, 0.4))
+    assert not r["cartesian"], r["plan"]

@@ -204,15 +204,15 @@ def test_kmeans_partition_layout_invariance(spark):
     assert r1 == r2
 
 
-def test_strip_boilerplate_restores_original(spark):
-    """Detect-then-strip must give back the pre-injection corpus: after
-    removing the constructed per-source header lines, every document's
-    text equals the original fixture text."""
+def test_boilerplate_lines_finds_inserted_headers(spark):
+    """Detection reports exactly the constructed per-source header
+    lines: each header inserted into at least three documents comes back
+    with its document count, and no original fixture line does."""
     from pyspark.sql import functions as F
 
     from conftest import SF_DIR
     from remap_spark.engine import load_table
-    from remap_spark.operators.text import boilerplate_lines, strip_boilerplate
+    from remap_spark.operators.text import boilerplate_lines
 
     docs = load_table(spark, SF_DIR, "documents")
     header = F.concat(F.lit("NOTICE "), F.col("source"), F.lit(" TERMS"))
@@ -223,14 +223,17 @@ def test_strip_boilerplate_restores_original(spark):
             F.concat(header, F.lit("\n"), F.col("text")),
         ).otherwise(F.col("text")).alias("text"),
     )
-    hot = boilerplate_lines(aug, min_docs=3)
-    restored = strip_boilerplate(aug, hot)
-    joined = restored.join(
-        docs.select("doc_id", F.col("text").alias("orig")), "doc_id"
-    )
-    n_bad = joined.where(F.col("text") != F.col("orig")).count()
-    assert n_bad == 0
-    assert joined.count() == docs.count()
+    hot = {
+        r.line: r.n_docs for r in boilerplate_lines(aug, min_docs=3).collect()
+    }
+    inserted = docs.where(F.col("doc_id") % 2 == 0).groupBy("source").count()
+    want = {
+        f"NOTICE {r['source']} TERMS": r["count"]
+        for r in inserted.collect()
+        if r["count"] >= 3
+    }
+    assert want
+    assert hot == want
 
 
 def test_weighted_sample_nested(spark):

@@ -17,13 +17,14 @@ from __future__ import annotations
 from remap_spark.queries import (
     ALL_ORACLES,
     ALL_QUERIES,
-    CHECK_WINDOW,
     EXTENSION_IMPORT_ERRORS,
     check_order,
     correctness_records,
     is_green,
 )
 
+# how many leading keys of ALL_QUERIES the external driver checks
+CHECK_WINDOW = 50
 WINDOW = list(ALL_QUERIES)[:CHECK_WINDOW]
 
 GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}

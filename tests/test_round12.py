@@ -1,15 +1,12 @@
-"""Round-12 pins: the r11 ADVICE fixes in operators/similarity.py.
+"""Round-12 pins: the r11 ADVICE fixes in operators/similarity.py,
+plus the int64 tier of timeseries.rolling_zscore_anomalies.
 
-1. The int64 GEMM tiers RAISE on overflow risk instead of silently
-   wrapping (numpy int64 wraps where Spark ANSI bigint raises — the
-   bit-identity contract requires checking the bound, not documenting
-   it).
-2. semdedup's gemm pair tier RAISES on a cluster whose dense n^2 dot
-   matrix would OOM one executor (mirroring bpe_train_local's
-   max_table_rows contract) instead of building it.
-3. _assign_cells_gemm / kmeans _assign_gemm derive the id column type
-   from the caller's schema (drop-in parity with the expression tiers,
-   which preserve it) instead of hardcoding bigint.
+1. semdedup's int64 GEMM pair tier RAISES on overflow risk instead of
+   silently wrapping (numpy int64 wraps where Spark ANSI bigint raises
+   — the bit-identity contract requires checking the bound, not
+   documenting it).
+2. The same tier RAISES on a cluster whose dense n^2 dot matrix would
+   OOM one executor instead of building it.
 """
 
 from __future__ import annotations
@@ -27,7 +24,7 @@ def _embed_df(spark, rows):
 
 
 # ---------------------------------------------------------------------------
-# 1. overflow guards
+# 1-2. semdedup gemm pair tier guards
 
 
 def test_check_int64_gemm_bound_arithmetic():
@@ -45,20 +42,18 @@ def test_check_int64_gemm_bound_arithmetic():
         sim._check_int64_gemm_bound(m * 2, m * 2, 2, "t")
 
 
-def test_kmeans_gemm_raises_on_overflow_risk(spark):
+def test_semdedup_gemm_raises_on_overflow_risk(spark):
     # scale=10**9 quantizes unit-ish components to ~1e9; at dim=2 the
-    # distance-combination bound dim*(a+b)^2 ~ 2*(4e18) exceeds 2^62 —
-    # the expression tier would compute this exactly in decimal, so the
-    # gemm tier must refuse rather than silently wrap.
+    # bound dim*(a+b)^2 ~ 2*(4e18) exceeds 2^62 — the expression tier
+    # would compute this exactly in decimal, so the gemm pair tier must
+    # refuse rather than silently wrap.
     df = _embed_df(
         spark, [(i, [1.0, float(i % 3) - 1.0]) for i in range(12)]
     )
-    # the raise surfaces during kmeans_lloyd itself: the final
-    # assignment's centroid collect executes the gemm batches
     with pytest.raises(Exception, match="int64 GEMM overflow"):
-        sim.kmeans_lloyd(
-            df, k=2, iters=1, scale=10**9, assign_mode="gemm"
-        )[0].collect()
+        sim.semdedup(
+            df, k=2, iters=1, scale=10**9, pair_mode="gemm"
+        ).collect()
 
 
 def test_semdedup_gemm_cluster_cap_raises(spark):
@@ -79,72 +74,7 @@ def test_semdedup_gemm_cluster_cap_raises(spark):
 
 
 # ---------------------------------------------------------------------------
-# 2b. bpe_train auto-delegation (r11 verdict item 4: steer users off
-# the measured-inert distributed merge loop)
-
-
-def test_bpe_train_auto_delegates_to_local_loop(spark):
-    from remap_spark.operators.text import bpe_train
-
-    text = " ".join(
-        ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
-    )
-    df = spark.createDataFrame([(1, text)], "doc_id bigint, text string")
-    stats: dict = {}
-    merges = bpe_train(df, n_merges=4, _stats=stats)
-    # default mode='auto' ran the in-process loop (the vocab table
-    # fits), NOT the distributed per-pass loop
-    assert stats == {"delegated": True}
-    # and the learned rules are identical to the distributed tier
-    assert merges == bpe_train(df, n_merges=4, mode="distributed")
-    # mode='local' raises loudly past the cap instead of collecting
-    with pytest.raises(ValueError, match="max_table_rows"):
-        bpe_train(df, n_merges=4, mode="local", max_table_rows=2)
-    # mode='auto' past the cap falls through to the distributed loop
-    assert (
-        bpe_train(df, n_merges=4, mode="auto", max_table_rows=2) == merges
-    )
-    with pytest.raises(ValueError, match="unknown mode"):
-        bpe_train(df, n_merges=4, mode="cluster")
-
-
-# ---------------------------------------------------------------------------
-# 3. id-dtype drop-in parity
-
-
-def test_assign_cells_gemm_preserves_id_type(spark):
-    cands = spark.createDataFrame(
-        [(i, [float(i % 4), 1.0]) for i in range(16)],
-        "vec_id int, embedding array<double>",
-    )
-    cents = spark.createDataFrame(
-        [(0, [0.0, 1.0]), (1, [3.0, 1.0])], "cid bigint, cv array<double>"
-    )
-    out = sim._assign_cells_gemm(cands, cents, "embedding", "vec_id")
-    assert dict(out.dtypes)["vec_id"] == "int"
-    rows = {r["vec_id"]: r["cell"] for r in out.collect()}
-    assert len(rows) == 16
-    # expression tier agrees row-for-row on the same non-bigint ids
-    expr = sim._assign_cells_expr(cands, cents, "embedding", "vec_id")
-    erows = {r["vec_id"]: r["cell"] for r in expr.collect()}
-    assert rows == erows
-
-
-def test_kmeans_gemm_preserves_id_type(spark):
-    df = spark.createDataFrame(
-        [(i, [float(i % 5), float(i % 3)]) for i in range(20)],
-        "vec_id int, embedding array<double>",
-    )
-    a_gemm, _ = sim.kmeans_lloyd(df, k=2, iters=2, assign_mode="gemm")
-    a_expr, _ = sim.kmeans_lloyd(df, k=2, iters=2, assign_mode="expr")
-    assert dict(a_gemm.dtypes)["vec_id"] == "int"
-    assert sorted(map(tuple, a_gemm.collect())) == sorted(
-        map(tuple, a_expr.collect())
-    )
-
-
-# ---------------------------------------------------------------------------
-# 5. rolling_zscore_anomalies int64 tier (value_bound promise)
+# rolling_zscore_anomalies int64 tier (value_bound promise)
 
 
 def test_rolling_zscore_int64_tier_matches_decimal(spark):

@@ -279,11 +279,7 @@ def test_weighted_sample_wor_matches_duckdb_formula(spark):
 
 
 def test_expectations_one_pass_report(spark):
-    from remap_spark.operators.expectations import (
-        Expectation,
-        assert_expectations,
-        expect_report,
-    )
+    from remap_spark.operators.expectations import Expectation, expect_report
 
     df = spark.createDataFrame(
         [(1, "a", 5.0), (2, "b", -1.0), (3, None, 2.0), (3, "c", None)],
@@ -302,17 +298,6 @@ def test_expectations_one_pass_report(spark):
     assert got["price_non_negative"] == (4, 2, False)
     assert got["name_present"] == (4, 1, False)
     assert got["id_positive"] == (4, 0, True)
-
-    import pytest as _pytest
-
-    with _pytest.raises(AssertionError, match="price_non_negative"):
-        assert_expectations(rep)
-    # warn severity alone must not raise
-    assert_expectations(
-        expect_report(
-            df, [Expectation("name_present", F.col("name").isNotNull(), "warn")]
-        )
-    )
 
 
 def test_expectations_single_scan_plan(spark):

@@ -74,35 +74,6 @@ def test_cross_matches_exact_losslessness(spark):
         assert abs(got[k] - want[k]) < 1e-9
 
 
-def test_cross_matches_lsh_subset_of_exact(spark):
-    from remap_spark.engine import load_table
-    from remap_spark.operators.similarity import (
-        embedding_cross_matches,
-        embedding_cross_matches_lsh,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    train = emb.where(F.col("vec_id") >= 100)
-    evalset = emb.where(F.col("vec_id") < 100)
-    exact = {
-        (r.a_id, r.b_id): r.cosine
-        for r in embedding_cross_matches(
-            train, evalset, threshold=0.4
-        ).collect()
-    }
-    approx = {
-        (r.a_id, r.b_id): r.cosine
-        for r in embedding_cross_matches_lsh(
-            train, evalset, threshold=0.4, n_planes=2
-        ).collect()
-    }
-    assert exact  # the exact tier sees the planted cross pairs
-    assert set(approx) <= set(exact)
-    for k, v in approx.items():
-        assert abs(v - exact[k]) < 1e-9
-        assert v >= 0.4
-
-
 def test_cross_matches_exact_match_duckdb(spark):
     from remap_spark.engine import load_table
     from remap_spark.operators.similarity import embedding_cross_matches
@@ -146,9 +117,7 @@ def test_semantic_decontaminate(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     train = emb.where(F.col("vec_id") >= 100)
     evalset = emb.where(F.col("vec_id") < 100)
-    kept = semantic_decontaminate(
-        train, evalset, threshold=0.4, exact=True
-    )
+    kept = semantic_decontaminate(train, evalset, threshold=0.4)
     kept_ids = {r.vec_id for r in kept.select("vec_id").collect()}
     flagged = {
         r.a_id

@@ -1,6 +1,6 @@
 """Round-6e: snapshot CDC diff (table_changes) and the other round-6e
 operators (segment overlap, PCA projection, label propagation,
-perceptual hashing, winnowing, time-series and SCD helpers)."""
+winnowing, time-series and SCD helpers)."""
 
 from __future__ import annotations
 
@@ -402,163 +402,6 @@ def test_modularity_lpa_beats_random_and_matches_duckdb(spark):
     finally:
         con.close()
     assert canon([tuple(r) for r in srows], scols) == canon(drows, dcols)
-
-
-# ---------------------------------------------------------------------------
-# image perceptual hashing (dHash) + near-dup pairs
-# ---------------------------------------------------------------------------
-
-
-def _gradient_img(w, h, shift=0, noise=None):
-    """Deterministic grayscale-ish gradient with optional per-pixel
-    perturbation — dHash must be invariant to brightness shifts and
-    robust to small noise, and must differ for a transposed image."""
-    rows = []
-    for y in range(h):
-        row = []
-        for x in range(w):
-            v = min(255, (x * 255) // max(w - 1, 1))
-            v = min(255, max(0, v + shift + (noise(x, y) if noise else 0)))
-            row.append((v, v, v))
-        rows.append(row)
-    return rows
-
-
-def test_image_dhash_invariances(spark):
-    import sys
-    sys.path.insert(0, "tests")
-    from test_extensions import _make_bmp
-
-    from remap_spark.operators.multimodal import image_dhash
-
-    base = _make_bmp(32, 24, _gradient_img(32, 24))
-    bright = _make_bmp(32, 24, _gradient_img(32, 24, shift=15))
-    noisy = _make_bmp(
-        32, 24, _gradient_img(32, 24, noise=lambda x, y: (x * 7 + y * 3) % 5)
-    )
-    scaled = _make_bmp(16, 12, _gradient_img(16, 12))
-    flipped = _make_bmp(
-        32, 24,
-        [[px for px in reversed(row)] for row in _gradient_img(32, 24)],
-    )
-    df = spark.createDataFrame(
-        [(1, base), (2, bright), (3, noisy), (4, scaled), (5, flipped),
-         (6, b"not an image")],
-        "media_id bigint, media binary",
-    )
-    got = {r.media_id: r.dhash for r in image_dhash(df).collect()}
-    assert got[1] == got[2]  # brightness-shift invariant (gradient sign)
-    assert got[1] == got[4]  # scale invariant (same aspect gradient)
-    assert bin((got[1] ^ got[3]) & ((1 << 64) - 1)).count("1") <= 6
-    assert bin((got[1] ^ got[5]) & ((1 << 64) - 1)).count("1") >= 32
-    assert got[6] is None  # undecodable -> NULL, batch survives
-
-
-def test_image_near_dup_pairs_blocks_match_bruteforce(spark):
-    import sys
-    sys.path.insert(0, "tests")
-    from test_extensions import _make_bmp
-
-    from remap_spark.operators.multimodal import image_dhash, image_near_dup_pairs
-
-    imgs = []
-    for i in range(12):
-        noise = (lambda k: (lambda x, y: (x * k + y) % 3))(i % 4)
-        imgs.append((i, _make_bmp(24, 24, _gradient_img(24, 24, noise=noise))))
-    # plus one inverted outlier
-    imgs.append(
-        (99, _make_bmp(24, 24, [[(255 - v, 255 - v, 255 - v) for (v, _, _) in row]
-                                 for row in _gradient_img(24, 24)]))
-    )
-    df = spark.createDataFrame(imgs, "media_id bigint, media binary")
-    got = {
-        (r.id_a, r.id_b): r.hamming
-        for r in image_near_dup_pairs(df, max_hamming=6).collect()
-    }
-    hashes = {r.media_id: r.dhash for r in image_dhash(df).collect()}
-    want = {}
-    ids = sorted(hashes)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            d = bin((hashes[a] ^ hashes[b]) & ((1 << 64) - 1)).count("1")
-            if d <= 6:
-                want[(a, b)] = d
-    assert got == want  # pigeonhole blocking is LOSSLESS within the bound
-    assert want  # non-vacuous
-    assert all((a, 99) not in got and (99, a) not in got for a in ids if a != 99)
-
-
-def test_hamming_pairs_generic_losslessness(spark):
-    """Property: for pseudo-random 64-bit hashes (including negatives),
-    blocked pairs == brute-force pairs at the bound."""
-    import hashlib
-
-    from remap_spark.operators.dedup import hamming_pairs
-
-    def h64(i):
-        v = int(hashlib.md5(f"x{i}".encode()).hexdigest()[:16], 16)
-        # plant near-dup clusters: pairs (i, i+1) for even i differ in 2 bits
-        if i % 2 == 1:
-            v = int(hashlib.md5(f"x{i-1}".encode()).hexdigest()[:16], 16) ^ 0x9001
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    rows = [(i, h64(i)) for i in range(40)]
-    df = spark.createDataFrame(rows, "rid bigint, h bigint")
-    got = {
-        (r.id_a, r.id_b): r.hamming
-        for r in hamming_pairs(df, "h", "rid", bits=64, max_hamming=3).collect()
-    }
-    want = {}
-    for i, (ia, ha) in enumerate(rows):
-        for ib, hb in rows[i + 1:]:
-            d = bin((ha ^ hb) & ((1 << 64) - 1)).count("1")
-            if d <= 3:
-                want[(min(ia, ib), max(ia, ib))] = d
-    assert got == want
-    assert len(want) >= 20  # the planted clusters
-
-
-# ---------------------------------------------------------------------------
-# audio fingerprinting
-# ---------------------------------------------------------------------------
-
-
-def test_audio_fingerprint_invariances(spark):
-    import math
-    import sys
-    sys.path.insert(0, "tests")
-    from test_extensions import _make_flac, _make_wav
-
-    from remap_spark.operators.multimodal import audio_fingerprint
-
-    # a two-tone signal whose band energies move over time
-    sig = [
-        int(8000 * math.sin(2 * math.pi * 440 * t / 8000)
-            * (0.3 + 0.7 * t / 4000))
-        + int(4000 * math.sin(2 * math.pi * 1200 * t / 8000)
-              * (1.0 - t / 4000))
-        for t in range(4000)
-    ]
-    half = [s // 2 for s in sig]
-    rev = list(reversed(sig))
-    short = sig[:256]  # the test FLAC builder writes one <=256 frame
-    df = spark.createDataFrame(
-        [
-            (1, _make_wav(sig)),
-            (2, _make_wav(half)),  # gain-shifted copy
-            (3, _make_wav(short)),
-            (4, _make_flac([short])),  # same signal, FLAC container
-            (5, _make_wav(rev)),  # different temporal structure
-            (6, b"junk"),
-        ],
-        "media_id bigint, media binary",
-    )
-    got = {r.media_id: r.afp for r in audio_fingerprint(df).collect()}
-    assert got[1] == got[2]  # gain invariant (energy-delta signs)
-    assert got[3] == got[4]  # container invariant (WAV == FLAC)
-    d = bin((got[1] ^ got[5]) & ((1 << 64) - 1)).count("1")
-    assert d >= 16  # reversed signal is far
-    assert got[6] is None
 
 
 # ---------------------------------------------------------------------------

@@ -880,8 +880,8 @@ def test_bucketed_join_plans_zero_exchange(spark, tmp_path):
     bucketed table is exchange-free too. Results stay identical to
     the plain join."""
     from remap_spark.engine import load_table
-    from remap_spark.operators.layout import write_bucketed
     from remap_spark.plans import explain_str
+    from remap_spark.sources import write_bucketed_table
 
     sf = "/root/testdata/sf0.001"
     orders = load_table(spark, sf, "orders").select(
@@ -891,12 +891,12 @@ def test_bucketed_join_plans_zero_exchange(spark, tmp_path):
         "l_orderkey", "l_quantity"
     ).withColumnRenamed("l_orderkey", "o_orderkey")
 
-    bo = write_bucketed(
-        orders, "t_bkt_orders", "o_orderkey", 4,
+    bo = write_bucketed_table(
+        orders, "t_bkt_orders", ["o_orderkey"], 4, ["o_orderkey"],
         path=str(tmp_path / "bo"),
     )
-    bl = write_bucketed(
-        li, "t_bkt_lineitem", "o_orderkey", 4,
+    bl = write_bucketed_table(
+        li, "t_bkt_lineitem", ["o_orderkey"], 4, ["o_orderkey"],
         path=str(tmp_path / "bl"),
     )
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

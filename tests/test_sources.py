@@ -358,10 +358,11 @@ def test_crawl_to_curation_pipeline(spark, tmp_path):
 
 
 def test_cluster_write_produces_prunable_footer_stats(spark, tmp_path_factory):
-    """End-to-end layout proof: cluster_by_zorder's PARQUET OUTPUT
-    carries row-group min/max footer stats (read back with DuckDB's
-    parquet_metadata — the same stats any engine prunes on) tight
-    enough that a box predicate must open only a few row groups, while
+    """End-to-end layout proof: a frame range-partitioned and sorted by
+    zorder_key writes PARQUET OUTPUT whose row-group min/max footer
+    stats (read back with DuckDB's parquet_metadata — the same stats
+    any engine prunes on) are tight enough that a box predicate must
+    open only a few row groups, while
     the same data written in single-column sort order leaves the
     y-stats near-full-range so almost nothing can be skipped."""
     import glob
@@ -369,7 +370,7 @@ def test_cluster_write_produces_prunable_footer_stats(spark, tmp_path_factory):
     import duckdb
     from pyspark.sql import functions as F
 
-    from remap_spark.operators.layout import cluster_by_zorder
+    from remap_spark.operators.layout import zorder_key
 
     grid = spark.range(64 * 64).select(
         (F.col("id") % 64).alias("x"),
@@ -378,9 +379,9 @@ def test_cluster_write_produces_prunable_footer_stats(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("zwrite"))
     clustered = f"{root}/clustered"
     linear = f"{root}/linear"
-    cluster_by_zorder(grid, ["x", "y"], bits=6, num_files=16).drop(
-        "z_key"
-    ).write.parquet(clustered)
+    grid.withColumn("z_key", zorder_key(["x", "y"], 6)).repartitionByRange(
+        16, "z_key"
+    ).sortWithinPartitions("z_key").drop("z_key").write.parquet(clustered)
     # single-column sort: tight x stats, useless y stats
     grid.repartitionByRange(16, "x").sortWithinPartitions(
         "x", (F.col("y") * 37) % 64
