@@ -158,7 +158,7 @@ def dot_product(a: Column, b: Column) -> Column:
     )
 
 
-def lineage_cut(df, *, eager: bool = False):
+def lineage_cut(df):
     """``localCheckpoint`` with a cluster-reliability escape hatch.
 
     The r12 plan audits replaced re-executed subtrees with
@@ -171,6 +171,7 @@ def lineage_cut(df, *, eager: bool = False):
     ``spark.remap.lineageCut=off`` (session conf) to skip every cut
     routed through this helper: consumers then re-execute the upstream
     subtree (the pre-r12 plan shape) and keep full fault tolerance.
+    The cut is lazy: the first action over the result materializes it.
     """
     try:
         enabled = df.sparkSession.conf.get("spark.remap.lineageCut", "on")
@@ -178,4 +179,4 @@ def lineage_cut(df, *, eager: bool = False):
         enabled = "on"
     if str(enabled).lower() in ("off", "false", "0"):
         return df
-    return df.localCheckpoint(eager=eager)
+    return df.localCheckpoint(eager=False)

@@ -618,30 +618,22 @@ def _positional_grams(
     return grams.localCheckpoint(eager=True) if checkpoint else grams
 
 
-def _diagonal_matches(grams, k: int, include_intra: bool):
+def _diagonal_matches(grams, k: int):
     """Shared core of the maximal-match operators: self-join the
     positional gram stream on the 60-bit hash, restrict to ordered
-    pairs (cross-doc; optionally same-doc with i_a < i_b), and merge
-    consecutive anchors along each (doc_a, doc_b, diagonal) into
-    maximal runs. Returns the match relation
+    cross-document pairs (doc_a < doc_b), and merge consecutive
+    anchors along each (doc_a, doc_b, diagonal) into maximal runs.
+    Returns the match relation
     (doc_a, doc_b, _diag, _grp, _sa, _sb, span_len)."""
-    from pyspark.sql.window import Window
-
     a = grams.select(
         "g", F.col("doc").alias("doc_a"), F.col("i").alias("i_a")
     )
     b = grams.select(
         "g", F.col("doc").alias("doc_b"), F.col("i").alias("i_b")
     )
-    pair_cond = F.col("doc_a") < F.col("doc_b")
-    if include_intra:
-        pair_cond = pair_cond | (
-            (F.col("doc_a") == F.col("doc_b"))
-            & (F.col("i_a") < F.col("i_b"))
-        )
     anchors = (
         a.join(b, "g")
-        .where(pair_cond)
+        .where(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "i_a", "doc_b", "i_b")
     )
     return _runs_from_anchors(anchors, k)
@@ -749,7 +741,6 @@ def maximal_match_spans(
     id_col: str = "doc_id",
     k: int = 5,
     max_gram_docs: int | None = None,
-    include_intra: bool = False,
 ) -> DataFrame:
     """TRUE maximal duplicated spans — the suffix-array-faithful
     fidelity step beyond ``duplicate_span_lengths``'s island merge:
@@ -772,14 +763,10 @@ def maximal_match_spans(
     (starts (i-1, j-1) match iff tokens a[i-1] == b[j-1] given the
     following k-1 already match), so gaps-and-islands along each
     (doc_a, doc_b, diagonal) recovers maximal matches of length
-    run_len + k - 1 with no relaxation. Cross-document by default
-    (doc_a < doc_b); ``include_intra=True`` additionally pairs a
-    document with ITSELF on the off-zero diagonals (i_a < i_b), so
-    within-document repeats — Lee et al. treat those as duplicates
-    too — surface with the same maximality guarantee (a periodic
-    string reports its self-overlapping repeat once per distinct
-    (start, len)). A span is listed once per distinct (start, len)
-    even when several partners witness it.
+    run_len + k - 1 with no relaxation. Pairs are cross-document
+    (doc_a < doc_b): a repeat within one document is not a match. A
+    span is listed once per distinct (start, len) even when several
+    partners witness it.
 
     Shape: one gram self-join keyed on the 60-bit hash (occurrence
     pairs — sum over grams of occ_a x occ_b rows, bounded by
@@ -790,9 +777,7 @@ def maximal_match_spans(
     covered-position set provably equals the union of all >= k
     duplicated substrings, so removal loses nothing by tiling."""
     grams = _positional_grams(df, text_col, id_col, k, max_gram_docs)
-    matches = _diagonal_matches(grams, k, include_intra).localCheckpoint(
-        eager=True
-    )
+    matches = _diagonal_matches(grams, k).localCheckpoint(eager=True)
     # ^ the union below scans matches TWICE (a-side + b-side); the cut
     # makes the anchor join + diagonal window run once — the relation
     # is match-sized, so the checkpoint is cheap
@@ -820,7 +805,6 @@ def remove_duplicate_spans_keep_one(
     k: int = 5,
     min_len: int | None = None,
     max_gram_docs: int | None = None,
-    include_intra: bool = False,
 ) -> DataFrame:
     """Survivor-preserving exact-substring dedup: each maximal
     cross-document duplicated span (>= ``min_len`` tokens, default k)
@@ -831,10 +815,8 @@ def remove_duplicate_spans_keep_one(
     marks the other side). ``remove_duplicate_spans`` removes ALL
     copies (the Lee et al. EXACTSUBSTR action); this variant is the
     keep-one policy the paper discusses — boilerplate disappears from
-    the corpus without the canonical document losing content.
-    ``include_intra=True`` extends the same policy to WITHIN-document
-    repeats: the later (higher-start) occurrence of a self-repeat is
-    removed, the first kept.
+    the corpus without the canonical document losing content. A
+    repeat within one document is not a duplicate here and stays.
 
     Shape: maximal matches as in :func:`maximal_match_spans` (same
     bounds), then only the doc_b side explodes to covered positions
@@ -844,7 +826,7 @@ def remove_duplicate_spans_keep_one(
     if min_len is None:
         min_len = k
     grams = _positional_grams(df, text_col, id_col, k, max_gram_docs)
-    matches = _diagonal_matches(grams, k, include_intra)
+    matches = _diagonal_matches(grams, k)
     covered = (
         matches.where(F.col("span_len") >= min_len)
         .select(
@@ -886,38 +868,35 @@ def incremental_remove_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 5,
-    dedup_within_batch: bool = True,
 ) -> DataFrame:
     """Exact-substring dedup AT INGEST TIME — the Lee et al. action
     step against an already-indexed corpus, without recomputing
     corpus-wide spans per batch: every token of a NEW document that
-    sits inside a k-window whose gram exists in the ``store`` (or,
-    with ``dedup_within_batch``, in >= 2 documents of the incoming
-    batch itself) is dropped and the text rebuilt. Completes the
-    incremental family (exact doc / fuzzy doc / Bloom / decontaminate
-    — now sub-document spans). Returns (doc, text, n_tokens,
-    n_removed).
+    sits inside a k-window whose gram exists in the ``store`` or in
+    >= 2 documents of the incoming batch itself is dropped and the
+    text rebuilt. Completes the incremental family (exact doc / fuzzy
+    doc / Bloom / decontaminate — now sub-document spans). Returns
+    (doc, text, n_tokens, n_removed).
 
     Shape: the batch's positional grams probe the store with ONE
     equi join on the 60-bit hash — batch-sized left side, and with
     the store bucketed on ``g`` ZERO store-side exchange
-    (plan-pinned); the within-batch tier reuses the batch gram
+    (plan-pinned); the within-batch count reuses the batch gram
     relation for a partial-aggregated distinct-doc count exactly like
     remove_duplicate_spans. Coverage explodes duplicated starts only;
     the rebuild is the doc-keyed covered-array join of
     :func:`_rebuild_without_covered`."""
     grams = _positional_grams(new_docs, text_col, id_col, k, None)
     hits = grams.join(store.select("g"), "g", "left_semi")
-    if dedup_within_batch:
-        dup_in_batch = (
-            grams.select("doc", "g")
-            .distinct()
-            .groupBy("g")
-            .agg(F.count("*").alias("_n"))
-            .where(F.col("_n") >= 2)
-            .select("g")
-        )
-        hits = hits.unionByName(grams.join(dup_in_batch, "g", "left_semi"))
+    dup_in_batch = (
+        grams.select("doc", "g")
+        .distinct()
+        .groupBy("g")
+        .agg(F.count("*").alias("_n"))
+        .where(F.col("_n") >= 2)
+        .select("g")
+    )
+    hits = hits.unionByName(grams.join(dup_in_batch, "g", "left_semi"))
     covered = (
         hits.select(
             "doc",

@@ -31,10 +31,9 @@ the DataFrame expression directly (wordcount ==
 is the escape hatch for arbitrary Python logic, matching the
 reference's only programming model.
 
-Values are JSON-encoded strings by default — the reference's
+Values are JSON-encoded strings, as in the reference, whose
 intermediate format is ``"k2,json(v2)"`` lines (remap.py:138-139,
-158-159). Pass typed schemas to skip JSON entirely (the scalable
-path: parquet-typed columns end-to-end).
+158-159).
 
 Scale notes (100 TB): the only shuffle is groupBy(k2); Spark applies
 AQE coalescing/skew splitting to it. ``partition_by`` routing is a
@@ -58,6 +57,9 @@ MapFn = Callable[[str, object], Iterable[tuple[str, str, object]]]
 ReduceFn = Callable[[str, list], Iterable[tuple[str, object]]]
 CombinerFn = Callable[[list], list]
 
+MAP_OUTPUT_SCHEMA = "partition string, k2 string, v2 string"
+REDUCE_OUTPUT_SCHEMA = "k3 string, v3 string"
+
 
 class MapReduceJob:
     """One logical job = the reference's mapper job + reducer job fused
@@ -70,17 +72,11 @@ class MapReduceJob:
         reduce: ReduceFn | None = None,
         combiner: CombinerFn | None = None,
         sort_key: Callable[[object], object] | None = None,
-        map_output_schema: str = "partition string, k2 string, v2 string",
-        reduce_output_schema: str = "k3 string, v3 string",
-        json_values: bool = True,
     ):
         self.map_fn = map
         self.reduce_fn = reduce
         self.combiner = combiner
         self.sort_key = sort_key
-        self.map_output_schema = map_output_schema
-        self.reduce_output_schema = reduce_output_schema
-        self.json_values = json_values
 
     # -- map phase ----------------------------------------------------
     def _mapped(
@@ -95,7 +91,6 @@ class MapReduceJob:
         order key, in the same Python pass."""
         map_fn = self.map_fn
         combiner = self.combiner
-        json_values = self.json_values
 
         def run_map(batches: Iterator) -> Iterator:
             import pandas as pd
@@ -107,7 +102,7 @@ class MapReduceJob:
                         for part, k2, v2 in map_fn(k1, v1):
                             out_part.append(part)
                             out_k2.append(k2)
-                            out_v2.append(json.dumps(v2) if json_values else v2)
+                            out_v2.append(json.dumps(v2))
                 else:
                     # spill-time combiner: buffer this batch per key,
                     # combine once, emit — remap.py:119-147 semantics
@@ -120,7 +115,7 @@ class MapReduceJob:
                         for v2 in combiner(vals):
                             out_part.append(part)
                             out_k2.append(k2)
-                            out_v2.append(json.dumps(v2) if json_values else v2)
+                            out_v2.append(json.dumps(v2))
                 out = pd.DataFrame(
                     {"partition": out_part, "k2": out_k2, "v2": out_v2}
                 )
@@ -128,7 +123,7 @@ class MapReduceJob:
                     out["_sk"] = out["k2"].map(lambda k: str(spill_key(k)))
                 yield out
 
-        schema = self.map_output_schema
+        schema = MAP_OUTPUT_SCHEMA
         if spill_key is not None:
             schema += ", _sk string"
         return df.mapInPandas(on_worker(run_map), schema=schema)
@@ -138,16 +133,13 @@ class MapReduceJob:
         reduce_fn = self.reduce_fn
         combiner = self.combiner
         sort_key = self.sort_key
-        json_values = self.json_values
 
         # full pandas type hints: a PARTIAL annotation makes pyspark's
         # grouped-map eval-type inference raise (and warn) on every
         # applyInPandas call; full hints resolve it silently
         def run_reduce(pdf: pd.DataFrame) -> pd.DataFrame:
             k2 = pdf["k2"].iloc[0]
-            values = [
-                json.loads(v) if json_values else v for v in pdf["v2"]
-            ]
+            values = [json.loads(v) for v in pdf["v2"]]
             # the reference's merge presents values in sorted-run order;
             # combiner may have been applied per spill — re-apply once
             # for the algebraic contract, then secondary sort
@@ -158,11 +150,11 @@ class MapReduceJob:
             out_k3, out_v3 = [], []
             for k3, v3 in reduce_fn(k2, values):
                 out_k3.append(k3)
-                out_v3.append(json.dumps(v3) if json_values else v3)
+                out_v3.append(json.dumps(v3))
             return pd.DataFrame({"k3": out_k3, "v3": out_v3})
 
         return mapped.groupBy("k2").applyInPandas(
-            on_worker(run_reduce), schema=self.reduce_output_schema
+            on_worker(run_reduce), schema=REDUCE_OUTPUT_SCHEMA
         )
 
     def run(

@@ -29,10 +29,11 @@ AUDIO_FEATURES_SCHEMA = "media_id bigint, n_samples int, features array<float>"
 FRAME_SAMPLE_SCHEMA = "media_id bigint, frame_idx int, frame binary"
 
 
-def _decode_bmp_px(blob: bytes):
-    """Pixel stage of the BMP decoder: returns (width, height,
-    (h, w, 3) float RGB array). The feature wrapper below keeps the
-    original (w, h, feats) contract."""
+def _decode_bmp(blob: bytes):
+    """REAL image decode for uncompressed 24-bit BMP — pure stdlib
+    struct + numpy, no imaging library. Returns (width, height,
+    8-float features): mean R/G/B plus luminance mean/std/min/max and
+    the fraction of above-mean-luminance pixels."""
     import struct
 
     import numpy as np
@@ -52,16 +53,7 @@ def _decode_bmp_px(blob: bytes):
     )
     if bottom_up:
         px = px[::-1]
-    return w, h, px[..., ::-1]  # BMP stores BGR; emit RGB
-
-
-def _decode_bmp(blob: bytes):
-    """REAL image decode for uncompressed 24-bit BMP — pure stdlib
-    struct + numpy, no imaging library. Returns (width, height,
-    8-float features): mean R/G/B plus luminance mean/std/min/max and
-    the fraction of above-mean-luminance pixels."""
-    w, h, px = _decode_bmp_px(blob)
-    return w, h, _rgb_features(px)
+    return w, h, _rgb_features(px[..., ::-1])  # BMP stores BGR; use RGB
 
 
 def _rgb_features(px):
@@ -82,8 +74,8 @@ def _rgb_features(px):
     ]
 
 
-def _decode_png_px(blob: bytes):
-    """Pixel stage of the PNG decoder (see _decode_png). REAL image decode for 8-bit truecolor PNG (color types 2 RGB /
+def _decode_png(blob: bytes):
+    """REAL image decode for 8-bit truecolor PNG (color types 2 RGB /
     6 RGBA, no interlace) — PNG is zlib-deflated filtered scanlines,
     so stdlib ``zlib`` + ``struct`` suffice; no imaging library.
     Implements all five scanline filters (None/Sub/Up/Average/Paeth,
@@ -157,13 +149,6 @@ def _decode_png_px(blob: bytes):
         out[y] = rec.astype(np.uint8)
         prev = rec
     px = out.reshape(h, w, ch)[:, :, :3].astype(np.float64)
-    return w, h, px
-
-
-def _decode_png(blob: bytes):
-    """Feature wrapper over _decode_png_px — the original (w, h,
-    8-float features) contract (alpha ignored)."""
-    w, h, px = _decode_png_px(blob)
     return w, h, _rgb_features(px)
 
 
@@ -395,8 +380,8 @@ def _jpeg_ac_refine(br, blk, k0, se, al, table, eobrun):
     return eobrun
 
 
-def _decode_jpeg_px(blob: bytes):
-    """Pixel stage of the JPEG decoder (see _decode_jpeg). REAL image decode for Huffman JPEG, baseline sequential
+def _decode_jpeg(blob: bytes):
+    """REAL image decode for Huffman JPEG, baseline sequential
     (SOF0/SOF1) AND progressive (SOF2) — pure stdlib struct + numpy,
     no imaging library. Marker parse (DQT/DHT/SOF/DRI/SOS); every
     scan decodes into per-component zigzag COEFFICIENT stores (the
@@ -538,13 +523,6 @@ def _decode_jpeg_px(blob: bytes):
         )
     else:
         raise ValueError(f"unsupported component count {len(comps)}")
-    return w, h, px
-
-
-def _decode_jpeg(blob: bytes):
-    """Feature wrapper over _decode_jpeg_px — the original (w, h,
-    8-float features) contract."""
-    w, h, px = _decode_jpeg_px(blob)
     return w, h, _rgb_features(px)
 
 
@@ -590,8 +568,8 @@ def _gif_lzw(data: bytes, min_code: int, npix: int):
     return out
 
 
-def _decode_gif_px(blob: bytes):
-    """Pixel stage of the GIF decoder (see _decode_gif). REAL image decode for GIF87a/GIF89a — stdlib + numpy, no
+def _decode_gif(blob: bytes):
+    """REAL image decode for GIF87a/GIF89a — stdlib + numpy, no
     imaging library: logical screen descriptor, global/local color
     tables, extension skipping, first image descriptor, LZW
     decompress, 4-pass interlace reorder, palette lookup. Returns
@@ -651,7 +629,7 @@ def _decode_gif_px(blob: bytes):
                 deinter[order] = rows
                 rows = deinter
             px = pal[rows].astype(np.float64)
-            return w, h, px
+            return w, h, _rgb_features(px)
         elif b0 == 0x3B:  # trailer
             break
         else:
@@ -659,17 +637,11 @@ def _decode_gif_px(blob: bytes):
     raise ValueError("no image data in GIF")
 
 
-def _decode_gif(blob: bytes):
-    """Feature wrapper over _decode_gif_px — the original (w, h,
-    8-float features) contract (frame one, like any thumbnailer)."""
-    w, h, px = _decode_gif_px(blob)
-    return w, h, _rgb_features(px)
-
-
-def _decode_wav_pcm(blob: bytes):
-    """Sample stage of the WAV decoder: returns (n_frames, sr, ch,
-    normalized mono float array). The feature wrapper below keeps the
-    original (n, feats) contract."""
+def _decode_wav(blob: bytes):
+    """REAL audio decode for PCM WAV — stdlib ``wave`` + numpy, no
+    audio library. Returns (n_frames, 8-float features): RMS,
+    zero-crossing rate, peak, mean, std, and duration/rate/channel
+    descriptors."""
     import io
     import wave
 
@@ -687,15 +659,6 @@ def _decode_wav_pcm(blob: bytes):
         x = x - 128.0
     x = x.reshape(-1, ch).mean(axis=1)
     x = x / float(1 << (8 * sw - 1))
-    return n, sr, ch, x
-
-
-def _decode_wav(blob: bytes):
-    """REAL audio decode for PCM WAV — stdlib ``wave`` + numpy, no
-    audio library. Returns (n_frames, 8-float features): RMS,
-    zero-crossing rate, peak, mean, std, and duration/rate/channel
-    descriptors."""
-    n, sr, ch, x = _decode_wav_pcm(blob)
     return n, _pcm_features(x, sr, n, ch)
 
 
@@ -835,9 +798,8 @@ def _flac_subframe(br: _FlacBits, blocksize: int, bps: int) -> list:
     return out
 
 
-def _decode_flac_pcm(blob: bytes):
-    """Sample stage of the FLAC decoder (see _decode_flac). REAL
-    audio decode for native FLAC — pure stdlib + numpy, no
+def _decode_flac(blob: bytes):
+    """REAL audio decode for native FLAC — pure stdlib + numpy, no
     audio library: metadata/STREAMINFO parse, per-frame bit-level
     decode of all four subframe types (CONSTANT / VERBATIM / FIXED /
     LPC) with Rice-coded residual partitions, wasted-bits, and
@@ -935,13 +897,6 @@ def _decode_flac_pcm(blob: bytes):
         pos = br.bytepos + 2  # skip frame CRC-16
     x = np.array(chans, dtype=np.float64).mean(axis=0)
     x = x / float(1 << (bps - 1))
-    return n_frames, sr, ch, x
-
-
-def _decode_flac(blob: bytes):
-    """Feature wrapper over _decode_flac_pcm — the original
-    (n_frames, 8-float features) contract (the _decode_wav twin)."""
-    n_frames, sr, ch, x = _decode_flac_pcm(blob)
     return n_frames, _pcm_features(x, sr, n_frames, ch)
 
 

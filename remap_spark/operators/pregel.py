@@ -19,8 +19,8 @@ Scale design:
   front (``repartition(id)`` / ``repartition(src)``) so every
   superstep's join reuses the same partitioning instead of
   re-shuffling both sides each iteration;
-- lineage is cut with ``localCheckpoint`` every ``checkpoint_interval``
-  supersteps — without this the plan doubles per iteration and the
+- lineage is cut with ``localCheckpoint`` every ``_CHECKPOINT_INTERVAL``
+  (10) supersteps — without this the plan doubles per iteration and the
   driver OOMs compiling it long before data size matters (SURVEY §7.2
   hard part (a));
 - convergence check is a single tiny aggregate per superstep;
@@ -41,6 +41,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..engine import local_frame
+
+# Supersteps between eager lineage cuts of a non-voting Pregel loop.
+_CHECKPOINT_INTERVAL = 10
+
+
+def _input_width(*frames: DataFrame) -> int:
+    """Data-proportional shuffle width of a graph loop: the inputs'
+    scan width (planning metadata, no job), at least 4, capped by the
+    session shuffle setting — a 10-vertex fixture iterates on a handful
+    of tasks, a 100 TB edge set still gets the full configured width."""
+    conf_n = int(frames[0].sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return min(conf_n, max(4, *(f.rdd.getNumPartitions() for f in frames)))
 
 
 class Pregel:
@@ -100,7 +112,6 @@ class Pregel:
         update: Callable[[DataFrame, Column, int], list[Column]] | None = None,
         vote_halt: Column | None = None,
         max_supersteps: int = 30,
-        checkpoint_interval: int = 10,
         num_partitions: int | None = None,
         messages: Callable[[DataFrame, int], DataFrame] | None = None,
         aggregator: list[Column] | None = None,
@@ -114,20 +125,8 @@ class Pregel:
         self.vote_halt = vote_halt
         self.aggregator = aggregator
         self.max_supersteps = max_supersteps
-        self.checkpoint_interval = checkpoint_interval
-        spark = vertices.sparkSession
-        n = num_partitions
-        if n is None:
-            # Data-proportional default: per-superstep shuffle width
-            # follows the INPUT's scan width (planning metadata, no
-            # job), capped by the session shuffle setting — a 10-vertex
-            # fixture iterates on a handful of tasks, a 100 TB edge set
-            # still gets the full configured width.
-            conf_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            src_parts = vertices.rdd.getNumPartitions()
-            if edges is not None:
-                src_parts = max(src_parts, edges.rdd.getNumPartitions())
-            n = min(conf_n, max(4, src_parts))
+        frames = [vertices] if edges is None else [vertices, edges]
+        n = _input_width(*frames) if num_partitions is None else num_partitions
         self.n = n
         # co-partition once; every superstep's join then lines up
         self.vertices = vertices.repartition(n, "id")
@@ -188,11 +187,11 @@ class Pregel:
             # voting loops — the per-step halt aggregate (which
             # materializes the step's checkpoint as a side effect, one
             # job per superstep instead of checkpoint+agg); non-voting
-            # loops — an EAGER cut every checkpoint_interval supersteps
+            # loops — an EAGER cut every _CHECKPOINT_INTERVAL supersteps
             # (one job per interval; the intermediate lazy checkpoints
             # materialize inside it).
             eager = self.vote_halt is None and (
-                step % self.checkpoint_interval == self.checkpoint_interval - 1
+                step % _CHECKPOINT_INTERVAL == _CHECKPOINT_INTERVAL - 1
                 or step == self.max_supersteps
             )
             new_vertices = new_vertices.localCheckpoint(eager=eager)
@@ -583,17 +582,7 @@ def _flood_fixpoint(
                 max_block,
             )
             return local_frame(spark, zip(ids, vals), schema)
-    n = num_partitions
-    if n is None:
-        # same data-proportional sizing as Pregel.__init__
-        n = min(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            max(
-                4,
-                vertices.rdd.getNumPartitions(),
-                edges.rdd.getNumPartitions(),
-            ),
-        )
+    n = _input_width(vertices, edges) if num_partitions is None else num_partitions
     # LAZY cuts: the first block's convergence action materializes both
     # (two fewer setup jobs than eager); across later blocks the
     # repartition shuffle outputs are reused, so neither recomputes.
@@ -815,14 +804,7 @@ def connected_components_star(
     """
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    spark = edges.sparkSession
-    n = num_partitions
-    if n is None:
-        # same data-proportional sizing as Pregel.__init__
-        n = min(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            max(4, edges.rdd.getNumPartitions()),
-        )
+    n = _input_width(edges) if num_partitions is None else num_partitions
     # one eager cut of the upstream edge subtree before the two derived
     # checkpoints below — verts and e would otherwise each recompute it
     # (same reasoning as connected_components)
@@ -986,7 +968,6 @@ def sssp(
     src: str = "src",
     dst: str = "dst",
     wt: str = "wt",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Single-source shortest paths — Bellman-Ford as flood-min over
     dist+weight messages: every round each vertex offers its neighbors
@@ -1018,9 +999,7 @@ def sssp(
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(wt).alias("wt")
     )
-    out = _flood_fixpoint(
-        vertices, e, "min", weight="wt", num_partitions=num_partitions
-    )
+    out = _flood_fixpoint(vertices, e, "min", weight="wt")
     return out.where(F.col("value") < big).select(
         "id", F.col("value").alias("dist")
     )
@@ -1076,7 +1055,6 @@ def k_core(
     k: int,
     max_iter: int = 200,
     max_block: int = 8,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """The k-core of an undirected graph: the maximal subgraph where
     every vertex keeps degree >= k, computed by parallel peeling —
@@ -1105,11 +1083,7 @@ def k_core(
     raises instead of returning a superset of the k-core."""
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    spark = edges.sparkSession
-    n = num_partitions or min(
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        max(4, edges.rdd.getNumPartitions()),
-    )
+    n = _input_width(edges)
     und = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     sym = (
         _symmetrize(und)
@@ -1232,7 +1206,6 @@ def pagerank_personalized(
 def label_propagation(
     edges: DataFrame,
     rounds: int = 4,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Synchronous label propagation for community detection, FIXED
     round count, fully deterministic: every vertex starts as its own
@@ -1253,11 +1226,7 @@ def label_propagation(
     the resulting assignment."""
     from pyspark.sql.window import Window
 
-    spark = edges.sparkSession
-    n = num_partitions or min(
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        max(4, edges.rdd.getNumPartitions()),
-    )
+    n = _input_width(edges)
     und = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     sym = (
         _symmetrize(und)
@@ -1376,7 +1345,6 @@ def hits(
     edges: DataFrame,
     iters: int = 8,
     num_partitions: int | None = None,
-    checkpoint_interval: int = 1,
 ) -> DataFrame:
     """HITS (Kleinberg 1999) hubs and authorities, L1-normalized.
 
@@ -1395,8 +1363,8 @@ def hits(
     identical to pagerank's per-superstep profile, so the 100 TB story
     is the same: the edge relation is the big side, pre-partitioned by
     its join key once up front; vertex state (id, hub, auth) never
-    leaves the executors; lineage is cut EVERY iteration with a lazy
-    localCheckpoint (``checkpoint_interval = 1``). Unlike pagerank's
+    leaves the executors; lineage is cut with a lazy localCheckpoint
+    after every iteration but the last. Unlike pagerank's
     single state vector, HITS threads TWO mutually-referencing vectors
     (hub feeds auth feeds hub), each consumed twice per iteration (a
     gather join + its normalizer aggregate) — an uncut segment
@@ -1467,7 +1435,7 @@ def hits(
                 .alias("hub"),
             )
         )
-        if (it + 1) % checkpoint_interval == 0 and it + 1 < iters:
+        if it + 1 < iters:
             state = state.localCheckpoint(eager=False)
             auth = auth.localCheckpoint(eager=False)
     return state.join(auth, "id").select("id", "hub", "auth")
@@ -1496,7 +1464,6 @@ def k_truss(
     edges: DataFrame,
     k: int,
     max_iter: int = 50,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """The k-truss of an undirected graph: the maximal subgraph in
     which every edge participates in at least k-2 triangles (Cohen
@@ -1521,11 +1488,7 @@ def k_truss(
     count), negligible next to the triangle join it gates."""
     if k < 3:
         raise ValueError("k-truss requires k >= 3")
-    spark = edges.sparkSession
-    n = num_partitions or min(
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        max(4, edges.rdd.getNumPartitions()),
-    )
+    n = _input_width(edges)
     und = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     cur = (
         und.select(
@@ -1595,9 +1558,7 @@ def k_truss(
     )
 
 
-def clustering_coefficient(
-    edges: DataFrame, num_partitions: int | None = None
-) -> DataFrame:
+def clustering_coefficient(edges: DataFrame) -> DataFrame:
     """Local clustering coefficient per vertex, ppm-EXACT:
     lcc(v) = 2 * triangles(v) / (deg(v) * (deg(v) - 1)) on the
     simple undirected graph (self-loops dropped, multi-edges
@@ -1609,11 +1570,7 @@ def clustering_coefficient(
     plan shared with triangle_count / k_truss), exploded to its three
     corners for a combiner-style per-vertex count, plus one degree
     aggregate and a left join — no iteration, no driver action."""
-    spark = edges.sparkSession
-    n = num_partitions or min(
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        max(4, edges.rdd.getNumPartitions()),
-    )
+    n = _input_width(edges)
     und = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     canon = (
         und.select(

@@ -138,12 +138,11 @@ def table_changes(
     old: DataFrame,
     new: DataFrame,
     keys: list[str],
-    compare_cols: list[str] | None = None,
 ) -> DataFrame:
     """Row-level snapshot diff — the change-data-feed generator: given
     two snapshots of a keyed table, emit one row per changed key with
     ``op`` in ('insert', 'update', 'delete') and ``changed_cols`` (the
-    NULL-SAFE-unequal compare columns; empty for insert/delete). Value
+    NULL-SAFE-unequal non-key columns; empty for insert/delete). Value
     columns carry the NEW image for insert/update and the OLD image
     for delete, so the output feeds scd2_apply_batch / a MERGE
     directly. Unchanged keys are dropped. Keys must be unique within
@@ -152,15 +151,11 @@ def table_changes(
     Shape: ONE full-outer join on the key columns — bucketed or
     co-partitioned snapshots make it exchange-free; AQE handles the
     common skew. The change verdict and column mask are pure codegen
-    projections (eqNullSafe per compare column); nothing but the
+    projections (eqNullSafe per non-key column); nothing but the
     changed rows leaves the operator, so downstream work is
     change-sized, not table-sized.
     """
-    compare_cols = list(
-        compare_cols
-        if compare_cols is not None
-        else [c for c in new.columns if c not in keys]
-    )
+    compare_cols = [c for c in new.columns if c not in keys]
     o = old.select(
         *keys, *[F.col(c).alias(f"_o_{c}") for c in compare_cols],
         F.lit(1).alias("_in_old"),
@@ -210,14 +205,13 @@ def scd2_lookup(
     key_col: str,
     fact_ts_col: str,
     attr_cols: list[str],
-    how: str = "left",
 ) -> DataFrame:
     """AS-OF enrichment against a Type-2 dimension — the READ side of
     the SCD2 family: each fact joins the dimension version whose
     validity interval contains the fact's timestamp
     (valid_from <= ts < valid_to, open current version = NULL
     valid_to). Facts earlier than the key's first version (or with no
-    dimension key at all) keep NULL attributes under ``how='left'``.
+    dimension key at all) keep NULL attributes (a left join).
 
     Shape: ONE equi-join on the key with the interval predicate as a
     post-join filter — never a nested loop (the key IS the equi
@@ -242,6 +236,6 @@ def scd2_lookup(
             | (F.col(f"f.{fact_ts_col}") < F.col("d.valid_to"))
         )
     )
-    return fa.join(d, cond, how).select(
+    return fa.join(d, cond, "left").select(
         "f.*", *[F.col(f"d.{a}").alias(a) for a in attr_cols]
     )

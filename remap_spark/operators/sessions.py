@@ -419,26 +419,23 @@ def attribute_conversions(
     df: DataFrame,
     touch_types: Sequence[str],
     conversion_type: str,
-    model: str = "first",
     ts_col: str = "ts",
     user_col: str = "user_id",
     type_col: str = "event_type",
     id_col: str = "event_id",
 ) -> DataFrame:
     """Marketing attribution: credit each conversion event to the
-    FIRST (model='first') or most recent (model='last') touch event in
-    the same user's preceding timeline. Conversions with no preceding
+    FIRST touch event in the same user's preceding timeline
+    (first-touch attribution). Conversions with no preceding
     touch attribute to NULL (organic). Returns one row per conversion:
     (user, conversion event id + ts, channel) — feed it to a groupBy
     for the per-channel report.
 
     Shape: ONE user-keyed window (the sessionize/funnel layout —
-    composed pipelines reuse the exchange); the running first/last
+    composed pipelines reuse the exchange); the running first
     touch is an ignorenulls window aggregate over (ts, event_id)
     ordering, so the operator is a narrow projection after the
     shuffle. No joins, no second corpus pass, scale-invariant."""
-    if model not in ("first", "last"):
-        raise ValueError(f"model must be 'first' or 'last', got {model!r}")
     from pyspark.sql.window import Window
 
     w = (
@@ -449,13 +446,8 @@ def attribute_conversions(
     touch = F.when(
         F.col(type_col).isin(list(touch_types)), F.col(type_col)
     )
-    running = (
-        F.first(touch, ignorenulls=True).over(w)
-        if model == "first"
-        else F.last(touch, ignorenulls=True).over(w)
-    )
     return (
-        df.withColumn("_channel", running)
+        df.withColumn("_channel", F.first(touch, ignorenulls=True).over(w))
         .where(F.col(type_col) == conversion_type)
         .select(
             user_col,
@@ -472,15 +464,13 @@ def markov_transitions(
     user_col: str = "user_id",
     type_col: str = "event_type",
     id_col: str = "event_id",
-    include_end: bool = False,
 ) -> DataFrame:
     """First-order Markov transition table over user event timelines:
     for every consecutive event pair in a user's (ts, event_id)-ordered
     stream, count the (from_event, to_event) transition and report the
     row-normalized transition probability as an exact ppm integer
-    (n_transitions * 1e6 DIV row_total). ``include_end=True`` adds a
-    terminal '__end__' transition for each user's last event, so every
-    row of the matrix sums to 1e6 (minus DIV flooring).
+    (n_transitions * 1e6 DIV row_total). A user's last event has no
+    successor and starts no transition.
 
     The transition matrix is the fitted model behind next-event
     prediction and user-flow Sankey charts; top_event_paths reports the
@@ -500,9 +490,7 @@ def markov_transitions(
     nxt = F.lead(type_col, 1).over(w)
     pairs = df.select(
         F.col(type_col).alias("from_event"),
-        (
-            F.coalesce(nxt, F.lit("__end__")) if include_end else nxt
-        ).alias("to_event"),
+        nxt.alias("to_event"),
     ).where(F.col("to_event").isNotNull())
     counted = pairs.groupBy("from_event", "to_event").agg(
         F.count("*").alias("n_transitions")

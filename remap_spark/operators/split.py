@@ -290,7 +290,6 @@ def weighted_sample_wor(
     weight: Column | str,
     k: int,
     salt: str = "",
-    strata: Column | str | None = None,
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement
     (Efraimidis–Spirakis A-ES): each row draws u in (0,1] as a pure
@@ -302,10 +301,8 @@ def weighted_sample_wor(
     incrementally grown data reproduces the identical sample for the
     surviving keys.
 
-    With ``strata`` the top-k applies per stratum (one window over the
-    stratum-keyed shuffle); without it the global top-k is a
-    TakeOrdered — no full sort. Zero/negative weights are excluded
-    outright (their A-ES score is undefined).
+    The top-k is a TakeOrdered — no full sort. Zero/negative weights
+    are excluded outright (their A-ES score is undefined).
 
     Returns the sampled rows plus ``_es_score`` (ascending = keep
     priority) for auditability."""
@@ -318,17 +315,7 @@ def weighted_sample_wor(
     ) / F.lit(4294967296.0)
     score = -F.log(u) / wc
     out = df.where(wc > 0).withColumn("_es_score", score)
-    if strata is None:
-        return out.orderBy("_es_score").limit(k)
-    sc = F.col(strata) if isinstance(strata, str) else strata
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(sc).orderBy("_es_score")
-    return (
-        out.withColumn("_es_rn", F.row_number().over(w))
-        .where(F.col("_es_rn") <= k)
-        .drop("_es_rn")
-    )
+    return out.orderBy("_es_score").limit(k)
 
 
 def dsir_log_weights(

@@ -114,9 +114,7 @@ def ext_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-touch channel attribution of purchases over the events
     stream (touches = view/click/signup)."""
     ev = load_table(spark, sf_dir, "events")
-    out = attribute_conversions(
-        ev, ["view", "click", "signup"], "purchase", model="first"
-    )
+    out = attribute_conversions(ev, ["view", "click", "signup"], "purchase")
     return out.select("user_id", "conversion_id", "channel").orderBy(
         "conversion_id"
     )

@@ -178,6 +178,11 @@ def test_no_unbounded_driver_actions_in_operator_sources():
                 assert action in allowed.get(src.name, set()), (
                     f"{src.name} uses {action} on an operator data path"
                 )
+        # an entry the file's code no longer needs is stale: it would
+        # let a new unbounded action into that file pass
+        for action in allowed.get(src.name, set()):
+            assert action in code, f"{src.name} no longer uses {action}"
+    assert set(allowed) <= {src.name for src in root.glob("*.py")}, allowed
 
 
 def test_driver_rows_enter_only_through_local_frame():
@@ -335,6 +340,82 @@ def test_every_public_def_is_reached():
             break
         unreached |= found
     assert sorted(unreached) == [], sorted(unreached)
+
+
+def test_every_mode_parameter_is_turned():
+    """Every ``bool``- or ``str``-defaulted parameter of a public def in
+    ``operators/`` and ``functions/`` (a public class counts through its
+    ``__init__``) is set to a value other than its default by some call
+    in the package, ``bench.py`` or ``perfbench/``. A mode that nothing
+    turns is a branch that nothing runs: the default should be the code.
+    Column names (``*_col``, ``src``, ``dst``, ``wt``, ``sep``) and the
+    ``salt``/``out`` names are the API, not modes, and are skipped. A
+    keyword or positional argument counts unless it is a literal equal
+    to the default; int and list parameters are not checked."""
+    import ast
+    import pathlib
+
+    import remap_spark
+
+    # (def, parameter) -> why it stays although no caller turns it
+    allowed = {
+        ("image_features", "fake"): "tests pass False to prove the native decoder ran",
+        ("audio_features", "fake"): "tests pass False to prove the native decoder ran",
+    }
+    pkg = pathlib.Path(remap_spark.__file__).parent
+    repo = pkg.parent
+    skip = {"src", "dst", "wt", "sep", "salt", "out"}
+    # (def, parameter) -> (default, index among the positional arguments)
+    modes: dict[tuple, tuple] = {}
+    for src in sorted([*pkg.glob("operators/*.py"), *pkg.glob("functions/*.py")]):
+        for node in ast.parse(src.read_text()).body:
+            fn, shift = node, 0
+            if isinstance(node, ast.ClassDef):
+                inits = [n for n in node.body if getattr(n, "name", "") == "__init__"]
+                fn, shift = (inits[0], 1) if inits else (None, 0)
+            if not isinstance(fn, ast.FunctionDef) or node.name.startswith("_"):
+                continue
+            a = fn.args
+            pos = [p.arg for p in a.posonlyargs + a.args]
+            pairs = list(zip(pos[len(pos) - len(a.defaults) :], a.defaults))
+            pairs += [(p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+            for name, d in pairs:
+                if (
+                    isinstance(d, ast.Constant)
+                    and type(d.value) in (bool, str)
+                    and not name.endswith("_col")
+                    and name not in skip
+                ):
+                    idx = pos.index(name) - shift if name in pos else None
+                    modes[node.name, name] = (d.value, idx)
+    scanned = [
+        *sorted(pkg.rglob("*.py")),
+        repo / "bench.py",
+        *sorted((repo / "perfbench").rglob("*.py")),
+    ]
+    turned = set()
+    for src in scanned:
+        for call in ast.walk(ast.parse(src.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            callee = getattr(f, "id", getattr(f, "attr", None))
+            for (name, param), (default, idx) in modes.items():
+                if name != callee:
+                    continue
+                vals = [k.value for k in call.keywords if k.arg == param]
+                if idx is not None and idx < len(call.args):
+                    vals.append(call.args[idx])
+                if any(
+                    not isinstance(v, ast.Constant)
+                    or type(v.value) is not type(default)
+                    or v.value != default
+                    for v in vals
+                ):
+                    turned.add((name, param))
+    assert set(allowed) <= set(modes), sorted(set(allowed) - set(modes))
+    unturned = sorted(set(modes) - turned - set(allowed))
+    assert unturned == [], unturned
 
 
 def test_local_frame_matches_list_built_frame(spark):

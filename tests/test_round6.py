@@ -328,7 +328,7 @@ def test_expectations_single_scan_plan(spark):
     assert len(scans) == 1, r["plan"]
 
 
-def test_attribution_first_and_last_touch(spark):
+def test_attribution_first_touch(spark):
     from remap_spark.operators.sessions import attribute_conversions
 
     ts = datetime.datetime(2024, 1, 1)
@@ -351,15 +351,6 @@ def test_attribution_first_and_last_touch(spark):
     )
     first = {
         r.conversion_id: r.channel
-        for r in attribute_conversions(
-            ev, ["ad", "email"], "purchase", model="first"
-        ).collect()
-    }
-    last = {
-        r.conversion_id: r.channel
-        for r in attribute_conversions(
-            ev, ["ad", "email"], "purchase", model="last"
-        ).collect()
+        for r in attribute_conversions(ev, ["ad", "email"], "purchase").collect()
     }
     assert first == {3: "ad", 4: "ad", 5: None, 6: None, 8: "ad"}
-    assert last == {3: "email", 4: "email", 5: None, 6: None, 8: "ad"}

@@ -39,23 +39,6 @@ def test_markov_transitions_hand_computed(spark):
     assert len(got) == 3
 
 
-def test_markov_transitions_end_sentinel(spark):
-    from remap_spark.operators.sessions import markov_transitions
-
-    rows = [(1, 1, 10, "a"), (2, 1, 20, "b"), (3, 2, 10, "a")]
-    df = spark.createDataFrame(
-        rows, "event_id bigint, user_id bigint, ts bigint, event_type string"
-    )
-    got = {
-        (r.from_event, r.to_event): r.prob_ppm
-        for r in markov_transitions(df, include_end=True).collect()
-    }
-    assert got[("a", "b")] == 500_000
-    assert got[("a", "__end__")] == 500_000
-    assert got[("b", "__end__")] == 1_000_000
-    # every from-row sums to 1e6 (exact halves here, no floor loss)
-
-
 def test_markov_transitions_match_duckdb(spark):
     from remap_spark.engine import load_table
     from remap_spark.operators.sessions import markov_transitions

@@ -471,14 +471,11 @@ def test_maximal_spans_property_vs_brute_force(spark):
         )
 
 
-def test_maximal_spans_include_intra_self_repeat(spark):
-    from remap_spark.operators.dedup import (
-        maximal_match_spans,
-        remove_duplicate_spans_keep_one,
-    )
+def test_maximal_spans_ignore_same_doc_repeat(spark):
+    from remap_spark.operators.dedup import maximal_match_spans
 
     # doc 0 repeats a 7-token phrase twice with unique filler between;
-    # cross-doc mode must see nothing, intra mode exactly the repeat
+    # the pairs are cross-document only, so nothing matches
     dup = "alpha beta gamma delta epsilon zeta eta"
     rows = [
         (0, f"{dup} f0a f0b f0c {dup}"),
@@ -486,39 +483,6 @@ def test_maximal_spans_include_intra_self_repeat(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     assert maximal_match_spans(df, k=5).count() == 0
-    got = {
-        (r["doc"], r["span_start"], r["span_len"])
-        for r in maximal_match_spans(df, k=5, include_intra=True).collect()
-    }
-    assert got == {(0, 0, 7), (0, 10, 7)}
-
-    out = {
-        r["doc"]: r
-        for r in remove_duplicate_spans_keep_one(
-            df, k=5, include_intra=True
-        ).collect()
-    }
-    # the LATER self-occurrence is removed, the first kept
-    assert out[0]["n_removed"] == 7
-    assert out[0]["text"].split() == dup.split() + ["f0a", "f0b", "f0c"]
-    assert out[1]["n_removed"] == 0
-
-
-def test_maximal_spans_intra_periodic_string(spark):
-    from remap_spark.operators.dedup import maximal_match_spans
-
-    # 'ab' * 6: the self-overlapping repeat on diagonal -2 is tokens
-    # [0,10) vs [2,12) — one maximal match per distinct diagonal
-    rows = [(0, " ".join(["a", "b"] * 6))]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (r["doc"], r["span_start"], r["span_len"])
-        for r in maximal_match_spans(df, k=4, include_intra=True).collect()
-    }
-    # diagonals -2,-4,...: match lengths 10, 8, 6, 4 starting at 0,
-    # partner starts at 2, 4, 6, 8
-    assert (0, 0, 10) in got and (0, 2, 10) in got
-    assert (0, 0, 4) in got and (0, 8, 4) in got
 
 
 # ---------------------------------------------------------------------------
@@ -593,15 +557,6 @@ def test_incremental_spans_store_hit_and_batch_dup(spark):
     assert out[10]["n_removed"] == 5 and boiler not in out[10]["text"]
     assert out[11]["n_removed"] == 6 and out[12]["n_removed"] == 6
     assert out[13]["n_removed"] == 0
-    # store-only mode leaves the within-batch pair alone
-    out2 = {
-        r["doc"]: r
-        for r in incremental_remove_spans(
-            new, store, k=5, dedup_within_batch=False
-        ).collect()
-    }
-    assert out2[11]["n_removed"] == 0 and out2[12]["n_removed"] == 0
-    assert out2[10]["n_removed"] == 5
 
 
 def test_incremental_spans_bucketed_store_no_store_exchange(spark):
@@ -634,17 +589,11 @@ def test_incremental_spans_bucketed_store_no_store_exchange(spark):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         n_bucketed = explain_str(
-            incremental_remove_spans(
-                new, spark.table("gram_store_b"), k=5,
-                dedup_within_batch=False,
-            ),
+            incremental_remove_spans(new, spark.table("gram_store_b"), k=5),
             "simple",
         ).count("Exchange")
         n_flat = explain_str(
-            incremental_remove_spans(
-                new, spark.table("gram_store_flat"), k=5,
-                dedup_within_batch=False,
-            ),
+            incremental_remove_spans(new, spark.table("gram_store_flat"), k=5),
             "simple",
         ).count("Exchange")
     finally:
