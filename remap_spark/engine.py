@@ -16,18 +16,31 @@ Scale notes (100 TB target):
   enter as Arrow local relations (``local_frame``), never through
   ``createDataFrame(list)``: that is a pickled RDD, and every scan of it
   runs Python-worker tasks. A local relation is scanned inside the JVM.
-- A Python-worker task has a fixed cost: pyspark calls
+- A Python-worker task has two fixed costs. pyspark calls
   ``importlib.invalidate_caches()`` per task, and before CPython 3.13
   each of the worker's 17 zip importers (pyspark.zip, the spark-core
   jar, py4j, this package) then re-reads its archive, about 0.27 CPU-s
-  per task (4-core VM, CPython 3.11.7). Every Python function the
-  package ships goes through ``worker.on_worker``, which makes a
-  worker re-read only archives that changed.
+  per task (4-core VM, CPython 3.11.7). And pyspark's daemon runs
+  ``gc.collect()`` after every task of a reused worker, which walks
+  every pandas and pyarrow module object: about 40 CPU-ms per task,
+  against 4.5 ms for the task's own ``worker.main``. On a local master
+  ``build_session`` makes ``remap_spark.daemon`` the Python daemon: it
+  installs the stat-checked invalidation, imports the worker, pandas
+  and pyarrow, reads the archives once and freezes the collector's
+  generations before it forks a worker, so a task pays neither cost
+  (about 5 CPU-ms per task). ``worker.on_worker``, which every shipped
+  Python function goes through, is the fallback where that daemon does
+  not run: sessions ``build_session`` did not build, non-local masters.
+- ``load_table`` infers a parquet file's schema once per process: the
+  inference is a Spark job (75-100 JVM CPU-ms); a later load of the
+  same unchanged file under the same parquet confs passes the schema
+  and runs none.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 from collections.abc import Iterable, Sequence
 from pathlib import Path
 
@@ -62,8 +75,16 @@ def build_session(
 
     On a cluster, ``master`` comes from spark-submit; locally we default
     to ``local[$SPARK_GRAFT_CPUS]``.
+
+    On a local master (``local`` or ``local[...]``) the Python daemon is
+    ``remap_spark.daemon``, imported from ``package_zip()``, which is
+    put in front of any ``spark.executorEnv.PYTHONPATH`` in
+    ``extra_conf``. Any other master keeps pyspark's stock daemon: its
+    executors cannot see the driver's temp zip.
     """
     cores = default_parallelism()
+    if master is None and "SPARK_MASTER" not in os.environ:
+        master = f"local[{cores}]"
     builder = (
         SparkSession.builder.appName(app_name)
         # local mode = ONE JVM for driver + all executor threads; the
@@ -71,7 +92,7 @@ def build_session(
         # this is spark-submit's --driver-memory / --executor-memory.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
         # --- adaptivity: the scale story ------------------------------
         .config("spark.sql.adaptive.enabled", "true")
@@ -95,13 +116,27 @@ def build_session(
         # micros in load_table — same truncation DuckDB applies on read.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
+    extra_conf = dict(extra_conf or {})
     if master:
         builder = builder.master(master)
-    elif "SPARK_MASTER" not in os.environ:
-        builder = builder.master(f"local[{cores}]")
-    for k, v in (extra_conf or {}).items():
+    if master == "local" or (master or "").startswith("local["):
+        path = [str(package_zip())]
+        if extra_conf.get("spark.executorEnv.PYTHONPATH"):
+            path.append(extra_conf.pop("spark.executorEnv.PYTHONPATH"))
+        builder = builder.config(
+            "spark.python.daemon.module", "remap_spark.daemon"
+        ).config("spark.executorEnv.PYTHONPATH", os.pathsep.join(path))
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _default_driver_memory() -> str:
+    """A quarter of physical memory, between 1g and 16g: the JVM's own
+    default heap share, which leaves the rest of the host to the Python
+    processes."""
+    mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, max(1024, mib // 4))}m"
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -167,7 +202,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # (the correctness driver supplies its own SparkSession)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ship_package(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     # nanosAsLong surfaces TIMESTAMP(NANOS) columns as bigint; restore
     # them to microsecond timestamps (floor-truncation — values are
     # positive — matching DuckDB's ns->us read behavior).
@@ -179,6 +214,45 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # integer `div`, NOT `/` — float division loses precision
             # above 2^53 ns (~104 days of epoch-nanos)
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
+
+
+# The session confs Spark's parquet-to-Spark schema conversion reads.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.caseSensitive",
+)
+
+# (real path, _SCHEMA_CONFS values) -> ((st_size, st_mtime_ns, st_ino),
+# the schema Spark inferred for the file in that state under those confs)
+_SCHEMAS: dict[tuple, tuple[tuple[int, int, int], StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema Spark inferred for
+    the same file under the same confs passed explicitly when there is
+    one: inferring runs a Spark job, a given schema does not. A file
+    whose size, mtime or inode changed is inferred again. Only a local
+    regular file is cached; a directory (whose files can change under an
+    unchanged directory stat) or a path ``os.stat`` cannot see is
+    inferred every time."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (os.path.realpath(path), *(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    stamp = (st.st_size, st.st_mtime_ns, st.st_ino)
+    cached = _SCHEMAS.get(key)
+    if cached is not None and cached[0] == stamp:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
     return df
 
 

@@ -1377,10 +1377,7 @@ def hits(
 
     vertices: (id); edges: (src, dst). Returns (id, hub, auth).
     """
-    spark = vertices.sparkSession
-    n = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    n = _input_width(vertices, edges) if num_partitions is None else num_partitions
     e = (
         edges.select("src", "dst")
         .repartition(n, "src")

@@ -11,8 +11,13 @@ pyspark.zip (1,328 entries), 2 into the spark-core jar (5,359 entries),
 CPU-s per task (4-core VM, CPython 3.11.7) spent re-reading archives
 that do not change.
 
-The first call of a wrapped function in a worker process replaces that
-method with a stat-checked one: an archive is re-read only when its
+On a local master ``engine.build_session`` makes ``remap_spark.daemon``
+the Python daemon, which installs the stat-checked method before it
+forks any worker (``daemon.py``). ``on_worker`` is the fallback route:
+for sessions ``build_session`` did not build (the correctness driver
+supplies its own) and for non-local masters, the first call of a
+wrapped function in a worker process replaces that method with a
+stat-checked one: an archive is re-read only when its
 ``(st_mtime_ns, st_size, st_ino)`` differs from the last read;
 otherwise the importer is pointed at the directory already cached.
 CPython's own ``FileFinder`` uses the same kind of rule (directory

@@ -677,6 +677,36 @@ def test_hits_zero_degree_vertices(spark):
     assert got["s"][0] == 1.0 and got["t"][1] == 1.0
 
 
+def _edge_scan_widths(df) -> set[int]:
+    """Partition counts of the (src, dst) checkpointed scans under
+    ``df``'s optimized plan: the width hits repartitions its edges to."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    widths = set()
+    for i in range(leaves.size()):
+        node = leaves.apply(i)
+        out = node.output()
+        names = [out.apply(j).name() for j in range(out.size())]
+        if node.getClass().getSimpleName() == "LogicalRDD" and names == ["src", "dst"]:
+            widths.add(node.rdd().getNumPartitions())
+    return widths
+
+
+def test_hits_exchange_width_follows_the_input(spark):
+    """Unset ``num_partitions``: hits shuffles its edges to the
+    input-derived width (``_input_width``, one-partition inputs give
+    4), not the session's ``spark.sql.shuffle.partitions``; a set
+    ``num_partitions`` (ext_graph_hits passes 2) is kept."""
+    from remap_spark.operators.pregel import _input_width, hits
+    from remap_spark.queries.graphs import PAGERANK_ADJ, _edges_df
+
+    edges = _edges_df(spark, PAGERANK_ADJ).coalesce(1)
+    verts = spark.createDataFrame([(v,) for v in PAGERANK_ADJ], "id string").coalesce(1)
+    session = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _input_width(verts, edges) == 4 < session
+    assert _edge_scan_widths(hits(verts, edges, iters=2)) == {4}
+    assert _edge_scan_widths(hits(verts, edges, iters=2, num_partitions=2)) == {2}
+
+
 # ---------------------------------------------------------------------------
 # Cross-corpus decontamination spans (staged r8)
 # ---------------------------------------------------------------------------

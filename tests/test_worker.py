@@ -246,6 +246,127 @@ def test_local1_worker_reports_the_patch(tmp_path):
     assert [r["reads"] for r in later] == [0, 0]
 
 
+_DAEMON_PROBE = """
+import gc, importlib, json, os, sys, zipimport
+sys.path.insert(0, sys.argv[1])
+import pandas as pd
+from remap_spark.engine import build_session
+from remap_spark.worker import EAGER_ATTR
+
+def probe(batches):
+    reads = []
+    real = zipimport._read_directory
+    zipimport._read_directory = lambda a: reads.append(a) or real(a)
+    try:
+        importlib.invalidate_caches()
+    finally:
+        zipimport._read_directory = real
+    with open(f"/proc/{os.getppid()}/cmdline", "rb") as fh:
+        daemon = fh.read().replace(b"\\0", b" ").decode()
+    for pdf in batches:
+        yield pd.DataFrame({
+            "part": pdf["id"].iloc[:1],
+            "daemon_pid": os.getppid(),
+            "daemon": daemon,
+            "installed": EAGER_ATTR in vars(zipimport.zipimporter),
+            "frozen": gc.get_freeze_count(),
+            "reads": len(reads),
+        })
+
+spark = build_session(master="local[1]")
+spark.sparkContext.setLogLevel("ERROR")
+rows = spark.range(0, 3, 1, 3).mapInPandas(
+    probe,
+    "part bigint, daemon_pid bigint, daemon string, "
+    "installed boolean, frozen bigint, reads bigint",
+).collect()
+spark.stop()
+gateway = spark.sparkContext._gateway
+gateway.shutdown()
+gateway.proc.stdin.close()
+gateway.proc.wait(timeout=60)
+print(json.dumps(sorted([r.asDict() for r in rows], key=lambda r: r["part"])))
+"""
+
+
+@pytest.fixture(scope="module")
+def daemon_rows(tmp_path_factory):
+    """The rows a bare (unwrapped) mapInPandas function reports from the
+    three tasks of a ``build_session`` local[1] session, run in a
+    subprocess that then stops the session and its JVM."""
+    tmp = tmp_path_factory.mktemp("daemon")
+    env = dict(os.environ, SPARK_LOCAL_DIRS=str(tmp), TMPDIR=str(tmp))
+    out = subprocess.run(
+        [sys.executable, "-c", _DAEMON_PROBE, str(REPO)],
+        cwd=tmp,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+@pytest.mark.skipif(hasattr(CLS, "_get_files"), reason="lazy zip invalidation")
+def test_daemon_prepares_workers_before_the_first_task(daemon_rows):
+    """Through ``build_session`` on a local master, workers fork from
+    ``remap_spark.daemon``: the first task of a function that never
+    calls ``on_worker`` already sees the patch installed and a frozen
+    collector, and its ``importlib.invalidate_caches()`` reads no
+    archive."""
+    assert [r["part"] for r in daemon_rows] == [0, 1, 2]
+    for r in daemon_rows:
+        assert "-m remap_spark.daemon" in r["daemon"], r["daemon"]
+        assert r["installed"] and r["frozen"] > 0 and r["reads"] == 0, r
+
+
+def test_daemon_exits_with_the_session(daemon_rows):
+    """Once the session and its JVM stopped, the daemon the workers
+    forked from is gone (within a bounded wait)."""
+    import time
+
+    [(daemon_pid, cmdline)] = {(r["daemon_pid"], r["daemon"]) for r in daemon_rows}
+
+    def alive() -> bool:
+        try:
+            with open(f"/proc/{daemon_pid}/stat") as fh:
+                state = fh.read().rsplit(")", 1)[1].split()[0]
+            with open(f"/proc/{daemon_pid}/cmdline", "rb") as fh:
+                same = fh.read().replace(b"\0", b" ").decode() == cmdline
+        except OSError:
+            return False
+        return same and state != "Z"
+
+    deadline = time.monotonic() + 60
+    while alive() and time.monotonic() < deadline:
+        time.sleep(0.5)
+    assert not alive()
+
+
+@pytest.mark.parametrize("master", ["spark://nowhere:7077", "yarn", "local-cluster[2,1,1024]"])
+def test_non_local_master_keeps_the_stock_daemon(monkeypatch, master):
+    """On any master but ``local``/``local[...]`` the executors cannot
+    see the driver's temp zip: ``build_session`` sets neither the daemon
+    module nor the executor PYTHONPATH (and starts nothing here)."""
+    from pyspark.sql import SparkSession
+
+    from remap_spark.engine import build_session
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: dict(self._options))
+    opts = build_session(master=master)
+    assert opts["spark.master"] == master
+    assert "spark.python.daemon.module" not in opts
+    assert "spark.executorEnv.PYTHONPATH" not in opts
+    local = build_session(
+        master="local[2]", extra_conf={"spark.executorEnv.PYTHONPATH": "/caller/path"}
+    )
+    assert local["spark.python.daemon.module"] == "remap_spark.daemon"
+    zip_path, caller = local["spark.executorEnv.PYTHONPATH"].split(os.pathsep)
+    assert os.path.basename(zip_path).startswith("remap_spark_pkg-")
+    assert caller == "/caller/path"
+
+
 def test_wrapped_udfs_give_the_same_rows(spark):
     """``applyInPandas`` in the ``(key, pdf)`` form and type-hinted
     pandas UDFs give the same rows, and the same eval types, through
