@@ -125,6 +125,14 @@ def minhash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     return params
 
 
+def dot_product(a: Column, b: Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
 def cosine_similarity(a: Column, b: Column) -> Column:
     """Cosine over two array<float|double> columns, JVM-side.
 
@@ -132,30 +140,15 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     run in double. For the 100 TB path prefer pre-normalized vectors so
     this reduces to a dot product (see operators/similarity.py).
     """
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(
-        F.aggregate(
-            a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-        )
-    )
-    nb = F.sqrt(
-        F.aggregate(
-            b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-        )
-    )
-    return dot / (na * nb)
 
+    def norm(v: Column) -> Column:
+        return F.sqrt(
+            F.aggregate(
+                v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
+            )
+        )
 
-def dot_product(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    return dot_product(a, b) / (norm(a) * norm(b))
 
 
 def lineage_cut(df):

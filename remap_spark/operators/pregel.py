@@ -1361,10 +1361,12 @@ def hits(
     Shape per iteration: two key shuffles (inbox ``groupBy(dst)`` then
     ``groupBy(src)``) plus two single-row broadcast normalizers —
     identical to pagerank's per-superstep profile, so the 100 TB story
-    is the same: the edge relation is the big side, pre-partitioned by
-    its join key once up front; vertex state (id, hub, auth) never
-    leaves the executors; lineage is cut with a lazy localCheckpoint
-    after every iteration but the last. Unlike pagerank's
+    is the same: the edge relation is the big side, shuffled to ``n``
+    partitions by src and cut once up front (the cut's scan carries no
+    partitioning Catalyst can reuse, so both gather joins plan their
+    own exchange or broadcast, as for any scan); vertex state (id, hub,
+    auth) never leaves the executors; lineage is cut with a lazy
+    localCheckpoint after every iteration but the last. Unlike pagerank's
     single state vector, HITS threads TWO mutually-referencing vectors
     (hub feeds auth feeds hub), each consumed twice per iteration (a
     gather join + its normalizer aggregate) — an uncut segment
@@ -1383,11 +1385,6 @@ def hits(
         .repartition(n, "src")
         .localCheckpoint(eager=False)
     )
-    # second copy pre-partitioned by dst: the auth->hub gather joins
-    # on dst, and without it Catalyst re-exchanges the FULL edge
-    # relation every iteration — one materialization up front buys
-    # iters shuffle-free probe sides
-    e_by_dst = e.repartition(n, "dst").localCheckpoint(eager=False)
     ids = vertices.select("id").localCheckpoint(eager=False)
     state = ids.select("id", F.lit(1.0).alias("hub"))
     auth = ids.select("id", F.lit(0.0).alias("auth"))
@@ -1412,9 +1409,7 @@ def hits(
             )
         )
         hraw = (
-            e_by_dst.join(
-                auth.select(F.col("id").alias("dst"), "auth"), "dst"
-            )
+            e.join(auth.select(F.col("id").alias("dst"), "auth"), "dst")
             .groupBy("src")
             .agg(F.sum("auth").alias("_s"))
         )

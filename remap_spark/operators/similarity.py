@@ -1,26 +1,92 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search, clustering and dedup over embedding columns.
 
-Two tiers:
-- brute-force cosine top-k  : exact; broadcast the (small) query set,
-  scan candidates once — linear, fully parallel, no shuffle until the
-  per-query top-k (which is a TakeOrdered per group, not a global sort)
-- LSH-bucketed ANN          : random-hyperplane signatures; candidates
-  only from matching buckets — the 100 TB path (sub-linear probes)
+Every top-k operator is candidate generation, then one exact
+verify-and-rank step (REPOSE, ICDE 2021, splits pruning from scoring
+the same way). Each generator yields (query_id, vec_id, score):
 
-All vector math is JVM-side (zip_with/aggregate fold) — no UDF, no
-driver collect.
+- brute force: broadcast queries x every candidate, by cosine
+  (cosine_topk_bruteforce; hard_negative_topk adds a label filter);
+- LSH bucket: random-hyperplane sign buckets, plus the Hamming-1
+  buckets with multi-probe (cosine_topk_lsh);
+- IVF cell: the query's n_probe nearest coarse cells (ivf_topk);
+- PQ codes: asymmetric distance through a per-query lookup table,
+  over the corpus (pq_topk) or the probed cells (ivf_pq_topk).
+
+``_topk_per_query`` ranks each query's pairs in one row_number window
+under the operator's own tie-break and keeps k.
+
+Beside them: exact all-pairs cosine as block-pair numpy GEMMs in
+``applyInPandas`` (embedding_near_dup_pairs, embedding_cross_matches,
+semantic_decontaminate), int64 Lloyd k-means (kmeans_lloyd), SemDeDup
+(semdedup, expression or int64-GEMM prune) and reciprocal-rank fusion
+(rrf_fuse). The quantized paths compute in exact int64, so the DuckDB
+oracles replay them bit for bit; nothing collects the corpus to the
+driver.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import cosine_similarity, dot_product
 from ..worker import on_worker
+
+
+def _topk_per_query(scored: DataFrame, k: int, *order) -> DataFrame:
+    """The verify-and-rank step of every top-k operator: number each
+    query's candidates by ``order`` (the operator's tie-break) and keep
+    the first ``k``. ``scored`` is (query_id, vec_id, score); returns
+    (query_id, rank, vec_id, score), rank dense from 1."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return (
+        scored.select("*", F.row_number().over(w).alias("rank"))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", *scored.columns[1:])
+    )
+
+
+def _cosine_scored(
+    pairs: DataFrame, cv: str, keep: Column | None = None
+) -> DataFrame:
+    """(query_id, vec_id, cosine) of candidate pairs that carry the query
+    vector ``qv`` and the candidate vector ``cv``. A query never matches
+    itself; ``keep`` drops further pairs."""
+    cond = F.col("query_id") != F.col("vec_id")
+    if keep is not None:
+        cond = cond & keep
+    return pairs.where(cond).select(
+        "query_id",
+        "vec_id",
+        cosine_similarity(F.col("qv"), F.col(cv)).alias("cosine"),
+    )
+
+
+def _bruteforce_scored(
+    queries: DataFrame,
+    candidates: DataFrame,
+    vec_col: str,
+    id_col: str,
+    label_col: str | None = None,
+) -> DataFrame:
+    """Brute-force candidate generation: the broadcast query set crossed
+    with every candidate, scored by cosine. With ``label_col``, only
+    pairs whose labels differ."""
+    qlabel = [F.col(label_col).alias("qlabel")] if label_col else []
+    clabel = [F.col(label_col).alias("clabel")] if label_col else []
+    q = F.broadcast(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), *qlabel
+        )
+    )
+    c = candidates.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"), *clabel
+    )
+    keep = F.col("qlabel") != F.col("clabel") if label_col else None
+    return _cosine_scored(q.crossJoin(c), "cv", keep)
 
 
 def cosine_topk_bruteforce(
@@ -35,27 +101,8 @@ def cosine_topk_bruteforce(
     The query set is broadcast (it must be small — driver-sized);
     candidates stream through map-side; the only shuffle is the
     per-query window. Returns (query_id, rank, vec_id, cosine)."""
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-    )
-    c = candidates.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"))
-    scored = (
-        q.crossJoin(c)
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("qv"), F.col("cv")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    scored = _bruteforce_scored(queries, candidates, vec_col, id_col)
+    return _topk_per_query(scored, k, F.desc("cosine"), "vec_id")
 
 
 def hard_negative_topk(
@@ -78,36 +125,8 @@ def hard_negative_topk(
     map-side; one per-anchor window ranks. At 100 TB swap the
     crossJoin for the IVF cell-probe join (ivf_topk) — the label
     filter composes unchanged."""
-    a = F.broadcast(
-        anchors.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            F.col(label_col).alias("qlabel"),
-        )
-    )
-    c = candidates.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("cv"),
-        F.col(label_col).alias("clabel"),
-    )
-    scored = (
-        a.crossJoin(c)
-        .where(
-            (F.col("query_id") != F.col("vec_id"))
-            & (F.col("qlabel") != F.col("clabel"))
-        )
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("qv"), F.col("cv")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    scored = _bruteforce_scored(anchors, candidates, vec_col, id_col, label_col)
+    return _topk_per_query(scored, k, F.desc("cosine"), "vec_id")
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -131,17 +150,12 @@ def lsh_bucket_signatures(
     id_col: str = "vec_id",
     n_planes: int = 8,
     seed: int = 42,
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Random-hyperplane (sign) LSH: bucket = n_planes-bit sign
-    pattern of the vector against fixed hyperplanes. Collision
-    probability = (1 - θ/π)^n_planes.
-
-    Pass ``dim`` explicitly on large inputs — leaving it None falls
-    back to sniffing the first row, which launches a Spark job per
-    call."""
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
+    pattern of the ``dim``-long vector against fixed hyperplanes.
+    Collision probability = (1 - θ/π)^n_planes."""
     planes = _hyperplanes(dim, n_planes, seed)
     bucket = None
     for i, p in enumerate(planes):
@@ -164,7 +178,8 @@ def cosine_topk_lsh(
     id_col: str = "vec_id",
     n_planes: int = 8,
     seed: int = 42,
-    dim: int | None = None,
+    *,
+    dim: int,
     probe_hamming: int = 0,
 ) -> DataFrame:
     """Approximate top-k: score only candidates in the query's LSH
@@ -180,7 +195,7 @@ def cosine_topk_lsh(
     distinct, so no pair is scored twice. At 100 TB this turns a
     full-corpus scan per query into n_planes+1 bucket lookups."""
     qsig = (
-        lsh_bucket_signatures(queries, vec_col, id_col, n_planes, seed, dim)
+        lsh_bucket_signatures(queries, vec_col, id_col, n_planes, seed, dim=dim)
         .withColumnRenamed("vec_id", "query_id")
         .withColumnRenamed("vec", "qv")
     )
@@ -198,22 +213,9 @@ def cosine_topk_lsh(
             ).alias("bucket"),
         )
     qb = F.broadcast(qsig)
-    cb = lsh_bucket_signatures(candidates, vec_col, id_col, n_planes, seed, dim)
-    scored = (
-        qb.join(cb, "bucket")
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("qv"), F.col("vec")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    cb = lsh_bucket_signatures(candidates, vec_col, id_col, n_planes, seed, dim=dim)
+    scored = _cosine_scored(qb.join(cb, "bucket"), "vec")
+    return _topk_per_query(scored, k, F.desc("cosine"), "vec_id")
 
 
 def _assign_cells_expr(
@@ -272,6 +274,46 @@ def _assign_cells_expr(
     )
 
 
+def _probe_cells(
+    queries: DataFrame,
+    candidates: DataFrame,
+    n_centroids: int,
+    n_probe: int,
+    vec_col: str,
+    id_col: str,
+    with_vectors: bool,
+) -> tuple[DataFrame, DataFrame]:
+    """IVF candidate generation. The coarse quantizer is the
+    ``n_centroids`` lowest-id candidate vectors; every candidate sits in
+    the cell of its nearest centroid (:func:`_assign_cells_expr`), and
+    each query probes the ``n_probe`` cells whose centroids are most
+    cosine-similar to it, ties on the lower cell id. Returns (probes,
+    cells): probes is (query_id, qv, cell) and cells (vec_id, vec,
+    cell), both without their vector when ``with_vectors`` is false."""
+    centroids = candidates.where(F.col(id_col) < n_centroids).select(
+        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
+    )
+    cells = _assign_cells_expr(
+        candidates, centroids, vec_col, id_col, include_vec=with_vectors
+    )
+    qv = ["qv"] if with_vectors else []
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "cid")
+    probes = (
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+        .crossJoin(F.broadcast(centroids))
+        .select(
+            "query_id",
+            *qv,
+            "cid",
+            cosine_similarity(F.col("qv"), F.col("cv")).alias("sim"),
+        )
+        .select("*", F.row_number().over(w).alias("rn"))
+        .where(F.col("rn") <= n_probe)
+        .select("query_id", *qv, F.col("cid").alias("cell"))
+    )
+    return probes, cells
+
+
 def ivf_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -292,41 +334,12 @@ def ivf_topk(
     map-side partials, so no assignment window and no corpus-sized
     sort; plan-pinned by
     tests/test_round11.test_ivf_assignment_plan_has_no_assignment_window)."""
-    centroids = candidates.where(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
+    probes, cells = _probe_cells(
+        queries, candidates, n_centroids, n_probe, vec_col, id_col,
+        with_vectors=True,
     )
-    cent = F.broadcast(centroids.select("cid", "cv"))
-    assign_df = _assign_cells_expr(candidates, centroids, vec_col, id_col)
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("sim"), "cid")
-    probes = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-        .crossJoin(cent)
-        .select(
-            "query_id",
-            "qv",
-            "cid",
-            cosine_similarity(F.col("qv"), F.col("cv")).alias("sim"),
-        )
-        .select("*", F.row_number().over(w_probe).alias("rn"))
-        .where(F.col("rn") <= n_probe)
-        .select("query_id", "qv", F.col("cid").alias("cell"))
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(assign_df, "cell")
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            cosine_similarity(F.col("qv"), F.col("vec")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    scored = _cosine_scored(F.broadcast(probes).join(cells, "cell"), "vec")
+    return _topk_per_query(scored, k, F.desc("cosine"), "vec_id")
 
 
 _PAIR_SCHEMA = "vec_a bigint, vec_b bigint, cosine double"
@@ -337,8 +350,7 @@ _PAIR_SCHEMA = "vec_a bigint, vec_b bigint, cosine double"
 # distance combination) must stay under 2^62 so the int64 matmul cannot
 # wrap. numpy int64 overflow wraps SILENTLY where the Spark ANSI bigint
 # expression tier would raise — the tier's bit-identity contract
-# therefore requires checking the bound, not documenting it (r11
-# ADVICE, medium).
+# therefore requires checking the bound, not documenting it.
 _INT64_GEMM_HEADROOM = 2**62
 
 
@@ -366,15 +378,23 @@ def _check_int64_gemm_bound(
         )
 
 
+def _cosine_matrix(a_mat, b_mat):
+    """Dense cosine GEMM: sims[i, j] is the cosine of a_mat row i and
+    b_mat row j."""
+    import numpy as np
+
+    a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
+    b_norms = np.sqrt((b_mat * b_mat).sum(axis=1))
+    return (a_mat @ b_mat.T) / np.outer(a_norms, b_norms)
+
+
 def _gemm_pairs(a_ids, a_mat, b_ids, b_mat, threshold: float, same: bool):
     """Dense cosine GEMM between two id/matrix sides; emits each
     qualifying unordered pair once as (min_id, max_id, cosine)."""
     import numpy as np
     import pandas as pd
 
-    a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
-    b_norms = np.sqrt((b_mat * b_mat).sum(axis=1))
-    sims = (a_mat @ b_mat.T) / np.outer(a_norms, b_norms)
+    sims = _cosine_matrix(a_mat, b_mat)
     mask = sims >= threshold
     if same:
         mask &= a_ids[:, None] < b_ids[None, :]
@@ -432,23 +452,50 @@ def embedding_near_dup_pairs(
         import pandas as pd
 
         bi, bj = int(pdf["bi"].iloc[0]), int(pdf["bj"].iloc[0])
-        same = bi == bj
         a = pdf[pdf["block"] == bi]
-        a_ids = a[id_col].to_numpy(dtype=np.int64)
-        a_mat = np.array(list(a[vec_col]), dtype=np.float64)
-        if same:
-            if len(a) < 2:
-                return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
-            return _gemm_pairs(a_ids, a_mat, a_ids, a_mat, threshold, same=True)
-        b = pdf[pdf["block"] == bj]
+        b = a if bi == bj else pdf[pdf["block"] == bj]
         if not len(a) or not len(b):
             return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
-        b_ids = b[id_col].to_numpy(dtype=np.int64)
-        b_mat = np.array(list(b[vec_col]), dtype=np.float64)
-        return _gemm_pairs(a_ids, a_mat, b_ids, b_mat, threshold, same=False)
+        return _gemm_pairs(
+            a[id_col].to_numpy(dtype=np.int64),
+            np.array(list(a[vec_col]), dtype=np.float64),
+            b[id_col].to_numpy(dtype=np.int64),
+            np.array(list(b[vec_col]), dtype=np.float64),
+            threshold,
+            same=bi == bj,
+        )
 
     return exploded.groupBy("bi", "bj").applyInPandas(
         on_worker(gemm_group), schema=_PAIR_SCHEMA
+    )
+
+
+def _quantized(vec_col: str, scale: int) -> Column:
+    """int64-quantized vector (the kmeans_lloyd determinism contract:
+    identical IEEE double multiply + half-away-from-zero round in
+    Spark and DuckDB, so every downstream distance is an exact
+    integer)."""
+    return F.transform(
+        F.col(vec_col),
+        lambda x: F.round(x.cast("double") * scale).cast("bigint"),
+    )
+
+
+def _int_sq_dist(a: str, b: str) -> Column:
+    """Exact squared L2 distance of two int64 vector columns."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+
+
+def _int_dot(a: str, b: str) -> Column:
+    """Exact dot product of two int64 vector columns."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
     )
 
 
@@ -477,16 +524,12 @@ def kmeans_lloyd(
     Seeding is the k smallest ids' vectors (a real system would use
     k-means|| — the seeding is config, the operator shape is the
     contract). Scale: per iteration, one broadcast of k centroids into
-    a map-side distance scan (no shuffle on the points), one
-    row_number per point (hash-partitioned by id), and one
-    (cluster, pos)-keyed centroid aggregation of k*dim rows — the
+    a map-side distance scan (no shuffle on the points), one argmin per
+    point as a struct-MIN aggregate keyed by id (map-side partials), and
+    one (cluster, pos)-keyed centroid aggregation of k*dim rows — the
     point table is never reshuffled across iterations. Lineage is cut
     per round with localCheckpoint, the same pattern as
     operators/pregel (pagerank)."""
-    q = F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double") * scale).cast("bigint"),
-    )
     # repartition by id BEFORE the iteration: the per-iteration distance
     # scan's parallelism is the point table's partitioning (no shuffle
     # inside the loop — that's the design), and a compact parquet
@@ -497,28 +540,20 @@ def kmeans_lloyd(
     # is an exact integer sum — both order-independent.
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     pts = (
-        df.select(F.col(id_col).alias("_pid"), q.alias("_q"))
+        df.select(F.col(id_col).alias("_pid"), _quantized(vec_col, scale).alias("_q"))
         .repartition(n_part, F.col("_pid"))
         .localCheckpoint(eager=False)
     )
     cents = pts.where(F.col("_pid") < k).select(
         F.col("_pid").alias("cluster"), F.col("_q").alias("_cq")
     )
-    dist = F.aggregate(
-        F.zip_with("_q", "_cq", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    dist = _int_sq_dist("_q", "_cq")
 
     def _assign(cents: DataFrame) -> DataFrame:
-        # argmin as MIN(struct(_d, cluster, _q)) — struct comparison is
-        # lexicographic, so the winner is the (min distance, min
-        # cluster-id) row: byte-identical to the former row_number()
-        # over orderBy(_d, cluster) (all-integer values, no FP ties),
-        # but a HASH AGGREGATE with map-side partials instead of a
-        # per-point sort window (guide §2.3 "aggregate before you
-        # shuffle"); (_d, cluster) is unique per point, so the trailing
-        # _q never participates in the comparison.
+        # argmin as MIN(struct(_d, cluster, _q)): struct comparison is
+        # lexicographic, so the (min distance, min cluster-id) row wins,
+        # in a hash aggregate with map-side partials; (_d, cluster) is
+        # unique per point, so _q never decides.
         return (
             pts.crossJoin(F.broadcast(cents))
             .select("_pid", "_q", "cluster", dist.alias("_d"))
@@ -556,17 +591,6 @@ def kmeans_lloyd(
     final = _assign(cents).select(F.col("_pid").alias(id_col), "cluster")
     centroids = cents.select("cluster", F.col("_cq").alias("centroid"))
     return final, centroids
-
-
-def _quantized(vec_col: str, scale: int) -> Column:
-    """int64-quantized vector (the kmeans_lloyd determinism contract:
-    identical IEEE double multiply + half-away-from-zero round in
-    Spark and DuckDB, so every downstream distance is an exact
-    integer)."""
-    return F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double") * scale).cast("bigint"),
-    )
 
 
 def _semdedup_prune_gemm(
@@ -720,14 +744,7 @@ def semdedup(
             F.col(id_col).alias("_id"), _quantized(vec_col, scale).alias("_q")
         )
         .join(assign.withColumnRenamed(id_col, "_id"), "_id")
-        .withColumn(
-            "_n2",
-            F.aggregate(
-                F.zip_with("_q", "_q", lambda a, b: a * b),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ),
-        )
+        .withColumn("_n2", _int_dot("_q", "_q"))
     )
     if max_cluster_size is not None:
         sizes = pts.groupBy("cluster").agg(F.count(F.lit(1)).alias("_cs"))
@@ -756,16 +773,11 @@ def semdedup(
             F.col("_q").alias("_qb"),
             F.col("_n2").alias("_nb2"),
         )
-        dot = F.aggregate(
-            F.zip_with("_qa", "_qb", lambda x, y: x * y),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
         dec = "decimal(38,0)"
         dropped = (
             a.join(b, "cluster")
             .where(F.col("_ida") < F.col("_idb"))
-            .withColumn("_dot", dot)
+            .withColumn("_dot", _int_dot("_qa", "_qb"))
             .where(
                 (F.col("_dot") > 0)
                 & (
@@ -791,6 +803,35 @@ def semdedup(
     )
 
 
+def _pq_subvectors(
+    df: DataFrame,
+    key: str,
+    m: int,
+    vec_col: str,
+    id_col: str,
+    dim: int,
+    scale: int,
+    name: str = "sq",
+) -> DataFrame:
+    """One row per (vector, subspace): ``df``'s vectors int64-quantized
+    at ``scale`` and cut into ``m`` slices of dim/m, as (``key``, sub,
+    ``name``), ``key`` being ``id_col`` renamed."""
+    d_sub = dim // m
+    q = _quantized(vec_col, scale)
+    slices = F.array(
+        *[
+            F.struct(
+                F.lit(s).alias("sub"),
+                F.slice(q, s * d_sub + 1, d_sub).alias(name),
+            )
+            for s in range(m)
+        ]
+    )
+    return df.select(
+        F.col(id_col).alias(key), F.explode(slices).alias("x")
+    ).select(key, "x.sub", f"x.{name}")
+
+
 def pq_codebook(
     candidates: DataFrame,
     m: int = 8,
@@ -805,22 +846,10 @@ def pq_codebook(
     int64-quantized. Returns (sub, cid, cq array<bigint>). Like
     ivf_topk's coarse quantizer, it is deterministic so the oracle can
     replay it."""
-    d_sub = dim // m
-    q = _quantized(vec_col, scale)
-    slices = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice(q, s * d_sub + 1, d_sub).alias("cq"),
-            )
-            for s in range(m)
-        ]
-    )
-    return (
-        candidates.where(F.col(id_col) < k)
-        .select(F.col(id_col).alias("cid"), F.explode(slices).alias("x"))
-        .select("x.sub", "cid", "x.cq")
-    )
+    return _pq_subvectors(
+        candidates.where(F.col(id_col) < k),
+        "cid", m, vec_col, id_col, dim, scale, name="cq",
+    ).select("sub", "cid", "cq")
 
 
 def pq_encode(
@@ -837,34 +866,13 @@ def pq_encode(
     codes array<int> in sub order) — dim doubles (256 B at dim=64)
     become m bytes; at 100 TB this is the compressed corpus
     representation the ADC scan reads instead of raw vectors."""
-    d_sub = dim // m
-    q = _quantized(vec_col, scale)
-    slices = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice(q, s * d_sub + 1, d_sub).alias("sq"),
-            )
-            for s in range(m)
-        ]
-    )
-    subs = candidates.select(
-        F.col(id_col).alias("_pid"), F.explode(slices).alias("x")
-    ).select("_pid", "x.sub", "x.sq")
-    dist = F.aggregate(
-        F.zip_with("sq", "cq", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    # per-(vector, subspace) argmin as a lexicographic struct-MIN
-    # aggregate (r12; same rewrite as kmeans/_assign_cells_expr): the
-    # distances are exact int64 so min(struct(_d, cid)) IS the old
-    # row_number-over-orderBy(_d, cid) winner, map-side partials
-    # collapse the m*k candidate rows to m per vector before the
-    # exchange, and the window's corpus-wide sort disappears.
+    subs = _pq_subvectors(candidates, "_pid", m, vec_col, id_col, dim, scale)
+    # per-(vector, subspace) argmin as a struct-MIN aggregate (exact
+    # int64 distances, ties on cid): map-side partials collapse the m*k
+    # candidate rows to m per vector before the exchange.
     return (
         subs.join(F.broadcast(codebook), "sub")
-        .select("_pid", "sub", "cid", dist.alias("_d"))
+        .select("_pid", "sub", "cid", _int_sq_dist("sq", "cq").alias("_d"))
         .groupBy("_pid", "sub")
         .agg(F.min(F.struct("_d", "cid")).alias("_m"))
         .groupBy("_pid")
@@ -878,6 +886,54 @@ def pq_encode(
         )
         .select(F.col("_pid").alias(id_col), "codes")
     )
+
+
+def _adc_table(
+    queries: DataFrame,
+    codebook: DataFrame,
+    m: int,
+    n_cent: int,
+    vec_col: str,
+    id_col: str,
+    dim: int,
+    scale: int,
+) -> DataFrame:
+    """The ADC lookup table: per query, the m*n_cent exact integer
+    part-distances (query slice vs centroid) packed into ONE array
+    ``_lut``, entry sub*n_cent + cid. Returns (query_id, _lut)."""
+    return (
+        _pq_subvectors(queries, "query_id", m, vec_col, id_col, dim, scale)
+        .join(F.broadcast(codebook), "sub")
+        .select(
+            "query_id",
+            (F.col("sub") * n_cent + F.col("cid")).alias("_key"),
+            _int_sq_dist("sq", "cq").alias("_pd"),
+        )
+        .groupBy("query_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("_key", "_pd"))),
+                lambda s: s["_pd"],
+            ).alias("_lut")
+        )
+    )
+
+
+def _adc_dist2(m: int, n_cent: int) -> Column:
+    """The ADC scan's score of a row holding a candidate's ``codes`` and
+    its query's ``_lut``: the m table entries its codes select, summed
+    (exact int64), as ``dist2``."""
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        F.lit(0).cast("bigint"),
+        lambda acc, s: acc
+        + F.element_at(
+            "_lut",
+            (s * n_cent + F.element_at("codes", (s + 1).cast("int")) + 1).cast(
+                "int"
+            ),
+        ),
+    ).alias("dist2")
 
 
 def pq_topk(
@@ -906,64 +962,13 @@ def pq_topk(
     per-candidate score is computed map-side before the top-k
     shuffle. Compose with ivf_topk cells to prune candidates before
     the ADC scan."""
-    d_sub = dim // m
-    q = _quantized(vec_col, scale)
-    qslices = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice(q, s * d_sub + 1, d_sub).alias("sq"),
-            )
-            for s in range(m)
-        ]
-    )
-    pdist = F.aggregate(
-        F.zip_with("sq", "cq", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    lut = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.explode(qslices).alias("x")
-        )
-        .select("query_id", "x.sub", "x.sq")
-        .join(F.broadcast(codebook), "sub")
-        .select(
-            "query_id",
-            (F.col("sub") * n_cent + F.col("cid")).alias("_key"),
-            pdist.alias("_pd"),
-        )
-        .groupBy("query_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_key", "_pd"))),
-                lambda s: s["_pd"],
-            ).alias("_lut")
-        )
-    )
-    score = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, s: acc
-        + F.element_at(
-            "_lut",
-            (s * n_cent + F.element_at("codes", (s + 1).cast("int")) + 1).cast(
-                "int"
-            ),
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy("dist2", "vec_id")
-    return (
+    lut = _adc_table(queries, codebook, m, n_cent, vec_col, id_col, dim, scale)
+    scored = (
         codes.crossJoin(F.broadcast(lut))
         .where(F.col("query_id") != F.col(id_col))
-        .select("query_id", F.col(id_col).alias("vec_id"), score.alias("dist2"))
-        .select(
-            "query_id", "vec_id", "dist2",
-            F.row_number().over(w).alias("rank"),
-        )
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "dist2")
+        .select("query_id", F.col(id_col).alias("vec_id"), _adc_dist2(m, n_cent))
     )
+    return _topk_per_query(scored, k, "dist2", "vec_id")
 
 
 def ivf_pq_topk(
@@ -991,87 +996,19 @@ def ivf_pq_topk(
     quantized ADC distance."""
     codebook = pq_codebook(candidates, m, n_cent, vec_col, id_col, dim, scale)
     codes = pq_encode(candidates, codebook, m, vec_col, id_col, dim, scale)
-    centroids = candidates.where(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
+    probes, cells = _probe_cells(
+        queries, candidates, n_centroids, n_probe, vec_col, id_col,
+        with_vectors=False,
     )
-    cent = F.broadcast(centroids)
-    assign_df = _assign_cells_expr(
-        candidates, centroids, vec_col, id_col, include_vec=False
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("sim"), "cid")
-    probes = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-        .crossJoin(cent)
-        .select(
-            "query_id", "cid",
-            cosine_similarity(F.col("qv"), F.col("cv")).alias("sim"),
-        )
-        .select("*", F.row_number().over(w_probe).alias("rn"))
-        .where(F.col("rn") <= n_probe)
-        .select("query_id", F.col("cid").alias("cell"))
-    )
-    d_sub = dim // m
-    q = _quantized(vec_col, scale)
-    qslices = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice(q, s * d_sub + 1, d_sub).alias("sq"),
-            )
-            for s in range(m)
-        ]
-    )
-    pdist = F.aggregate(
-        F.zip_with("sq", "cq", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    lut = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.explode(qslices).alias("x")
-        )
-        .select("query_id", "x.sub", "x.sq")
-        .join(F.broadcast(codebook), "sub")
-        .select(
-            "query_id",
-            (F.col("sub") * n_cent + F.col("cid")).alias("_key"),
-            pdist.alias("_pd"),
-        )
-        .groupBy("query_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_key", "_pd"))),
-                lambda s: s["_pd"],
-            ).alias("_lut")
-        )
-    )
-    score = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, s: acc
-        + F.element_at(
-            "_lut",
-            (s * n_cent + F.element_at("codes", (s + 1).cast("int")) + 1).cast(
-                "int"
-            ),
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy("dist2", "vec_id")
-    return (
-        codes.join(assign_df, "vec_id")
+    lut = _adc_table(queries, codebook, m, n_cent, vec_col, id_col, dim, scale)
+    scored = (
+        codes.join(cells, "vec_id")
         .join(F.broadcast(probes), "cell")
         .where(F.col("query_id") != F.col("vec_id"))
         .join(F.broadcast(lut), "query_id")
-        .select("query_id", "vec_id", score.alias("dist2"))
-        .select(
-            "query_id", "vec_id", "dist2",
-            F.row_number().over(w).alias("rank"),
-        )
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "dist2")
+        .select("query_id", "vec_id", _adc_dist2(m, n_cent))
     )
+    return _topk_per_query(scored, k, "dist2", "vec_id")
 
 
 def rrf_fuse(
@@ -1135,22 +1072,6 @@ def rrf_fuse(
     )
 
 
-def _gemm_cross(a_ids, a_mat, b_ids, b_mat, threshold: float):
-    """Dense cosine GEMM between two DISTINCT corpora; emits every
-    qualifying directed (a_id, b_id) pair — no id-inequality filter,
-    the sides are different relations and ids may legally collide."""
-    import numpy as np
-    import pandas as pd
-
-    a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
-    b_norms = np.sqrt((b_mat * b_mat).sum(axis=1))
-    sims = (a_mat @ b_mat.T) / np.outer(a_norms, b_norms)
-    ai, bj = np.nonzero(sims >= threshold)
-    return pd.DataFrame(
-        {"a_id": a_ids[ai], "b_id": b_ids[bj], "cosine": sims[ai, bj]}
-    )
-
-
 _CROSS_SCHEMA = "a_id bigint, b_id bigint, cosine double"
 
 
@@ -1200,12 +1121,19 @@ def embedding_cross_matches(
         pb = pdf[pdf["_side"] == "b"]
         if not len(pa) or not len(pb):
             return pd.DataFrame({"a_id": [], "b_id": [], "cosine": []})
-        return _gemm_cross(
-            pa["_id"].to_numpy(dtype=np.int64),
+        # every qualifying directed (a_id, b_id) pair: no id-inequality
+        # filter, the sides are different relations and ids may collide
+        sims = _cosine_matrix(
             np.array(list(pa["_vec"]), dtype=np.float64),
-            pb["_id"].to_numpy(dtype=np.int64),
             np.array(list(pb["_vec"]), dtype=np.float64),
-            threshold,
+        )
+        ai, bj = np.nonzero(sims >= threshold)
+        return pd.DataFrame(
+            {
+                "a_id": pa["_id"].to_numpy(dtype=np.int64)[ai],
+                "b_id": pb["_id"].to_numpy(dtype=np.int64)[bj],
+                "cosine": sims[ai, bj],
+            }
         )
 
     return both.groupBy("bi", "bj").applyInPandas(

@@ -1,3 +1,3 @@
-from .analysis import explain_str, plan_report
+from .analysis import explain_str, masked_plan, plan_report
 
-__all__ = ["explain_str", "plan_report"]
+__all__ = ["explain_str", "masked_plan", "plan_report"]

@@ -53,11 +53,11 @@ def test_lsh_topk_is_exact_within_bucket(spark):
     queries = emb.where(F.col("vec_id") < 3)
     approx = {
         (r["query_id"], r["rank"]): (r["vec_id"], round(r["cosine"], 9))
-        for r in cosine_topk_lsh(queries, emb, k=10, n_planes=4).collect()
+        for r in cosine_topk_lsh(queries, emb, k=10, n_planes=4, dim=64).collect()
     }
     assert approx, "LSH returned nothing — buckets too fine"
 
-    sigs = lsh_bucket_signatures(emb, n_planes=4)
+    sigs = lsh_bucket_signatures(emb, n_planes=4, dim=64)
     qb = {r["vec_id"]: r["bucket"] for r in sigs.where(F.col("vec_id") < 3).collect()}
     from remap_spark.functions import cosine_similarity
 
@@ -1562,6 +1562,68 @@ def test_lsh_multi_probe_recall(spark):
     # and its scored-candidate pool is <= (n_planes+1)x the single pool
     # (each of the 9 probed buckets contributes its occupants once)
     assert len(multi) <= 8 * 10
+
+
+def _tied_corpus(spark):
+    """12 vectors, 3 copies each of 4 directions under different ids
+    (id i copies direction i % 4), so equal scores are exact ties."""
+    import numpy as np
+
+    base = np.random.default_rng(5).standard_normal((4, 8))
+    rows = [(i, [float(x) for x in base[i % 4]], i % 2) for i in range(12)]
+    return spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<double>, label int"
+    )
+
+
+def _pq_topk_tied(sim, q, df, k):
+    cb = sim.pq_codebook(df, m=2, k=4, dim=8)
+    codes = sim.pq_encode(df, cb, m=2, dim=8)
+    return sim.pq_topk(q, codes, cb, k=k, m=2, n_cent=4, dim=8)
+
+
+# the six top-k operators on the tied corpus, k left to the test
+_TIED_TOPK = {
+    "bruteforce": lambda sim, q, df, k: sim.cosine_topk_bruteforce(q, df, k=k),
+    "hard_negative": lambda sim, q, df, k: sim.hard_negative_topk(q, df, k=k),
+    "lsh": lambda sim, q, df, k: sim.cosine_topk_lsh(
+        q, df, k=k, n_planes=2, dim=8, probe_hamming=1
+    ),
+    "ivf": lambda sim, q, df, k: sim.ivf_topk(q, df, k=k, n_centroids=4, n_probe=2),
+    "pq": _pq_topk_tied,
+    "ivf_pq": lambda sim, q, df, k: sim.ivf_pq_topk(
+        q, df, k=k, n_centroids=4, n_probe=2, m=2, n_cent=4, dim=8
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(_TIED_TOPK))
+def test_topk_ties_rank_by_vec_id(spark, op):
+    """Every top-k operator breaks score ties on ascending vec_id and
+    numbers ranks 1..k without gaps, also where k cuts through a tie:
+    the top 4 are the first 4 rows of the full ranking, and the full
+    ranking is ordered by (score, vec_id), cosine descending and dist2
+    ascending."""
+    from remap_spark.operators import similarity as sim
+
+    df = _tied_corpus(spark)
+    queries = df.where("vec_id < 2")
+    k = 4
+    full = _TIED_TOPK[op](sim, queries, df, 100).collect()
+    top = _TIED_TOPK[op](sim, queries, df, k).collect()
+    score = full[0].__fields__[-1]
+    sign = 1 if score == "dist2" else -1
+    ties = 0
+    for qid in (0, 1):
+        ranked = sorted((r for r in full if r["query_id"] == qid), key=lambda r: r["rank"])
+        got = sorted((r for r in top if r["query_id"] == qid), key=lambda r: r["rank"])
+        assert len(ranked) > k, (qid, ranked)
+        assert [r["rank"] for r in ranked] == list(range(1, len(ranked) + 1))
+        order = [(sign * r[score], r["vec_id"]) for r in ranked]
+        assert order == sorted(order), (qid, ranked)
+        assert got == ranked[:k], (qid, got)
+        ties += sum(a[score] == b[score] for a, b in zip(got, got[1:]))
+    assert ties, "no tie in the top k: the corpus does not test the tie-break"
 
 
 def test_rolling_active_users_approx_error(spark):
