@@ -169,16 +169,23 @@ def main() -> None:
         return round(min(ts), 3)
 
     cal_start = _calibrate()
-    samples: dict[str, list[float]] = {name: [] for name in names}
+    # (total, build) per run: build is the query function's call (eager
+    # driver actions while the DataFrame is built), the rest the final
+    # action; the split reported is that of the query's fastest run
+    samples: dict[str, list[tuple[float, float]]] = {name: [] for name in names}
     for _ in range(runs):
         for name in names:
             t0 = time.perf_counter()
-            _force(ALL_QUERIES[name](spark, SF_DIR))
-            samples[name].append(time.perf_counter() - t0)
+            df = ALL_QUERIES[name](spark, SF_DIR)
+            t1 = time.perf_counter()
+            _force(df)
+            samples[name].append((time.perf_counter() - t0, t1 - t0))
     cal_end = _calibrate()
-    timings = {name: round(min(s), 3) for name, s in samples.items()}
+    fastest = {name: min(s) for name, s in samples.items()}
+    timings = {name: round(tot, 3) for name, (tot, _) in fastest.items()}
 
     total = round(sum(timings.values()), 3)
+    build = round(sum(b for _, b in fastest.values()), 3)
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     metric = (
@@ -193,6 +200,8 @@ def main() -> None:
             "sf": sf_val,
             "n_queries": len(timings),
             "calibration": {"start": cal_start, "end": cal_end},
+            "build_sec": build,
+            "action_sec": round(total - build, 3),
             "spark_version": spark.version,
             "cores": os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()),
             # session self-evidence (r12 verdict: the env echo above

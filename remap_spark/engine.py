@@ -35,6 +35,12 @@ Scale notes (100 TB target):
   inference is a Spark job (75-100 JVM CPU-ms); a later load of the
   same unchanged file under the same parquet confs passes the schema
   and runs none.
+- A global sort is a range exchange whose ``RangePartitioner`` runs a
+  sampling job of its own first; AQE cannot skip it. So a query's
+  final, presentation sort goes through ``functions.ordered``: when the
+  relation's size estimate is at most ``autoBroadcastJoinThreshold``
+  it is sorted in one task over ``coalesce(1)``, with no sampling job
+  and no range shuffle (a threshold of -1 keeps the range sort).
 """
 
 from __future__ import annotations

@@ -173,3 +173,26 @@ def lineage_cut(df):
     if str(enabled).lower() in ("off", "false", "0"):
         return df
     return df.localCheckpoint(eager=False)
+
+
+def ordered(df, *cols):
+    """``df.orderBy(*cols)`` for a query's final, presentation sort:
+    ``df.transform(ordered, "a", "b")``.
+
+    A global sort plans as ``Exchange rangepartitioning``, and its
+    ``RangePartitioner`` first runs a sampling job of its own, which AQE
+    cannot skip. When Spark's size estimate of ``df`` (the analyzed
+    plan's, well under 1 ms) is positive and at most the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (small enough to broadcast),
+    the sort runs over ``df.coalesce(1)`` instead: one partition needs
+    no exchange, so the two ordering jobs become none. A threshold of
+    -1 keeps the range sort. The rows, in ``cols`` order, are the same
+    either way. Not for a sort followed by ``.limit()`` (already a one-job
+    ``TakeOrderedAndProject``) nor one whose output feeds more
+    operators.
+    """
+    jspark = df.sparkSession._jsparkSession  # noqa: SLF001
+    size = df._jdf.queryExecution().analyzed().stats().sizeInBytes()  # noqa: SLF001
+    if 0 < size <= jspark.sessionState().conf().autoBroadcastJoinThreshold():
+        return df.coalesce(1).orderBy(*cols)
+    return df.orderBy(*cols)

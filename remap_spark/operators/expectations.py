@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..engine import local_frame
+from ..functions import ordered
 
 
 @dataclass(frozen=True)
@@ -72,7 +73,7 @@ def expect_report(
             F.col("_r.violations").alias("violations"),
             (F.col("_r.violations") == 0).alias("pass"),
         )
-        .orderBy("rule")
+        .transform(ordered, "rule")
     )
 
 
@@ -149,7 +150,7 @@ def benford_deviation(
         .withColumn(
             "deviation_ppm", F.col("observed_ppm") - F.col("expected_ppm")
         )
-        .orderBy("digit")
+        .transform(ordered, "digit")
     )
 
 
@@ -190,7 +191,7 @@ def fd_violations(
             (F.sum("_n") - F.max("_n")).alias("repair_rows"),
         )
         .where(F.col("n_distinct") > 1)
-        .orderBy(F.desc("repair_rows"), *dets)
+        .transform(ordered, F.desc("repair_rows"), *dets)
     )
 
 
@@ -252,7 +253,7 @@ def inclusion_profile(
             F.expr("n_shared * 1000000 div n_a_distinct").cast("bigint"),
         )
         .where(F.col("containment_ppm") >= min_containment_ppm)
-        .orderBy(F.desc("containment_ppm"), "col_a", "col_b")
+        .transform(ordered, F.desc("containment_ppm"), "col_a", "col_b")
     )
 
 
@@ -350,7 +351,7 @@ def distribution_drift(
                 " AS BIGINT)"
             ).alias("contrib_ppm"),
         )
-        .orderBy("bin")
+        .transform(ordered, "bin")
     )
 
 
@@ -398,5 +399,5 @@ def k_anonymity_report(
         df.groupBy(*[F.col(c) for c in quasi_cols])
         .agg(*aggs)
         .withColumn("at_risk", F.col("n_rows") < F.lit(int(k)))
-        .orderBy(*quasi_cols)
+        .transform(ordered, *quasi_cols)
     )

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import ordered
+
 
 def blocked_match_pairs(
     df: DataFrame,
@@ -330,5 +332,5 @@ def golden_records(
     return (
         staged.groupBy(F.col(cluster_col).alias("cluster"))
         .agg(*aggs)
-        .orderBy("cluster")
+        .transform(ordered, "cluster")
     )

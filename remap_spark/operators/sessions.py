@@ -30,6 +30,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import ordered
+
 
 def sessionize(
     df: DataFrame,
@@ -129,7 +131,7 @@ def cohort_retention(
             "n_active",
             retention.alias("retention"),
         )
-        .orderBy("cohort", "period_idx")
+        .transform(ordered, "cohort", "period_idx")
     )
 
 
@@ -142,7 +144,8 @@ def rolling_active_users(
     """DAU / trailing-WAU per day: for every day with >= 1 event, the
     count of distinct users active that day and the count of distinct
     users active in the trailing ``window_days`` window ending that
-    day. Returns (day yyyy-MM-dd, dau, wau) ordered by day.
+    day. Returns (day yyyy-MM-dd, dau, wau), one row per day, unordered
+    (ext_active_users_approx joins it).
 
     Shape: COUNT(DISTINCT) over a RANGE window is not expressible as a
     window function, so the standard expansion applies: the (user, day)
@@ -178,7 +181,6 @@ def rolling_active_users(
         .select(
             F.date_format("_d", "yyyy-MM-dd").alias("day"), "dau", "wau"
         )
-        .orderBy("day")
     )
 
 
@@ -361,7 +363,9 @@ def funnel(
         F.coalesce("n_users", F.lit(0)).alias("n_users"),
     ] + [F.col(f"p{round(p * 100)}_s") for p in percentiles]
     return (
-        stages.join(reached, "_i", "left").select(*out_cols).orderBy("stage_idx")
+        stages.join(reached, "_i", "left")
+        .select(*out_cols)
+        .transform(ordered, "stage_idx")
     )
 
 

@@ -995,7 +995,10 @@ def ivf_pq_topk(
     ops. Returns (query_id, rank, vec_id, dist2), dist2 the exact
     quantized ADC distance."""
     codebook = pq_codebook(candidates, m, n_cent, vec_col, id_col, dim, scale)
-    codes = pq_encode(candidates, codebook, m, vec_col, id_col, dim, scale)
+    # pq_encode keys its codes by id_col; the cells are keyed by vec_id
+    codes = pq_encode(
+        candidates, codebook, m, vec_col, id_col, dim, scale
+    ).withColumnRenamed(id_col, "vec_id")
     probes, cells = _probe_cells(
         queries, candidates, n_centroids, n_probe, vec_col, id_col,
         with_vectors=False,

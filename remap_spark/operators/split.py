@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import portable_hash32
+from ..functions import ordered, portable_hash32
 
 # Buckets per unit of probability mass; 10_000 gives 0.01% granularity.
 _BUCKETS = 10_000
@@ -211,7 +211,7 @@ def temperature_weights(
             F.round(F.col("mass").cast("double") / F.col("_tot"), 5).alias("share"),
             F.round(F.col("_w") / F.col("_wsum"), 5).alias("weight"),
         )
-        .orderBy("grp")
+        .transform(ordered, "grp")
     )
 
 
@@ -281,7 +281,7 @@ def token_budget_recipe(
         "target_tokens",
         "epochs_bp",
         F.expr("n_tokens * epochs_bp div 10000").alias("planned_tokens"),
-    ).orderBy(source_col)
+    ).transform(ordered, source_col)
 
 
 def weighted_sample_wor(

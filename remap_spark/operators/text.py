@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..engine import local_frame
-from ..functions import PUNCT, lineage_cut, portable_hash60, tokenize
+from ..functions import PUNCT, lineage_cut, ordered, portable_hash60, tokenize
 
 # deliberately small, fixed marker lists — the heuristic is the
 # operator; the lists are config
@@ -585,7 +585,7 @@ def boilerplate_lines(
         lines.groupBy("line")
         .agg(F.count("*").alias("n_docs"))
         .where(F.col("n_docs") >= min_docs)
-        .orderBy("line")
+        .transform(ordered, "line")
     )
 
 
@@ -1126,7 +1126,7 @@ def phrase_search(
     return (
         full.groupBy("phrase", F.col("_doc").alias("doc_id"))
         .agg(F.count(F.lit(1)).alias("n_matches"))
-        .orderBy("phrase", "doc_id")
+        .transform(ordered, "phrase", "doc_id")
     )
 
 

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import ordered
+
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
@@ -520,7 +522,7 @@ def interval_concurrency(
             F.min("_t").alias("peak_at"),
         )
     )
-    return out.orderBy(*gcols) if gcols else out
+    return out.transform(ordered, *gcols) if gcols else out
 
 
 def decompose_additive(
@@ -549,7 +551,8 @@ def decompose_additive(
     Spark ``div`` agree on negatives — the interpolate_gaps pin), so
     the negative detrended means divide identically with no shift and
     no headroom hazard. Values must be integral (fixed-point first).
-    One row per input day, ordered by day.
+    One row per input day, unordered (ext_ts_anomaly_seasonal filters
+    and joins it).
 
     Scale shape: one ROWS window over the ordered series (single
     range-partitioned sort — a daily series is calendar-sized, tiny
@@ -628,7 +631,6 @@ def decompose_additive(
             .cast("bigint")
             .alias("resid_ppm"),
         )
-        .orderBy("day")
     )
 
 
@@ -722,7 +724,7 @@ def interpolate_gaps(
             .otherwise(F.lit("interp"))
             .alias("src"),
         )
-        .orderBy(*gcols, date_col)
+        .transform(ordered, *gcols, date_col)
     )
 
 
@@ -787,7 +789,7 @@ def trend_slopes(
             .cast("bigint")
             .alias("intercept_ppm"),
         )
-        .orderBy(*gcols)
+        .transform(ordered, *gcols)
     )
 
 
@@ -869,5 +871,5 @@ def cusum_changepoint(
             .cast("bigint")
             .alias("strength_ppm"),
         )
-        .orderBy(*gcols)
+        .transform(ordered, *gcols)
     )

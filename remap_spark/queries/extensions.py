@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import load_table
-from ..functions import MINHASH_PRIME, lineage_cut, minhash_params
+from ..functions import MINHASH_PRIME, lineage_cut, minhash_params, ordered
 from ..operators import dedup as dd
 from ..operators import similarity as sim
 from ..operators import split as sp
@@ -69,7 +69,7 @@ def ext_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.groupBy(F.md5("text").alias("h"))
         .agg(F.count("*").alias("cnt"), F.min("doc_id").alias("keep_id"))
-        .orderBy("keep_id")
+        .transform(ordered, "keep_id")
     )
 
 
@@ -89,7 +89,7 @@ def ext_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dd.ngram_jaccard_pairs(docs, threshold=0.5, max_doc_freq=0.05)
     return pairs.select(
         "doc_a", "doc_b", F.round("jaccard", 5).alias("jaccard")
-    ).orderBy("doc_a", "doc_b")
+    ).transform(ordered, "doc_a", "doc_b")
 
 
 _DEDUP_NGRAM_SQL = f"""
@@ -119,8 +119,8 @@ _DEDUP_NGRAM_SQL = f"""
 
 def ext_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dd.minhash_lsh_pairs(docs, num_hashes=16, bands=4).orderBy(
-        "doc_a", "doc_b"
+    return dd.minhash_lsh_pairs(docs, num_hashes=16, bands=4).transform(
+        ordered, "doc_a", "doc_b"
     )
 
 
@@ -132,8 +132,8 @@ def ext_dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     ext_dedup_ngram_jaccard) are separately green. The oracle replays
     the banded pairs and the exact hashed-gram Jaccard end-to-end."""
     docs = load_table(spark, sf_dir, "documents")
-    return dd.lsh_verified_pairs(docs, threshold=0.5).orderBy(
-        "doc_a", "doc_b"
+    return dd.lsh_verified_pairs(docs, threshold=0.5).transform(
+        ordered, "doc_a", "doc_b"
     )
 
 
@@ -205,7 +205,7 @@ def ext_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         dd.simhash_fingerprints(docs)
         .select(F.col("doc").alias("doc_id"), "simhash")
-        .orderBy("doc_id")
+        .transform(ordered, "doc_id")
     )
 
 
@@ -229,12 +229,13 @@ def _simhash_oracle(bits: int = 32) -> str:
 def ext_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = sim.embedding_near_dup_pairs(emb, threshold=0.4)
-    # lazy cut below the global sort: the range sampling pass would
-    # re-run the Arrow GEMM pair pass (a second full Python boundary
-    # crossing — the dq18 shape); cut is match-sized
+    # lazy cut below the final sort, which matters only when
+    # ``ordered`` keeps the range sort: its sampling pass would re-run
+    # the Arrow GEMM pair pass (a second full Python boundary crossing
+    # — the dq18 shape); cut is match-sized
     return lineage_cut(
         pairs.select("vec_a", "vec_b", F.round("cosine", 5).alias("cosine"))
-    ).orderBy("vec_a", "vec_b")
+    ).transform(ordered, "vec_a", "vec_b")
 
 
 _DEDUP_EMB_SQL = f"""
@@ -261,7 +262,7 @@ def ext_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("bigint").alias("rank"),
         "vec_id",
         F.round("cosine", 5).alias("cosine"),
-    ).orderBy("query_id", "rank")
+    ).transform(ordered, "query_id", "rank")
 
 
 _ANN_TOPK_SQL = f"""
@@ -304,7 +305,7 @@ def ext_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "punct_ratio",
             "stopword_ratio",
         )
-        .orderBy("doc_id")
+        .transform(ordered, "doc_id")
     )
 
 
@@ -333,7 +334,7 @@ def ext_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         *[F.col(f"{l}_hits").cast("bigint").alias(f"{l}_hits") for l in tx.LANG_MARKERS],
         "pred_lang",
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 def _langid_oracle() -> str:
@@ -359,7 +360,7 @@ def _langid_oracle() -> str:
 
 def ext_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return tx.content_fingerprint(docs).orderBy("doc_id")
+    return tx.content_fingerprint(docs).transform(ordered, "doc_id")
 
 
 _FINGERPRINT_SQL = """
@@ -390,7 +391,7 @@ def ext_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("bigint").alias("rank"),
         "vec_id",
         F.round("cosine", 5).alias("cosine"),
-    ).orderBy("query_id", "rank")
+    ).transform(ordered, "query_id", "rank")
 
 
 def _ann_lsh_oracle(dim: int = 64, n_planes: int = 8, seed: int = 42) -> str:
@@ -446,7 +447,7 @@ def ext_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("bigint").alias("rank"),
         "vec_id",
         "dist2",
-    ).orderBy("query_id", "rank")
+    ).transform(ordered, "query_id", "rank")
 
 
 _ANN_PQ_SQL = """
@@ -516,7 +517,7 @@ def ext_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("bigint").alias("rank"),
         "vec_id",
         "dist2",
-    ).orderBy("query_id", "rank")
+    ).transform(ordered, "query_id", "rank")
 
 
 def _ann_ivf_pq_oracle(
@@ -609,7 +610,7 @@ def ext_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("bigint").alias("rank"),
         "vec_id",
         F.round("cosine", 5).alias("cosine"),
-    ).orderBy("query_id", "rank")
+    ).transform(ordered, "query_id", "rank")
 
 
 def _ann_ivf_oracle(n_centroids: int = 8, n_probe: int = 2, k: int = 10) -> str:
@@ -673,7 +674,7 @@ def ext_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.length("text") / F.greatest(n_bpe, F.lit(1)), 5
         ).alias("chars_per_token"),
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 _TEXT_TOKENS_SQL = r"""
@@ -693,7 +694,7 @@ def ext_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite quality gate (Gopher/C4-style rule filter) — see
     operators.text.quality_score."""
     docs = load_table(spark, sf_dir, "documents")
-    return tx.quality_score(docs).orderBy("doc_id")
+    return tx.quality_score(docs).transform(ordered, "doc_id")
 
 
 _TEXT_QUALITY_SQL = r"""
@@ -747,7 +748,7 @@ def ext_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         salt_from="event_id",
         buckets=32,
     )
-    return out.select("event_type", "cnt", "sum_value").orderBy("event_type")
+    return out.select("event_type", "cnt", "sum_value").transform(ordered, "event_type")
 
 
 _SALTED_AGG_SQL = """
@@ -781,7 +782,7 @@ def ext_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("sum_value"),
         )
-        .orderBy("event_type")
+        .transform(ordered, "event_type")
     )
 
 
@@ -825,7 +826,7 @@ def ext_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cc.groupBy("component")
         .agg(F.count("*").alias("n_docs"))
-        .orderBy("component")
+        .transform(ordered, "component")
     )
 
 
@@ -862,7 +863,7 @@ def ext_split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         out.groupBy("split")
         .agg(F.count("*").alias("cnt"), F.sum("n_chars").alias("total_chars"))
-        .orderBy("split")
+        .transform(ordered, "split")
     )
 
 
@@ -920,7 +921,7 @@ def ext_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hits.select(
         F.col("doc").alias("doc_id"),
         F.col("n_hits").cast("bigint").alias("n_hits"),
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 _DECONTAM_SQL = f"""
@@ -959,7 +960,7 @@ def ext_text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.col("n_kept").cast("bigint").alias("n_kept"),
         F.md5("text").alias("fp"),
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 _LINE_DEDUP_SQL = """
@@ -1017,7 +1018,7 @@ def ext_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "max_span"
             ),
         )
-        .orderBy("source")
+        .transform(ordered, "source")
     )
 
 
@@ -1066,7 +1067,7 @@ def ext_pipeline_pretokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "max_span"
             ),
         )
-        .orderBy("source")
+        .transform(ordered, "source")
     )
 
 
@@ -1202,7 +1203,7 @@ def ext_text_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = tx.redact_pii(aug)
     return out.select(
         "doc_id", "n_email", "n_ip", "n_phone", F.md5("text").alias("fp")
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 _PII_SQL = f"""
@@ -1243,7 +1244,7 @@ def ext_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "uniq_token_ratio",
         "top_bigram_frac",
         "dup_bigram_frac",
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 _REPETITION_SQL = f"""
@@ -1288,7 +1289,7 @@ def ext_text_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = tx.vocab_topn(docs, n=50)
     return out.select(
         F.col("rank").cast("bigint").alias("rnk"), "word", "cnt"
-    ).orderBy("rnk")
+    ).transform(ordered, "rnk")
 
 
 _VOCAB_SQL = f"""
@@ -1328,7 +1329,8 @@ def ext_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rewrite as kmeans' struct-min argmin); ties impossible because
     # doc_id is unique within a component
     best = F.max(F.struct(F.col("score"), (-F.col("doc_id")).alias("_nid")))
-    # lazy cut below the global sort: the range exchange's sampling
+    # lazy cut below the final sort, which matters only when
+    # ``ordered`` keeps the range sort: the range exchange's sampling
     # pass re-executes the score scan + join + aggregate segment
     # (RDD-level; see ext_winsorize). Cut is component-count-sized.
     return lineage_cut(
@@ -1338,7 +1340,7 @@ def ext_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             (F.count("*") - 1).alias("n_dropped"),
         )
-    ).orderBy("component")
+    ).transform(ordered, "component")
 
 
 def _canonical_oracle() -> str:
@@ -1414,7 +1416,7 @@ def ext_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seen_fps = tx.content_fingerprint(seen).select("fingerprint")
     kept = dd.incremental_dedup(new, seen_fps)
-    return kept.select("doc_id", "fingerprint").orderBy("doc_id")
+    return kept.select("doc_id", "fingerprint").transform(ordered, "doc_id")
 
 
 _FP_EXPR = """CAST('0x' || substr(md5(
@@ -1494,7 +1496,7 @@ def ext_dedup_incremental_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files cheaply; the cut only added materialization.
     return kept.select(
         "doc_id", F.element_at("sigs", 1).alias("sig0")
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 def _sig_ctes_for(src: str, p: str, num_hashes: int = 16) -> str:
@@ -1613,7 +1615,7 @@ def ext_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
             "total_tokens",
         )
-        .orderBy("source", "lang")
+        .transform(ordered, "source", "lang")
     )
 
 
@@ -1661,7 +1663,7 @@ def ext_sample_quality_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             F.sum("n_chars").alias("total_chars"),
         )
-        .orderBy("verdict")
+        .transform(ordered, "verdict")
     )
 
 
@@ -1733,7 +1735,7 @@ def ext_kmeans_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_points", F.lit(0).cast("bigint")).alias("n_points"),
             "c_l1",
         )
-        .orderBy("cluster")
+        .transform(ordered, "cluster")
     )
 
 
@@ -1808,7 +1810,7 @@ def ext_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf * ln(N/df), rank by (score DESC, word ASC). The corpus size
     enters as a broadcast single-row relation — no driver action."""
     docs = load_table(spark, sf_dir, "documents")
-    return tx.tfidf_topk(docs, k=3).orderBy("doc_id", "rank")
+    return tx.tfidf_topk(docs, k=3).transform(ordered, "doc_id", "rank")
 
 
 _TFIDF_SQL = f"""
@@ -1892,7 +1894,7 @@ def ext_text_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = tx.clean_text(aug)
     return out.select(
         "doc_id", F.md5("text").alias("fp"), "n_tags", "n_ctrl"
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 _CLEAN_SQL = r"""
@@ -1933,7 +1935,7 @@ def ext_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         kept.groupBy("lang")
         .agg(F.count("*").alias("cnt"), F.sum("n_chars").alias("total_chars"))
-        .orderBy("lang")
+        .transform(ordered, "lang")
     )
 
 
@@ -2007,7 +2009,7 @@ def ext_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             F.count_distinct("ckey").alias("n_clusters"),
         )
-        .orderBy("split")
+        .transform(ordered, "split")
     )
 
 
@@ -2057,7 +2059,7 @@ def ext_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("chunk_id").cast("bigint").alias("chunk_id"),
         F.col("n_tokens").cast("bigint").alias("n_tokens"),
         F.md5("text").alias("fp"),
-    ).orderBy("doc_id", "chunk_id")
+    ).transform(ordered, "doc_id", "chunk_id")
 
 
 _CHUNK_SQL = f"""
@@ -2108,7 +2110,7 @@ def ext_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cc.groupBy("component")
         .agg(F.count("*").alias("n_vecs"))
-        .orderBy("component")
+        .transform(ordered, "component")
     )
 
 
@@ -2178,7 +2180,7 @@ def ext_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.sum("n_pii").alias("n_pii"),
         )
-        .orderBy("split", "verdict", "bgroup")
+        .transform(ordered, "split", "verdict", "bgroup")
     )
 
 
@@ -2251,7 +2253,7 @@ def ext_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the CCNet/RedPajama perplexity-filter tier. The model is built
     and broadcast inside the operator; no driver action."""
     docs = load_table(spark, sf_dir, "documents")
-    return tx.unigram_lm_scores(docs).orderBy("doc_id")
+    return tx.unigram_lm_scores(docs).transform(ordered, "doc_id")
 
 
 _LM_SCORE_SQL = f"""
@@ -2275,7 +2277,7 @@ def ext_dedup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = dd.span_duplication(docs, k=5, min_docs=2)
     return out.select(
         F.col("doc").alias("doc_id"), "n_windows", "n_dup_windows", "dup_frac"
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 _SPAN_GRAM = " || ' ' || ".join(
@@ -2317,7 +2319,7 @@ def ext_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = dd.remove_duplicate_spans(docs, k=5, min_docs=2)
     return out.select(
         F.col("doc").alias("doc_id"), "text", "n_tokens", "n_removed"
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 _SPAN_REMOVAL_SQL = f"""
@@ -2370,7 +2372,7 @@ def ext_dedup_span_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = dd.duplicate_span_lengths(docs, k=5, min_docs=2)
     return out.select(
         F.col("doc").alias("doc_id"), "span_start", "span_len"
-    ).orderBy("doc_id", "span_start")
+    ).transform(ordered, "doc_id", "span_start")
 
 
 _SPAN_LENGTHS_SQL = f"""
@@ -2433,7 +2435,7 @@ def ext_dedup_paragraph_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = dd.dedup_paragraphs_global(aug)
     return out.select(
         F.col("doc").alias("doc_id"), "text", "n_segments", "n_removed"
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 _PARA_GLOBAL_SQL = """
@@ -2485,7 +2487,7 @@ def ext_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_kept"),
         F.sum("n_chars").alias("kept_chars"),
     )
-    return tot.join(per, "source").orderBy("source")
+    return tot.join(per, "source").transform(ordered, "source")
 
 
 _CAP_BUCKET = _H32.format(x="concat(CAST(doc_id AS VARCHAR), '|v1')") + " % 10000"
@@ -2571,7 +2573,7 @@ def ext_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("p", 5).alias("p_en"),
         (F.col("p") >= 0.5).cast("int").alias("pred"),
         F.col("y").alias("label"),
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 def _classifier_oracle(iters: int = 5, lr: float = 1.0) -> str:
@@ -2663,7 +2665,7 @@ def ext_text_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     terminal '</w>' markers, frequency-weighted — the distributed core
     of tokenizer training (Sennrich et al. 2016)."""
     docs = load_table(spark, sf_dir, "documents")
-    return tx.bpe_pair_stats(docs, top_n=20).orderBy("rnk")
+    return tx.bpe_pair_stats(docs, top_n=20).transform(ordered, "rnk")
 
 
 _BPE_SQL = f"""
@@ -2722,7 +2724,7 @@ def ext_range_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         j.groupBy("o_orderpriority")
         .agg(F.count("*").alias("cnt"))
-        .orderBy("o_orderpriority")
+        .transform(ordered, "o_orderpriority")
     )
 
 
@@ -2776,7 +2778,7 @@ def ext_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(verdict.alias("verdict"))
         .groupBy("verdict")
         .agg(F.count("*").alias("n_docs"))
-        .orderBy("verdict")
+        .transform(ordered, "verdict")
     )
 
 
@@ -2815,7 +2817,7 @@ def ext_ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("bigint").alias("rank"),
         "vec_id",
         F.round("cosine", 5).alias("cosine"),
-    ).orderBy("query_id", "rank")
+    ).transform(ordered, "query_id", "rank")
 
 
 _HARD_NEG_SQL = f"""
@@ -2887,7 +2889,7 @@ def ext_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("hit").alias("bloom_hit"),
             F.coalesce("_dup", F.lit(0)).alias("is_dup"),
         )
-        .orderBy("doc_id")
+        .transform(ordered, "doc_id")
     )
 
 
@@ -3009,7 +3011,7 @@ def ext_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         epoch_us("valid_from").alias("valid_from_us"),
         epoch_us("valid_to").alias("valid_to_us"),
         F.col("is_current").cast("int").alias("is_current"),
-    ).orderBy("user_id", "version")
+    ).transform(ordered, "user_id", "version")
 
 
 _SCD2_SQL = """
@@ -3092,7 +3094,7 @@ def ext_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         epoch_us("valid_from").alias("valid_from_us"),
         epoch_us("valid_to").alias("valid_to_us"),
         F.col("is_current").cast("int").alias("is_current"),
-    ).orderBy("user_id", "version")
+    ).transform(ordered, "user_id", "version")
 
 
 def ext_percentile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3134,7 +3136,7 @@ def ext_percentile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         F.col("n_rows").cast("bigint").alias("n_rows"),
         "p50", "p90", "p99",
-    ).orderBy("l_returnflag")
+    ).transform(ordered, "l_returnflag")
 
 
 _PCT_STATE_SQL = """
@@ -3186,7 +3188,7 @@ def ext_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 4 == 0
     )
     out = dd.prefix_filter_pairs(docs, threshold=0.99)
-    return out.orderBy("doc_a", "doc_b")
+    return out.transform(ordered, "doc_a", "doc_b")
 
 
 _PREFIX_FILTER_SQL = f"""
@@ -3253,7 +3255,7 @@ def ext_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("qty_sum_c").cast("bigint").alias("qty_sum_c"),
         "price_min_c",
         "price_max_c",
-    ).orderBy("l_partkey")
+    ).transform(ordered, "l_partkey")
 
 
 _ROLLUP_SQL = """
@@ -3290,7 +3292,7 @@ def ext_layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         ["x", "y"],
     )
-    return stats.orderBy("bucket")
+    return stats.transform(ordered, "bucket")
 
 
 def ext_layout_hilbert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3313,7 +3315,7 @@ def ext_layout_hilbert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         ["x", "y"],
     )
-    return stats.orderBy("bucket")
+    return stats.transform(ordered, "bucket")
 
 
 def _hilbert_oracle() -> str:
@@ -3523,7 +3525,7 @@ def ext_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dense_r = dense.select(F.col("vec_id").alias("doc_id"), "rank")
     fused = sim.rrf_fuse([sparse_r, dense_r], rrf_k=60, topk=15)
-    return fused.orderBy("fused_rank")
+    return fused.transform(ordered, "fused_rank")
 
 
 _RRF_SQL = f"""
@@ -3615,7 +3617,7 @@ def ext_ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return filled.select(
         "event_type", "day", "is_gap", "n_events", "peak_cents"
-    ).orderBy("event_type", "day")
+    ).transform(ordered, "event_type", "day")
 
 
 _TS_GAPFILL_SQL = """
@@ -3682,7 +3684,7 @@ def ext_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderdate",
         "cents",
         (F.floor(F.col("ewma") * 10000 + 0.5) / 10000).alias("ewma"),
-    ).orderBy("o_orderpriority", "o_orderdate")
+    ).transform(ordered, "o_orderpriority", "o_orderdate")
 
 
 def _ewma_oracle() -> str:
@@ -3732,7 +3734,7 @@ def ext_user_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sessions import top_event_paths
 
     ev = load_table(spark, sf_dir, "events")
-    return top_event_paths(ev, n_steps=3, topk=20).orderBy("path_rank")
+    return top_event_paths(ev, n_steps=3, topk=20).transform(ordered, "path_rank")
 
 
 _USER_PATHS_SQL = """
@@ -3768,7 +3770,7 @@ def ext_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = tx.bigram_lm_scores(docs)
     return out.select(
         "doc_id", "n_bigrams", "xent", "ppl"
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 _BIGRAM_LM_SQL = f"""
@@ -3822,7 +3824,7 @@ def ext_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         est.join(exact, "event_type")
         .select("event_type", "n_hashes", "est_distinct", "exact_distinct")
-        .orderBy("event_type")
+        .transform(ordered, "event_type")
     )
 
 
@@ -3877,7 +3879,7 @@ def ext_dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "doc_id", "cluster", "cluster_size", "weight_ppm"
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 def _soft_weights_oracle() -> str:

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import local_frame
+from ..functions import ordered
 from ..operators.pregel import flood_max, pagerank, pagerank_dangling, pointer_jump
 
 # graph1.txt + graph2.txt adjacency (pagerank input, 10 vertices)
@@ -52,7 +53,7 @@ def dq16_flood_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         flood_max(verts, edges, num_partitions=2)
         .select(F.col("id").alias("vertex_id"), F.col("value").alias("max_value"))
-        .orderBy("vertex_id")
+        .transform(ordered, "vertex_id")
     )
 
 
@@ -64,7 +65,7 @@ def dq17_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ranks.select(
         F.col("id").alias("vertex_id"), F.round("rank", 5).alias("rank")
-    ).orderBy("vertex_id")
+    ).transform(ordered, "vertex_id")
 
 
 # dq17's graph with vertices 5 and 9 turned into SINKS (out-edges
@@ -87,7 +88,7 @@ def ext_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ranks.select(
         F.col("id").alias("vertex_id"), F.round("rank", 5).alias("rank")
-    ).orderBy("vertex_id")
+    ).transform(ordered, "vertex_id")
 
 
 # Pointer-jumping forest: a depth-12 chain rooted at 12, a 5-leaf star
@@ -108,7 +109,7 @@ def dq40_pointer_jump(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pointer_jump(verts, num_partitions=2)
         .select(F.col("id").alias("vertex_id"), F.col("root").alias("root_id"))
-        .orderBy("vertex_id")
+        .transform(ordered, "vertex_id")
     )
 
 
@@ -215,7 +216,7 @@ def dq42_star_components(spark, sf_dir):
     return (
         cc.groupBy("component")
         .agg(F.count("*").alias("n_nodes"))
-        .orderBy("component")
+        .transform(ordered, "component")
     )
 
 
@@ -323,7 +324,7 @@ def ext_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("u") + F.col("v")) % 7 + 1).alias("wt"),
     )
     out = sssp(weighted, source=0)
-    return out.select(F.col("id"), F.col("dist")).orderBy("id")
+    return out.select(F.col("id"), F.col("dist")).transform(ordered, "id")
 
 
 GRAPH_ORACLES["ext_graph_triangles"] = """

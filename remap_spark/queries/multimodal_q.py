@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import load_table
+from ..functions import ordered
 from ..operators import multimodal as mm
 
 # payload = first N chars of the doc, non-printable-ASCII replaced;
@@ -64,7 +65,7 @@ def ext_mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("feat_idx").cast("bigint").alias("feat_idx"),
             F.round(F.col("feat").cast("double"), 5).alias("feat"),
         )
-        .orderBy("media_id", "feat_idx")
+        .transform(ordered, "media_id", "feat_idx")
     )
 
 
@@ -108,7 +109,7 @@ def ext_mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("feat_idx").cast("bigint").alias("feat_idx"),
             F.round(F.col("feat").cast("double"), 5).alias("feat"),
         )
-        .orderBy("media_id", "feat_idx")
+        .transform(ordered, "media_id", "feat_idx")
     )
 
 
@@ -145,7 +146,7 @@ def ext_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("frame_idx").cast("bigint").alias("frame_idx"),
         F.length("frame").cast("bigint").alias("frame_bytes"),
         F.md5("frame").alias("frame_md5"),
-    ).orderBy("media_id", "frame_idx")
+    ).transform(ordered, "media_id", "frame_idx")
 
 
 _MM_FRAMES_SQL = f"""

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..engine import load_table
-from ..functions import epoch_us, first_char_bucket, lineage_cut, tokenize
+from ..functions import epoch_us, first_char_bucket, lineage_cut, ordered, tokenize
 from ..worker import on_worker
 
 DEC = "decimal(28,10)"
@@ -46,7 +46,7 @@ def dq01_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
         F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 5).alias("net"),
-    ).orderBy("l_orderkey", "l_linenumber")
+    ).transform(ordered, "l_orderkey", "l_linenumber")
 
 
 def dq02_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,7 +59,7 @@ def dq02_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") > 45)
         )
         .select("l_orderkey", "l_quantity")
-        .orderBy("l_orderkey", "l_quantity")
+        .transform(ordered, "l_orderkey", "l_quantity")
     )
 
 
@@ -113,7 +113,7 @@ def dq05_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("avg_disc"),
             F.count("*").alias("cnt"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(ordered, "l_returnflag", "l_linestatus")
     )
 
 
@@ -126,7 +126,7 @@ def dq06_secondary_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select("user_id", "event_id", F.row_number().over(w).alias("rn"))
         .where(F.col("rn") <= 3)
         .select("user_id", "rn", "event_id")
-        .orderBy("user_id", "rn")
+        .transform(ordered, "user_id", "rn")
     )
 
 
@@ -151,7 +151,7 @@ def dq08_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("c_mktsegment")
         .agg(F.count("*").alias("cnt"))
-        .orderBy("c_mktsegment")
+        .transform(ordered, "c_mktsegment")
     )
 
 
@@ -174,7 +174,7 @@ def dq09_multiway_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(_dec_sum(net, 2, "revenue"))
-        .orderBy("n_name")
+        .transform(ordered, "n_name")
     )
 
 
@@ -189,7 +189,7 @@ def dq10_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
         .select("c_custkey")
-        .orderBy("c_custkey")
+        .transform(ordered, "c_custkey")
     )
 
 
@@ -219,7 +219,7 @@ def dq11_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _cust_nations(spark, sf_dir)
         .intersect(_supp_nations(spark, sf_dir))
-        .orderBy("n_name")
+        .transform(ordered, "n_name")
     )
 
 
@@ -236,7 +236,7 @@ def dq11_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _cust_nations(spark, sf_dir)
         .subtract(rich_supp_nations)
-        .orderBy("n_name")
+        .transform(ordered, "n_name")
     )
 
 
@@ -252,7 +252,7 @@ def dq12_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("l_linestatus", F.lit("ALL")).alias("ls"),
             "cnt",
         )
-        .orderBy("rf", "ls")
+        .transform(ordered, "rf", "ls")
     )
 
 
@@ -268,7 +268,7 @@ def dq13_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("cnt"),
             _dec_sum(F.col("value"), 5, "sum_value"),
         )
-        .orderBy("hour", "event_type")
+        .transform(ordered, "hour", "event_type")
     )
 
 
@@ -301,7 +301,7 @@ def dq15_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ev.groupBy("event_type")
         .agg(F.sum(k).alias("k_sum"), F.count("*").alias("cnt"))
-        .orderBy("event_type")
+        .transform(ordered, "event_type")
     )
 
 
@@ -314,7 +314,7 @@ def dq15_year(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_orders"),
             _dec_sum(F.col("o_totalprice"), 2, "total"),
         )
-        .orderBy("yr")
+        .transform(ordered, "yr")
     )
 
 
@@ -369,11 +369,12 @@ def dq18_grouped_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .applyInPandas(on_worker(agg_group), schema=schema)
-        # lazy cut below the global sort: the range sampling pass
-        # re-runs the pandas UDF over every group (a second full
-        # Python pass); the cut is 6 rows (see ext_winsorize)
+        # lazy cut below the final sort, which matters only when
+        # ``ordered`` keeps the range sort: its sampling pass would
+        # re-run the pandas UDF over every group (a second full Python
+        # pass); the cut is 6 rows (see ext_winsorize)
         .transform(lineage_cut)
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(ordered, "l_returnflag", "l_linestatus")
     )
 
 
@@ -385,7 +386,7 @@ def dq19_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(first_char_bucket("word").alias("bucket"))
         .groupBy("bucket")
         .agg(F.count("*").alias("cnt"))
-        .orderBy("bucket")
+        .transform(ordered, "bucket")
     )
 
 
@@ -398,7 +399,7 @@ def dq21_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey")
         .agg(F.count("o_orderkey").alias("n_orders"))
-        .orderBy("c_custkey")
+        .transform(ordered, "c_custkey")
     )
 
 
@@ -418,7 +419,7 @@ def dq21_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(side.alias("side"))
         .groupBy("side")
         .agg(F.count("*").alias("cnt"))
-        .orderBy("side")
+        .transform(ordered, "side")
     )
 
 
@@ -427,7 +428,11 @@ def dq22_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     both = _cust_nations(spark, sf_dir).unionByName(
         _supp_nations(spark, sf_dir)
     )
-    return both.groupBy("n_name").agg(F.count("*").alias("cnt")).orderBy("n_name")
+    return (
+        both.groupBy("n_name")
+        .agg(F.count("*").alias("cnt"))
+        .transform(ordered, "n_name")
+    )
 
 
 def dq20_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -450,7 +455,7 @@ def dq20_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("cnt"))
-        .orderBy("o_orderpriority")
+        .transform(ordered, "o_orderpriority")
     )
 
 
@@ -472,7 +477,7 @@ def dq23_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
             "sum_qty",
         )
-        .orderBy("rf", "ls")
+        .transform(ordered, "rf", "ls")
     )
 
 
@@ -504,7 +509,7 @@ def dq24_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") == 1)
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("cnt"))
-        .orderBy("o_orderpriority")
+        .transform(ordered, "o_orderpriority")
     )
 
 
@@ -524,7 +529,7 @@ def dq25_window_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w).alias("rn"),
         F.round(ma3, 5).cast("double").alias("ma3"),
         F.round(csum, 5).cast("double").alias("cum_spend"),
-    ).orderBy("o_custkey", "rn")
+    ).transform(ordered, "o_custkey", "rn")
 
 
 def dq26_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -541,7 +546,7 @@ def dq26_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("l_suppkey").alias("nd_supp"),
             F.count("*").alias("cnt"),
         )
-        .orderBy("l_returnflag")
+        .transform(ordered, "l_returnflag")
     )
 
 
@@ -565,7 +570,7 @@ def dq27_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
             "sum_value",
         )
-        .orderBy("w_start", "event_type")
+        .transform(ordered, "w_start", "event_type")
     )
 
 
@@ -578,7 +583,7 @@ def dq21_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.join(cust, orders.o_custkey == cust.c_custkey, "right")
         .groupBy("c_custkey")
         .agg(F.count("o_orderkey").alias("n_orders"))
-        .orderBy("c_custkey")
+        .transform(ordered, "c_custkey")
     )
 
 
@@ -593,7 +598,7 @@ def dq28_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.join(li, orders.o_orderkey == li.l_orderkey, "left_semi")
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("cnt"))
-        .orderBy("o_orderpriority")
+        .transform(ordered, "o_orderpriority")
     )
 
 
@@ -646,7 +651,7 @@ def dq30_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
             "sum_qty",
         )
-        .orderBy("rf", "ls")
+        .transform(ordered, "rf", "ls")
     )
 
 
@@ -664,7 +669,7 @@ def dq31_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("F", F.lit(0)).alias("cnt_f"),
             F.coalesce("O", F.lit(0)).alias("cnt_o"),
         )
-        .orderBy("rf")
+        .transform(ordered, "rf")
     )
 
 
@@ -714,12 +719,13 @@ def dq33_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.element_at("_p", 2), 4).alias("p90"),
             "cnt",
         )
-        # lazy cut below the global sort: the range sampling pass
-        # re-runs the exact-percentile buffer merge (the final
+        # lazy cut below the final sort, which matters only when
+        # ``ordered`` keeps the range sort: its sampling pass would
+        # re-run the exact-percentile buffer merge (the final
         # ObjectHashAggregate re-sorts every group's value stream a
         # second time); the cut is 3 rows (see ext_winsorize)
         .transform(lineage_cut)
-        .orderBy("l_returnflag")
+        .transform(ordered, "l_returnflag")
     )
 
 
@@ -747,7 +753,7 @@ def dq34_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("double").alias("avg_first"),
             F.sum(n_pos).alias("total_pos"),
         )
-        .orderBy("label")
+        .transform(ordered, "label")
     )
 
 
@@ -780,7 +786,7 @@ def dq36_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_if(disc).alias("n_disc"),
             F.count("*").alias("cnt"),
         )
-        .orderBy("l_linestatus")
+        .transform(ordered, "l_linestatus")
     )
 
 
@@ -800,7 +806,7 @@ def dq37_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
             (epoch_us("ts") - prev).alias("gap_us"),
             F.ntile(4).over(w).cast("bigint").alias("quartile"),
         )
-        .orderBy("user_id", "rn")
+        .transform(ordered, "user_id", "rn")
     )
 
 
@@ -822,7 +828,7 @@ def dq39_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         F.round(run, 2).cast("double").alias("running_spend"),
-    ).orderBy("o_custkey", "o_orderkey")
+    ).transform(ordered, "o_custkey", "o_orderkey")
 
 
 # TPC-H Q3 shape, one SQL text shared verbatim by Spark and DuckDB —
@@ -910,7 +916,7 @@ def ext_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(e(2), 5).alias("exact_p50"),
         ((a(1) >= e(1)) & (a(1) <= e(3))).alias("p50_ok"),
         ((a(2) >= e(4)) & (a(2) <= e(5))).alias("p95_ok"),
-    ).orderBy("event_type")
+    ).transform(ordered, "event_type")
 
 
 FUNNEL_STEPS = ["view", "click", "purchase"]
@@ -973,7 +979,7 @@ def ext_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sessions import rolling_active_users
 
     ev = load_table(spark, sf_dir, "events")
-    return rolling_active_users(ev, window_days=7)
+    return rolling_active_users(ev, window_days=7).transform(ordered, "day")
 
 
 def ext_active_users_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,7 +1013,7 @@ def ext_active_users_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.col("wau_apx") <= F.col("wau") * 1.1)
             ).alias("wau_ok"),
         )
-        .orderBy("day")
+        .transform(ordered, "day")
     )
 
 
@@ -1060,7 +1066,7 @@ def ext_pipeline_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         staged.groupBy("cohort", "stage_reached", "sess_bucket")
         .agg(F.count("*").alias("n_users"))
-        .orderBy("cohort", "stage_reached", "sess_bucket")
+        .transform(ordered, "cohort", "stage_reached", "sess_bucket")
     )
 
 
@@ -1085,7 +1091,8 @@ def dq43_rolling_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rangeBetween(-3_600_000_000, 0)
     )
     run = F.sum(F.col("value").cast("decimal(28,10)")).over(w)
-    # lazy cut below the global sort: the range sampling pass re-runs
+    # lazy cut below the final sort, which matters only when
+    # ``ordered`` keeps the range sort: its sampling pass would re-run
     # the decimal range-frame window (see ext_winsorize)
     return lineage_cut(
         ev.select(
@@ -1094,7 +1101,7 @@ def dq43_rolling_range(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").over(w).alias("n_1h"),
             F.round(run, 5).cast("double").alias("sum_1h"),
         )
-    ).orderBy("event_type", "event_id")
+    ).transform(ordered, "event_type", "event_id")
 
 
 def dq44_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1148,7 +1155,7 @@ def dq44_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("c_price").isNull(), F.lit("unchanged"))
         .otherwise(F.lit("updated"))
         .alias("merge_action"),
-    ).orderBy("o_orderkey")
+    ).transform(ordered, "o_orderkey")
 
 
 # Columns profiled by ext_profile_columns — config, not code; any
@@ -1189,7 +1196,7 @@ def ext_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         "AS (col_name, n_null, n_distinct, min_val, max_val)",
     ).select(
         "col_name", "n_rows", "n_null", "n_distinct", "min_val", "max_val"
-    ).orderBy("col_name")
+    ).transform(ordered, "col_name")
 
 
 def ext_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1215,7 +1222,7 @@ def ext_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("_apx") >= F.col("exact_part") * 0.9)
             & (F.col("_apx") <= F.col("exact_part") * 1.1)
         ).alias("apx_ok"),
-    ).orderBy("l_returnflag")
+    ).transform(ordered, "l_returnflag")
 
 
 def dq45_rank_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1260,5 +1267,5 @@ def dq45_rank_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.first("cents").over(wf).alias("min_cents"),
             F.last("cents").over(wf).alias("max_cents"),
         )
-        .orderBy("o_orderpriority", "cents", "o_orderkey")
+        .transform(ordered, "o_orderpriority", "cents", "o_orderkey")
     )

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import load_table
+from ..functions import ordered
 
 _SD_K = 8
 _SD_ITERS = 3
@@ -76,7 +77,7 @@ def ext_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("dropped_id_sum"),
         )
-        .orderBy("cluster")
+        .transform(ordered, "cluster")
     )
 
 
@@ -141,7 +142,7 @@ def ext_sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_DSIR_K,
         buckets=_DSIR_BUCKETS,
         salt=_DSIR_SALT,
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 def _dsir_oracle() -> str:

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import load_table
+from ..functions import ordered
 from ..operators import dedup as dd
 
 
@@ -73,7 +74,7 @@ def ext_dedup_per_host(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = dd.dedup_paragraphs_per_host(aug)
     return out.select(
         F.col("doc").alias("doc_id"), "host", "text", "n_segments", "n_removed"
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 _PER_HOST_SQL = """

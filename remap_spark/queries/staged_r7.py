@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import load_table, local_frame
-from ..functions import lineage_cut
+from ..functions import lineage_cut, ordered
 from ..operators.experiments import ab_test_report, crosstab_chi2
 from ..operators.linkage import resolve_entities
 from ..operators.basket import association_rules
@@ -48,7 +48,7 @@ def ext_sample_wor(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = weighted_sample_wor(
         docs, "doc_id", F.col("n_chars").cast("double"), 100
     )
-    return out.select("doc_id", "source").orderBy("doc_id")
+    return out.select("doc_id", "source").transform(ordered, "doc_id")
 
 
 _SAMPLE_WOR_SQL = """
@@ -115,8 +115,8 @@ def ext_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream (touches = view/click/signup)."""
     ev = load_table(spark, sf_dir, "events")
     out = attribute_conversions(ev, ["view", "click", "signup"], "purchase")
-    return out.select("user_id", "conversion_id", "channel").orderBy(
-        "conversion_id"
+    return out.select("user_id", "conversion_id", "channel").transform(
+        ordered, "conversion_id"
     )
 
 
@@ -140,7 +140,7 @@ def ext_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOTE r13: a pre-sort lazy cut A/B-measured a wash (2.34/2.61 vs
     # 2.60/2.23 s) — the rule joins already read the operator's cells
     # cut; left uncut to keep the r12 plan shape.
-    return out.orderBy("antecedent", "consequent")
+    return out.transform(ordered, "antecedent", "consequent")
 
 
 _BASKET_RULES_SQL = """
@@ -186,7 +186,7 @@ def ext_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = resolve_entities(
         cust, "c_custkey", "c_name", "_blk", max_distance=2
     )
-    return out.select("c_custkey", "entity_id").orderBy("c_custkey")
+    return out.select("c_custkey", "entity_id").transform(ordered, "c_custkey")
 
 
 _ENTITY_RESOLUTION_SQL = """
@@ -220,7 +220,7 @@ def ext_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     out = rfm_segments(ordr, "o_custkey", "o_orderdate", "cents")
-    return out.orderBy("o_custkey")
+    return out.transform(ordered, "o_custkey")
 
 
 _RFM_SEGMENTS_SQL = """
@@ -292,7 +292,7 @@ def ext_ts_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "l_suppkey", "tick", "cents", "trailing_n", "is_anomaly"
-    ).orderBy("l_suppkey", "tick")
+    ).transform(ordered, "l_suppkey", "tick")
 
 
 _TS_ZSCORE_SQL = """
@@ -331,7 +331,7 @@ def ext_ts_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("cents").alias("cents"))
     )
     out = time_weighted_avg(ordr, ["o_custkey"], "ots", "cents")
-    return out.orderBy("o_custkey")
+    return out.transform(ordered, "o_custkey")
 
 
 _TS_TWAP_SQL = """
@@ -363,7 +363,7 @@ def ext_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_size",
     )
     out = pareto_frontier(part, {"cents": "min", "p_size": "max"})
-    return out.orderBy("p_partkey")
+    return out.transform(ordered, "p_partkey")
 
 
 _SKYLINE_SQL = """
@@ -384,7 +384,7 @@ _SKYLINE_SQL = """
 
 def ext_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    return key_skew_report(li, "l_partkey", topk=25).orderBy("rank")
+    return key_skew_report(li, "l_partkey", topk=25).transform(ordered, "rank")
 
 
 _SKEW_REPORT_SQL = """
@@ -481,7 +481,7 @@ _AB_TEST_SQL = f"""
 def ext_crosstab_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordr = load_table(spark, sf_dir, "orders")
     out = crosstab_chi2(ordr, "o_orderpriority", "o_orderstatus")
-    return out.orderBy("o_orderpriority", "o_orderstatus")
+    return out.transform(ordered, "o_orderpriority", "o_orderstatus")
 
 
 _CROSSTAB_CHI2_SQL = """
@@ -509,7 +509,7 @@ def ext_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n")
     )
     out = period_over_period(daily, ["event_type"], "day", "n", 7)
-    return out.orderBy("event_type", "day")
+    return out.transform(ordered, "event_type", "day")
 
 
 _PERIOD_OVER_PERIOD_SQL = """
@@ -547,7 +547,7 @@ def ext_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join(F.col("term_freqs").cast("array<string>"), ",").alias(
             "term_freqs"
         ),
-    ).orderBy("term")
+    ).transform(ordered, "term")
 
 
 _INVERTED_INDEX_SQL = r"""
@@ -570,7 +570,7 @@ _INVERTED_INDEX_SQL = r"""
 
 def ext_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    return markov_transitions(ev).orderBy("from_event", "to_event")
+    return markov_transitions(ev).transform(ordered, "from_event", "to_event")
 
 
 _MARKOV_TRANSITIONS_SQL = """
@@ -649,7 +649,7 @@ _KMV_SET_OPS_SQL = f"""
 def ext_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     out = shuffle_for_training(docs, "doc_id", n_shards=8, seed="s1")
-    return out.select("doc_id", "shard", "shard_order").orderBy("doc_id")
+    return out.select("doc_id", "shard", "shard_order").transform(ordered, "doc_id")
 
 
 _SHUFFLE_SHARDS_SQL = """
@@ -672,7 +672,8 @@ def ext_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         p_lo=0.05,
         p_hi=0.95,
     )
-    # lazy cut below the global sort: the range exchange SAMPLES its
+    # lazy cut below the final sort, which matters only when
+    # ``ordered`` keeps the range sort: the range exchange SAMPLES its
     # child to pick partition bounds, re-executing the scan + cuts
     # join once more (RDD-level, invisible in the static plan); the
     # cut materializes the output-sized projection once (probed r13:
@@ -685,7 +686,7 @@ def ext_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("l_extendedprice_wins", 4).alias("wins"),
             "is_clipped",
         )
-    ).orderBy("l_orderkey", "l_linenumber")
+    ).transform(ordered, "l_orderkey", "l_linenumber")
 
 
 _WINSORIZE_SQL = """
@@ -715,12 +716,13 @@ def ext_cross_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.where(F.col("vec_id") < 100),
         threshold=0.4,
     )
-    # lazy cut below the global sort: the range sampling pass would
-    # re-run the Arrow GEMM pass over every block pair (a second full
-    # Python boundary crossing — the dq18 shape); cut is match-sized
+    # lazy cut below the final sort, which matters only when
+    # ``ordered`` keeps the range sort: its sampling pass would re-run
+    # the Arrow GEMM pass over every block pair (a second full Python
+    # boundary crossing — the dq18 shape); cut is match-sized
     return lineage_cut(
         out.select("a_id", "b_id", F.round("cosine", 5).alias("cosine"))
-    ).orderBy("a_id", "b_id")
+    ).transform(ordered, "a_id", "b_id")
 
 
 _CROSS_COS = (
@@ -747,7 +749,7 @@ def ext_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_orderkey") % 1500).alias("src"),
         (F.col("l_partkey") % 1500).alias("dst"),
     )
-    return k_core(g, k=3).orderBy("vertex_id")
+    return k_core(g, k=3).transform(ordered, "vertex_id")
 
 
 _K_CORE_SQL = """
@@ -816,7 +818,7 @@ def ext_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cells); the oracle mirrors with array_to_string. SURVEY §8.
     return out.withColumn(
         "changed_cols", F.array_join("changed_cols", ",")
-    ).orderBy("o_orderkey")
+    ).transform(ordered, "o_orderkey")
 
 
 _TABLE_CHANGES_SQL = """
@@ -869,7 +871,7 @@ def ext_segment_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     out = segment_overlap_matrix(ev, "event_type", "user_id", k=64)
-    return out.orderBy("segment_a", "segment_b")
+    return out.transform(ordered, "segment_a", "segment_b")
 
 
 _SEGMENT_OVERLAP_SQL = f"""
@@ -945,7 +947,7 @@ def ext_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ranks.select(
         F.col("id").alias("vertex_id"), F.round("rank", 5).alias("rank")
-    ).orderBy("vertex_id")
+    ).transform(ordered, "vertex_id")
 
 
 def _ppr_oracle(steps: int = 10, d: float = 0.85) -> str:
@@ -1001,7 +1003,7 @@ def ext_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_orderkey") % 400).alias("src"),
         (F.col("l_partkey") % 400).alias("dst"),
     )
-    return label_propagation(g, rounds=3).orderBy("vertex_id")
+    return label_propagation(g, rounds=3).transform(ordered, "vertex_id")
 
 
 def _lpa_oracle(rounds: int = 3) -> str:
@@ -1100,8 +1102,8 @@ def ext_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 20 == 0
     )
-    return winnow_fingerprints(docs, k=10, window=5).orderBy(
-        "doc", "fp_hash", "pos"
+    return winnow_fingerprints(docs, k=10, window=5).transform(
+        ordered, "doc", "fp_hash", "pos"
     )
 
 
@@ -1154,7 +1156,7 @@ def ext_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.round(F.element_at("pca", 1), 5).alias("pc1"),
         F.round(F.element_at("pca", 2), 5).alias("pc2"),
-    ).orderBy("vec_id")
+    ).transform(ordered, "vec_id")
 
 
 def _pca_project_oracle() -> str:
@@ -1211,7 +1213,7 @@ def ext_ewma_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("level", 6).alias("level"),
         F.round("trend", 6).alias("trend"),
         F.round("forecast", 6).alias("forecast"),
-    ).orderBy("event_type", "day")
+    ).transform(ordered, "event_type", "day")
 
 
 def _ewma_forecast_oracle() -> str:
@@ -1251,7 +1253,7 @@ def ext_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return seasonal_indices(
         daily, ["event_type"], "day", "n", period=7
-    ).orderBy("event_type", "phase")
+    ).transform(ordered, "event_type", "phase")
 
 
 _SEASONAL_SQL = """
@@ -1284,7 +1286,7 @@ def ext_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.where(F.col("vec_id") < 100),
         threshold=0.4,
     )
-    return kept.select("vec_id", "label").orderBy("vec_id")
+    return kept.select("vec_id", "label").transform(ordered, "vec_id")
 
 
 _SEMANTIC_DECON_SQL = f"""
@@ -1319,7 +1321,7 @@ def ext_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return scd2_lookup(facts, dim, "o_custkey", "fts", ["prio"]).select(
         "o_orderkey", "prio"
-    ).orderBy("o_orderkey")
+    ).transform(ordered, "o_orderkey")
 
 
 _SCD2_LOOKUP_SQL = """
@@ -1369,14 +1371,15 @@ def ext_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_bins=10,
         group_cols=["l_returnflag"],
     )
-    # lazy cut below the global sort (see ext_winsorize): the range
-    # exchange's sampling pass would re-run the scan + cuts join
+    # lazy cut below the final sort (see ext_winsorize), which matters
+    # only when ``ordered`` keeps the range sort: the range exchange's
+    # sampling pass would re-run the scan + cuts join
     return lineage_cut(
         out.select(
             "l_orderkey", "l_linenumber",
             F.col("l_extendedprice_bin").alias("bin"),
         )
-    ).orderBy("l_orderkey", "l_linenumber")
+    ).transform(ordered, "l_orderkey", "l_linenumber")
 
 
 _QUANTILE_BINS_SQL = """
@@ -1408,8 +1411,9 @@ def ext_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice",
         group_cols=["l_returnflag"],
     )
-    # lazy cut below the global sort (see ext_winsorize): the range
-    # exchange's sampling pass would re-run the two-join MAD pipeline
+    # lazy cut below the final sort (see ext_winsorize), which matters
+    # only when ``ordered`` keeps the range sort: the range exchange's
+    # sampling pass would re-run the two-join MAD pipeline
     return lineage_cut(
         out.select(
             "l_orderkey", "l_linenumber",
@@ -1417,7 +1421,7 @@ def ext_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("mad", 4).alias("mad"),
             "is_outlier",
         )
-    ).orderBy("l_orderkey", "l_linenumber")
+    ).transform(ordered, "l_orderkey", "l_linenumber")
 
 
 _MAD_OUTLIERS_SQL = """

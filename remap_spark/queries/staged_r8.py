@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import load_table, local_frame
+from ..functions import ordered
 from ..operators.dedup import (
     cross_corpus_match_spans,
     maximal_match_spans,
@@ -43,7 +44,7 @@ def ext_entity_resolution_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.substring("c_name", 1, 16), F.substring("c_name", -7, 7)],
         max_distance=2,
     )
-    return out.select("c_custkey", "entity_id").orderBy("c_custkey")
+    return out.select("c_custkey", "entity_id").transform(ordered, "c_custkey")
 
 
 _ENTITY_RESOLUTION_MULTI_SQL = """
@@ -88,7 +89,7 @@ def ext_dedup_span_maximal(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = maximal_match_spans(docs, k=5, max_gram_docs=_MAX_GRAM_DOCS)
     return out.select(
         F.col("doc").alias("doc_id"), "span_start", "span_len"
-    ).orderBy("doc_id", "span_start", "span_len")
+    ).transform(ordered, "doc_id", "span_start", "span_len")
 
 
 _SPAN_PAIR_CTES = f"""
@@ -155,7 +156,7 @@ def ext_dedup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         F.col("doc").alias("doc_id"), "text", "n_tokens", "n_removed"
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 _KEEP_ONE_SQL = (
@@ -263,7 +264,7 @@ def ext_mm_audio_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "channels bigint, total_samples bigint, bitrate_sum bigint, "
         "is_vbr boolean"
     )
-    return docs.mapInPandas(on_worker(run), schema).orderBy("media_id")
+    return docs.mapInPandas(on_worker(run), schema).transform(ordered, "media_id")
 
 
 _MP3_META_SQL = """
@@ -304,10 +305,11 @@ def ext_dedup_incremental_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = incremental_remove_spans(new, store, k=5)
     # NOTE r13: a pre-sort lazy cut A/B-measured slower (3.00 vs 2.71 s
     # fresh min) — wide text rows make the materialization dearer than
-    # the sampling pass's re-read (the ext_winsorize rule's flip side)
+    # the sampling pass's re-read (the ext_winsorize rule's flip side);
+    # the sampling pass runs only when ``ordered`` keeps the range sort
     return out.select(
         F.col("doc").alias("doc_id"), "text", "n_tokens", "n_removed"
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 _INCREMENTAL_SPANS_SQL = f"""
@@ -370,7 +372,7 @@ def ext_text_trigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = trigram_backoff_scores(
         docs, max_model_trigrams=_TRI_M3, max_model_bigrams=_TRI_M2
     )
-    return out.orderBy("doc_id")
+    return out.transform(ordered, "doc_id")
 
 
 _TRIGRAM_BACKOFF_SQL = f"""
@@ -437,7 +439,7 @@ def ext_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("vertex_id"),
         F.round("hub", 5).alias("hub"),
         F.round("auth", 5).alias("auth"),
-    ).orderBy("vertex_id")
+    ).transform(ordered, "vertex_id")
 
 
 def _hits_oracle(iters: int = 8) -> str:
@@ -529,7 +531,7 @@ def ext_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "span_start",
         "span_len",
         F.col("n_probe_docs").alias("n_eval_docs"),
-    ).orderBy("doc_id", "span_start", "span_len")
+    ).transform(ordered, "doc_id", "span_start", "span_len")
 
 
 _DECONTAM_SPANS_SQL = (
@@ -637,7 +639,7 @@ def ext_cep_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return match_pattern(
         ev, first="signup", middle="click", last="purchase"
-    ).orderBy("user_id", "first_us")
+    ).transform(ordered, "user_id", "first_us")
 
 
 _CEP_PATTERN_SQL = """
@@ -710,7 +712,7 @@ def ext_ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_rows"),
             F.sum(F.col("l_quantity").cast("bigint")).alias("sum_qty"),
         )
-        .orderBy("l_returnflag", "o_orderpriority")
+        .transform(ordered, "l_returnflag", "o_orderpriority")
     )
 
 
@@ -773,7 +775,7 @@ def ext_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sessions import cumulative_distinct_users
 
     ev = load_table(spark, sf_dir, "events")
-    return cumulative_distinct_users(ev).orderBy("day")
+    return cumulative_distinct_users(ev).transform(ordered, "day")
 
 
 _CUMULATIVE_USERS_SQL = """
@@ -815,7 +817,7 @@ def ext_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_orderkey") % fold).alias("src"),
         (F.col("l_partkey") % fold).alias("dst"),
     )
-    return k_truss(g, k=4).orderBy("src", "dst")
+    return k_truss(g, k=4).transform(ordered, "src", "dst")
 
 
 def _ktruss_oracle(rounds: int = 10, fold: int = 1500, k: int = 4) -> str:
@@ -962,7 +964,7 @@ def ext_mm_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
         "make string, model string, orientation bigint, "
         "taken_at string, n_exif bigint"
     )
-    return docs.mapInPandas(on_worker(run), schema).orderBy("media_id")
+    return docs.mapInPandas(on_worker(run), schema).transform(ordered, "media_id")
 
 
 _EXIF_SQL = """
@@ -994,7 +996,7 @@ def ext_weighted_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         weight_col="l_quantity",
         group_cols=["l_returnflag"],
         qs={"wp50": 500000, "wp90": 900000},
-    ).orderBy("l_returnflag")
+    ).transform(ordered, "l_returnflag")
 
 
 _WEIGHTED_PCT_SQL = """
@@ -1031,8 +1033,9 @@ def ext_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOTE r13: a lazy cut below this sort was A/B-measured SLOWER
     # (2.93 vs 2.55 s fresh min) — the sampling pass's re-executed
     # segment is an SMJ over already-shuffled legs (cheap shuffle-file
-    # re-read), so materialization costs more than the recompute.
-    return clustering_coefficient(g).orderBy("vertex_id")
+    # re-read), so materialization costs more than the recompute. The
+    # sampling pass runs only when ``ordered`` keeps the range sort.
+    return clustering_coefficient(g).transform(ordered, "vertex_id")
 
 
 _CLUSTERING_SQL = """
@@ -1095,7 +1098,7 @@ def ext_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files; materializing the full keep-decision relation costs more.
     return dedup_canonical(
         docs, pairs, quality_col="n_chars", num_partitions=n_parts
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 def _canonical_oracle() -> str:
@@ -1294,7 +1297,7 @@ def ext_ts_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cents")
     )
     out = decompose_additive(daily, "day", "cents", period=7)
-    return out.select(
+    return out.transform(ordered, "day").select(
         "day",
         F.col("value").alias("cents"),
         "trend_ppm",

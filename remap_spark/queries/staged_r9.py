@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import load_table
+from ..functions import ordered
 
 _DAILY_CENTS = """
     daily AS (
@@ -244,7 +245,7 @@ def ext_ts_anomaly_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "day", F.col("value").alias("cents"), "resid_ppm"
         )
-        .orderBy("day")
+        .transform(ordered, "day")
     )
 
 

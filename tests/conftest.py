@@ -8,6 +8,7 @@ import datetime
 import math
 import os
 import sys
+import uuid
 from pathlib import Path
 
 import duckdb
@@ -31,6 +32,19 @@ def spark():
     s = build_session(app_name="remap_spark_tests")
     yield s
     s.stop()
+
+
+def jobs_of(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -118,6 +132,23 @@ def assert_driver_shape(sdf, name: str) -> None:
         f"{name}: driver-facing output has nested columns {bad}; "
         "serialize at the query-wrapper boundary (SURVEY §8 convention)"
     )
+    # a final sort of a relation small enough to broadcast runs in one
+    # task (functions.ordered): no range-sampling job, no range shuffle
+    plan = sdf._jdf.queryExecution().analyzed()
+    while plan.nodeName() == "Project":
+        plan = plan.child()
+    if plan.nodeName() == "Sort" and getattr(plan, "global")():
+        child = plan.child()
+        conf = sdf.sparkSession._jsparkSession.sessionState().conf()
+        if 0 < child.stats().sizeInBytes() <= conf.autoBroadcastJoinThreshold():
+            assert (
+                child.nodeName() == "Repartition"
+                and child.numPartitions() == 1
+                and not child.shuffle()
+            ), (
+                f"{name}: the root sort's input estimates under the "
+                "broadcast threshold; sort it with functions.ordered"
+            )
 
 
 def assert_matches_oracle(

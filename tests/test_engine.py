@@ -5,31 +5,17 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from conftest import SF_DIR
+from conftest import SF_DIR, jobs_of
 
 from remap_spark import engine
 
 # the fixture root: one directory per scale factor
 TESTDATA = Path(SF_DIR).parent
-
-
-def _jobs(spark, fn):
-    """``fn()``'s result and the number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    group = f"engine-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _cached(path) -> list:
@@ -53,7 +39,7 @@ def test_cached_schema_is_what_spark_infers(spark, sf_dir):
         first = engine.load_table(spark, sf_dir, t)
         inferred = spark.read.parquet(path).schema
         assert _cached(path) == [inferred], t
-        again, jobs = _jobs(spark, lambda: engine.load_table(spark, sf_dir, t))
+        again, jobs = jobs_of(spark, lambda: engine.load_table(spark, sf_dir, t))
         assert jobs == 0, t
         assert again.schema == first.schema, t
 
@@ -73,7 +59,7 @@ def test_nanos_timestamp_is_cached_as_long(spark, tmp_path):
     first = engine.load_table(spark, str(tmp_path), "ev")
     [cached] = _cached(tmp_path / "ev.parquet")
     assert isinstance(cached["ts"].dataType, LongType)
-    again, jobs = _jobs(spark, lambda: engine.load_table(spark, str(tmp_path), "ev"))
+    again, jobs = jobs_of(spark, lambda: engine.load_table(spark, str(tmp_path), "ev"))
     assert jobs == 0
     assert again.schema == first.schema
     assert first.schema["ts"].dataType.typeName() == "timestamp"
@@ -82,8 +68,8 @@ def test_nanos_timestamp_is_cached_as_long(spark, tmp_path):
 
 def test_second_load_runs_no_job(spark, tmp_path):
     shutil.copy(Path(SF_DIR) / "nation.parquet", tmp_path / "nation.parquet")
-    first, first_jobs = _jobs(spark, lambda: engine.load_table(spark, str(tmp_path), "nation"))
-    second, second_jobs = _jobs(spark, lambda: engine.load_table(spark, str(tmp_path), "nation"))
+    first, first_jobs = jobs_of(spark, lambda: engine.load_table(spark, str(tmp_path), "nation"))
+    second, second_jobs = jobs_of(spark, lambda: engine.load_table(spark, str(tmp_path), "nation"))
     assert first_jobs >= 1 and second_jobs == 0
     assert second.schema == first.schema
     assert sorted(second.collect()) == sorted(first.collect())
@@ -95,7 +81,7 @@ def test_rewritten_file_is_inferred_again(spark, tmp_path):
     shutil.copy(src / "nation.parquet", path)
 
     def load():
-        return _jobs(spark, lambda: engine.load_table(spark, str(tmp_path), "t"))
+        return jobs_of(spark, lambda: engine.load_table(spark, str(tmp_path), "t"))
 
     assert load()[1] >= 1 and load()[1] == 0
     # new content, size and inode
@@ -124,7 +110,7 @@ def test_session_with_other_parquet_confs_infers_its_own(spark, tmp_path):
     other.conf.set("spark.sql.parquet.binaryAsString", "true")
 
     def load(session):
-        df, jobs = _jobs(session, lambda: engine.load_table(session, str(tmp_path), "bin"))
+        df, jobs = jobs_of(session, lambda: engine.load_table(session, str(tmp_path), "bin"))
         return type(df.schema["b"].dataType), jobs > 0
 
     assert load(spark) == (BinaryType, True)

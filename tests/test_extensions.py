@@ -1626,6 +1626,22 @@ def test_topk_ties_rank_by_vec_id(spark, op):
     assert ties, "no tie in the top k: the corpus does not test the tie-break"
 
 
+def test_ivf_pq_topk_takes_any_id_col(spark):
+    """ivf_pq_topk with the key column named ``doc`` returns the rows it
+    returns under the default ``vec_id``: the PQ codes (keyed by
+    ``id_col``) and the cell assignment join on one key."""
+    from remap_spark.operators import similarity as sim
+
+    df = _tied_corpus(spark)
+    renamed = df.withColumnRenamed("vec_id", "doc")
+    kw = dict(k=4, n_centroids=4, n_probe=2, m=2, n_cent=4, dim=8)
+    want = sim.ivf_pq_topk(df.where("vec_id < 2"), df, **kw).collect()
+    got = sim.ivf_pq_topk(
+        renamed.where("doc < 2"), renamed, id_col="doc", **kw
+    ).collect()
+    assert want and sorted(got) == sorted(want)
+
+
 def test_rolling_active_users_approx_error(spark):
     """The HLL WAU sketch tier must track the exact tier within 5%
     relative error on every day (lg_k=12 over the fixture's user
